@@ -223,12 +223,12 @@ def _incremental_dedup_bench(spark, sf1: str, *, passes: int = 3) -> dict:
     """The incremental-dedup claim, measured: a 10% daily batch checked
     against the standing 90% corpus via the persisted signature store
     (operators/dedup.py:incremental_lsh_candidates) vs re-running the
-    full-corpus LSH self-join. The store is built ONCE outside the timed
-    region (production writes it at ingest); the timed increment is batch
-    shingling + signatures + the (band, bucket) equi-join. Candidate
-    counts are reported so the comparison is shape-honest (the full run
-    also finds old-old and new-new pairs the increment deliberately
-    skips)."""
+    full-corpus LSH self-join (dedup.lsh_pair_estimates). The store is
+    built ONCE outside the timed region (production writes it at ingest);
+    the timed increment is batch shingling + signatures + the (band,
+    bucket) equi-join with its in-row estimate. Candidate counts are
+    reported so the comparison is shape-honest (the full run also finds
+    old-old and new-new pairs the increment deliberately skips)."""
     from pyspark.sql import functions as F
 
     from data_ingestion_bra_spark.operators import dedup
@@ -238,11 +238,9 @@ def _incremental_dedup_bench(spark, sf1: str, *, passes: int = 3) -> dict:
     is_batch = F.col("doc_id") % 10 == 0
 
     t0 = time.perf_counter()
-    store = dedup.band_buckets(
-        dedup.minhash_signatures(
-            dedup.doc_shingles(d.filter(~is_batch), "doc_id", "text", n=3, distinct=False),
-            num_hashes=16,
-        )
+    store = dedup.minhash_signatures(
+        dedup.doc_shingles(d.filter(~is_batch), "doc_id", "text", n=3, distinct=False),
+        num_hashes=16,
     ).localCheckpoint(eager=True)
     store_build_sec = time.perf_counter() - t0
 
@@ -254,13 +252,7 @@ def _incremental_dedup_bench(spark, sf1: str, *, passes: int = 3) -> dict:
             dedup.doc_shingles(d.filter(is_batch), "doc_id", "text", n=3, distinct=False),
             num_hashes=16,
         )
-        new_b = dedup.band_buckets(sig_b).select(
-            F.col("doc").alias("doc_new"), "band", "bucket"
-        )
-        old_b = store.select(F.col("doc").alias("doc_old"), "band", "bucket")
-        n_inc = (
-            new_b.join(old_b, ["band", "bucket"]).select("doc_new", "doc_old").distinct().count()
-        )
+        n_inc = dedup.incremental_lsh_candidates(store, sig_b).count()
         inc_samples.append(time.perf_counter() - t0)
 
     full_samples: list[float] = []
@@ -270,7 +262,7 @@ def _incremental_dedup_bench(spark, sf1: str, *, passes: int = 3) -> dict:
         sig_all = dedup.minhash_signatures(
             dedup.doc_shingles(d, "doc_id", "text", n=3, distinct=False), num_hashes=16
         )
-        n_full = dedup.lsh_candidate_pairs(sig_all, band_size=4, num_hashes=16).count()
+        n_full = dedup.lsh_pair_estimates(sig_all, band_size=4, num_hashes=16).count()
         full_samples.append(time.perf_counter() - t0)
 
     store.unpersist()
@@ -284,44 +276,6 @@ def _incremental_dedup_bench(spark, sf1: str, *, passes: int = 3) -> dict:
         "full_candidates": n_full,
         "batch_fraction": 0.1,
     }
-
-
-def _simhash_vocab_bench(spark, points) -> dict:
-    """Shuffled vs broadcast-vocabulary simhash fingerprints (round-5
-    verdict nit: the (doc, tok) ⋈ weight-table join shuffles on a Zipfian
-    token key; when the vocabulary fits, broadcasting the packed weight
-    table removes that shuffle entirely). Same fingerprints — asserted in
-    tests — so this measures ONLY the join strategy. Median-of-3 at the
-    smaller points; the largest point runs per-variant single-shot after a
-    warm pass (the delta there is read against the sf1 spread)."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from data_ingestion_bra_spark.operators import dedup
-    from data_ingestion_bra_spark.sources.tables import load_table
-
-    out: dict = {}
-    for label, d, passes in points:
-        docs = load_table(spark, d, "documents")
-        per_variant: dict = {}
-        for variant, bcast in (("shuffled", False), ("broadcast_vocab", True)):
-            fn = lambda: _materialize(  # noqa: E731
-                dedup.simhash_fingerprints(
-                    docs, "doc_id", "text", nibbles=15, broadcast_vocab=bcast
-                )
-            )
-            fn()  # warm
-            samples = []
-            for _ in range(passes):
-                t0 = time.perf_counter()
-                fn()
-                samples.append(time.perf_counter() - t0)
-            per_variant[variant] = {
-                "sec": round(_median(samples), 3),
-                "sec_spread": [round(min(samples), 3), round(max(samples), 3)],
-                "n_samples": passes,
-            }
-        out[label] = per_variant
-    return out
 
 
 def _skew_fixture(spark) -> tuple:
@@ -721,7 +675,7 @@ def _ivfpq_serve_bench(spark, sf_dirs: list[tuple[str, str]]) -> dict:
     from pyspark.sql import functions as F
 
     from data_ingestion_bra_spark.operators import pq, similarity
-    from data_ingestion_bra_spark.operators.similarity import quantize_expr
+    from data_ingestion_bra_spark.operators.similarity import quantize_sql
     from data_ingestion_bra_spark.sources.tables import load_table
 
     out: dict = {}
@@ -737,27 +691,13 @@ def _ivfpq_serve_bench(spark, sf_dirs: list[tuple[str, str]]) -> dict:
         cos_truth = {(r["query_id"], r["cand_id"]) for r in bf_rows}
 
         # exact integer-L2 truth for the IVFPQ re-rank metric
-        qv = q_df.select(
-            F.col("vec_id").alias("query_id"),
-            quantize_expr(F.col("embedding")).alias("qv"),
-        )
-        cv = emb.select(
-            F.col("vec_id").alias("cand_id"),
-            quantize_expr(F.col("embedding")).alias("cv"),
-        )
+        qv = q_df.selectExpr("vec_id as query_id", f"{quantize_sql('embedding')} as qv")
+        cv = emb.selectExpr("vec_id as cand_id", f"{quantize_sql('embedding')} as cv")
         l2 = (
             F.broadcast(qv)
             .crossJoin(cv)
             .filter(F.col("query_id") != F.col("cand_id"))
-            .select(
-                "query_id",
-                "cand_id",
-                F.aggregate(
-                    F.zip_with("qv", "cv", lambda a, b: (a - b) * (a - b)),
-                    F.lit(0).cast("bigint"),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-            )
+            .selectExpr("query_id", "cand_id", f"{pq._isq_dist_sql('qv', 'cv')} as d")
         )
         from pyspark.sql.window import Window as _W
 
@@ -828,7 +768,7 @@ def _ivfpq_serve_bench(spark, sf_dirs: list[tuple[str, str]]) -> dict:
 
 def _synthetic_merges(depth: int, base: list[tuple[str, str]]) -> list[tuple[str, str]]:
     """Deterministically extend the committed 96-merge table to ``depth``
-    entries for the chain-depth stress bench. Chains of ≤48 growing symbols
+    entries for the chain-depth stress tests. Chains of ≤48 growing symbols
     seeded from rare letter pairs: every entry is a structurally valid merge
     (left symbol produced by a prior entry), patterns stay short, and the
     per-merge literal-replace SCAN cost — the quantity under measurement —
@@ -857,68 +797,6 @@ def _synthetic_merges(depth: int, base: list[tuple[str, str]]) -> list[tuple[str
             ms.append((sym, nxt))
             sym += nxt
     return ms[:depth]
-
-
-def _bpe_strategy_bench(spark, sf1: str, *, budget: float | None = None) -> dict:
-    """Nested-replace (scan-resident) vs vocabulary-join BPE token counting,
-    at the committed 96-merge table AND synthetic 1k/5k-merge depths
-    (round-6 verdict item 6: the vocab join is the DOCUMENTED 30-50k-merge
-    scale path, but only the 96-merge default was ever benched, so the
-    chain-depth crossover was argued, not measured).
-
-    Depth >96 runs on a deterministic 10% doc subset (``doc_id % 10 = 0``)
-    so a 5000-deep chain over the full 10x corpus can't eat the bench
-    budget; n_docs is recorded per point so nothing reads as a full-corpus
-    number. Each point is independently guarded — a Catalyst depth failure
-    at 5k is itself a measured result."""
-    from pyspark.sql import functions as FF
-
-    from data_ingestion_bra_spark.operators import bpe
-    from data_ingestion_bra_spark.sources.tables import load_table
-
-    if budget is None:
-        budget = float(os.environ.get("SPARK_GRAFT_BPE_BUDGET_SEC", "900"))
-    start = time.perf_counter()
-    base = bpe.load_merges()
-    docs_full = load_table(spark, sf1, "documents").select("doc_id", "text")
-    docs_sub = docs_full.filter("doc_id % 10 = 0")
-    n_full = docs_full.count()
-    n_sub = docs_sub.count()
-
-    def scan_resident(docs, merges):
-        return docs.select(
-            "doc_id", bpe.doc_token_count_expr(FF.col("text"), merges).alias("n")
-        )
-
-    def vocab_join(docs, merges):
-        return bpe.doc_token_counts_vocab_join(docs, "doc_id", "text", merges)
-
-    points: list[dict] = []
-    for depth, docs, n_docs, passes in (
-        (96, docs_full, n_full, 3),
-        (1024, docs_sub, n_sub, 1),
-        (5000, docs_sub, n_sub, 1),
-    ):
-        merges = _synthetic_merges(depth, base) if depth > len(base) else base
-        for variant, builder in (("scan_resident", scan_resident), ("vocab_join", vocab_join)):
-            point: dict = {"depth": depth, "variant": variant, "n_docs": n_docs}
-            if time.perf_counter() - start > budget:
-                point["skipped"] = "budget"
-                points.append(point)
-                continue
-            try:
-                samples = []
-                for _ in range(passes):
-                    t0 = time.perf_counter()
-                    _materialize(builder(docs, merges))
-                    samples.append(time.perf_counter() - t0)
-                point["sec"] = round(_median(samples), 3)
-                if passes > 1:
-                    point["sec_spread"] = [round(min(samples), 3), round(max(samples), 3)]
-            except Exception as exc:  # noqa: BLE001 - a depth failure is a result
-                point["error"] = f"{type(exc).__name__}: {exc}"[:300]
-            points.append(point)
-    return {"corpus": sf1, "n_docs_full": n_full, "n_docs_subset": n_sub, "points": points}
 
 
 def _bitext_clustered_fixture(
@@ -1333,7 +1211,7 @@ def _exact_join_bench(spark, sf_dir: str, *, passes: int = 2) -> dict:
             dedup.doc_shingles(d, "doc_id", "text", n=3, distinct=False),
             num_hashes=16,
         )
-        cand = dedup.lsh_candidate_pairs(sig, band_size=4, num_hashes=16)
+        cand = dedup.lsh_pair_estimates(sig, band_size=4, num_hashes=16).select("doc_a", "doc_b")
         n_lsh = dedup.jaccard_pairs(sh, min_jaccard=0.5, pair_filter=cand).count()
         lsh_secs.append(_time.perf_counter() - t0)
     out["n_pairs_exact"] = n_exact
@@ -1370,9 +1248,7 @@ def _exact_join_bench(spark, sf_dir: str, *, passes: int = 2) -> dict:
     sig = dedup.minhash_signatures(
         dedup.doc_shingles(d, "doc_id", "text", n=3, distinct=False), num_hashes=16
     )
-    out["n_cand_lsh"] = dedup.lsh_candidate_pairs(
-        sig, band_size=4, num_hashes=16
-    ).count()
+    out["n_cand_lsh"] = dedup.lsh_pair_estimates(sig, band_size=4, num_hashes=16).count()
     sh.unpersist()
     return out
 
@@ -2103,8 +1979,7 @@ def _run_all_sections(payload: dict, sf_dir: str) -> None:
     # number and cost eight sections. It is swapped for
     # dedup_contamination_bloom (~13 s at sf10, the bloom build+probe scan
     # class); simhash's sf10 trend stays covered by the sf10_scaling
-    # medians and the committed SCALE.md history, and simhash_vocab still
-    # carries an sf10 simhash point when the budget allows.
+    # medians and the committed SCALE.md history.
     def scale_probe_sf10() -> None:
         budget = float(os.environ.get("SPARK_GRAFT_SF10_PROBE_BUDGET_SEC") or 300.0)
         sec_start = time.perf_counter()
@@ -2228,35 +2103,6 @@ def _run_all_sections(payload: dict, sf_dir: str) -> None:
 
     def _degrade(section: str, what: str) -> None:
         payload.setdefault("sections_degraded", []).append(f"{section}: {what}")
-
-    def simhash_vocab() -> None:
-        # Shuffled vs broadcast-vocabulary simhash fingerprints (round-5
-        # nit 3): median-of-3 at sf1, single-shot at sf10.
-        points = ([("sf1", sf1, 3)] if sf1 else []) + (
-            [("sf10", sf10, 1)] if sf10 and not tight_window else []
-        )
-        if sf10 and tight_window:
-            _degrade("simhash_vocab", "sf10 point deferred to the full run")
-        if points:
-            payload["simhash_vocab_bench"] = _simhash_vocab_bench(spark, points)
-
-    def bpe_bench() -> None:
-        # BPE encoding strategy crossover: vocab-join default vs the
-        # scan-resident nested-replace chain, at the committed vocabulary
-        # AND synthetic merge depths.
-        if sf1:
-            budget = float(
-                os.environ.get("SPARK_GRAFT_BPE_BUDGET_SEC")
-                or min(
-                    # 110 s inside the driver's tight window (points degrade
-                    # loudly inside _bpe_strategy_bench), 900 s otherwise
-                    110.0 if total_budget_sec() <= 1800 else 900.0,
-                    max(60.0, budget_remaining() * 0.3),
-                )
-            )
-            payload["bpe_strategy_bench"] = _bpe_strategy_bench(
-                spark, sf1, budget=budget
-            )
 
     def incremental() -> None:
         # Incremental dedup: a 10% batch vs the standing corpus through the
@@ -2472,7 +2318,7 @@ def _run_all_sections(payload: dict, sf_dir: str) -> None:
         ),
         # estimates re-synced to the round-8 clean full run's measured
         # section_seconds (idle box, +headroom): skew 95, incremental 97,
-        # bpe 108, simhash 67, ivf_build 291, pagerank 66
+        # ivf_build 291, pagerank 66
         ("freq_maintenance", "SPARK_GRAFT_SKIP_FREQ_MAINT", 80, freq_stream),
         ("overlap_maintenance", "SPARK_GRAFT_SKIP_OVERLAP_MAINT", 70, overlap_stream),
         (
@@ -2482,8 +2328,6 @@ def _run_all_sections(payload: dict, sf_dir: str) -> None:
             cardinality_stream,
         ),
         ("incremental_dedup", "SPARK_GRAFT_SKIP_INCREMENTAL", 120, incremental),
-        ("bpe_strategy", "SPARK_GRAFT_SKIP_BPE_BENCH", 130, bpe_bench),
-        ("simhash_vocab", "SPARK_GRAFT_SKIP_SIMHASH_VOCAB", 90, simhash_vocab),
         # Cheap never-or-newly-evidenced sections run BEFORE the two serve
         # monsters: linkage_bench is new in r12 (no driver row yet, ~45 s),
         # trainers/pagerank are ~20-35 s each, while bitext_serve (276 s in

@@ -58,13 +58,6 @@ def to_float_pt(col: Column | str) -> Column:
     return s.cast("double")
 
 
-_CASTERS = {"integer": to_int, "string": to_str, "float": to_float_pt}
-
-
-def cast_expr(kind: str, col: Column | str) -> Column:
-    return _CASTERS[kind](col)
-
-
 def apply_casts(
     df: DataFrame,
     *,

@@ -23,8 +23,8 @@ Token count never splits anything: ``#tokens = #separators / 2`` by
 construction, so counting is two ``length`` calls. At 100 TB this is a
 scan-resident projection — no shuffle, no explode, no Python.
 
-Which variant is the default — MEASURED, round 7 (``BENCH_FULL.json``
-``bpe_strategy_bench``, 50k-doc sf1 corpus): at the SAME committed 96
+Which variant is the default — MEASURED, round 7 (a scan-resident vs
+vocabulary-join bench on the 50k-doc sf1 corpus): at the SAME committed 96
 merges the vocabulary join runs 2.56 s vs the scan-resident chain's
 19.73 s (7.7×) — corpus text is Zipfian, so evaluating the chain once per
 DISTINCT word and joining counts back beats re-scanning the chain over
@@ -165,14 +165,6 @@ def _encode_sql(word_sql: str, merges: list[tuple[str, str]]) -> str:
     return enc
 
 
-def word_token_count_sql(word_sql: str, merges: list[tuple[str, str]]) -> str:
-    enc = _encode_sql(word_sql, merges)
-    return (
-        f"CAST(CASE WHEN length(replace({word_sql}, '{SEP}', '')) = 0 THEN 0 "
-        f"ELSE len(string_split({enc}, '{SEP}{SEP}')) END AS BIGINT)"
-    )
-
-
 def doc_token_count_sql(text_sql: str, merges: list[tuple[str, str]]) -> str:
     # Whole-text twin of doc_token_count_expr (same equivalence argument);
     # the stripped text is inlined (cheap) but the merge-depth-deep chain
@@ -234,8 +226,6 @@ def doc_token_counts_vocab_join(
     id_col: str | list[str],
     text_col: str,
     merges: list[tuple[str, str]],
-    *,
-    broadcast_vocab: bool = True,
 ):
     """Per-doc BPE token counts via a VOCABULARY join — the measured-default
     twin of the scan-resident ``doc_token_count_expr`` (7.7× faster at the
@@ -245,12 +235,9 @@ def doc_token_counts_vocab_join(
     The scan-resident expression evaluates the merge chain once per
     document; the chain cost is O(|corpus text|). Real corpora are Zipfian:
     |vocabulary| ≪ |corpus|, so evaluating the chain once per DISTINCT word
-    and joining the counts back (exactly the packed-weight vocabulary join
-    the simhash operator uses, ``dedup.py:simhash_fingerprints``) trades two
-    map-side-combined shuffles for a merge-chain cost that no longer grows
-    with corpus size. ``broadcast_vocab`` mirrors the simhash knob:
-    broadcast the (word, token-count) table when the vocabulary fits, else
-    shuffle-join with AQE skew-split covering hot words.
+    and joining the counts back trades two map-side-combined shuffles for a
+    merge-chain cost that no longer grows with corpus size. The
+    (word, token-count) table is broadcast: it is vocabulary-sized.
 
     ``id_col`` may be a single column or a list (e.g. ``["doc_id",
     "chunk_idx"]`` for chunk-level counting, or a GROUPING key like
@@ -300,10 +287,8 @@ def doc_token_counts_vocab_join(
             .cast("bigint")
             .alias("t"),
         )
-    if broadcast_vocab:
-        vocab = FF.broadcast(vocab)
     return (
-        words.join(vocab, "w")
+        words.join(FF.broadcast(vocab), "w")
         .groupBy(*ids)
         .agg(FF.sum(FF.col("c") * FF.col("t")).cast("bigint").alias("n_tokens_subword"))
     )
@@ -315,7 +300,6 @@ def doc_token_counts_dense(
     text_col: str,
     merges: list[tuple[str, str]],
     *,
-    broadcast_vocab: bool = True,
     out_col: str = "n_tokens_subword",
 ):
     """``doc_token_counts_vocab_join`` densified: one row per input row of
@@ -327,9 +311,7 @@ def doc_token_counts_dense(
     from pyspark.sql import functions as FF
 
     ids = [id_col] if isinstance(id_col, str) else list(id_col)
-    counts = doc_token_counts_vocab_join(
-        df, ids, text_col, merges, broadcast_vocab=broadcast_vocab
-    )
+    counts = doc_token_counts_vocab_join(df, ids, text_col, merges)
     return (
         df.select(*ids)
         .join(counts, ids, "left")

@@ -17,14 +17,9 @@ reproduce them bit-for-bit):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-def tokens_expr(text: Column | str) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.split(c, " ")
 
 
 def doc_shingles(
@@ -154,69 +149,14 @@ def minhash_signatures(sh: DataFrame, num_hashes: int = 16) -> DataFrame:
     return base.groupBy("doc").agg(*aggs)
 
 
-def band_buckets(
-    signatures: DataFrame, *, band_size: int = 4, num_hashes: int = 16
+def _banded_signatures(
+    signatures: DataFrame, doc: str, prefix: str, *, band_size: int, num_hashes: int
 ) -> DataFrame:
-    """Row-local banding of a wide signature → (doc, band, bucket). The
-    bucket is the band's minhashes joined in seed order; sharing any
-    (band, bucket) is the LSH candidate condition."""
-    n_bands = num_hashes // band_size
-    bands_sql = "array(" + ", ".join(
-        f"struct({b} as band, concat_ws('|', "
-        + ", ".join(f"cast(mh{b * band_size + i} as string)" for i in range(band_size))
-        + ") as bucket)"
-        for b in range(n_bands)
-    ) + ")"
-    return signatures.selectExpr("doc", f"explode({bands_sql}) as bb").selectExpr(
-        "doc", "bb.band as band", "bb.bucket as bucket"
-    )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame, *, band_size: int = 4, num_hashes: int = 16
-) -> DataFrame:
-    """Band the signature row-locally; docs sharing any (band, bucket) become
-    candidates. bucket = md5 of the band's minhashes joined in seed order.
-
-    The only shuffles are the (band, bucket) equi-join — candidate cost
-    tracks bucket collisions, not n².
-    """
-    buckets = band_buckets(signatures, band_size=band_size, num_hashes=num_hashes)
-    a = buckets.select(F.col("doc").alias("doc_a"), "band", "bucket")
-    b = buckets.select(F.col("doc").alias("doc_b"), "band", "bucket")
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-
-
-def lsh_pair_estimates(
-    signatures: DataFrame, *, band_size: int = 4, num_hashes: int = 16
-) -> DataFrame:
-    """Candidate pairs AND their MinHash Jaccard estimate from ONE banded
-    self-join: the wide signature (k bigints, ~8k B/row) rides the band
-    explode, so the estimate is computed in-row on the joined pair and the
-    classic pipeline's two signature re-joins never happen.
-
-    Plan diff vs ``lsh_candidate_pairs`` + ``minhash_jaccard_estimate``
-    (round-13, guide §2.4 "remove shuffles outright"): the pair relation was
-    shuffled for the DISTINCT, then twice more to equi-join the signature
-    back on doc_a and doc_b (plus the signature relation shuffled once per
-    side) — 4 exchanges and 2 joins replaced by sig-wide band rows flowing
-    through the exchange the candidate join needs anyway. At corpus scale
-    the extra shuffle payload is k×8 bytes per banded row (Spark ML's own
-    MinHashLSH carries full signatures through its explode the same way),
-    bought back by never re-shuffling the (larger) candidate pair relation.
-
-    Estimates are identical to ``minhash_jaccard_estimate`` (same integer
-    arithmetic); the DISTINCT dedups multi-band collisions over
-    (doc_a, doc_b, est) — est is functionally dependent on the pair, so the
-    pair set is unchanged.
-    """
-    if 10000 % num_hashes:
-        raise ValueError("num_hashes must divide 10000 for an exact e4 estimate")
+    """Row-local banding of a wide signature → (``doc``, band, bucket,
+    ``prefix``0..``prefix``{k-1}). The bucket is the band's minhashes joined
+    in seed order; sharing any (band, bucket) is the LSH candidate
+    condition. The k signature columns ride the explode so a banded join
+    can estimate Jaccard in-row on the joined pair."""
     n_bands = num_hashes // band_size
     bands_sql = "array(" + ", ".join(
         f"struct({b} as band, concat_ws('|', "
@@ -225,24 +165,57 @@ def lsh_pair_estimates(
         for b in range(n_bands)
     ) + ")"
     sig_cols = [f"mh{s}" for s in range(num_hashes)]
-    banded = signatures.selectExpr(
-        "doc", f"explode({bands_sql}) as bb", *sig_cols
-    ).selectExpr("doc", "bb.band as band", "bb.bucket as bucket", *sig_cols)
-    a = banded.selectExpr(
-        "doc as doc_a", "band", "bucket", *[f"mh{s} as a{s}" for s in range(num_hashes)]
+    return signatures.selectExpr("doc", f"explode({bands_sql}) as bb", *sig_cols).selectExpr(
+        f"doc as {doc}",
+        "bb.band as band",
+        "bb.bucket as bucket",
+        *[f"mh{s} as {prefix}{s}" for s in range(num_hashes)],
     )
-    b = banded.selectExpr(
-        "doc as doc_b", "band", "bucket", *[f"mh{s} as b{s}" for s in range(num_hashes)]
-    )
+
+
+def _estimate_e4_sql(num_hashes: int) -> str:
+    """MinHash Jaccard estimate of a joined (a*, b*) signature pair: the
+    fraction of agreeing components (the unbiased MinHash estimator) at 1e-4
+    fixed point. agree/k stays pure-integer (k | 10000), so the estimate is
+    the same BIGINT on every engine — no float in the output schema."""
+    if 10000 % num_hashes:
+        raise ValueError("num_hashes must divide 10000 for an exact e4 estimate")
     agree = " + ".join(f"cast(a{s} = b{s} as int)" for s in range(num_hashes))
+    return f"cast(({agree}) as bigint) * {10000 // num_hashes} as jaccard_est_e4"
+
+
+def band_buckets(
+    signatures: DataFrame, *, band_size: int = 4, num_hashes: int = 16
+) -> DataFrame:
+    """(doc, band, bucket) — the banded signature without its signature
+    columns, the shape a persisted bucket store keeps."""
+    return _banded_signatures(
+        signatures, "doc", "mh", band_size=band_size, num_hashes=num_hashes
+    ).select("doc", "band", "bucket")
+
+
+def lsh_pair_estimates(
+    signatures: DataFrame, *, band_size: int = 4, num_hashes: int = 16
+) -> DataFrame:
+    """LSH candidate pairs (doc_a < doc_b) AND their MinHash Jaccard
+    estimate from ONE banded self-join: the wide signature (k bigints) rides
+    the band explode, so the estimate is computed in-row on the joined pair
+    and the signature never joins back to the pair relation. The shuffles
+    are the (band, bucket) equi-join and the pair DISTINCT — candidate cost
+    tracks bucket collisions, not n². At corpus scale the shuffle payload is k×8 bytes
+    per banded row (Spark ML's own MinHashLSH carries full signatures
+    through its explode the same way).
+
+    The DISTINCT dedups multi-band collisions over (doc_a, doc_b, est) —
+    est is functionally dependent on the pair, so each pair appears once.
+    """
+    est = _estimate_e4_sql(num_hashes)
+    a = _banded_signatures(signatures, "doc_a", "a", band_size=band_size, num_hashes=num_hashes)
+    b = _banded_signatures(signatures, "doc_b", "b", band_size=band_size, num_hashes=num_hashes)
     return (
         a.join(b, ["band", "bucket"])
         .filter(F.col("doc_a") < F.col("doc_b"))
-        .selectExpr(
-            "doc_a",
-            "doc_b",
-            f"cast(({agree}) as bigint) * {10000 // num_hashes} as jaccard_est_e4",
-        )
+        .selectExpr("doc_a", "doc_b", est)
         .distinct()
     )
 
@@ -254,9 +227,10 @@ def incremental_lsh_candidates(
     band_size: int = 4,
     num_hashes: int = 16,
 ) -> DataFrame:
-    """Candidates (doc_new, doc_old) between an incoming BATCH and a
-    STANDING corpus: band both signature sets and equi-join batch buckets
-    against corpus buckets.
+    """Candidates (doc_new, doc_old, jaccard_est_e4) between an incoming
+    BATCH and a STANDING corpus: band both signature sets and equi-join
+    batch buckets against corpus buckets, estimating in-row exactly as
+    ``lsh_pair_estimates`` does.
 
     This is the daily-crawl-increment shape at 100 TB: the corpus side is a
     persisted signature store (written once per doc, e.g. through the txlog
@@ -266,44 +240,14 @@ def incremental_lsh_candidates(
     relation can additionally be bucketed-by (band, bucket) on disk so the
     join is co-located and shuffle-free on the big side.
     """
-    new_b = band_buckets(batch_sigs, band_size=band_size, num_hashes=num_hashes).select(
-        F.col("doc").alias("doc_new"), "band", "bucket"
+    est = _estimate_e4_sql(num_hashes)
+    new_b = _banded_signatures(
+        batch_sigs, "doc_new", "a", band_size=band_size, num_hashes=num_hashes
     )
-    old_b = band_buckets(corpus_sigs, band_size=band_size, num_hashes=num_hashes).select(
-        F.col("doc").alias("doc_old"), "band", "bucket"
+    old_b = _banded_signatures(
+        corpus_sigs, "doc_old", "b", band_size=band_size, num_hashes=num_hashes
     )
-    return new_b.join(old_b, ["band", "bucket"]).select("doc_new", "doc_old").distinct()
-
-
-def minhash_jaccard_estimate(
-    signatures: DataFrame, pairs: DataFrame, *, num_hashes: int = 16
-) -> DataFrame:
-    """Jaccard ESTIMATE for candidate pairs = fraction of agreeing minhash
-    components (the unbiased MinHash estimator). In-row comparison over the
-    wide signature — no re-shingling, no shingle self-join; this is what
-    makes MinHash dedup linear-ish at 100 TB (exact verify stays available
-    via ``jaccard_pairs`` as a second tier)."""
-    a = signatures.selectExpr(
-        "doc as doc_a", *[f"mh{s} as a{s}" for s in range(num_hashes)]
-    )
-    b = signatures.selectExpr(
-        "doc as doc_b", *[f"mh{s} as b{s}" for s in range(num_hashes)]
-    )
-    if 10000 % num_hashes:
-        raise ValueError("num_hashes must divide 10000 for an exact e4 estimate")
-    agree = " + ".join(f"cast(a{s} = b{s} as int)" for s in range(num_hashes))
-    return (
-        pairs.join(a, "doc_a")
-        .join(b, "doc_b")
-        # agree/k at 1e-4 fixed point stays pure-integer (k | 10000), so
-        # the estimate is the same BIGINT on every engine — no float in
-        # the output schema at all
-        .selectExpr(
-            "doc_a",
-            "doc_b",
-            f"cast(({agree}) as bigint) * {10000 // num_hashes} as jaccard_est_e4",
-        )
-    )
+    return new_b.join(old_b, ["band", "bucket"]).selectExpr("doc_new", "doc_old", est).distinct()
 
 
 def simhash_fingerprints(
@@ -312,7 +256,6 @@ def simhash_fingerprints(
     text_col: str,
     *,
     nibbles: int = 8,
-    broadcast_vocab: bool | None = None,
 ) -> DataFrame:
     """SimHash (``nibbles`` md5 nibbles × 4 bits, up to 60 bits) per doc.
 
@@ -320,24 +263,15 @@ def simhash_fingerprints(
     (+1 | -1) to bit position 4*i+b; final bit = (sum > 0). All arithmetic is
     SQL-portable, so the DuckDB oracle matches bit-for-bit.
 
-    Scale shape (default, ``broadcast_vocab=None``): the per-token nibble
-    weights are computed INLINE on each (doc, distinct-token) row — md5 is
-    ~100 ns of codegen per row — and summed with ``nbits`` parallel column
-    aggregates in ONE map-side-combinable groupBy(doc). Nothing shuffles
-    except the per-doc partial sums: the earlier default first built a
-    DISTINCT vocabulary relation and equi-joined it back, which shuffled
-    the whole Zipf-skewed (doc, token) relation by token just to avoid
-    recomputing a hash that is cheaper than the exchange it caused
-    (optimization guide §2.4: remove shuffles outright). Plan diff at
-    sf0.1: 4 exchanges → 2, and the duplicated-scan vocab subtree is gone.
-
-    ``broadcast_vocab`` keeps the explicit vocab-relation strategies for
-    corpora where per-occurrence hashing is the wrong trade (an
-    astronomically repeated token set): ``True`` broadcasts the packed
-    per-VOCAB-entry weight table, ``False`` shuffle-joins it (AQE
-    skew-split covers hot tokens). Fingerprints are bit-identical on every
-    path (asserted in tests/test_operators.py) — the knob only picks the
-    strategy.
+    Scale shape: the per-token nibble weights are computed INLINE on each
+    (doc, distinct-token) row — md5 is ~100 ns of codegen per row — and
+    summed with ``nbits`` parallel column aggregates in ONE
+    map-side-combinable groupBy(doc). Nothing shuffles except the per-doc
+    partial sums: a DISTINCT vocabulary relation equi-joined back would
+    shuffle the whole Zipf-skewed (doc, token) relation by token just to
+    avoid recomputing a hash that is cheaper than the exchange it causes
+    (optimization guide §2.4: remove shuffles outright; 4 exchanges → 2
+    at sf0.1).
 
     Expressions are single SQL strings end-to-end: the lambda-based
     Column-API construction of the nibble/weight transforms cost ~0.9 s of
@@ -360,47 +294,24 @@ def simhash_fingerprints(
     doc_toks = df.select(
         F.col(id_col).alias("doc"), F.explode(F.split(F.col(text_col), " ")).alias("tok")
     ).distinct()
-    # hex nibble -> int via conv(); bit 4i+b of nibble i contributes
-    # (nib>>b & 1)*2-1 to the bit-position sum
-    nibs_sql = (
-        f"transform(slice(split(md5(tok), ''), 1, {nibbles}),"
-        f" c -> cast(conv(c, 16, 10) as int))"
+    # ONE conv() packs all `nibbles` hex digits into a single bigint
+    # (16^15 = 2^60 < 2^63); each bit-position sum extracts its bit by a
+    # constant shift — no per-char regex split, no nibble array, no vocab
+    # relation. Hex digit i (1-based position i+1) is the (nibbles-1-i)-th
+    # hex place of the packed value, so bit b of nibble i lives at shift
+    # 4*(nibbles-1-i) + b and contributes (bit * 2 - 1) to its position sum.
+    based = doc_toks.selectExpr(
+        "doc",
+        f"cast(conv(substring(md5(tok), 1, {nibbles}), 16, 10) as bigint) as h",
     )
-    if broadcast_vocab is None:
-        # ONE conv() packs all `nibbles` hex digits into a single bigint
-        # (16^15 = 2^60 < 2^63); each bit-position sum extracts its bit by
-        # a constant shift — no per-char regex split, no nibble array, no
-        # vocab relation. Hex digit i (1-based position i+1) is the
-        # (nibbles-1-i)-th hex place of the packed value, so bit b of
-        # nibble i lives at shift 4*(nibbles-1-i) + b.
-        based = doc_toks.selectExpr(
-            "doc",
-            f"cast(conv(substring(md5(tok), 1, {nibbles}), 16, 10) as bigint) as h",
-        )
-        sums = based.groupBy("doc").agg(
-            *[
-                F.expr(
-                    f"sum((shiftright(h, {4 * (nibbles - 1 - i // 4) + i % 4}) & 1)"
-                    " * 2 - 1)"
-                ).alias(f"s{i}")
-                for i in range(nbits)
-            ]
-        )
-    else:
-        ws_sql = (
-            f"flatten(transform({nibs_sql}, nib -> "
-            f"array(" + ", ".join(
-                f"cast((shiftright(nib, {b}) & 1) * 2 - 1 as bigint)" for b in range(4)
-            ) + ")))"
-        )
-        tok_contrib = doc_toks.select("tok").distinct().selectExpr("tok", f"{ws_sql} as ws")
-        if broadcast_vocab:
-            tok_contrib = F.broadcast(tok_contrib)
-        sums = (
-            doc_toks.join(tok_contrib, "tok")
-            .groupBy("doc")
-            .agg(*[F.expr(f"sum(ws[{i}])").alias(f"s{i}") for i in range(nbits)])
-        )
+    sums = based.groupBy("doc").agg(
+        *[
+            F.expr(
+                f"sum((shiftright(h, {4 * (nibbles - 1 - i // 4) + i % 4}) & 1) * 2 - 1)"
+            ).alias(f"s{i}")
+            for i in range(nbits)
+        ]
+    )
     fp_sql = " + ".join(
         f"(case when s{i} > 0 then {1 << i}L else 0L end)" for i in range(nbits)
     )
@@ -413,7 +324,6 @@ def simhash_near_pairs(
     max_hamming: int,
     n_bands: int = 8,
     band_bits: int = 4,
-    materialize_input: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by Hamming distance, via pigeonhole band bucketing:
     with ``n_bands`` disjoint bit-bands and ``max_hamming < n_bands``, any
@@ -421,20 +331,18 @@ def simhash_near_pairs(
     come from an equi-join on (band, band_value) with zero recall loss, and
     the full n² cross product never exists. Exact Hamming then verifies.
 
-    ``materialize_input`` (default on) eagerly localCheckpoints the
-    fingerprint relation before the self-join. The fingerprints are tiny
-    (doc id + one long = ~16 B/doc) but their lineage is not — the simhash
-    computation is itself a join + 60-column aggregate, and BOTH sides of
-    the band self-join re-derive it when left lazy (exchange reuse does not
-    cover the full subtree under AQE). Measured at the 100× replica
-    (500k docs, round 9): 211 s median end-to-end lazy vs 44 s with the
-    input materialized — a 4.7× cut for ~8 MB of executor storage. Pass
-    False only when the caller already persisted/checkpointed ``fps``.
+    The fingerprint relation is eagerly localCheckpointed before the
+    self-join. The fingerprints are tiny (doc id + one long = ~16 B/doc) but
+    their lineage is not — the simhash computation is itself a 60-column
+    aggregate, and BOTH sides of the band self-join re-derive it when left
+    lazy (exchange reuse does not cover the full subtree under AQE).
+    Measured at the 100× replica (500k docs, round 9): 211 s median
+    end-to-end lazy vs 44 s with the input materialized — a 4.7× cut for
+    ~8 MB of executor storage.
     """
     if max_hamming >= n_bands:
         raise ValueError("pigeonhole requires max_hamming < n_bands")
-    if materialize_input:
-        fps = fps.localCheckpoint(eager=True)
+    fps = fps.localCheckpoint(eager=True)
     mask = (1 << band_bits) - 1
     bands_sql = "array(" + ", ".join(
         f"struct({b} as band, shiftright(simhash, {b * band_bits}) & {mask} as val)"

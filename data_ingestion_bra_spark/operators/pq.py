@@ -10,7 +10,7 @@ scoring a candidate is ``m`` table lookups + adds, never a full-vector
 scan.
 
 Everything here is BIGINT fixed-point on the repo's quantized vectors
-(``operators/similarity.py:quantize_expr``, 1e-6 resolution): seeds,
+(``operators/similarity.py:quantize_sql``, 1e-6 resolution): seeds,
 the Lloyd refinement's element-wise integer means, squared-L2 distances,
 code assignment (min over (dist, code) structs — lexicographic in both
 Spark and DuckDB, and map-side combinable), and the ADC sums. No float
@@ -32,20 +32,15 @@ with the compressed-domain scale path.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_ingestion_bra_spark.operators.similarity import quantize_expr, quantize_sql
+from data_ingestion_bra_spark.operators.similarity import quantize_sql
 
 #: subspaces x codes: 64-dim fixture vectors -> 8 subvectors of 8 dims,
 #: 16 codewords each (4-bit codes).
 M_SUB = 8
 K_CODES = 16
-
-
-def subvector_expr(qvec: Column, s: int, d_sub: int) -> Column:
-    """Subspace ``s`` of a quantized vector (1-based slice, length d_sub)."""
-    return F.slice(qvec, s * d_sub + 1, d_sub)
 
 
 def subvectors(
@@ -76,15 +71,6 @@ def _isq_dist_sql(a: str, b: str) -> str:
     return (
         f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
         f" 0L, (acc, x) -> acc + x)"
-    )
-
-
-def _isq_dist(a: Column, b: Column) -> Column:
-    """Exact integer squared L2 between two quantized subvectors."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
     )
 
 
@@ -336,12 +322,8 @@ def ivfpq_topk(
         .filter(F.col("rank") <= shortlist)
         .select("query_id", "cand_id")
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), quantize_expr(F.col(vec_col)).alias("qv")
-    )
-    cv = vectors.select(
-        F.col(id_col).alias("cand_id"), quantize_expr(F.col(vec_col)).alias("cv")
-    )
+    qv = queries.selectExpr(f"{id_col} as query_id", f"{quantize_sql(vec_col)} as qv")
+    cv = vectors.selectExpr(f"{id_col} as cand_id", f"{quantize_sql(vec_col)} as cv")
     exact = (
         short.join(cv, "cand_id")
         .join(F.broadcast(qv), "query_id")
@@ -387,24 +369,12 @@ def adc_rerank(
         queries, codes, codebook,
         id_col=id_col, vec_col=vec_col, dim=dim, m=m, k_top=shortlist,
     ).select("query_id", "cand_id")
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), quantize_expr(F.col(vec_col)).alias("qv")
-    )
-    cv = vectors.select(
-        F.col(id_col).alias("cand_id"), quantize_expr(F.col(vec_col)).alias("cv")
-    )
+    qv = queries.selectExpr(f"{id_col} as query_id", f"{quantize_sql(vec_col)} as qv")
+    cv = vectors.selectExpr(f"{id_col} as cand_id", f"{quantize_sql(vec_col)} as cv")
     exact = (
         short.join(cv, "cand_id")
         .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "cand_id",
-            F.aggregate(
-                F.zip_with("qv", "cv", lambda x, y: (x - y) * (x - y)),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ).alias("l2_dist"),
-        )
+        .selectExpr("query_id", "cand_id", f"{_isq_dist_sql('qv', 'cv')} as l2_dist")
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("l2_dist").asc(), F.col("cand_id").asc()

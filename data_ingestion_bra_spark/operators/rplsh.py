@@ -20,7 +20,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from data_ingestion_bra_spark.operators.similarity import quantize_expr
+from data_ingestion_bra_spark.operators.similarity import idot_sql, quantize_sql
 
 
 def plane_weights(n_planes: int, dim: int) -> list[list[int]]:
@@ -38,22 +38,17 @@ def plane_weights(n_planes: int, dim: int) -> list[list[int]]:
     ]
 
 
-def all_plane_dots(vec: Column, weights: list[list[int]]) -> Column:
-    """Exact integer dots of a quantized vector with EVERY plane, as one
-    array<bigint> — a single transform over a literal plane matrix, so the
-    whole projection compiles to ONE codegen'd lambda instead of one fold
-    per plane (which made 64-plane plans take seconds just to compile)."""
+def all_plane_dots(vec: str, weights: list[list[int]]) -> Column:
+    """Exact integer dots of the quantized vector column ``vec`` with EVERY
+    plane, as one array<bigint> — a single transform over a literal plane
+    matrix, so the whole projection compiles to ONE codegen'd lambda instead
+    of one fold per plane (which made 64-plane plans take seconds just to
+    compile)."""
     # One F.expr parse for the whole matrix: building 64x64 literals as
     # individual F.lit() Columns costs thousands of py4j round-trips (~13 s
     # of driver-side plan construction); a single SQL string parses in ms.
     rows = ", ".join("array(" + ", ".join(f"{int(x)}L" for x in w) + ")" for w in weights)
-    planes = F.expr(f"array({rows})")
-    return F.transform(
-        planes,
-        lambda p: F.aggregate(
-            F.zip_with(vec, p, lambda a, b: a * b), F.lit(0).cast("bigint"), lambda acc, x: acc + x
-        ),
-    )
+    return F.expr(f"transform(array({rows}), p -> {idot_sql(vec, 'p')})")
 
 
 def bucket_from_dots(dots: Column, offset: int, n_planes: int) -> Column:
@@ -94,9 +89,9 @@ def banded_buckets(
     (band, bucket) — never an all-pairs scan.
     """
     w = plane_weights(n_bands * band_planes, dim)
-    base = vectors.select(
-        F.col(id_col).alias("vid"), quantize_expr(F.col(vec_col)).alias("v")
-    ).withColumn("_dots", all_plane_dots(F.col("v"), w))
+    base = vectors.selectExpr(
+        f"{id_col} as vid", f"{quantize_sql(vec_col)} as v"
+    ).withColumn("_dots", all_plane_dots("v", w))
     bands = F.array(
         *[
             F.struct(
@@ -143,7 +138,7 @@ def rplsh_buckets(
     """
     w = plane_weights(n_planes, dim)
     return (
-        vectors.select(F.col(id_col).alias("vid"), quantize_expr(F.col(vec_col)).alias("v"))
-        .withColumn("_dots", all_plane_dots(F.col("v"), w))
+        vectors.selectExpr(f"{id_col} as vid", f"{quantize_sql(vec_col)} as v")
+        .withColumn("_dots", all_plane_dots("v", w))
         .select("vid", "v", bucket_from_dots(F.col("_dots"), 0, n_planes).alias("bucket"))
     )

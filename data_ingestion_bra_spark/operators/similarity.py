@@ -20,7 +20,7 @@ IEEE-754 correctly-rounded and engine-independent.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -30,20 +30,18 @@ SCALE = 1_000_000
 
 
 # --------------------------------------------------------------------------
-# SQL-string expression builders
+# Vector expressions
 # --------------------------------------------------------------------------
-# The Column-API higher-order functions below each cost a dozen-plus py4j
-# round trips to construct (a lambda alone is ~12-15 ms measured on the bench
-# box); the serve-path builders call them several times per query, adding
-# ~0.5 s of pure driver-side plan construction per invocation (optimization
-# guide §4: the Python boundary). These _sql twins emit the IDENTICAL
-# Catalyst expression from one parse call; hot call sites use them via
-# selectExpr. The Column variants stay for callers composing arbitrary
-# Column inputs.
+# Each expression has ONE definition: the SQL text below, used via
+# selectExpr / F.expr. A Column-API lambda costs a dozen-plus py4j round
+# trips to construct (~12-15 ms per lambda measured on the bench box) and
+# the serve-path plans emit these several times per query; one parse
+# call builds the same Catalyst expression (optimization guide §4: the
+# Python boundary).
 
 
 def quantize_sql(a: str) -> str:
-    """SQL text of ``quantize_expr`` over a column/fragment named ``a``."""
+    """array<float|double> ``a`` -> array<bigint> fixed point at 1e-6."""
     return (
         f"transform(cast({a} as array<double>),"
         f" x -> cast(round(x * {float(SCALE)!r}D, 0) as bigint))"
@@ -51,89 +49,36 @@ def quantize_sql(a: str) -> str:
 
 
 def idot_sql(a: str, b: str) -> str:
-    """SQL text of ``idot_expr``: exact integer dot of two array<bigint>."""
+    """Exact integer dot of two quantized (array<bigint>) vectors."""
     return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, (acc, x) -> acc + x)"
 
 
 def inorm2_sql(a: str) -> str:
-    """SQL text of ``inorm2_expr``: exact integer squared norm."""
+    """Exact integer squared norm of a quantized vector."""
     return f"aggregate(transform({a}, x -> x * x), 0L, (acc, x) -> acc + x)"
 
 
 def norm_sql(a: str) -> str:
-    """SQL text of ``norm_expr``: sqrt of the exact integer squared norm."""
+    """Double norm of a quantized vector: sqrt of the exact integer."""
     return f"sqrt(cast({inorm2_sql(a)} as double))"
 
 
 def cosine_e4_sql(dot: str, norm_a: str, norm_b: str) -> str:
-    """SQL text of ``cosine_e4_expr`` (same IEEE op sequence, same BIGINT)."""
-    return (
-        f"cast(floor(cast({dot} as double) / ({norm_a} * {norm_b})"
-        f" * 10000.0D + 0.5D) as bigint)"
-    )
-
-
-def quantize_expr(a: Column) -> Column:
-    """array<float|double> -> array<bigint> fixed-point at 1e-6 resolution."""
-    return F.transform(
-        a.cast("array<double>"), lambda x: F.round(x * F.lit(float(SCALE)), 0).cast("bigint")
-    )
-
-
-def idot_expr(a: Column, b: Column) -> Column:
-    """Exact integer dot product of two quantized (array<bigint>) vectors."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-
-
-def inorm2_expr(a: Column) -> Column:
-    """Exact integer squared norm of a quantized vector."""
-    return F.aggregate(
-        F.transform(a, lambda x: x * x), F.lit(0).cast("bigint"), lambda acc, x: acc + x
-    )
-
-
-def cosine_expr(dot: Column, norm_a: Column, norm_b: Column, *, dp: int = 4) -> Column:
-    """Cosine from an exact integer dot and two (double) norms, rounded to dp.
-
-    norm_a/norm_b are each ``sqrt(bigint)`` — one correctly-rounded IEEE op —
-    so the full expression is deterministic across engines.
-
-    NOTE: catalog queries emit ``cosine_e4_expr`` instead — a rounded DOUBLE
-    output is a hash hazard (engines disagree on ``round`` at half
-    boundaries, and a tiny negative cosine rounds to ``-0.0`` on one engine
-    and ``0.0`` on the other — the round-1/2 driver red on
-    similarity_rplsh_bucketed was exactly that signed zero).
-    """
-    return F.round(dot.cast("double") / (norm_a * norm_b), dp)
-
-
-def cosine_e4_expr(dot: Column, norm_a: Column, norm_b: Column) -> Column:
     """Integer cosine at 1e-4 resolution: ``floor(cos * 10000 + 0.5)`` as
     BIGINT.
 
     Every step — sqrt, multiply, divide, multiply, add, floor — is a
     correctly-rounded IEEE-754 double op over bit-identical integer inputs,
     so the result is the SAME integer on every engine; no rounded double
-    (with its half-boundary and signed-zero representation hazards) ever
-    reaches the output schema. The oracle twin spells the identical
+    (with its half-boundary and signed-zero representation hazards — the
+    round-1/2 oracle mismatch on similarity_rplsh_bucketed was a signed zero)
+    ever reaches the output schema. The oracle twin spells the identical
     expression tree: FLOOR(dot / (na * nb) * 10000.0 + 0.5)::BIGINT.
     """
-    return F.floor(
-        dot.cast("double") / (norm_a * norm_b) * F.lit(10000.0) + F.lit(0.5)
-    ).cast("bigint")
-
-
-def norm_expr(a: Column) -> Column:
-    """Double norm of a quantized (array<bigint>) vector: sqrt of exact int."""
-    return F.sqrt(inorm2_expr(a).cast("double"))
-
-
-def with_quantized_vec(df: DataFrame, vec_col: str, out: str = "vec") -> DataFrame:
-    return df.withColumn(out, quantize_expr(F.col(vec_col)))
+    return (
+        f"cast(floor(cast({dot} as double) / ({norm_a} * {norm_b})"
+        f" * 10000.0D + 0.5D) as bigint)"
+    )
 
 
 def brute_force_topk(
@@ -326,7 +271,7 @@ def seed_centroids(
         vectors.filter(F.col(id_col) < n_centroids)
         .select(
             (F.row_number().over(w) - 1).alias("cell"),
-            quantize_expr(F.col("embedding")).alias("cvec"),
+            F.expr(quantize_sql("embedding")).alias("cvec"),
         )
     )
 
@@ -689,21 +634,16 @@ def semdedup_prune(
     Returns one row per vector: (vec_id, cell, cent_sim_e4, n_dups, keep).
     All-BIGINT output, so the unrolled-k-means DuckDB oracle is bit-exact.
     """
-    c = centroids.select(
-        "cell", F.col("cvec").alias("cv"), norm_expr(F.col("cvec")).alias("cn")
-    )
+    c = centroids.selectExpr("cell", "cvec as cv", f"{norm_sql('cvec')} as cn")
     scored = (
-        assignments.select("vid", "cell", "v")
-        .withColumn("vn", norm_expr(F.col("v")))
+        assignments.selectExpr("vid", "cell", "v", f"{norm_sql('v')} as vn")
         .join(F.broadcast(c), "cell")
-        .select(
+        .selectExpr(
             "vid",
             "cell",
             "v",
             "vn",
-            cosine_e4_expr(idot_expr(F.col("v"), F.col("cv")), F.col("vn"), F.col("cn")).alias(
-                "cent_sim_e4"
-            ),
+            f"{cosine_e4_sql(idot_sql('v', 'cv'), 'vn', 'cn')} as cent_sim_e4",
         )
     )
     left = scored.select(
@@ -723,14 +663,12 @@ def semdedup_prune(
     pairs = (
         left.join(right, "cell")
         .filter(F.col("a_id") != F.col("b_id"))
-        .select(
+        .selectExpr(
             "a_id",
             "a_cs",
             "b_id",
             "b_cs",
-            cosine_e4_expr(idot_expr(F.col("av"), F.col("bv")), F.col("an"), F.col("bn")).alias(
-                "pair_cos_e4"
-            ),
+            f"{cosine_e4_sql(idot_sql('av', 'bv'), 'an', 'bn')} as pair_cos_e4",
         )
         .filter(F.col("pair_cos_e4") >= F.lit(int(threshold_e4)))
     )
@@ -787,11 +725,11 @@ def bitext_mining_margin(
     sides to the persisted cells and score within cells (the CCMatrix
     architecture: FAISS-compressed index both directions); this operator
     is the oracle-checkable exact twin of that plan."""
-    a = with_quantized_vec(side_a, vec_col, "av").select(
-        F.col(id_col).alias("a_id"), "av", norm_expr(F.col("av")).alias("an")
+    a = side_a.selectExpr(f"{id_col} as a_id", f"{quantize_sql(vec_col)} as av").selectExpr(
+        "a_id", "av", f"{norm_sql('av')} as an"
     )
-    b = with_quantized_vec(side_b, vec_col, "bv").select(
-        F.col(id_col).alias("b_id"), "bv", norm_expr(F.col("bv")).alias("bn")
+    b = side_b.selectExpr(f"{id_col} as b_id", f"{quantize_sql(vec_col)} as bv").selectExpr(
+        "b_id", "bv", f"{norm_sql('bv')} as bn"
     )
     # Spread the |A|x|B| scoring BEFORE fanning out against the broadcast
     # side: a compact vector table is often ONE parquet split, which would
@@ -803,12 +741,8 @@ def bitext_mining_margin(
     pairs = (
         F.broadcast(a)
         .join(b)
-        .select(
-            "a_id",
-            "b_id",
-            cosine_e4_expr(
-                idot_expr(F.col("av"), F.col("bv")), F.col("an"), F.col("bn")
-            ).alias("cos_e4"),
+        .selectExpr(
+            "a_id", "b_id", f"{cosine_e4_sql(idot_sql('av', 'bv'), 'an', 'bn')} as cos_e4"
         )
     )
     return _margin_mutual_pairs(pairs, k=k, margin_threshold_e4=margin_threshold_e4)

@@ -74,7 +74,7 @@ def dedup_exact_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # MinHash banding CTEs shared by the Jaccard (candidate tier) and MinHash
 # (estimate tier) oracles — mirrors operators/dedup.py minhash_signatures /
-# lsh_candidate_pairs arithmetic exactly.
+# band_buckets / lsh_pair_estimates arithmetic exactly.
 _MINHASH_SIG_CTE = """
     base AS (
       SELECT doc,
@@ -132,7 +132,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = dedup.minhash_signatures(
         dedup.doc_shingles(d, "doc_id", "text", n=3, distinct=False), num_hashes=16
     )
-    cand = dedup.lsh_candidate_pairs(sig, band_size=4, num_hashes=16)
+    cand = dedup.lsh_pair_estimates(sig, band_size=4, num_hashes=16).select("doc_a", "doc_b")
     sh = dedup.doc_shingles(d, "doc_id", "text", n=3)
     return dedup.jaccard_pairs(sh, min_jaccard=0.1, pair_filter=cand)
 
@@ -161,17 +161,19 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs come from equi-joins on (band, bucket) so cost tracks
     bucket collisions, not n², and similarity is estimated from signature
     agreement without touching document text again."""
-    d = load_table(spark, sf_dir, "documents")
+    return _minhash_lsh_pairs(load_table(spark, sf_dir, "documents"))
+
+
+def _minhash_lsh_pairs(d: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, jaccard_est_e4) MinHash-LSH near-dup pairs with
+    estimate ≥ 0.25 — the front half shared by the pair listing and the
+    duplicate-cluster entries."""
     # distinct=False: the signature min is multiset-invariant, so the
     # distinct shuffle is pure waste on this path.
     sh = dedup.doc_shingles(d, "doc_id", "text", n=3, distinct=False)
     # sig feeds both sides of the banded self-join; persist so the
     # hash-heavy signature aggregation runs once, not once per side.
     sig = dedup.minhash_signatures(sh, num_hashes=16).persist()
-    # round-13 stage diet (guide §2.4): the signature rides the band explode
-    # and the estimate is computed in-row on the banded self-join — the old
-    # candidate-distinct + two signature re-joins (4 exchanges of the pair
-    # relation) are gone; see dedup.lsh_pair_estimates.
     est = dedup.lsh_pair_estimates(sig, band_size=4, num_hashes=16)
     return est.filter(F.col("jaccard_est_e4") >= 2500)
 
@@ -220,14 +222,8 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig_b = dedup.minhash_signatures(
         dedup.doc_shingles(batch, "doc_id", "text", n=3, distinct=False), num_hashes=16
     )
-    cand = dedup.incremental_lsh_candidates(sig_c, sig_b, band_size=4, num_hashes=16)
-    pairs = cand.select(F.col("doc_new").alias("doc_a"), F.col("doc_old").alias("doc_b"))
-    est = dedup.minhash_jaccard_estimate(sig_b.unionByName(sig_c), pairs, num_hashes=16)
-    return est.filter(F.col("jaccard_est_e4") >= 2500).select(
-        F.col("doc_a").alias("doc_new"),
-        F.col("doc_b").alias("doc_old"),
-        "jaccard_est_e4",
-    )
+    est = dedup.incremental_lsh_candidates(sig_c, sig_b, band_size=4, num_hashes=16)
+    return est.filter(F.col("jaccard_est_e4") >= 2500)
 
 
 @register(
@@ -362,12 +358,7 @@ def _lsh_dup_components(d: DataFrame) -> DataFrame:
     """MinHash-LSH near-dup pairs (estimate ≥ 0.25) closed into connected
     components — the shared front half of the cluster listing and the
     canonical-selection step. Returns (doc, cluster_id)."""
-    sh = dedup.doc_shingles(d, "doc_id", "text", n=3, distinct=False)
-    sig = dedup.minhash_signatures(sh, num_hashes=16).persist()
-    cand = dedup.lsh_candidate_pairs(sig, band_size=4, num_hashes=16)
-    est = dedup.minhash_jaccard_estimate(sig, cand, num_hashes=16)
-    pairs = est.filter(F.col("jaccard_est_e4") >= 2500).select("doc_a", "doc_b")
-    return graph.connected_components(pairs)
+    return graph.connected_components(_minhash_lsh_pairs(d).select("doc_a", "doc_b"))
 
 
 @register(
@@ -430,7 +421,7 @@ def dedup_canonical_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Fixed-point CTE: embeddings quantized to BIGINT (x1e6) so every dot
 # product / squared norm is EXACT integer arithmetic — summation order can't
 # change the value, making cosines bit-identical between Spark and DuckDB
-# (mirrors operators.similarity.quantize_expr / SCALE).
+# (mirrors operators.similarity.quantize_sql / SCALE).
 _VEC_CTE = """
     v AS (SELECT vec_id,
                  list_transform(CAST(embedding AS DOUBLE[]),
@@ -442,7 +433,7 @@ _VEC_CTE = """
 """
 
 #: integer cosine at 1e-4 for oracle SQL: exact BIGINT dot, then the same
-#: FLOOR(x*10000+0.5) tree the Spark side uses (cosine_e4_expr) — never a
+#: FLOOR(x*10000+0.5) tree the Spark side uses (cosine_e4_sql) — never a
 #: rounded DOUBLE in an output column (round() half-boundary behavior and
 #: signed zero, -0.0 vs 0.0, are engine-specific; floor of a
 #: correctly-rounded IEEE double is the same integer everywhere).
@@ -665,7 +656,7 @@ def _kmeans_oracle_ctes(n_iter: int, train_sample_rate: float | None = None):
         return f"sqrt(CAST(list_sum(list_transform({c}, x -> x * x)) AS DOUBLE))"
 
     def asg_sim(cent: str) -> str:
-        # same FLOOR-e4 integer tree as cosine_e4_expr / assign_cells
+        # same FLOOR-e4 integer tree as cosine_e4_sql / assign_cells
         return (
             "CAST(FLOOR(CAST(list_sum(list_transform(list_zip(nv.e, c.cvec),"
             " p -> p[1] * p[2])) AS DOUBLE)"
@@ -975,10 +966,10 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     contains no all-pairs scan and survives a 100× scale-up."""
     from data_ingestion_bra_spark.operators.rplsh import banded_buckets
     from data_ingestion_bra_spark.operators.similarity import (
-        cosine_e4_expr,
-        idot_expr,
-        norm_expr,
-        quantize_expr,
+        cosine_e4_sql,
+        idot_sql,
+        norm_sql,
+        quantize_sql,
     )
 
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 300)
@@ -990,20 +981,16 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_a", "vec_b")
         .distinct()
     )
-    vecs = emb.select(
-        F.col("vec_id").alias("vid"), quantize_expr(F.col("embedding")).alias("v")
-    ).withColumn("nrm", norm_expr(F.col("v")))
-    a = vecs.select(F.col("vid").alias("vec_a"), F.col("v").alias("ea"), F.col("nrm").alias("na"))
-    b = vecs.select(F.col("vid").alias("vec_b"), F.col("v").alias("eb"), F.col("nrm").alias("nb"))
+    vecs = emb.selectExpr("vec_id as vid", f"{quantize_sql('embedding')} as v").selectExpr(
+        "vid", "v", f"{norm_sql('v')} as nrm"
+    )
+    a = vecs.selectExpr("vid as vec_a", "v as ea", "nrm as na")
+    b = vecs.selectExpr("vid as vec_b", "v as eb", "nrm as nb")
     return (
         cand.join(F.broadcast(a), "vec_a")
         .join(F.broadcast(b), "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            cosine_e4_expr(idot_expr(F.col("ea"), F.col("eb")), F.col("na"), F.col("nb")).alias(
-                "cosine_e4"
-            ),
+        .selectExpr(
+            "vec_a", "vec_b", f"{cosine_e4_sql(idot_sql('ea', 'eb'), 'na', 'nb')} as cosine_e4"
         )
         .filter(F.col("cosine_e4") >= 4500)
     )
@@ -1047,22 +1034,22 @@ def similarity_rplsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets — candidate generation is an equi-join on bucket id, the scale
     path that replaces the all-pairs scan."""
     from data_ingestion_bra_spark.operators.rplsh import rplsh_buckets
-    from data_ingestion_bra_spark.operators.similarity import cosine_e4_expr, idot_expr, norm_expr
+    from data_ingestion_bra_spark.operators.similarity import cosine_e4_sql, idot_sql, norm_sql
 
     emb = load_table(spark, sf_dir, "embeddings")
-    sig = rplsh_buckets(emb, n_planes=8, dim=64).withColumn("nrm", norm_expr(F.col("v")))
-    a = sig.select(F.col("vid").alias("vec_a"), "bucket", F.col("v").alias("va"), F.col("nrm").alias("na"))
-    b = sig.select(F.col("vid").alias("vec_b"), "bucket", F.col("v").alias("vb"), F.col("nrm").alias("nb"))
+    sig = rplsh_buckets(emb, n_planes=8, dim=64).selectExpr(
+        "vid", "bucket", "v", f"{norm_sql('v')} as nrm"
+    )
+    a = sig.selectExpr("vid as vec_a", "bucket", "v as va", "nrm as na")
+    b = sig.selectExpr("vid as vec_b", "bucket", "v as vb", "nrm as nb")
     return (
         a.join(b, "bucket")
         .filter(F.col("vec_a") < F.col("vec_b"))
-        .select(
+        .selectExpr(
             "bucket",
             "vec_a",
             "vec_b",
-            cosine_e4_expr(idot_expr(F.col("va"), F.col("vb")), F.col("na"), F.col("nb")).alias(
-                "cosine_e4"
-            ),
+            f"{cosine_e4_sql(idot_sql('va', 'vb'), 'na', 'nb')} as cosine_e4",
         )
     )
 
@@ -3553,18 +3540,17 @@ def dedup_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     periodic data-quality job at 100 TB. All-integer outputs (round-half-up
     cross-multiplication means), hash-stable on any engine."""
     d = load_table(spark, sf_dir, "documents")
-    # localCheckpoint, not persist: the signature relation is consumed twice
-    # (banding + estimate) but a builder-scoped persist() is never
-    # unpersisted and leaked a cached relation per invocation for the
+    # localCheckpoint, not persist: the signature relation feeds both sides
+    # of the banded self-join, but a persist() scoped to this function is
+    # never unpersisted and leaked a cached relation per invocation for the
     # session lifetime (round-7 ADVICE); the checkpointed RDD is
     # reference-counted and GC-cleaned by ContextCleaner instead.
     sig = dedup.minhash_signatures(
         dedup.doc_shingles(d, "doc_id", "text", n=3, distinct=False), num_hashes=16
     ).localCheckpoint(eager=True)
-    cand = dedup.lsh_candidate_pairs(sig, band_size=4, num_hashes=16)
-    est = dedup.minhash_jaccard_estimate(sig, cand, num_hashes=16)
+    est = dedup.lsh_pair_estimates(sig, band_size=4, num_hashes=16)
     sh = dedup.doc_shingles(d, "doc_id", "text", n=3)
-    exact = dedup.jaccard_pairs(sh, min_jaccard=0.0, pair_filter=cand)
+    exact = dedup.jaccard_pairs(sh, min_jaccard=0.0, pair_filter=est.select("doc_a", "doc_b"))
     joined = est.join(exact, ["doc_a", "doc_b"]).select(
         (F.col("jaccard_est_e4") / 1250).cast("bigint").alias("bucket"),
         "jaccard_est_e4",

@@ -32,18 +32,6 @@ def all_string_schema(columns: list[str]) -> T.StructType:
     return T.StructType([T.StructField(c, T.StringType(), True) for c in columns])
 
 
-def target_schema(schema_cfg: dict[str, list[str]]) -> T.StructType:
-    """Declared post-cast schema from the config's per-type lists."""
-    fields = []
-    for c in schema_cfg.get("integer_fields", []):
-        fields.append(T.StructField(c, T.LongType(), True))
-    for c in schema_cfg.get("string_fields", []):
-        fields.append(T.StructField(c, T.StringType(), True))
-    for c in schema_cfg.get("float_fields", []):
-        fields.append(T.StructField(c, T.DoubleType(), True))
-    return T.StructType(fields)
-
-
 def cast_and_validate(df: DataFrame, schema_cfg: dict[str, list[str]]) -> DataFrame:
     """The reference's load-bearing sequence: required-columns gate → casts →
     dtype re-validation (app/ingestao_csv.py:50-77). All driver-side except

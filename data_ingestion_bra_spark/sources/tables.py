@@ -108,9 +108,9 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 #: size: callers pass a SMALLER value for heavier per-byte work (Python codec
 #: decoders) and a LARGER one for cheap explodes. 64 KiB/task ≈ 100-300 ms of
 #: task compute for the md5/shingle-class pipelines this engine spreads
-#: (measured round 13, A/B at sf0.1/sf1 — see OPTIMIZATION_r13.md), which
-#: amortizes the ~10-20 ms per-task overhead ~10x while still fanning a
-#: multi-MB corpus out to every slot. The round-12 version spread to ALL
+#: (measured round 13, A/B at sf0.1/sf1 — see VERDICT.md and
+#: OPTIMIZATION_r12.md Finding 7), which amortizes the ~10-20 ms per-task
+#: overhead ~10x while still fanning a multi-MB corpus out to every slot. The round-12 version spread to ALL
 #: slots unconditionally, which at 32 local cores put a 32-task round-robin
 #: exchange under 500-row inputs and regressed the official dedup_simhash
 #: meter 0.75x (round-12 verdict item 1: cap the spread by input size).

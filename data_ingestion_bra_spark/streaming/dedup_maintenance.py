@@ -13,6 +13,10 @@ stream form: every micro-batch
 4. commits the flags, then the batch's buckets into the store — both as
    ACID txlog appends with per-epoch idempotency keys.
 
+The store keeps only (doc, band, bucket) — ``dedup.band_buckets`` — not the
+signatures, so flags are candidate pairs without the batch tier's in-row
+Jaccard estimate.
+
 Exactly-once composes across the two commits because the FLAGS land
 first: a crash between the commits replays the epoch with the store still
 excluding the batch, so the recomputed flags are identical and their
@@ -21,8 +25,8 @@ ordering would be wrong: a replay would join the batch against a store
 already containing itself.)
 
 Cumulative invariant (pytest-pinned): after streaming the whole corpus in
-any number of micro-batches, the union of flagged pairs equals the
-full-corpus LSH candidate pairs — incrementality changes the join shape
+any number of micro-batches, the union of flagged pairs equals the pair
+set of ``dedup.lsh_pair_estimates`` over the full corpus — incrementality changes the join shape
 and cost (per epoch: batch-sized work + one equi-join against the store),
 never the answer.
 

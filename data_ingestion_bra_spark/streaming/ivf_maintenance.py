@@ -47,9 +47,9 @@ from pyspark.sql import functions as F
 
 from data_ingestion_bra_spark.operators.similarity import (
     assign_cells,
-    cosine_e4_expr,
-    idot_expr,
-    norm_expr,
+    cosine_e4_sql,
+    idot_sql,
+    norm_sql,
 )
 
 
@@ -57,24 +57,12 @@ def index_mean_sim_e4(lists: DataFrame, centroids: DataFrame) -> int:
     """Baseline index quality: mean winner-centroid cosine (e4) over the
     persisted inverted lists. One broadcast join + one scalar agg — the
     lists carry their assigned cell, so no argmax re-runs."""
-    c = centroids.select(
-        "cell", F.col("cvec").alias("cv"), norm_expr(F.col("cvec")).alias("cn")
-    )
+    c = centroids.selectExpr("cell", "cvec as cv", f"{norm_sql('cvec')} as cn")
+    sim = cosine_e4_sql(idot_sql("v", "cv"), "vn", "cn")
     row = (
-        lists.select("cell", "v")
-        .withColumn("vn", norm_expr(F.col("v")))
+        lists.selectExpr("cell", "v", f"{norm_sql('v')} as vn")
         .join(F.broadcast(c), "cell")
-        .agg(
-            F.floor(
-                F.avg(
-                    cosine_e4_expr(
-                        idot_expr(F.col("v"), F.col("cv")), F.col("vn"), F.col("cn")
-                    )
-                )
-            )
-            .cast("bigint")
-            .alias("mean_sim_e4")
-        )
+        .agg(F.expr(f"floor(avg({sim}))").cast("bigint").alias("mean_sim_e4"))
         .first()
     )
     return int(row["mean_sim_e4"])

@@ -82,8 +82,6 @@ def test_bench_subprocess_emits_compact_line_under_injected_failure(tmp_path):
         "SPARK_GRAFT_SKIP_EXTENDED": "1",
         "SPARK_GRAFT_SKIP_SF1": "1",
         "SPARK_GRAFT_SKIP_SF10": "1",
-        "SPARK_GRAFT_SKIP_SIMHASH_VOCAB": "1",
-        "SPARK_GRAFT_SKIP_BPE_BENCH": "1",
         "SPARK_GRAFT_SKIP_IVF_BUILD": "1",
         "SPARK_GRAFT_SKIP_SKEW": "1",
         "SPARK_GRAFT_SKIP_SEMDEDUP": "1",

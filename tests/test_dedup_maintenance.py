@@ -26,7 +26,7 @@ def _full_pairs(spark):
     )
     return {
         (max(r["doc_a"], r["doc_b"]), min(r["doc_a"], r["doc_b"]))
-        for r in dedup.lsh_candidate_pairs(sig, band_size=4, num_hashes=16).collect()
+        for r in dedup.lsh_pair_estimates(sig, band_size=4, num_hashes=16).collect()
     }
 
 
@@ -97,7 +97,7 @@ def test_real_stream_end_to_end(tmp_path, spark):
     )
     want = {
         (max(r["doc_a"], r["doc_b"]), min(r["doc_a"], r["doc_b"]))
-        for r in dedup.lsh_candidate_pairs(sig).collect()
+        for r in dedup.lsh_pair_estimates(sig).collect()
     }
     got = {
         (r["doc_new"], r["doc_old"])

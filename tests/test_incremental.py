@@ -20,22 +20,23 @@ def _sigs(spark, pred):
 
 def test_incremental_matches_full_lsh_restriction(spark):
     """Incremental candidates == full-corpus LSH pairs restricted to
-    (new, old) — incrementality changes the join shape, not the answer."""
+    (new, old), estimate for estimate — incrementality changes the join
+    shape, not the answer."""
     d = spark.read.parquet(f"{SF}/documents.parquet")
     sig_all = dedup.minhash_signatures(
         dedup.doc_shingles(d, "doc_id", "text", n=3, distinct=False), num_hashes=16
     ).persist()
-    full = dedup.lsh_candidate_pairs(sig_all, band_size=4, num_hashes=16)
+    full = dedup.lsh_pair_estimates(sig_all, band_size=4, num_hashes=16)
     # full pairs are doc_a < doc_b; expand to both orientations, keep (new, old)
     expected = {
-        (a, b) if a % 10 == 0 else (b, a)
-        for a, b in ((r["doc_a"], r["doc_b"]) for r in full.collect())
+        ((a, b) if a % 10 == 0 else (b, a)) + (e,)
+        for a, b, e in ((r["doc_a"], r["doc_b"], r["jaccard_est_e4"]) for r in full.collect())
         if (a % 10 == 0) != (b % 10 == 0)
     }
     sig_b = sig_all.filter(F.col("doc") % 10 == 0)
     sig_c = sig_all.filter(F.col("doc") % 10 != 0)
     got = {
-        (r["doc_new"], r["doc_old"])
+        (r["doc_new"], r["doc_old"], r["jaccard_est_e4"])
         for r in dedup.incremental_lsh_candidates(sig_c, sig_b).collect()
     }
     sig_all.unpersist()

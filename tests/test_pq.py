@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from data_ingestion_bra_spark.operators import pq
-from data_ingestion_bra_spark.operators.similarity import quantize_expr
+from data_ingestion_bra_spark.operators.similarity import quantize_sql
 from data_ingestion_bra_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.01"
@@ -28,10 +28,10 @@ def fitted(spark):
 
 def _exact_topk(spark, vecs, queries, k=10):
     q = queries.select(
-        F.col("vec_id").alias("query_id"), quantize_expr(F.col("embedding")).alias("qv")
+        F.col("vec_id").alias("query_id"), F.expr(quantize_sql("embedding")).alias("qv")
     )
     c = vecs.select(
-        F.col("vec_id").alias("cand_id"), quantize_expr(F.col("embedding")).alias("cv")
+        F.col("vec_id").alias("cand_id"), F.expr(quantize_sql("embedding")).alias("cv")
     )
     d = q.crossJoin(c).select(
         "query_id",
@@ -100,8 +100,8 @@ def test_adc_rerank_recovers_exact_order_on_shortlist(spark, fitted):
     # the re-ranked distances are EXACT: rank-1 of each query whose true
     # nearest made the shortlist has l2_dist == the brute-force minimum
     rr1 = {r["query_id"]: (r["cand_id"], r["l2_dist"]) for r in rr.collect() if r["rank"] == 1}
-    q = queries.select(F.col("vec_id").alias("query_id"), quantize_expr(F.col("embedding")).alias("qv"))
-    c = vecs.select(F.col("vec_id").alias("cand_id"), quantize_expr(F.col("embedding")).alias("cv"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.expr(quantize_sql("embedding")).alias("qv"))
+    c = vecs.select(F.col("vec_id").alias("cand_id"), F.expr(quantize_sql("embedding")).alias("cv"))
     d = (
         q.crossJoin(c)
         .select(
@@ -154,10 +154,10 @@ def test_ivfpq_composed_pipeline_quality_and_exactness(spark, fitted):
     assert {(r["query_id"], r["cand_id"]) for r in out} <= admitted
     # (b) exact distances
     qv = {r["vec_id"]: r["q"] for r in queries.select(
-        "vec_id", quantize_expr(F.col("embedding")).alias("q")).collect()}
+        "vec_id", F.expr(quantize_sql("embedding")).alias("q")).collect()}
     ids = {r["cand_id"] for r in out}
     cv = {r["vec_id"]: r["q"] for r in vecs.filter(F.col("vec_id").isin(list(ids))).select(
-        "vec_id", quantize_expr(F.col("embedding")).alias("q")).collect()}
+        "vec_id", F.expr(quantize_sql("embedding")).alias("q")).collect()}
     for r in out:
         true = sum((a - b) * (a - b) for a, b in zip(qv[r["query_id"]], cv[r["cand_id"]]))
         assert r["l2_dist"] == true
@@ -168,7 +168,7 @@ def test_ivfpq_composed_pipeline_quality_and_exactness(spark, fitted):
         if q != c:
             per_q_admitted.setdefault(q, set()).add(c)
     all_cv = {r["vec_id"]: r["q"] for r in vecs.select(
-        "vec_id", quantize_expr(F.col("embedding")).alias("q")).collect()}
+        "vec_id", F.expr(quantize_sql("embedding")).alias("q")).collect()}
     got_pairs = {(r["query_id"], r["cand_id"]) for r in out}
     expect_pairs = set()
     for q, cands in per_q_admitted.items():

@@ -77,6 +77,57 @@ def _pdf_rows(pdf: pd.DataFrame) -> list[tuple]:
     return list(pdf.itertuples(index=False, name=None))
 
 
+def open_oracle(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with one view per fixture table of ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def check_query(spark, con, fn, oracle: str | None, sf_dir: str) -> dict:
+    """Run one catalog entry on Spark and its oracle twin on DuckDB; return
+    its report record. ``ok`` is True only when row count, column names and
+    the order-insensitive value hash all match (or, with no oracle, when the
+    Spark side runs); ``err`` names the first problem otherwise."""
+    t0 = time.time()
+    try:
+        sdf = fn(spark, sf_dir)
+        scols = sdf.columns
+        srows = _pdf_rows(sdf.toPandas())
+    except Exception as ex:
+        return {"ok": False, "err": f"spark: {str(ex)[:300]}"}
+    if oracle is None:
+        return {"ok": True, "rows": len(srows), "mode": "rows-only"}
+    try:
+        dpdf = con.sql(oracle).df()
+        dcols = list(dpdf.columns)
+        drows = _pdf_rows(dpdf)
+    except Exception as ex:
+        return {"ok": False, "err": f"duckdb: {str(ex)[:300]}"}
+    problems = []
+    if len(srows) != len(drows):
+        problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
+    if sorted(scols) != sorted(dcols):
+        problems.append(f"cols spark={sorted(scols)} duck={sorted(dcols)}")
+    if not problems and table_hash(srows, scols) != table_hash(drows, dcols):
+        problems.append("value-hash mismatch")
+        sn = sorted("\x1f".join(norm_cell(c) for c in r) for r in srows)
+        dn = sorted("\x1f".join(norm_cell(c) for c in r) for r in drows)
+        for a, b in zip(sn, dn):
+            if a != b:
+                problems.append(f"  first diff: spark={a!r} duck={b!r}")
+                break
+    if problems:
+        return {"ok": False, "rows": len(srows), "err": "; ".join(problems)}
+    return {
+        "ok": True,
+        "rows": len(srows),
+        "mode": "rows+schema+hash",
+        "sec": round(time.time() - t0, 2),
+    }
+
+
 def main() -> int:
     # --json PATH writes the full per-query report (the committable artifact
     # that keeps below-gate-window queries provably green round over round)
@@ -96,79 +147,37 @@ def main() -> int:
     oracles = e.oracle_sql()
 
     spark = get_spark("oracle-check")
-    con = duckdb.connect()
-    for t in TABLE_NAMES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = open_oracle(sf_dir)
 
-    failures, n_run = [], 0
+    n_failed, n_run = 0, 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
         n_run += 1
-        t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            spdf = sdf.toPandas()
-            srows = _pdf_rows(spdf)
-        except Exception as ex:
-            failures.append((name, f"SPARK ERROR: {ex}"))
-            report[name] = {"ok": False, "err": f"spark: {str(ex)[:300]}"}
-            print(f"FAIL  {name}: spark error: {str(ex)[:300]}")
-            continue
-        if name not in oracles:
-            report[name] = {"ok": True, "rows": len(srows), "mode": "rows-only"}
-            print(f"ok*   {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s) [no oracle]")
-            continue
-        try:
-            dpdf = con.sql(oracles[name]).df()
-            dcols = list(dpdf.columns)
-            drows = _pdf_rows(dpdf)
-        except Exception as ex:
-            failures.append((name, f"DUCKDB ERROR: {ex}"))
-            report[name] = {"ok": False, "err": f"duckdb: {str(ex)[:300]}"}
-            print(f"FAIL  {name}: duckdb error: {str(ex)[:300]}")
-            continue
-        problems = []
-        if len(srows) != len(drows):
-            problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
-        if sorted(scols) != sorted(dcols):
-            problems.append(f"cols spark={sorted(scols)} duck={sorted(dcols)}")
-        if not problems and table_hash(srows, scols) != table_hash(drows, dcols):
-            problems.append("value-hash mismatch")
-            sn = sorted("\x1f".join(norm_cell(c) for c in r) for r in srows)
-            dn = sorted("\x1f".join(norm_cell(c) for c in r) for r in drows)
-            for a, b in zip(sn, dn):
-                if a != b:
-                    problems.append(f"  first diff: spark={a!r} duck={b!r}")
-                    break
-        if problems:
-            failures.append((name, "; ".join(problems)))
-            report[name] = {"ok": False, "rows": len(srows), "err": "; ".join(problems)}
-            print(f"FAIL  {name}: {'; '.join(problems)}")
+        rec = check_query(spark, con, fn, oracles.get(name), sf_dir)
+        report[name] = rec
+        if not rec["ok"]:
+            n_failed += 1
+            print(f"FAIL  {name}: {rec['err']}")
+        elif rec["mode"] == "rows-only":
+            print(f"ok*   {name}: rows-only ({rec['rows']} rows) [no oracle]")
         else:
-            report[name] = {
-                "ok": True,
-                "rows": len(srows),
-                "mode": "rows+schema+hash",
-                "sec": round(time.time() - t0, 2),
-            }
-            print(f"ok    {name}: {len(srows)} rows match ({time.time()-t0:.1f}s)")
+            print(f"ok    {name}: {rec['rows']} rows match ({rec['sec']:.1f}s)")
 
-    print(f"\n{n_run - len(failures)}/{n_run} green")
+    print(f"\n{n_run - n_failed}/{n_run} green")
     if json_out:
         import json
 
         payload = {
             "sf_dir": sf_dir,
             "n_queries": n_run,
-            "n_green": n_run - len(failures),
+            "n_green": n_run - n_failed,
             "checker": "tools/check_oracle.py (type-strict pandas fetch path)",
             "queries": report,
         }
         Path(json_out).write_text(json.dumps(payload, indent=1) + "\n")
         print(f"report written: {json_out}")
-    return 1 if failures else 0
+    return 1 if n_failed else 0
 
 
 if __name__ == "__main__":
