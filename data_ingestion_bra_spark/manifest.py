@@ -10,8 +10,9 @@ A manifest is a sidecar ``<name>.manifest.json`` with three sections
   optional 3-row preview
 
 Spark adaptations (documented deviations from the single-file reference):
-- row count + ALL null counts come from ONE aggregate job (the reference
-  does a pandas pass per column, app/utils/metadata.py:32-33);
+- row count + ALL null counts ride the write's own job (``Observation``, no
+  second scan; the reference does a pandas pass per column,
+  app/utils/metadata.py:32-33);
 - distributed outputs have many part-files: ``core`` records the sorted
   part list, per-part md5s, total bytes, and a combined md5 (md5 of the
   concatenated sorted part md5s) — single-file outputs degrade to exactly
@@ -28,7 +29,7 @@ import os
 from datetime import datetime
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 _CHUNK = 1024 * 1024
@@ -68,7 +69,7 @@ def count_file_lines(path: str) -> int:
     trailing newline still counts as a line. NOTE the reference's latent bug
     (counts physical lines, over-counting multiline quoted CSV rows) is
     inherited by design here — this is the file-level metric, not the row
-    count; DataFrame manifests use df.count()."""
+    count; DataFrame manifests use the write's observed row count."""
     n = 0
     last = b"\n"
     with open(path, "rb") as f:
@@ -80,25 +81,34 @@ def count_file_lines(path: str) -> int:
     return n
 
 
-def schema_stats_job(df: DataFrame, *, include_nulls: bool = True) -> dict[str, Any]:
-    """linhas + per-column nulos in ONE aggregate pass (A1+A2, SURVEY §2.4)."""
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    if include_nulls:
-        aggs += [F.sum(F.col(c).isNull().cast("bigint")).alias(c) for c in df.columns]
-    row = df.agg(*aggs).first().asDict()
-    stats: dict[str, Any] = {
+def observe_schema_stats(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """Attach linhas + per-column ``nulos_<col>`` (A1+A2, SURVEY §2.4) to
+    ``df`` as an ``Observation``: write the returned frame and the stats
+    arrive with the write's own job. CONTRACT: observe right before the
+    write and run no other action on the observed frame first — an
+    ``Observation`` reports the first action only (preview on ``df``)."""
+    obs = Observation()
+    aggs = [F.sum(F.col(c).isNull().cast("bigint")).alias(f"nulos_{c}") for c in df.columns]
+    return df.observe(obs, F.count(F.lit(1)).alias("linhas"), *aggs), obs
+
+
+def schema_stats_job(df: DataFrame, observation: Observation) -> dict[str, Any]:
+    """The ``schema_stats`` record from ``df``'s schema and its write's
+    observed stats. Launches no job."""
+    got = observation.get
+    return {
         "colunas": list(df.columns),
         "dtypes": {f.name: f.dataType.simpleString() for f in df.schema.fields},
-        "linhas": int(row["__rows"]),
+        "linhas": int(got["linhas"]),
+        # sum() over zero rows is NULL: an empty write has 0 nulls
+        "nulos": {c: int(got[f"nulos_{c}"] or 0) for c in df.columns},
     }
-    if include_nulls:
-        stats["nulos"] = {c: int(row[c]) for c in df.columns}
-    return stats
 
 
 def write_metadata_from_df(
     df: DataFrame,
     path: str,
+    observation: Observation,
     *,
     dataset: str,
     origem: str | None = None,
@@ -109,7 +119,6 @@ def write_metadata_from_df(
     partition_value: str | None = None,
     run_id: str | None = None,
     producer: str | None = None,
-    include_nulls: bool = True,
     include_preview: bool = False,
     preview_order: list[str] | None = None,
     extra: dict[str, Any] | None = None,
@@ -119,6 +128,9 @@ def write_metadata_from_df(
     """Write ``<path>.manifest.json`` for a written output + its DataFrame.
 
     Ref: write_metadata_from_df app/utils/metadata.py:85-151.
+
+    ``observation``: from ``observe_schema_stats(df)``, whose observed
+    frame wrote ``path``.
 
     ``manifest_name``: write INSIDE a directory output under this name
     instead of as a sibling — use an underscore-prefixed name (e.g.
@@ -145,7 +157,7 @@ def write_metadata_from_df(
             {"arquivo": norm(os.path.relpath(p, path)), "hash_md5": h, "tamanho_bytes": os.path.getsize(p)}
             for p, h in zip(files, part_hashes)
         ]
-    stats = schema_stats_job(df, include_nulls=include_nulls)
+    stats = schema_stats_job(df, observation)
     if include_preview:
         pdf = df
         if preview_order:

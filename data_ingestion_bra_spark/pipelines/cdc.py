@@ -30,7 +30,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_ingestion_bra_spark.manifest import write_metadata_from_df
+from data_ingestion_bra_spark.manifest import observe_schema_stats, write_metadata_from_df
 from data_ingestion_bra_spark.operators.merge import merge_upsert, scd2_intervals
 from data_ingestion_bra_spark.sinks.writer import write_partitioned
 from data_ingestion_bra_spark.streaming.bronze_ingest import latest_partition
@@ -68,8 +68,9 @@ def run_cdc_batch(
     # makes replayed pipelines produce identical files, which is what lets
     # the test pin byte-stability (and makes snapshot diffs trivial)
     merged = merged.sortWithinPartitions(*keys)
+    observed, stats = observe_schema_stats(merged)
     part_dir = write_partitioned(
-        merged,
+        observed,
         base_dir,
         table,
         partition_value=partition_value,
@@ -79,6 +80,7 @@ def run_cdc_batch(
     write_metadata_from_df(
         merged,
         part_dir,
+        stats,
         dataset=table,
         origem="cdc",
         partition_key="anomesdia",
@@ -90,7 +92,7 @@ def run_cdc_batch(
     return {
         "partition_dir": part_dir,
         "n_changes": changes.count(),
-        "n_snapshot": merged.count(),
+        "n_snapshot": stats.get["linhas"],  # observed by the snapshot write
     }
 
 

@@ -4,7 +4,7 @@
 
 Flow: fetch /users → cast+validate → filter by configured target name →
 extract user_id → fetch /posts?userId=N (server-side pushdown) →
-cast+validate → display → partitioned writes → manifests.
+cast+validate → display → partitioned writes (observing stats) → manifests.
 
 The two-step users→posts flow is the reference's manual semi-join
 (SURVEY §2.3); the query-surface twin is ``flagship_customer_orders``
@@ -21,7 +21,7 @@ from typing import Any
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from data_ingestion_bra_spark.manifest import write_metadata_from_df
+from data_ingestion_bra_spark.manifest import observe_schema_stats, write_metadata_from_df
 from data_ingestion_bra_spark.schema import cast_and_validate, load_config
 from data_ingestion_bra_spark.sinks.writer import today_yyyymmdd, write_partitioned
 from data_ingestion_bra_spark.sources.rest import fetch_json_df
@@ -88,8 +88,9 @@ def run(
     pv = today_yyyymmdd(run_date)
     results: dict[str, Any] = {"user_id": user_id}
     for key, df in (("users", users), ("posts", posts)):
+        observed, stats = observe_schema_stats(df)
         part_dir = write_partitioned(
-            df,
+            observed,
             out["base_dir"],
             out[f"{key}_table"],
             partition_key=out.get("partition_key", "anomesdia"),
@@ -101,6 +102,7 @@ def run(
         manifest = write_metadata_from_df(
             df,
             part_dir,
+            stats,
             dataset=out[f"{key}_table"],
             origem=api["base_url"],
             endpoint=api["endpoints"][key],

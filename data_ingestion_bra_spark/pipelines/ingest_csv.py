@@ -4,7 +4,7 @@
 
 Flow: read all-string CSV → normalize column names → required-columns gate →
 extra-column warning (kept, permissive evolution) → casts per declared
-schema → dtype revalidation → preview → partitioned write → manifest.
+schema → dtype revalidation → preview → observed partitioned write → manifest.
 
 Exit codes (reference V5, app/ingestao_csv.py:130-138): 1 generic,
 3 schema error; FileNotFoundError propagates as 1.
@@ -18,7 +18,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_ingestion_bra_spark.manifest import write_metadata_from_df
+from data_ingestion_bra_spark.manifest import observe_schema_stats, write_metadata_from_df
 from data_ingestion_bra_spark.schema import cast_and_validate, load_config
 from data_ingestion_bra_spark.sinks.writer import today_yyyymmdd, write_partitioned
 from data_ingestion_bra_spark.sources.csv import normalize_columns, read_csv_asserted
@@ -67,8 +67,10 @@ def run(
 
     out = cfg["output"]
     pv = today_yyyymmdd(run_date)
+    # observed AFTER the preview: an Observation reports the first action only
+    observed, stats = observe_schema_stats(df)
     part_dir = write_partitioned(
-        df,
+        observed,
         out["base_dir"],
         out["table"],
         partition_key=out.get("partition_key", "anomesdia"),
@@ -80,6 +82,7 @@ def run(
     manifest_path = write_metadata_from_df(
         df,
         part_dir,
+        stats,
         dataset=out["table"],
         origem=csv_cfg["path"],
         delimitador=csv_cfg.get("delimiter", ";"),
@@ -88,7 +91,7 @@ def run(
         partition_value=pv,
         producer="data_ingestion_bra_spark.pipelines.ingest_csv",
     )
-    return {"rows": None, "partition_dir": part_dir, "manifest": manifest_path, "df": df}
+    return {"rows": stats.get["linhas"], "partition_dir": part_dir, "manifest": manifest_path, "df": df}
 
 
 def main(argv: list[str]) -> int:

@@ -3,10 +3,10 @@ parquet with a governance manifest per batch — the streaming evolution of
 the reference's batch pipelines (same sink + manifest machinery).
 
 ``foreachBatch`` is the right tool here: each micro-batch is a normal
-DataFrame, so the batch writer and the one-job manifest stats are reused
-unchanged, and the sink stays exactly-once per epoch (Spark tracks epoch ids
-in the checkpoint; a replayed epoch overwrites the same partition value +
-batch file deterministically).
+DataFrame, so the batch writer and the write-observed manifest stats are
+reused unchanged, and the sink stays exactly-once per epoch (Spark tracks
+epoch ids in the checkpoint; a replayed epoch overwrites the same partition
+value + batch file deterministically).
 """
 
 from __future__ import annotations
@@ -17,7 +17,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_ingestion_bra_spark.manifest import write_metadata_from_df
+from data_ingestion_bra_spark.manifest import observe_schema_stats, write_metadata_from_df
 
 
 def bronze_batch_writer(
@@ -40,11 +40,13 @@ def bronze_batch_writer(
         for (pv,) in dated.select(partition_key).distinct().collect():
             part = dated.filter(F.col(partition_key) == pv).drop(partition_key)
             out_dir = os.path.join(base_dir, table, f"{partition_key}={pv}", f"batch={epoch_id}")
-            part.write.mode("overwrite").parquet(out_dir)
+            observed, stats = observe_schema_stats(part)
+            observed.write.mode("overwrite").parquet(out_dir)
             if manifest:
                 write_metadata_from_df(
                     part,
                     out_dir,
+                    stats,
                     dataset=table,
                     origem="stream",
                     partition_key=partition_key,

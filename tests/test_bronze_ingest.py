@@ -45,6 +45,9 @@ def test_stream_to_bronze_with_manifests(spark, tmp_path):
     m = json.load(open(manifests[0]))
     assert m["dataset"]["origem"] == "stream"
     assert m["schema_stats"]["linhas"] > 0
+    # each manifest counts its own batch: together they cover the source
+    linhas = [json.load(open(p))["schema_stats"]["linhas"] for p in manifests]
+    assert sum(linhas) == ev.count()
 
     # total rows across bronze == source rows (exactly-once per epoch)
     back = spark.read.option("basePath", str(tmp_path / "bronze/tb_events")).parquet(

@@ -65,11 +65,13 @@ def test_cdc_two_batches_end_to_end(spark, tmp_path):
 
     # batch 2 → NEW partition; batch-1 partition must stay byte-identical
     # (dynamic overwrite replaces only the written partition value)
-    cdc.run_cdc_batch(
+    res2 = cdc.run_cdc_batch(
         spark, base, "tb_users", spark.createDataFrame(B2, SCHEMA),
         keys=["id"], partition_value="20240102", single_file=True,
     )
     assert _file_md5s(snap1_dir) == snap1_bytes
+    # the snapshot count is the write's observed row count
+    assert res2["n_snapshot"] == spark.read.parquet(res2["partition_dir"]).count() == 4
 
     # snapshot correctness: key 2 updated, key 4 inserted last-wins
     snap2 = {

@@ -6,6 +6,7 @@ from datetime import date, datetime
 
 from data_ingestion_bra_spark.manifest import (
     count_file_lines,
+    observe_schema_stats,
     write_manifest_from_file,
     write_metadata_from_df,
 )
@@ -62,12 +63,14 @@ def test_partitioned_csv_single_file(spark, tmp_path):
 
 def test_manifest_from_df_fields(spark, tmp_path):
     df = spark.createDataFrame([(1, None), (2, "b"), (3, "c")], "k bigint, v string")
+    observed, stats = observe_schema_stats(df)
     part_dir = write_partitioned(
-        df, str(tmp_path), "tb_m", partition_value="20251020", fmt="csv", single_file=True
+        observed, str(tmp_path), "tb_m", partition_value="20251020", fmt="csv", single_file=True
     )
     mpath = write_metadata_from_df(
         df,
         part_dir,
+        stats,
         dataset="tb_m",
         origem="unit-test",
         delimitador=";",
@@ -94,8 +97,9 @@ def test_manifest_from_df_fields(spark, tmp_path):
 
 def test_manifest_multipart_hash(spark, tmp_path):
     df = spark.createDataFrame([(i,) for i in range(100)], "k bigint").repartition(4)
-    part_dir = write_partitioned(df, str(tmp_path), "tb_p", partition_value="20251020")
-    mpath = write_metadata_from_df(df, part_dir, dataset="tb_p")
+    observed, stats = observe_schema_stats(df)
+    part_dir = write_partitioned(observed, str(tmp_path), "tb_p", partition_value="20251020")
+    mpath = write_metadata_from_df(df, part_dir, stats, dataset="tb_p")
     m = json.load(open(mpath))
     assert len(m["core"]["partes"]) >= 2  # multi-part recorded per part
     assert all(len(p["hash_md5"]) == 32 for p in m["core"]["partes"])
@@ -126,16 +130,31 @@ def test_line_count_without_trailing_newline(tmp_path):
     assert count_file_lines(str(e)) == 0
 
 
-def test_observed_write_stats_match_second_pass(spark, tmp_path):
-    """Observation-based stats (collected during the write) must equal the
-    manifest's dedicated aggregate job — same numbers, one fewer scan."""
-    from data_ingestion_bra_spark.manifest import schema_stats_job
-    from data_ingestion_bra_spark.sinks.observed_write import write_parquet_with_stats
+def test_manifest_of_empty_write_reports_zeros(spark, tmp_path):
+    """An empty write observes count 0 and NULL sums (sum over zero rows):
+    the manifest must report 0 nulls per column, not crash on int(None)."""
+    df = spark.createDataFrame([], "k bigint, v string")
+    observed, stats = observe_schema_stats(df)
+    part_dir = write_partitioned(
+        observed, str(tmp_path), "tb_e", partition_value="20251020", fmt="csv", single_file=True
+    )
+    m = json.load(open(write_metadata_from_df(df, part_dir, stats, dataset="tb_e")))
+    assert m["schema_stats"]["linhas"] == 0
+    assert m["schema_stats"]["nulos"] == {"k": 0, "v": 0}
+
+
+def test_observed_write_stats_match_catalog_aggregate(spark, tmp_path):
+    """The stats a governed write observes must equal the catalog's one-job
+    aggregate ``manifest_null_counts_documents`` (itself checked against
+    its DuckDB twin) — same numbers, no second scan."""
+    from data_ingestion_bra_spark.plans.relational import manifest_null_counts_documents
     from data_ingestion_bra_spark.sources.tables import load_table
 
     docs = load_table(spark, SF_SMOKE, "documents")
-    out = str(tmp_path / "docs_observed")
-    got = write_parquet_with_stats(docs, out)
-    want = schema_stats_job(docs)
-    assert got == want
-    assert spark.read.parquet(out).count() == want["linhas"]
+    observed, stats = observe_schema_stats(docs)
+    part_dir = write_partitioned(observed, str(tmp_path), "tb_docs", partition_value="20251020")
+    got = json.load(open(write_metadata_from_df(docs, part_dir, stats, dataset="tb_docs")))
+    want = manifest_null_counts_documents(spark, SF_SMOKE).first().asDict()
+    assert got["schema_stats"]["linhas"] == want["linhas"]
+    assert got["schema_stats"]["nulos"] == {c: want[f"nulos_{c}"] for c in docs.columns}
+    assert spark.read.parquet(part_dir).count() == want["linhas"]

@@ -52,13 +52,17 @@ def _csv_config(tmp_path):
     return str(cfg_path)
 
 
-def test_csv_pipeline_end_to_end(spark, tmp_path):
+@pytest.mark.parametrize("show_preview", [True, False])
+def test_csv_pipeline_end_to_end(spark, tmp_path, show_preview):
+    # with the preview on, its show() runs first: the stats must still come
+    # from the write, which the manifest's Observation is attached to
     cfg_path = _csv_config(tmp_path)
     with pytest.warns(UserWarning):  # extra column kept with warning
         res = ingest_csv.run(
-            spark, cfg_path, run_date=date(2025, 10, 20), show_preview=False
+            spark, cfg_path, run_date=date(2025, 10, 20), show_preview=show_preview
         )
     assert res["partition_dir"].endswith("tb_ind/anomesdia=20251020")
+    assert res["rows"] == 3
     m = json.load(open(res["manifest"]))
     assert m["schema_stats"]["linhas"] == 3
     assert m["schema_stats"]["nulos"]["ibc"] == 1  # empty string coerced null
@@ -70,6 +74,24 @@ def test_csv_pipeline_end_to_end(spark, tmp_path):
     assert out[0]["ibc"] == 29.45
     assert out[1]["ibc"] == 1234.56
     assert dict(res["df"].dtypes)["ano"] == "bigint"
+
+
+def test_csv_pipeline_job_count(spark, tmp_path):
+    """The manifest stats ride the write's own job: without the preview the
+    pipeline launches at most 3 jobs (two one-row header sniffs, the write)."""
+    cfg_path = _csv_config(tmp_path)
+    sc = spark.sparkContext
+    group = "test-ingest-csv-jobs"
+    sc.setJobGroup(group, "ingest_csv job count")
+    try:
+        with pytest.warns(UserWarning):
+            ingest_csv.run(spark, cfg_path, run_date=date(2025, 10, 20), show_preview=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker learns of jobs through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
 
 
 class _FakeResponse:
