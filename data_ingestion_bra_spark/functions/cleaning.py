@@ -10,13 +10,15 @@ Semantics reproduced (empirically verified against the reference, SURVEY §1.2):
 - ``to_int``:   invalid / empty → NULL  (pd.to_numeric(errors="coerce") →
   non-ANSI ``cast(bigint)``). ``"3.0"`` → 3 needs a double hop first.
 - ``to_str``:   cast to string, trim, strip one layer of surrounding double
-  quotes. Divergence (documented, SURVEY §1.2): the reference stringifies
-  null → ``"None"`` (pandas astype(str) artifact, casting.py:10); we keep
-  NULL — the sane Spark behavior — and tests pin the divergence.
+  quotes; the regex runs only on values that contain a ``"``. Divergence
+  (documented, SURVEY §1.2): the reference stringifies null → ``"None"``
+  (pandas astype(str) artifact, casting.py:10); we keep NULL — the sane
+  Spark behavior — and tests pin the divergence.
 - ``to_float_pt``: pt-BR numeric parse — strip ``.`` thousands separators,
-  then ``,`` → ``.``, then coerce (casting.py:13-24). Transform ORDER is
-  load-bearing: an already-dot-decimal ``"64.9073"`` becomes ``649073.0``,
-  same as the reference quirk.
+  then ``,`` → ``.``, then coerce (casting.py:13-24). One ``translate`` maps
+  both characters in a single pass, which equals the reference's two ordered
+  replaces: an already-dot-decimal ``"64.9073"`` becomes ``649073.0``, same
+  as the reference quirk.
 """
 
 from __future__ import annotations
@@ -40,22 +42,23 @@ def to_str(col: Column | str) -> Column:
     """String cast + trim + strip surrounding double quotes.
 
     Ref: app/utils/casting.py:9-10. NULL stays NULL (documented divergence
-    from pandas' astype(str) → "None"; SURVEY §1.2).
+    from pandas' astype(str) → "None"; SURVEY §1.2). The regex can only
+    change a value that contains a ``"``, so only those values run it.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.trim(c.cast("string")), '^"|"$', "")
+    t = F.trim(c.cast("string"))
+    return F.when(t.contains('"'), F.regexp_replace(t, '^"|"$', "")).otherwise(t)
 
 
 def to_float_pt(col: Column | str) -> Column:
     """pt-BR numeric parse: drop '.' (thousands), ','→'.', coerce → double.
 
-    Ref: app/utils/casting.py:13-24 — preserve exact transform order.
+    Ref: app/utils/casting.py:13-24. ``translate`` deletes every '.' and
+    maps every ',' to '.' in one pass; a '.' it writes is never deleted, so
+    the result equals the reference's drop-then-replace order.
     """
     c = F.col(col) if isinstance(col, str) else col
-    s = c.cast("string")
-    s = F.regexp_replace(s, r"\.", "")
-    s = F.regexp_replace(s, ",", ".")
-    return s.cast("double")
+    return F.translate(c.cast("string"), ",.", ".").cast("double")
 
 
 def apply_casts(

@@ -1,9 +1,10 @@
 """CSV source with asserted (never inferred) schema — reference S5
 (app/ingestao_csv.py:38-44).
 
-Reads every column as string with an explicit ``StructType`` — the Spark
-equivalent of pandas ``dtype=str`` — then the cast layer applies the
-declared types. No inference scan, BOM handled by Spark's UTF-8 reader.
+Reads every column as string — the Spark equivalent of pandas ``dtype=str``
+— then the cast layer applies the declared types. Names come from the caller
+or from the header row; types are never inferred (no inference scan). BOM
+handled by Spark's UTF-8 reader.
 
 ``multi_line=True`` is required for quoted fields with embedded newlines
 (reference posts.txt: 41 physical lines, 10 records). NOTE: multiLine
@@ -30,9 +31,32 @@ def read_csv_asserted(
     multi_line: bool = False,
     quote: str = '"',
 ) -> DataFrame:
-    """Read CSV with all-string schema. If ``columns`` is None, sniff the
-    header for names only (one tiny driver read), still typing everything
-    string."""
+    """Read CSV with all-string schema.
+
+    With ``columns`` given, that list is the schema. With ``columns=None``
+    and ``header=True``, Spark takes the names from the header row in one
+    one-row job; ``inferSchema`` stays off, so every column is a string.
+    Header cases (pinned in ``tests/test_sources_csv.py``):
+
+    - a UTF-8 BOM before the first name is dropped;
+    - accented names are kept as written (``"Código Município"``);
+    - duplicate names (case-insensitive) get their 0-based position
+      appended: ``a;b;a`` → ``a0, b, a2``;
+    - an empty header cell is named ``_c<position>``: ``a;;c`` → ``a, _c1, c``.
+
+    With ``columns=None`` and ``header=False``, the first row's values are
+    sniffed as names (one tiny driver read), and the whole file, that row
+    included, is read as data under them.
+    """
+    reader = spark.read.options(
+        sep=sep,
+        encoding=encoding,
+        header=header,
+        multiLine=multi_line,
+        quote=quote,
+    )
+    if columns is None and header:
+        return reader.csv(path)
     if columns is None:
         first = (
             spark.read.options(sep=sep, encoding=encoding, header=False)
@@ -41,14 +65,7 @@ def read_csv_asserted(
             .first()
         )
         columns = [str(v) for v in first]
-    reader = spark.read.options(
-        sep=sep,
-        encoding=encoding,
-        header=header,
-        multiLine=multi_line,
-        quote=quote,
-    ).schema(all_string_schema(columns))
-    return reader.csv(path)
+    return reader.schema(all_string_schema(columns)).csv(path)
 
 
 def normalize_columns(df: DataFrame, mapping: dict[str, str]) -> DataFrame:

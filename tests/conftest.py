@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import sys
 import tempfile
+from contextlib import contextmanager
 from pathlib import Path
 
 import pytest
@@ -22,6 +23,41 @@ def spark():
     )
     tune_session(s)
     yield s
+
+
+@contextmanager
+def sql_conf(spark, conf):
+    """Set session SQL confs for the block, then restore them."""
+    old = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            # conf.get(key, None) is None for never-set keys — unset to restore
+            # the session default, otherwise the override leaks into later tests
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@contextmanager
+def job_ids(spark, group):
+    """Run the block's actions in job group ``group``; once the block exits,
+    the yielded list holds the ids of the jobs it launched."""
+    sc = spark.sparkContext
+    ids = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        # the status tracker learns of jobs through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 SF_SMOKE = "/root/testdata/sf0.001"

@@ -3,29 +3,12 @@ sampling invariants (layout-independence, nested subsets, rate bounds)."""
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import functions as F
 
 from data_ingestion_bra_spark.operators.bucketing import colocated_join, write_bucketed
 from data_ingestion_bra_spark.operators.sampling import deterministic_sample, stratified_sample
 from data_ingestion_bra_spark.sources.tables import load_table
-from tests.conftest import SF_SMOKE
-
-
-@contextmanager
-def _conf(spark, key, value):
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        # conf.get(key, None) is None for never-set keys — unset to restore
-        # the session default, otherwise the override leaks into later tests
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
+from tests.conftest import SF_SMOKE, sql_conf
 
 
 def _executed_plan(df) -> str:
@@ -42,7 +25,7 @@ def test_bucketed_join_has_no_exchange(spark):
     try:
         # Force a non-broadcast join so co-location is what removes the
         # shuffle (a broadcast would hide it behind a BroadcastExchange).
-        with _conf(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
+        with sql_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
             joined = colocated_join(spark, "b_orders", "b_customer", "o_custkey")
             joined.collect()
             plan = _executed_plan(joined)

@@ -1,8 +1,8 @@
 """Spark vs DuckDB oracle parity, in tier-1, for the near-dup and vector
 entries whose plans share the single MinHash-LSH path and the SQL-string
-vector expressions: row count, column names and the order-insensitive value
-hash, through the same check ``tools/check_oracle.py`` runs over the whole
-catalog."""
+vector expressions, and for the ingest cast layer: row count, column names
+and the order-insensitive value hash, through the same check
+``tools/check_oracle.py`` runs over the whole catalog."""
 
 from __future__ import annotations
 
@@ -31,6 +31,8 @@ ENTRIES = [
     "similarity_bitext_mining",
     "similarity_topk_ivf",
     "similarity_topk_ivfpq",
+    # cast layer (functions.cleaning: to_float_pt / to_str / to_int)
+    "scalar_cast_suite",
 ]
 
 

@@ -13,6 +13,7 @@ import pytest
 from data_ingestion_bra_spark.pipelines import ingest_api, ingest_csv
 from data_ingestion_bra_spark.sources.rest import safe_get
 from data_ingestion_bra_spark.validate import ApiError
+from tests.conftest import job_ids, sql_conf
 
 CSV_BODY = (
     "﻿Ano;Código Município;Município;UF;IBC;Extra\n"
@@ -22,9 +23,9 @@ CSV_BODY = (
 )
 
 
-def _csv_config(tmp_path):
+def _csv_config(tmp_path, body=CSV_BODY):
     csv_path = tmp_path / "input.csv"
-    csv_path.write_text(CSV_BODY, encoding="utf-8")
+    csv_path.write_text(body, encoding="utf-8")
     cfg = {
         "csv": {"path": str(csv_path), "delimiter": ";", "encoding": "utf-8", "has_header": True},
         "columns_normalization": {
@@ -78,20 +79,50 @@ def test_csv_pipeline_end_to_end(spark, tmp_path, show_preview):
 
 def test_csv_pipeline_job_count(spark, tmp_path):
     """The manifest stats ride the write's own job: without the preview the
-    pipeline launches at most 3 jobs (two one-row header sniffs, the write)."""
+    pipeline launches at most 2 jobs (the one-row header read, the write)."""
     cfg_path = _csv_config(tmp_path)
-    sc = spark.sparkContext
-    group = "test-ingest-csv-jobs"
-    sc.setJobGroup(group, "ingest_csv job count")
-    try:
-        with pytest.warns(UserWarning):
-            ingest_csv.run(spark, cfg_path, run_date=date(2025, 10, 20), show_preview=False)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # the status tracker learns of jobs through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    with job_ids(spark, "test-ingest-csv-jobs") as jobs, pytest.warns(UserWarning):
+        ingest_csv.run(spark, cfg_path, run_date=date(2025, 10, 20), show_preview=False)
+    assert len(jobs) <= 2
+
+
+def test_csv_pipeline_scans_source_once(spark, tmp_path, capsys):
+    """With the preview on and the source split 3+ ways, only the write
+    reads the whole file: every job is a single task (header row, preview
+    head, coalesced write), and the preview prints the file's first data
+    rows in file order (the reference's head(10), no sort)."""
+    # codes fall through the file, so file order is not sorted order
+    codes = [f"{9999 - 37 * i:04d}" for i in range(200)]
+    body = "\ufeffAno;Código Município;Município;UF;IBC;Extra\n" + "".join(
+        f'2023;{c};"Cidade {i}";SP;{i},5;x\n' for i, c in enumerate(codes)
+    )
+    cfg_path = _csv_config(tmp_path, body)
+    csv_path = json.load(open(cfg_path))["csv"]["path"]
+    split = {
+        "spark.sql.files.maxPartitionBytes": "1024",
+        "spark.sql.files.openCostInBytes": "1024",
+    }
+    with sql_conf(spark, split):
+        assert spark.read.text(csv_path).rdd.getNumPartitions() >= 3
+        capsys.readouterr()
+        with job_ids(spark, "test-ingest-csv-one-scan") as jobs, pytest.warns(UserWarning):
+            res = ingest_csv.run(spark, cfg_path, run_date=date(2025, 10, 20))
+    assert res["rows"] == len(codes)
+
+    tracker = spark.sparkContext.statusTracker()
+    assert len(jobs) <= 3
+    for job in jobs:
+        stages = [tracker.getStageInfo(s) for s in tracker.getJobInfo(job).stageIds]
+        assert sum(st.numTasks for st in stages) == 1, (job, stages)
+
+    table = [ln for ln in capsys.readouterr().out.splitlines() if ln.startswith("|")]
+    assert [c.strip() for c in table[0].strip("|").split("|")] == [
+        "ano",
+        "codigo_municipio",
+        "municipio",
+    ]
+    shown = [[c.strip() for c in ln.strip("|").split("|")] for ln in table[1:]]
+    assert shown == [["2023", c, f"Cidade {i}"] for i, c in enumerate(codes[:10])]
 
 
 class _FakeResponse:
