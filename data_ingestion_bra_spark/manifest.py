@@ -86,9 +86,8 @@ def observe_schema_stats(df: DataFrame) -> tuple[DataFrame, Observation]:
     ``df`` as an ``Observation``: write the returned frame and the stats
     arrive with the write's own job. CONTRACT: observe right before the
     write and run no other action on the observed frame first — an
-    ``Observation`` reports the first action only. A preview runs on ``df``
-    itself (``ingest_csv``'s head read of the first rows, not a scan), never
-    on the returned frame."""
+    ``Observation`` reports the first action only, so any other action runs
+    on ``df``, never on the returned frame."""
     obs = Observation()
     aggs = [F.sum(F.col(c).isNull().cast("bigint")).alias(f"nulos_{c}") for c in df.columns]
     return df.observe(obs, F.count(F.lit(1)).alias("linhas"), *aggs), obs

@@ -9,7 +9,11 @@ schema → dtype revalidation → preview → observed partitioned write → man
 The source is scanned once, by the write, whose job also carries the
 manifest's ``linhas``/``nulos``. The other jobs are one-task reads of a file
 head: the header row, and the preview's first rows of the first split (Spark
-reads on only if that split holds fewer rows than the preview shows).
+reads on only if that split holds fewer rows than the preview shows). The
+preview is the reference's unsorted ``head(10)`` (SURVEY §2.6 O3), which is
+the file's first rows in file order when ``csv.path`` names one file, as the
+reference's does. For a directory or glob Spark orders the splits largest
+file first, so the preview is the head of the largest file.
 
 Exit codes (reference V5, app/ingestao_csv.py:130-138): 1 generic,
 3 schema error; FileNotFoundError propagates as 1.
@@ -67,8 +71,8 @@ def run(
             "preview_columns", cfg["schema"]["required_columns"][:DEFAULT_PREVIEW_N]
         )
         ensure_preview_columns(df, preview_cols)
-        # the reference's head(10), no sort (SURVEY §2.6 O3): one CollectLimit
-        # task over the first split, i.e. the file's first rows in file order
+        # the reference's head(10), no sort: one CollectLimit task over the
+        # first split (file order for a single-file path, see above)
         df.select(*preview_cols).show(10, truncate=False)
 
     out = cfg["output"]

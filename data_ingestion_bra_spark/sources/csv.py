@@ -2,9 +2,9 @@
 (app/ingestao_csv.py:38-44).
 
 Reads every column as string — the Spark equivalent of pandas ``dtype=str``
-— then the cast layer applies the declared types. Names come from the caller
-or from the header row; types are never inferred (no inference scan). BOM
-handled by Spark's UTF-8 reader.
+— then the cast layer applies the declared types. Names come from the caller,
+the header row or the position (``_c<i>``); types are never inferred (no
+inference scan). BOM handled by Spark's UTF-8 reader.
 
 ``multi_line=True`` is required for quoted fields with embedded newlines
 (reference posts.txt: 41 physical lines, 10 records). NOTE: multiLine
@@ -44,9 +44,9 @@ def read_csv_asserted(
       appended: ``a;b;a`` → ``a0, b, a2``;
     - an empty header cell is named ``_c<position>``: ``a;;c`` → ``a, _c1, c``.
 
-    With ``columns=None`` and ``header=False``, the first row's values are
-    sniffed as names (one tiny driver read), and the whole file, that row
-    included, is read as data under them.
+    With ``columns=None`` and ``header=False``, the same one-row job counts
+    the columns, which are named ``_c0`` … ``_cN``; every row, the first
+    included, is data.
     """
     reader = spark.read.options(
         sep=sep,
@@ -55,16 +55,8 @@ def read_csv_asserted(
         multiLine=multi_line,
         quote=quote,
     )
-    if columns is None and header:
-        return reader.csv(path)
     if columns is None:
-        first = (
-            spark.read.options(sep=sep, encoding=encoding, header=False)
-            .csv(path)
-            .limit(1)
-            .first()
-        )
-        columns = [str(v) for v in first]
+        return reader.csv(path)
     return reader.schema(all_string_schema(columns)).csv(path)
 
 

@@ -37,9 +37,12 @@ def test_header_read_is_one_job(spark, tmp_path):
     assert len(jobs) == 1
 
 
-def test_no_header_sniffs_first_row(spark, tmp_path):
+def test_no_header_names_by_position(spark, tmp_path):
     path = tmp_path / "in.csv"
     path.write_text("a;b\n1;2\n", encoding="utf-8")
-    df = read_csv_asserted(spark, str(path), header=False)
-    assert df.columns == ["a", "b"]
+    with job_ids(spark, "test-csv-no-header-jobs") as jobs:
+        df = read_csv_asserted(spark, str(path), header=False)
+    assert len(jobs) == 1
+    assert df.columns == ["_c0", "_c1"]
+    assert {t for _, t in df.dtypes} == {"string"}
     assert [tuple(r) for r in df.collect()] == [("a", "b"), ("1", "2")]
