@@ -1,6 +1,7 @@
 """Benchmark harness: runs the engine's headline queries at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata, see ``main``) on
+``get_spark``'s local session, writes the full payload to BENCH_FULL.json
+and prints ONE compact JSON line as the final stdout line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {"<name>": sec, ...}, "sf": "<dir>"}
@@ -9,20 +10,32 @@ Each query is timed to full materialization through Spark's noop sink
 (every output column computed; a count() materializer let Catalyst prune
 computed columns and eliminate cardinality-preserving joins — see
 _materialize).
+
+The run is the ordered ``SECTIONS`` table. ``SPARK_GRAFT_SECTIONS`` (comma
+list of section names, default all) runs a subset, and
+``SPARK_GRAFT_TOTAL_BUDGET_SEC`` bounds the whole run: a section whose
+``section_seconds`` in the previous BENCH_FULL.json exceed the budget left
+is skipped and named in ``sections_skipped``.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
+import statistics
 import sys
 import time
 from pathlib import Path
+from typing import NamedTuple
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from data_ingestion_bra_spark.plans.registry import get_queries
-from data_ingestion_bra_spark.session import get_spark, tune_session
+from data_ingestion_bra_spark.session import get_spark
+
+_DATA = Path(__file__).resolve().parent / ".data"
+_FULL_PATH = Path(__file__).resolve().parent / "BENCH_FULL.json"
 
 # Headline set: one per operator family, weighted toward the shuffling /
 # scale-relevant paths (joins, window aggs, sessionization, dedup, ANN).
@@ -50,10 +63,40 @@ HEADLINE = [
 ]
 
 
-def _median(xs: list[float]) -> float:
-    s = sorted(xs)
-    n = len(s)
-    return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
+class Timed(NamedTuple):
+    result: object  # what the last timed call returned
+    samples: list[float]  # seconds, one per timed call
+    median: float  # seconds, rounded to the millisecond
+    spread: list[float]  # [min, max] seconds, rounded to the millisecond
+
+
+def _timed(fn, *, passes: int = 1, warm: bool = False) -> Timed:
+    """The one timing primitive: call ``fn()`` ``passes`` times, after one
+    untimed call when ``warm``, and time each call. This box shows +/-30-40%
+    run-to-run variance (SCALE.md), so a single sample can't tell a plan
+    regression from noise; multi-pass figures keep the [min, max] spread
+    next to the median."""
+    if warm:
+        fn()
+    samples = []
+    for _ in range(passes):
+        t0 = time.perf_counter()
+        result = fn()
+        samples.append(time.perf_counter() - t0)
+    return Timed(
+        result,
+        samples,
+        round(statistics.median(samples), 3),
+        [round(min(samples), 3), round(max(samples), 3)],
+    )
+
+
+def _timed_each(fn, args: list[tuple]) -> Timed:
+    """``_timed`` over one call ``fn(*a)`` per ``a`` in ``args``, in order:
+    for steps that each need their own input (an epoch's batch, a fresh
+    table)."""
+    it = iter(args)
+    return _timed(lambda: fn(*next(it)), passes=len(args))
 
 
 def _materialize(df) -> None:
@@ -68,9 +111,13 @@ def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def _time_queries(
-    spark, queries, sf_dir: str, *, passes: int = 3
-) -> tuple[dict[str, float], dict[str, list[float]]]:
+def _pairs(df, a: str = "query_id", b: str = "cand_id") -> set:
+    return {(r[a], r[b]) for r in df.collect()}
+
+
+def _time_queries(spark, queries, sf_dir: str, *, passes: int = 3):
+    """Median-of-``passes`` per HEADLINE query, its [min, max] spread, and
+    the per-pass totals."""
     # One full UNTIMED pass over the whole headline set first: early queries
     # otherwise measure JVM/JIT/codegen warmup instead of plan cost (round-2
     # evidence: the first headline query clocked slower at sf0.1 than at the
@@ -79,30 +126,17 @@ def _time_queries(
     # here), so the timed passes measure the serve path.
     for name in HEADLINE:
         _materialize(queries[name](spark, sf_dir))
-    # Then median of N timed passes per query, with the min/max spread kept
-    # alongside: this box shows +/-30-40% run-to-run variance (SCALE.md), so
-    # a single sample can't distinguish plan regressions from noise (the
-    # round-4 simhash 0.69->1.15s question). Median + spread makes each
-    # round-over-round delta attributable.
-    timings: dict[str, float] = {}
-    spread: dict[str, list[float]] = {}
-    pass_totals = [0.0] * passes
-    for name in HEADLINE:
-        fn = queries[name]
-        samples: list[float] = []
-        for i in range(passes):
-            t0 = time.perf_counter()
-            _materialize(fn(spark, sf_dir))
-            samples.append(time.perf_counter() - t0)
-            pass_totals[i] += samples[-1]
-        timings[name] = round(_median(samples), 3)
-        spread[name] = [round(min(samples), 3), round(max(samples), 3)]
+    timed = {
+        name: _timed(lambda fn=queries[name]: _materialize(fn(spark, sf_dir)), passes=passes)
+        for name in HEADLINE
+    }
     # Per-PASS totals (sum of sample i across all queries): on this box a
     # noisy neighbor inflates every query of one pass together, so the
     # pass-total spread is the ambient-contention signature a reader needs
-    # to adjudicate a headline move from the artifact alone (round-10
-    # verdict: the evidence lived in SCALE.md prose, not the payload).
-    return timings, spread, [round(t, 3) for t in pass_totals]
+    # to adjudicate a headline move from the artifact alone.
+    pass_totals = [round(sum(t.samples[i] for t in timed.values()), 3) for i in range(passes)]
+    medians = {n: t.median for n, t in timed.items()}
+    return medians, {n: t.spread for n, t in timed.items()}, pass_totals
 
 
 #: Scale-evidence set: the banded/indexed LLM-tier paths, run over the FULL
@@ -118,1634 +152,13 @@ SF10_QUERIES = [
     "curation_gopher_pipeline",
     "dedup_contamination_check",
     "dedup_contamination_bloom",
-    # round-5b additions: the new LLM-tier and incremental-surface entries
-    # must carry measured (not argued) 100x evidence too.
     "text_perplexity_lm",
     "curation_ccnet_pipeline",
     "incremental_merge_upsert",
     "scd2_event_type_history",
-    # round-8 additions: the BPE default flip's consequence at 100x (the
-    # vocab join's chain cost is corpus-size-free) and the web front door.
     "text_token_counts_subword",
     "curation_web_pipeline",
 ]
-
-
-def _replica_dir(name: str, factor: int) -> str | None:
-    """Resolve (building if needed) a scale replica ATOMICALLY: build into a
-    .tmp sibling and os.rename into place, so a killed build can never
-    leave a truncated parquet at the published path (a half-written sf1
-    lineitem poisoned a round-7 run — existence alone is not integrity).
-    A leftover _COMPLETE-less published dir from the pre-atomic era is
-    rebuilt."""
-    out = Path(__file__).resolve().parent / ".data" / name
-    marker = out / "_COMPLETE"
-    if marker.exists():
-        return str(out)
-    try:
-        import shutil
-
-        from tools.make_sf import make_sf
-
-        if out.exists():
-            shutil.rmtree(out)  # pre-atomic or torn build: rebuild
-        tmp = out.with_name(name + ".tmp")
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        make_sf(factor, "/root/testdata/sf0.1", str(tmp))
-        (tmp / "_COMPLETE").write_text("ok\n")
-        os.rename(tmp, out)
-    except Exception as exc:  # pragma: no cover - bench must still emit
-        print(f"{name} replica unavailable: {exc}", file=sys.stderr)
-        return None
-    return str(out)
-
-
-def _sf10_dir() -> str | None:
-    """100x replica of sf0.1 (~1.7 GB parquet, 60M-row lineitem, 500k docs
-    in bounded near-dup families) — the scale point that turns 'the plan
-    would hold at 100x' into a measured number. Built once via
-    tools/make_sf.py; disable with SPARK_GRAFT_SKIP_SF10=1."""
-    if os.environ.get("SPARK_GRAFT_SKIP_SF10"):
-        return None
-    return _replica_dir("sf10", 100)
-
-
-def _semdedup_scale_bench(spark, points, *, passes: int = 3) -> dict:
-    """SemDeDup with corpus-proportional clustering: k = max(8, N/250) keeps
-    E[cell size] ~250 constant, so the within-cell pairwise cosine step is
-    O(N * cell_size) at every scale — the measured version of the paper's
-    own 100-TB argument. Reports end-to-end (train 1 Lloyd iteration on a
-    50% content-hash sample + assign + prune) per scale point, as
-    median-of-N with the [min, max] spread (round-5 verdict: single-shot
-    points left scale movements unattributable on this ±30-40% box)."""
-    from data_ingestion_bra_spark.operators import similarity
-    from data_ingestion_bra_spark.sources.tables import load_table
-
-    out: dict = {}
-    for label, d in points:
-        emb = load_table(spark, d, "embeddings")
-        n = emb.count()
-        k = max(8, n // 250)
-        samples: list[float] = []
-        kept = 0
-        for _ in range(passes):
-            t0 = time.perf_counter()
-            cents = similarity.kmeans_train(
-                emb, n_centroids=k, n_iter=1, train_sample_rate=0.5
-            )
-            # Materialize the inverted lists once (the production contract:
-            # load_or_build_ivf_index persists them to parquet; the prune
-            # plan reads the index, never re-running assignment per
-            # consumer).
-            lists = (
-                similarity.assign_cells(emb, cents)
-                .select("vid", "cell", "v")
-                .localCheckpoint(eager=True)
-            )
-            kept = (
-                similarity.semdedup_prune(cents, lists, threshold_e4=4500)
-                .filter("keep = 1")
-                .count()
-            )
-            samples.append(time.perf_counter() - t0)
-        out[label] = {
-            "sec": round(_median(samples), 3),
-            "sec_spread": [round(min(samples), 3), round(max(samples), 3)],
-            "n_vectors": n,
-            "n_cells": k,
-            "n_kept": kept,
-        }
-    return out
-
-
-def _incremental_dedup_bench(spark, sf1: str, *, passes: int = 3) -> dict:
-    """The incremental-dedup claim, measured: a 10% daily batch checked
-    against the standing 90% corpus via the persisted signature store
-    (operators/dedup.py:incremental_lsh_candidates) vs re-running the
-    full-corpus LSH self-join (dedup.lsh_pair_estimates). The store is
-    built ONCE outside the timed region (production writes it at ingest);
-    the timed increment is batch shingling + signatures + the (band,
-    bucket) equi-join with its in-row estimate. Candidate counts are
-    reported so the comparison is shape-honest (the full run also finds
-    old-old and new-new pairs the increment deliberately skips)."""
-    from pyspark.sql import functions as F
-
-    from data_ingestion_bra_spark.operators import dedup
-    from data_ingestion_bra_spark.sources.tables import load_table
-
-    d = load_table(spark, sf1, "documents")
-    is_batch = F.col("doc_id") % 10 == 0
-
-    t0 = time.perf_counter()
-    store = dedup.minhash_signatures(
-        dedup.doc_shingles(d.filter(~is_batch), "doc_id", "text", n=3, distinct=False),
-        num_hashes=16,
-    ).localCheckpoint(eager=True)
-    store_build_sec = time.perf_counter() - t0
-
-    inc_samples: list[float] = []
-    n_inc = 0
-    for _ in range(passes):
-        t0 = time.perf_counter()
-        sig_b = dedup.minhash_signatures(
-            dedup.doc_shingles(d.filter(is_batch), "doc_id", "text", n=3, distinct=False),
-            num_hashes=16,
-        )
-        n_inc = dedup.incremental_lsh_candidates(store, sig_b).count()
-        inc_samples.append(time.perf_counter() - t0)
-
-    full_samples: list[float] = []
-    n_full = 0
-    for _ in range(passes):
-        t0 = time.perf_counter()
-        sig_all = dedup.minhash_signatures(
-            dedup.doc_shingles(d, "doc_id", "text", n=3, distinct=False), num_hashes=16
-        )
-        n_full = dedup.lsh_pair_estimates(sig_all, band_size=4, num_hashes=16).count()
-        full_samples.append(time.perf_counter() - t0)
-
-    store.unpersist()
-    return {
-        "store_build_sec": round(store_build_sec, 3),
-        "incremental_sec": round(_median(inc_samples), 3),
-        "incremental_spread": [round(min(inc_samples), 3), round(max(inc_samples), 3)],
-        "incremental_candidates": n_inc,
-        "full_selfjoin_sec": round(_median(full_samples), 3),
-        "full_spread": [round(min(full_samples), 3), round(max(full_samples), 3)],
-        "full_candidates": n_full,
-        "batch_fraction": 0.1,
-    }
-
-
-def _skew_fixture(spark) -> tuple:
-    """Deterministic skewed join/agg fixture: 20M-row fact table where 95%
-    of rows hit ONE key (the rest spread over 100k keys) and a 200k-row dim
-    (above the broadcast threshold we force off, small enough that salt
-    replication is cheap — the realistic salting regime). A shuffle join
-    funnels the hot key into one reducer; that task IS the runtime."""
-    out = Path(__file__).resolve().parent / ".data" / "skew"
-    if not (out / "fact.parquet").exists():
-        import duckdb
-
-        out.mkdir(parents=True, exist_ok=True)
-        con = duckdb.connect()
-        con.execute(
-            f"""COPY (SELECT CASE WHEN i % 20 < 19 THEN 0
-                                  ELSE CAST((i * 2654435761) % 100000 AS BIGINT) END AS k,
-                             CAST(i % 1000 AS BIGINT) AS v,
-                             CAST(i AS BIGINT) AS rid
-                      FROM range(20000000) t(i))
-                TO '{out / "fact.parquet"}' (FORMAT PARQUET)"""
-        )
-        con.execute(
-            f"""COPY (SELECT CAST(i AS BIGINT) AS k,
-                             CAST(i * 7 AS BIGINT) AS dim_payload
-                      FROM range(200000) t(i))
-                TO '{out / "dim.parquet"}' (FORMAT PARQUET)"""
-        )
-    fact = spark.read.parquet(str(out / "fact.parquet"))
-    dim = spark.read.parquet(str(out / "dim.parquet"))
-    return fact, dim
-
-
-def _skew_bench(spark) -> dict:
-    """Skew stress: the salted join/agg twins vs plain under a 90%-hot key.
-
-    Honest methodology: AQE's skew-join splitting is Spark's first-line
-    mitigation and our session enables it, so the table reports (a) plain
-    join with AQE skew handling ON, (b) plain with it OFF (the unmitigated
-    baseline that shows the skew is real), and (c) the salted join with it
-    OFF (our operator as the only mitigation). Salted aggregation is
-    reported against plain; for algebraic aggs Spark's map-side partial
-    aggregation already absorbs key skew, so parity (not speedup) is the
-    expected and documented result there — the salted agg exists for
-    holistic/fallback shapes.
-    """
-    from pyspark.sql import functions as F
-
-    from data_ingestion_bra_spark.operators.skew import salted_agg_sum, salted_join
-
-    fact, dim = _skew_fixture(spark)
-    timings: dict = {}
-
-    def run(name: str, fn, *, skew_join: bool, noop: bool = False) -> None:
-        # Median of 3 timed trials (after one warm run): the round-4 AQE
-        # number flapped 9.68<->5.98s on identical plans, so single-sample
-        # skew claims aren't attributable. Spread recorded alongside.
-        # noop=True for the holistic-agg rows: count() over an aggregate
-        # lets Catalyst PRUNE the aggregate expressions (the distinct trio
-        # measured a flat 0.3s under count() — it was counting groups, not
-        # merging sets); join/sum rows keep count() for round-over-round
-        # comparability.
-        mat = _materialize if noop else (lambda df: df.count())
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", str(skew_join).lower())
-        mat(fn())  # warm
-        samples: list[float] = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            mat(fn())
-            samples.append(time.perf_counter() - t0)
-        timings[name] = round(_median(samples), 3)
-        timings[f"{name}_spread"] = [round(min(samples), 3), round(max(samples), 3)]
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        join_plain = lambda: fact.join(dim, "k").select(F.sum("v"))  # noqa: E731
-        join_salted = lambda: salted_join(  # noqa: E731
-            fact, dim, "k", salt_col="rid", n_salts=32
-        ).select(F.sum("v"))
-        run("join_plain_aqe_skew", join_plain, skew_join=True)
-        run("join_plain_no_mitigation", join_plain, skew_join=False)
-        run("join_salted", join_salted, skew_join=False)
-        agg_plain = lambda: fact.groupBy("k").agg(  # noqa: E731
-            F.sum("v"), F.count(F.lit(1))
-        )
-        agg_salted = lambda: salted_agg_sum(  # noqa: E731
-            fact, "k", F.col("v"), salt_col="rid", n_salts=32
-        )
-        run("agg_plain", agg_plain, skew_join=True)
-        run("agg_salted", agg_salted, skew_join=True)
-
-        # HOLISTIC skew (round-6 verdict item 7): exact distinct-per-key
-        # where the hot key holds ~2M distinct values. The naive
-        # collect_set plan merges every partial set of the hot key in ONE
-        # task — that task is the runtime; the value-hash-salted operator
-        # splits the distinct classes disjointly so the merge is an
-        # algebraic sum. Spark's builtin count_distinct rewrite (expand
-        # over (k, v)) is reported alongside for honesty.
-        from data_ingestion_bra_spark.operators.skew import salted_count_distinct
-
-        fact_v2 = fact.withColumn("v2", F.pmod(F.col("rid"), F.lit(2_000_000)))
-        distinct_naive = lambda: fact_v2.groupBy("k").agg(  # noqa: E731
-            F.size(F.collect_set("v2")).alias("n_distinct")
-        )
-        distinct_builtin = lambda: fact_v2.groupBy("k").agg(  # noqa: E731
-            F.count_distinct("v2").alias("n_distinct")
-        )
-        distinct_salted = lambda: salted_count_distinct(  # noqa: E731
-            fact_v2, "k", F.col("v2"), n_salts=32
-        )
-        run("distinct_plain_collect_set", distinct_naive, skew_join=True, noop=True)
-        run("distinct_builtin_count_distinct", distinct_builtin, skew_join=True, noop=True)
-        run("distinct_salted", distinct_salted, skew_join=True, noop=True)
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    return timings
-
-
-def _streaming_bench(spark) -> dict[str, float]:
-    """Streaming throughput: the sf0.1 events table (100k rows) replayed as
-    an 8-file parquet stream through (a) watermarked tumbling counts and
-    (b) applyInPandasWithState sessionization, availableNow to a memory
-    sink. Reports end-to-end wall seconds and rows/sec."""
-    from data_ingestion_bra_spark.streaming import jobs, stateful
-    from data_ingestion_bra_spark.sources.tables import load_table
-
-    src = Path(__file__).resolve().parent / ".data" / "stream_events"
-    if not src.exists():
-        ev = load_table(spark, os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"), "events")
-        ev.select(
-            "event_id", "ts", "user_id", "event_type", "value", "props"
-        ).repartitionByRange(8, "ts").write.mode("overwrite").parquet(str(src))
-    n_rows = spark.read.parquet(str(src)).count()
-    out: dict[str, float] = {}
-    for name, build in (
-        ("tumbling_counts", lambda s: jobs.tumbling_counts(s)),
-        (
-            "stateful_sessionize",
-            lambda s: stateful.sessionize(s.select("user_id", "ts", "value")),
-        ),
-    ):
-        stream = jobs.read_events_stream(spark, str(src), max_files_per_trigger=4)
-        t0 = time.perf_counter()
-        q = jobs.run_to_memory_sink(
-            build(stream), name=f"bench_{name}", output_mode="append"
-        )
-        dt = time.perf_counter() - t0
-        q.stop()
-        out[f"{name}_sec"] = round(dt, 3)
-        out[f"{name}_rows_per_sec"] = round(n_rows / dt)
-    return out
-
-
-def _contamination_stress(spark, sf10: str) -> dict:
-    """Contamination at a LARGE benchmark side (50k docs → millions of
-    distinct 8-gram shingle strings): the regime where the exact variant
-    must broadcast a multi-hundred-MB string set while the bloom variant
-    ships a fixed 4 MiB bitmap + codegen probes. The catalog entries use a
-    tiny benchmark split where the two tie (fixture parity); THIS is the
-    measurement that shows what the bloom buys at scale. Outputs are
-    asserted identical (the confirm join strikes false positives)."""
-    from pyspark.sql import functions as F
-
-    from data_ingestion_bra_spark.operators import bloom, dedup
-    from data_ingestion_bra_spark.sources.tables import load_table
-
-    d = load_table(spark, sf10, "documents")
-    split = 50_000
-    # the benchmark shingle set is common input to BOTH variants (exact
-    # broadcasts it; bloom builds the bitmap from it AND confirm-joins it)
-    # — persist it so the timings isolate the variant difference, not how
-    # many times the common relation gets recomputed
-    bset = (
-        dedup.doc_shingles(d.filter(F.col("doc_id") < split), "doc_id", "text", n=8)
-        .select("shingle")
-        .distinct()
-        .persist()
-    )
-    n_shingles = bset.count()
-    cand = dedup.doc_shingles(
-        d.filter(F.col("doc_id") >= split), "doc_id", "text", n=8, distinct=False
-    )
-
-    def finish(surviving):
-        return (
-            surviving.join(F.broadcast(bset), "shingle")
-            .select("doc", "shingle")
-            .distinct()
-            .groupBy("doc")
-            .agg(F.count("*").alias("n_overlap"))
-        )
-
-    out: dict = {}
-    t0 = time.perf_counter()
-    n_exact = finish(cand).count()
-    out["exact_broadcast_sec"] = round(time.perf_counter() - t0, 3)
-
-    # auto-size: ~10 bits per member, power of two (k=3 → fpp ~1%);
-    # Spark-side build (no driver round-trip, no task-closure bitmap)
-    m_bits = 1 << max(16, (10 * n_shingles).bit_length())
-    t0 = time.perf_counter()
-    bf = bloom.build_bloom_df(bset, "shingle", m_bits=m_bits).persist()
-    n_bloom = finish(bloom.bloom_prefilter(cand, "shingle", bf, m_bits=m_bits)).count()
-    out["bloom_prefilter_sec"] = round(time.perf_counter() - t0, 3)
-    bf.unpersist()
-    out["rows_equal"] = bool(n_exact == n_bloom)
-    out["n_flagged_docs"] = n_exact
-    # The quantity a single box CANNOT show in wall-clock (its 'broadcast'
-    # is a memcpy): the per-executor broadcast footprint each variant ships
-    # on a real cluster. The exact variant ships every distinct benchmark
-    # shingle string; the bloom ships the fixed bitmap.
-    out["exact_broadcast_payload_bytes"] = int(
-        bset.agg(F.sum(F.length("shingle"))).collect()[0][0]
-    )
-    out["n_benchmark_shingles"] = n_shingles
-    out["bloom_broadcast_payload_bytes"] = m_bits // 8
-    bset.unpersist()
-    return out
-
-
-def _contamination_crossover(spark, sf10: str) -> dict:
-    """The regime the bloom pre-filter is BUILT for (round-5 verdict item 3):
-    a benchmark side whose distinct-shingle set is large enough that
-    building/shipping it as a broadcast string hash relation is the binding
-    cost. The fixture corpus's ~30-word vocabulary plateaus at ~244k
-    distinct shingles (a 10.5 MB broadcast — exact ties bloom there, as r5
-    measured), so the benchmark set is inflated with 8M synthetic distinct
-    shingles: the EXACT variant must build the full ~240 MB string hash
-    relation and probe every candidate shingle against it, while the bloom
-    variant ships a fixed 16 MiB bitmap and touches the big set only
-    through scan-side joins against BROADCAST-SMALL survivor sets (the
-    scalable confirm: the raw benchmark set is never the broadcast side).
-    Outputs asserted identical; both timed median-of-3 after a warm pass."""
-    from pyspark.sql import functions as F
-
-    from data_ingestion_bra_spark.operators import bloom, dedup
-    from data_ingestion_bra_spark.sources.tables import load_table
-
-    d = load_table(spark, sf10, "documents")
-    split = 50_000
-    real = dedup.doc_shingles(
-        d.filter(F.col("doc_id") < split), "doc_id", "text", n=8
-    ).select("shingle")
-    synth = spark.range(8_000_000).select(
-        F.concat(F.lit("synthetic benchmark shingle "), F.col("id")).alias("shingle")
-    )
-    bset = real.union(synth).distinct().persist()
-    n_shingles = bset.count()
-    cand = dedup.doc_shingles(
-        d.filter(F.col("doc_id") >= split), "doc_id", "text", n=8, distinct=False
-    )
-
-    def overlap_counts(hits):
-        return (
-            hits.select("doc", "shingle")
-            .distinct()
-            .groupBy("doc")
-            .agg(F.count("*").alias("n_overlap"))
-        )
-
-    def exact():
-        # the exact operator's contract: broadcast the benchmark set
-        return overlap_counts(cand.join(F.broadcast(bset), "shingle")).count()
-
-    def exact_shuffled():
-        # the no-bloom fallback once the benchmark set outgrows broadcast:
-        # the ENTIRE candidate shingle stream shuffles against the set
-        return overlap_counts(cand.join(bset, "shingle")).count()
-
-    m_bits = 1 << max(16, (10 * n_shingles).bit_length())
-    # bitmap build is ONE-TIME for a static benchmark set (the production
-    # regime: build once, screen every corpus batch) — timed separately;
-    # the exact variant's broadcast hash relation has no such amortization,
-    # Spark rebuilds it per query. Spark-side build + persist: the former
-    # driver round-trip embedded the ~20 MB word array in a task closure
-    # on EVERY probe query (round-7's TaskSetManager large-task warnings).
-    t0 = time.perf_counter()
-    bf = bloom.build_bloom_df(bset, "shingle", m_bits=m_bits).persist()
-    bf.count()  # materialize: the build cost, not the first probe's
-    bloom_build_sec = round(time.perf_counter() - t0, 3)
-
-    def bloom_path():
-        # ONE pass over the corpus: codegen bitmap probes drop ~all
-        # non-matching shingles scan-side, then the (small) survivor
-        # stream confirms through a plain SHUFFLED equi-join against the
-        # benchmark scan — the 280 MB relation is never a broadcast build,
-        # and bloom's job is exactly the shuffle-volume cut vs
-        # exact_shuffled. (An earlier two-step broadcast confirm recomputed
-        # the corpus scan + probes twice and lost 2.2x to exact_broadcast;
-        # journal: r6 crossover first sample.)
-        surviving = bloom.bloom_prefilter(cand, "shingle", bf, m_bits=m_bits)
-        return overlap_counts(surviving.join(bset, "shingle")).count()
-
-    out: dict = {
-        "n_benchmark_shingles": n_shingles,
-        "bloom_build_sec": bloom_build_sec,
-        "bloom_broadcast_payload_bytes": m_bits // 8,
-        "exact_broadcast_payload_bytes": int(
-            bset.agg(F.sum(F.length("shingle"))).collect()[0][0]
-        ),
-    }
-    results: dict[str, int] = {}
-    for name, fn in (
-        ("exact_broadcast", exact),
-        ("exact_shuffled", exact_shuffled),
-        ("bloom_serve", bloom_path),
-    ):
-        results[name] = fn()  # warm
-        samples = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fn()
-            samples.append(time.perf_counter() - t0)
-        out[f"{name}_sec"] = round(_median(samples), 3)
-        out[f"{name}_spread"] = [round(min(samples), 3), round(max(samples), 3)]
-    out["rows_equal"] = bool(len(set(results.values())) == 1)
-    out["n_flagged_docs"] = results["exact_broadcast"]
-    bset.unpersist()
-    bf.unpersist()
-    return out
-
-
-def _ivf_build_bench(spark, sf_dirs: list[tuple[str, str]]) -> dict:
-    """IVF index BUILD cost vs ``train_sample_rate`` with recall\\@5 of the
-    resulting index — the evidence that sample-based k-means training buys
-    build time roughly linearly in the rate while holding recall >= 0.9
-    (the serve path is benched separately via similarity_topk_ivf). Runs
-    2 Lloyd iterations over 16 centroids per (scale, rate); truth is the
-    exact brute-force top-5 for 10 queries, recomputed per scale."""
-    from pyspark.sql import functions as F
-
-    from data_ingestion_bra_spark.operators import similarity
-    from data_ingestion_bra_spark.sources.tables import load_table
-
-    out: dict = {}
-    for label, d in sf_dirs:
-        emb = load_table(spark, d, "embeddings")
-        truth = {
-            (r["query_id"], r["cand_id"])
-            for r in similarity.brute_force_topk(
-                emb.filter(F.col("vec_id") < 10), emb, k=5
-            ).collect()
-        }
-        per_rate: dict = {}
-        for rate in (1.0, 0.5, 0.1):
-            t0 = time.perf_counter()
-            cents = similarity.kmeans_train(
-                emb, n_centroids=16, n_iter=2, train_sample_rate=rate
-            )
-            build_s = time.perf_counter() - t0
-            got = {
-                (r["query_id"], r["cand_id"])
-                for r in similarity.ivf_topk(
-                    emb, n_probe=4, query_ids=list(range(10)), k=5, centroids=cents
-                ).collect()
-            }
-            per_rate[f"rate_{rate}"] = {
-                "build_sec": round(build_s, 3),
-                "recall_at_5": round(len(got & truth) / len(truth), 3),
-            }
-        # PQ index CONSTRUCTION cost (round-12 verdict item 6: the serve
-        # entries read the persisted codebook+codes, so train-once/serve-many
-        # stays honest only while build cost has a measured row). Same
-        # (m, k, n_iter, dim) as the serve entries' load_or_build_pq_index
-        # defaults; the encode is materialized through the noop sink.
-        from data_ingestion_bra_spark.operators import pq
-
-        t0 = time.perf_counter()
-        cb = pq.pq_train(emb, n_iter=1)
-        cb_rows = cb.count()
-        train_s = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        _materialize(pq.pq_encode(emb, cb))
-        encode_s = time.perf_counter() - t0
-        per_rate["pq_index"] = {
-            "codebook_train_sec": round(train_s, 3),
-            "corpus_encode_sec": round(encode_s, 3),
-            "codebook_rows": cb_rows,
-            "n_vectors": emb.count(),
-        }
-        out[label] = per_rate
-    return out
-
-
-def _ivfpq_serve_bench(spark, sf_dirs: list[tuple[str, str]]) -> dict:
-    """Composed IVF-PQ+R serve-path accuracy/cost beyond fixture scale
-    (round-8 verdict item 7): for the same 10 queries, wall clock +
-    recall@10 under three strategies — exact brute force (the floor and
-    the cosine truth), IVF full-vector scoring, and the composed IVFPQ+R
-    (cell prune × compressed-domain ADC × exact shortlist re-rank).
-    Recall is measured against each family's OWN exact ordering (cosine
-    for brute/IVF, integer L2 for IVFPQ's re-rank metric) so the number
-    isolates the approximation, not the metric change. Index build costs
-    are excluded — this section prices the QUERY path, ivf_build_bench
-    prices construction."""
-    from pyspark.sql import functions as F
-
-    from data_ingestion_bra_spark.operators import pq, similarity
-    from data_ingestion_bra_spark.operators.similarity import quantize_sql
-    from data_ingestion_bra_spark.sources.tables import load_table
-
-    out: dict = {}
-    for label, d in sf_dirs:
-        emb = load_table(spark, d, "embeddings")
-        emb.persist()
-        n_vec = emb.count()
-        q_df = emb.filter(F.col("vec_id") < 10)
-
-        t0 = time.perf_counter()
-        bf_rows = similarity.brute_force_topk(q_df, emb, k=10).collect()
-        bf_sec = time.perf_counter() - t0
-        cos_truth = {(r["query_id"], r["cand_id"]) for r in bf_rows}
-
-        # exact integer-L2 truth for the IVFPQ re-rank metric
-        qv = q_df.selectExpr("vec_id as query_id", f"{quantize_sql('embedding')} as qv")
-        cv = emb.selectExpr("vec_id as cand_id", f"{quantize_sql('embedding')} as cv")
-        l2 = (
-            F.broadcast(qv)
-            .crossJoin(cv)
-            .filter(F.col("query_id") != F.col("cand_id"))
-            .selectExpr("query_id", "cand_id", f"{pq._isq_dist_sql('qv', 'cv')} as d")
-        )
-        from pyspark.sql.window import Window as _W
-
-        wl = _W.partitionBy("query_id").orderBy(
-            F.col("d").asc(), F.col("cand_id").asc()
-        )
-        l2_truth = {
-            (r["query_id"], r["cand_id"])
-            for r in l2.withColumn("rk", F.row_number().over(wl))
-            .filter(F.col("rk") <= 10)
-            .collect()
-        }
-
-        cents, lists = similarity.load_or_build_ivf_index(
-            spark, emb, d, n_centroids=16, n_iter=1, train_sample_rate=0.5
-        )
-        lists.persist().count()
-        t0 = time.perf_counter()
-        ivf_got = {
-            (r["query_id"], r["cand_id"])
-            for r in similarity.ivf_topk(
-                emb,
-                n_probe=4,
-                query_ids=list(range(10)),
-                k=10,
-                centroids=cents,
-                assignments=lists,
-            ).collect()
-        }
-        ivf_sec = time.perf_counter() - t0
-
-        # persisted PQ index (train-once discipline, same as the IVF lists
-        # above) — this section prices the QUERY path, not construction
-        cb, codes = pq.load_or_build_pq_index(spark, emb, d)
-        codes.persist().count()
-
-        def _pack(sec: float, got: set | None, truth: set) -> dict:
-            row = {"sec": round(sec, 3), "per_query_ms": round(sec * 100, 1)}
-            if got is not None:
-                row["recall_at_10"] = round(len(got & truth) / len(truth), 3)
-            return row
-
-        out[label] = {
-            "n_vectors": n_vec,
-            "bruteforce": _pack(bf_sec, None, cos_truth),
-            "ivf_nprobe4": _pack(ivf_sec, ivf_got, cos_truth),
-        }
-        # shortlist sweep: the re-rank is exact, so recall is bounded by
-        # ADC shortlist quality — record the accuracy/cost knob, not one
-        # arbitrary point
-        for short in (40, 100):
-            t0 = time.perf_counter()
-            pq_got = {
-                (r["query_id"], r["cand_id"])
-                for r in pq.ivfpq_topk(
-                    q_df, lists, cents, codes, cb, emb,
-                    n_probe=4, shortlist=short, k_top=10,
-                ).collect()
-            }
-            out[label][f"ivfpq_r_nprobe4_short{short}"] = _pack(
-                time.perf_counter() - t0, pq_got, l2_truth
-            )
-        codes.unpersist()
-        lists.unpersist()
-        emb.unpersist()
-    return out
-
-
-def _synthetic_merges(depth: int, base: list[tuple[str, str]]) -> list[tuple[str, str]]:
-    """Deterministically extend the committed 96-merge table to ``depth``
-    entries for the chain-depth stress tests. Chains of ≤48 growing symbols
-    seeded from rare letter pairs: every entry is a structurally valid merge
-    (left symbol produced by a prior entry), patterns stay short, and the
-    per-merge literal-replace SCAN cost — the quantity under measurement —
-    is paid whether or not the pattern occurs in prose."""
-    ms = list(base)
-    seen = set(ms)
-    alpha = "abcdefghijklmnopqrstuvwxyz"
-    # seeds walk ALL 676 letter pairs (a 26-cycle walk here once looped
-    # forever past depth ~1274 — every later seed was already seen);
-    # 676 seeds x 49 entries bounds the generator at ~33k merges.
-    if depth > 33_000:
-        raise ValueError(f"synthetic merge generator bounded at ~33k, got {depth}")
-    for si in range(676):
-        if len(ms) >= depth:
-            break
-        seed = (alpha[si % 26], alpha[(si // 26 + si) % 26])
-        if seed in seen:
-            continue
-        seen.add(seed)
-        ms.append(seed)
-        sym = seed[0] + seed[1]
-        for j in range(48):
-            if len(ms) >= depth:
-                break
-            nxt = alpha[(si + j) % 26]
-            ms.append((sym, nxt))
-            sym += nxt
-    return ms[:depth]
-
-
-def _bitext_clustered_fixture(
-    spark, *, n_pairs: int = 1500, dim: int = 16, n_langs: int = 8
-) -> tuple:
-    """LANGUAGE-CLUSTERED bitext fixture — the realistic regime the CCMatrix
-    citation promises (round-10 verdict item 4). Real multilingual encoders
-    produce embeddings that cluster by language/topic; the testdata
-    embeddings are deliberately UNclustered (the adversarial case for cell
-    pruning), so serve-path recall needs a second fixture whose geometry
-    matches production.
-
-    Construction is fully deterministic (no RNG — murmur3 ``F.hash`` of the
-    coordinates): language ``id % n_langs`` gets a mixture center in
-    [-2, 2]^dim, each side's vector is center + a per-(id, side, dim)
-    perturbation in [-0.8, 0.8], and every 4th pair is a BOUNDARY case —
-    the midpoint of two adjacent language centers (code-switching /
-    cross-topic text, the vectors that actually straddle IVF cells in a
-    real multilingual corpus) — so the probe curve has something to
-    recover. True pair structure a_i <-> b_i. Returns (side_a, side_b)."""
-    from pyspark.sql import functions as F
-
-    base = spark.range(n_pairs).select(
-        F.col("id").cast("bigint").alias("vec_id"),
-        (F.col("id") % n_langs).cast("int").alias("lang"),
-        ((F.col("id") + 1) % n_langs).cast("int").alias("lang2"),
-        (F.col("id") % 4 == 0).alias("boundary"),
-    )
-
-    def vec(side: int):
-        dims = F.sequence(F.lit(0), F.lit(dim - 1))
-
-        def center(lang_col, d):
-            return (F.hash(lang_col, d) % 1000).cast("double") / 500.0
-
-        return F.transform(
-            dims,
-            lambda d: (
-                F.when(
-                    F.col("boundary"),
-                    (center(F.col("lang"), d) + center(F.col("lang2"), d)) / 2.0,
-                ).otherwise(center(F.col("lang"), d))
-                + (F.hash(F.col("vec_id"), F.lit(side), d) % 100).cast("double")
-                / 125.0
-            ),
-        )
-
-    a = base.select("vec_id", vec(0).alias("embedding"))
-    b = base.select("vec_id", vec(1).alias("embedding"))
-    return a, b
-
-
-def _bitext_clustered_bench(spark, *, probes=(1, 2, 4)) -> dict:
-    """Recall-vs-cost curve of the IVF serve path on the CLUSTERED fixture,
-    next to the adversarial-fixture points — both regimes in the payload."""
-    from data_ingestion_bra_spark.operators.similarity import (
-        bitext_mining_margin,
-        bitext_mining_margin_ivf,
-        kmeans_train,
-    )
-
-    a, b = _bitext_clustered_fixture(spark)
-    a = a.localCheckpoint(eager=True)  # fixture gen excluded from timings
-    b = b.localCheckpoint(eager=True)
-    out: dict = {"fixture": "clustered(n=1500/side, dim=16, langs=8)"}
-    t0 = time.perf_counter()
-    cents = kmeans_train(b, n_centroids=8, n_iter=3)
-    out["train_sec"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    exact = {
-        (r["a_id"], r["b_id"]) for r in bitext_mining_margin(a, b).collect()
-    }
-    out["exact_sec"] = round(time.perf_counter() - t0, 3)
-    out["exact_pairs"] = len(exact)
-    pts = []
-    for p in probes:
-        t0 = time.perf_counter()
-        served = {
-            (r["a_id"], r["b_id"])
-            for r in bitext_mining_margin_ivf(a, b, cents, n_probe=p).collect()
-        }
-        pt = {
-            "n_probe": p,
-            "served_sec": round(time.perf_counter() - t0, 3),
-            "served_pairs": len(served),
-        }
-        if exact:
-            pt["pair_recall"] = round(len(served & exact) / len(exact), 4)
-        if served:
-            pt["pair_precision"] = round(len(served & exact) / len(served), 4)
-        pts.append(pt)
-    out["probe_points"] = pts
-    return out
-
-
-def _bitext_serve_bench(
-    spark, points: list[tuple[str, str]], *, budget: float | None = None
-) -> dict:
-    """Bitext mining: exact bipartite baseline vs the IVF-composed serve
-    path (similarity_bitext_ivf), with MEASURED pair recall — served ∩
-    exact / exact — so the catalog's scale-path claim carries a number the
-    same way ivfpq_serve_bench's recall@10 does. The exact side is the
-    oracle-twin BNLJ baseline; at corpus scale only the served path runs,
-    which is exactly why its recall must be measured here.
-
-    Two fixtures, both regimes recorded: the testdata embeddings
-    (UNclustered — adversarial for cell pruning, the honest worst case)
-    per scale point, plus the clustered fixture's recall-vs-probes curve
-    (the realistic regime). ``budget`` bounds the section internally —
-    round 10's 295 s actual vs 170 s estimate was the overrun that evicted
-    later sections; overflow points degrade to named skip entries."""
-    from data_ingestion_bra_spark.plans.registry import get_queries
-
-    q = get_queries()
-    sec_start = time.perf_counter()
-    out: dict = {"points": []}
-    # Clustered curve first: it is the cheap, fixed-size block.
-    try:
-        out["clustered"] = _bitext_clustered_bench(spark)
-    except Exception as exc:  # noqa: BLE001 - keep the section alive
-        out["clustered_error"] = f"{type(exc).__name__}: {exc}"[:300]
-    for label, d in points:
-        if budget is not None and time.perf_counter() - sec_start > budget:
-            out.setdefault("points_skipped", []).append(
-                f"{label}: section budget ({budget:.0f}s)"
-            )
-            continue
-        pt: dict = {"sf": label}
-        t0 = time.perf_counter()
-        exact = {(r["a_id"], r["b_id"]) for r in q["similarity_bitext_mining"](spark, d).collect()}
-        pt["exact_sec"] = round(time.perf_counter() - t0, 3)
-        pt["exact_pairs"] = len(exact)
-        t0 = time.perf_counter()
-        served = {(r["a_id"], r["b_id"]) for r in q["similarity_bitext_ivf"](spark, d).collect()}
-        pt["served_sec"] = round(time.perf_counter() - t0, 3)
-        pt["served_pairs"] = len(served)
-        if exact:
-            pt["pair_recall"] = round(len(served & exact) / len(exact), 4)
-        if served:
-            # pairs the pruned world mines that the exact rule wouldn't —
-            # mutual-top-1 is relative to the candidate set, so the served
-            # path trades some precision too; both sides of that trade are
-            # recorded (synthetic fixture embeddings are unclustered, the
-            # adversarial case for cell pruning — real multilingual
-            # encoders cluster by language/topic and prune far better)
-            pt["pair_precision"] = round(len(served & exact) / len(served), 4)
-        out["points"].append(pt)
-    return out
-
-
-def _freq_maintenance_bench(
-    spark, sf_dir: str, *, n_epochs: int = 5, capacity: int = 4096
-) -> dict:
-    """Streaming Misra–Gries store throughput: fold ``n_epochs`` per-epoch
-    token-stream summaries into a txlog-backed standing summary
-    (streaming/freq_maintenance) and measure seconds per trigger epoch —
-    the number behind the 'one bounded job per trigger' claim. Each epoch
-    is a deterministic 1/n_epochs document slice; the row also records the
-    standing-summary size (bounded at capacity forever) and one serving
-    recount so the end-to-end exact-top-k latency is priced too."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_ingestion_bra_spark.sources.tables import load_table
-    from data_ingestion_bra_spark.streaming.freq_maintenance import (
-        current_candidates,
-        freq_maintenance_writer,
-    )
-
-    out: dict = {"capacity": capacity, "n_epochs": n_epochs, "sf": sf_dir}
-    store = tempfile.mkdtemp(prefix="freq_bench_store_")
-    try:
-        docs = load_table(spark, sf_dir, "documents")
-        toks = docs.select(
-            "doc_id", F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok")
-        ).filter(F.col("tok") != "")
-        writer = freq_maintenance_writer(
-            store, key_col="tok", capacity=capacity, query_id="bench"
-        )
-        epoch_secs: list[float] = []
-        for e in range(n_epochs):
-            batch = toks.filter(F.crc32(F.col("doc_id").cast("string")) % n_epochs == e)
-            t0 = time.perf_counter()
-            writer(batch, e)
-            epoch_secs.append(time.perf_counter() - t0)
-        out["sec_per_epoch_median"] = round(_median(epoch_secs), 3)
-        out["sec_per_epoch"] = [round(s, 3) for s in epoch_secs]
-        cand = current_candidates(spark, store, "tok")
-        out["standing_summary_rows"] = cand.count()
-        t0 = time.perf_counter()
-        top = (
-            toks.join(F.broadcast(cand.select("tok")), "tok", "left_semi")
-            .groupBy("tok")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.col("n").desc(), "tok")
-            .limit(25)
-        )
-        n_top = top.count()
-        out["serve_recount_sec"] = round(time.perf_counter() - t0, 3)
-        out["serve_topk_rows"] = n_top
-    finally:
-        shutil.rmtree(store, ignore_errors=True)
-    return out
-
-
-def _overlap_maintenance_bench(spark, sf_dir: str, *, n_epochs: int = 4) -> dict:
-    """Streaming winnowing-overlap store throughput (round-10 verdict item
-    6): fold the documents corpus into the standing fingerprint store in
-    ``n_epochs`` deterministic slices and price seconds per trigger epoch,
-    docs/s folded, the standing store size, and the flag-read (query-path)
-    latency — the numbers behind the 'ingest-time plagiarism monitor'
-    claim, measured the way freq_maintenance_bench priced the MG store."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_ingestion_bra_spark.sinks import txlog
-    from data_ingestion_bra_spark.sources.tables import load_table
-    from data_ingestion_bra_spark.streaming.overlap_maintenance import (
-        overlap_maintenance_writer,
-    )
-
-    out: dict = {"n_epochs": n_epochs, "sf": sf_dir}
-    root = tempfile.mkdtemp(prefix="overlap_bench_")
-    try:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        n_docs = docs.count()
-        writer = overlap_maintenance_writer(
-            f"{root}/store", f"{root}/flags", query_id="bench-overlap"
-        )
-        epoch_secs: list[float] = []
-        for e in range(n_epochs):
-            batch = docs.filter(
-                F.crc32(F.col("doc_id").cast("string")) % n_epochs == e
-            )
-            t0 = time.perf_counter()
-            writer(batch, e)
-            epoch_secs.append(time.perf_counter() - t0)
-        out["sec_per_epoch_median"] = round(_median(epoch_secs), 3)
-        out["sec_per_epoch"] = [round(s, 3) for s in epoch_secs]
-        out["docs_per_sec_folded"] = round(n_docs / max(sum(epoch_secs), 1e-9), 1)
-        out["store_rows"] = txlog.read_snapshot(spark, f"{root}/store").count()
-        t0 = time.perf_counter()
-        out["flag_rows"] = txlog.read_snapshot(spark, f"{root}/flags").count()
-        out["flag_read_sec"] = round(time.perf_counter() - t0, 3)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
-
-
-def _cardinality_maintenance_bench(
-    spark, sf_dir: str, *, n_epochs: int = 5, k: int = 64
-) -> dict:
-    """Streaming KMV cardinality store throughput (round-10 verdict item
-    6): fold per-epoch bottom-k summaries of the events stream into the
-    standing per-event-type store; price seconds per trigger epoch, the
-    standing summary size (k rows per group forever), and the serve-path
-    estimate latency."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_ingestion_bra_spark.sinks import txlog
-    from data_ingestion_bra_spark.sources.tables import load_table
-    from data_ingestion_bra_spark.streaming.cardinality_maintenance import (
-        cardinality_maintenance_writer,
-        current_estimates,
-        current_summary,
-    )
-
-    out: dict = {"n_epochs": n_epochs, "k": k, "sf": sf_dir}
-    store = tempfile.mkdtemp(prefix="kmv_bench_store_")
-    try:
-        events = load_table(spark, sf_dir, "events").select("event_type", "user_id")
-        n_rows = events.count()
-        writer = cardinality_maintenance_writer(
-            store, group_cols=["event_type"], key_col="user_id", k=k,
-            query_id="bench-kmv",
-        )
-        epoch_secs: list[float] = []
-        for e in range(n_epochs):
-            batch = events.filter(
-                F.crc32(F.col("user_id").cast("string")) % n_epochs == e
-            )
-            t0 = time.perf_counter()
-            writer(batch, e)
-            epoch_secs.append(time.perf_counter() - t0)
-        out["sec_per_epoch_median"] = round(_median(epoch_secs), 3)
-        out["sec_per_epoch"] = [round(s, 3) for s in epoch_secs]
-        out["rows_per_sec_folded"] = round(n_rows / max(sum(epoch_secs), 1e-9), 1)
-        out["standing_summary_rows"] = current_summary(
-            spark, store, ["event_type"]
-        ).count()
-        out["store_rows_all_epochs"] = txlog.read_snapshot(spark, store).count()
-        t0 = time.perf_counter()
-        est = current_estimates(spark, store, ["event_type"], k).collect()
-        out["serve_estimate_sec"] = round(time.perf_counter() - t0, 3)
-        out["n_groups"] = len(est)
-    finally:
-        shutil.rmtree(store, ignore_errors=True)
-    # Sibling store, same section budget: the Count-Min fold (point-query
-    # frequency member of the mergeable family) priced the same way.
-    from data_ingestion_bra_spark.streaming.cms_maintenance import (
-        cms_maintenance_writer,
-        current_estimates as cms_current_estimates,
-        current_sketch,
-    )
-
-    store = tempfile.mkdtemp(prefix="cms_bench_store_")
-    try:
-        events = load_table(spark, sf_dir, "events").select("user_id")
-        writer = cms_maintenance_writer(
-            store, key_col="user_id", depth=3, width=1024, query_id="bench-cms"
-        )
-        epoch_secs = []
-        for e in range(n_epochs):
-            batch = events.filter(
-                F.crc32(F.col("user_id").cast("string")) % n_epochs == e
-            )
-            t0 = time.perf_counter()
-            writer(batch, e)
-            epoch_secs.append(time.perf_counter() - t0)
-        cms: dict = {
-            "sec_per_epoch_median": round(_median(epoch_secs), 3),
-            "sec_per_epoch": [round(s, 3) for s in epoch_secs],
-            "standing_sketch_rows": current_sketch(spark, store).count(),
-        }
-        keys = events.distinct().limit(32)
-        t0 = time.perf_counter()
-        cms["n_probed"] = cms_current_estimates(
-            spark, store, keys, "user_id", depth=3, width=1024
-        ).count()
-        cms["serve_probe_sec"] = round(time.perf_counter() - t0, 3)
-        out["cms"] = cms
-    finally:
-        shutil.rmtree(store, ignore_errors=True)
-    return out
-
-
-def _pagerank_scale_bench(
-    spark, *, n_nodes: int = 1_000_000, n_edges: int = 10_000_000, n_iter: int = 10
-) -> dict:
-    """Domain-scale PageRank evidence (round-7 verdict item 7): the catalog
-    entry runs on a 50-node fixture, so the 'ranks live per registered
-    domain' claim carried no number. This synthesizes a deterministic
-    ~1M-node / 10M-edge hash graph (node ids = xxhash64 of a range — no RNG,
-    reproducible bit-for-bit) and times the exact-integer pagerank at
-    ``n_iter`` rounds, with the per-iteration rate reported. The iteration
-    loop localCheckpoints every 5 rounds, so this also exercises the bounded
-    plan-depth path."""
-    from pyspark.sql import functions as FF
-
-    from data_ingestion_bra_spark.operators.graph import pagerank
-
-    edges = spark.range(n_edges).select(
-        FF.pmod(FF.xxhash64("id", FF.lit(1)), FF.lit(n_nodes)).alias("s"),
-        FF.pmod(FF.xxhash64("id", FF.lit(2)), FF.lit(n_nodes)).alias("t"),
-    )
-    t0 = time.perf_counter()
-    ranks = pagerank(edges, n_iter=n_iter)  # eager: final localCheckpoint
-    total = time.perf_counter() - t0
-    stats = ranks.agg(
-        FF.count("*").alias("n"), FF.sum("rank_e9").alias("mass_e9")
-    ).collect()[0]
-    return {
-        "n_nodes": int(stats["n"]),
-        "n_edges_requested": n_edges,
-        "n_iter": n_iter,
-        "total_sec": round(total, 3),
-        "sec_per_iter": round(total / n_iter, 3),
-        # retained probability mass (×1e9): dangling drop + floor division
-        # both shed mass, so this documents how much the default form keeps
-        "mass_e9": int(stats["mass_e9"]),
-    }
-
-
-def _exact_join_bench(spark, sf_dir: str, *, passes: int = 2) -> dict:
-    """The exactness premium of the prefix-filter similarity join, measured
-    (round 12): dedup_jaccard_prefix_filter guarantees every J >= 0.5 pair
-    (recall-complete by theorem) while the MinHash-LSH tier is
-    probabilistic — this section prices both at the same threshold and
-    MEASURES the LSH recall against the prefix filter's ground truth, so
-    the "LSH for bulk, prefix filter for the guarantee pass" routing
-    advice in the operator docstring carries numbers: candidate volumes,
-    verified-pair counts, measured LSH recall (e4), and median seconds per
-    path."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from data_ingestion_bra_spark.operators import dedup
-    from data_ingestion_bra_spark.sources.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    sh = dedup.doc_shingles(d, "doc_id", "text", n=3).persist()
-    n_docs = d.count()
-    sh.count()
-    out: dict = {"n_docs": n_docs}
-
-    prefix_secs, lsh_secs = [], []
-    n_exact = n_lsh = None
-    for _ in range(passes):
-        t0 = _time.perf_counter()
-        n_exact = dedup.jaccard_prefix_filter_pairs(sh, tau_e4=5000).count()
-        prefix_secs.append(_time.perf_counter() - t0)
-        t0 = _time.perf_counter()
-        sig = dedup.minhash_signatures(
-            dedup.doc_shingles(d, "doc_id", "text", n=3, distinct=False),
-            num_hashes=16,
-        )
-        cand = dedup.lsh_pair_estimates(sig, band_size=4, num_hashes=16).select("doc_a", "doc_b")
-        n_lsh = dedup.jaccard_pairs(sh, min_jaccard=0.5, pair_filter=cand).count()
-        lsh_secs.append(_time.perf_counter() - t0)
-    out["n_pairs_exact"] = n_exact
-    out["n_pairs_lsh_verified"] = n_lsh
-    out["lsh_recall_e4"] = (
-        None if not n_exact else n_lsh * 10000 // n_exact
-    )
-    out["prefix_filter_sec"] = round(_median(prefix_secs), 3)
-    out["lsh_sec"] = round(_median(lsh_secs), 3)
-    # candidate volumes, once (the cost drivers behind the seconds)
-    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    sizes = sh.groupBy("doc").agg(F.count("*").alias("sz"))
-    from pyspark.sql.window import Window as _W
-
-    ordered = (
-        sh.join(dfreq, "shingle")
-        .join(sizes, "doc")
-        .withColumn(
-            "pos",
-            F.row_number().over(
-                _W.partitionBy("doc").orderBy(F.asc("df"), F.asc("shingle"))
-            ),
-        )
-    )
-    prefix = ordered.filter(F.expr("pos <= sz - (sz * 5000 + 9999) div 10000 + 1"))
-    out["n_cand_prefix"] = (
-        prefix.alias("a")
-        .join(prefix.alias("b"), "shingle")
-        .filter(F.col("a.doc") < F.col("b.doc"))
-        .select(F.col("a.doc"), F.col("b.doc"))
-        .distinct()
-        .count()
-    )
-    sig = dedup.minhash_signatures(
-        dedup.doc_shingles(d, "doc_id", "text", n=3, distinct=False), num_hashes=16
-    )
-    out["n_cand_lsh"] = dedup.lsh_pair_estimates(sig, band_size=4, num_hashes=16).count()
-    sh.unpersist()
-    return out
-
-
-def _linkage_bench(spark, points: list[tuple[str, str]], *, passes: int = 3) -> dict:
-    """Fellegi-Sunter linkage priced at scale (round-11 verdict item 7):
-    candidate-pair volume under PROGRESSIVELY FINER blocking keys plus
-    end-to-end scoring throughput. The point being proven: blocking on
-    (segment, balance-bucket) has a FIXED number of cells, so the pair
-    relation grows quadratically with corpus size inside each cell — the
-    cure is exactly the module contract ("add keys until the largest cell
-    fits"), here a finer bucket width. Pair counts per blocking scheme are
-    computed from cell-count PRODUCTS (a tiny groupBy join — no pair
-    materialization), and the scoring leg runs on the finest width whose
-    estimated relation stays under the cap, so the measured throughput is
-    the operator, not an exploding join."""
-    from pyspark.sql import functions as F
-
-    from data_ingestion_bra_spark.operators.linkage import fellegi_sunter_score
-    from data_ingestion_bra_spark.sources.tables import load_table
-
-    # Bound the SCORED relation: the sf1 width-10000 blocking yields ~40M
-    # pairs and scores at ~350k pairs/s (113 s measured) — fine evidence,
-    # wrong cost for a per-round section. 8M keeps the scored leg ~15-25 s
-    # at sf1 (width 1000) while the per-width pair COUNTS still document
-    # the quadratic blow-up of the coarse blocking.
-    pair_cap = 8_000_000
-    out: dict = {}
-    for label, d in points:
-        c = load_table(spark, d, "customer")
-        n_rows = c.count()
-        cents_a = F.expr("CAST(ROUND(c_acctbal * 100) AS BIGINT)")
-        cents_b = F.expr(
-            "CAST(ROUND(c_acctbal * 100) AS BIGINT) + (c_custkey % 7) * 100"
-        )
-        seg_a = F.col("c_mktsegment")
-        seg_b = F.expr(
-            "CASE WHEN c_custkey % 13 = 0 THEN reverse(c_mktsegment)"
-            " ELSE c_mktsegment END"
-        )
-        per_width: dict = {}
-        chosen = None
-        for width in (10_000, 1_000, 100):
-            a_cells = (
-                c.select(
-                    seg_a.alias("blk_seg"),
-                    F.expr(
-                        f"CAST(ROUND(c_acctbal * 100) AS BIGINT) div {width}"
-                    ).alias("bucket"),
-                )
-                .groupBy("blk_seg", "bucket")
-                .agg(F.count(F.lit(1)).alias("na"))
-            )
-            b_cells = (
-                c.select(
-                    seg_b.alias("blk_seg"),
-                    F.expr(
-                        "(CAST(ROUND(c_acctbal * 100) AS BIGINT)"
-                        f" + (c_custkey % 7) * 100) div {width}"
-                    ).alias("bucket"),
-                )
-                .groupBy("blk_seg", "bucket")
-                .agg(F.count(F.lit(1)).alias("nb"))
-            )
-            stats = (
-                a_cells.join(b_cells, ["blk_seg", "bucket"])
-                .agg(
-                    F.sum(F.col("na") * F.col("nb")).alias("pairs"),
-                    F.max(F.col("na") * F.col("nb")).alias("max_cell"),
-                    F.count(F.lit(1)).alias("cells"),
-                )
-                .collect()[0]
-            )
-            n_pairs = int(stats["pairs"] or 0)
-            per_width[f"width_{width}"] = {
-                "n_blocking_cells": int(stats["cells"]),
-                "n_candidate_pairs": n_pairs,
-                "max_cell_pairs": int(stats["max_cell"] or 0),
-            }
-            if chosen is None and n_pairs <= pair_cap:
-                chosen = width
-        if chosen is None:
-            chosen = 100
-        # end-to-end scoring leg on the chosen blocking width: blocked
-        # equi-join -> comparators -> verdict counts, one job per pass
-        bucket_a = F.expr(f"CAST(ROUND(c_acctbal * 100) AS BIGINT) div {chosen}")
-        bucket_b = F.expr(
-            "(CAST(ROUND(c_acctbal * 100) AS BIGINT)"
-            f" + (c_custkey % 7) * 100) div {chosen}"
-        )
-        a = c.select(
-            F.col("c_custkey").alias("a_key"),
-            F.col("c_name").alias("name_a"),
-            F.expr("substring(c_name, length(c_name) - 2, 3)").alias("suffix_a"),
-            cents_a.alias("cents_a"),
-            F.col("c_nationkey").alias("nation_a"),
-            seg_a.alias("blk_seg"),
-            bucket_a.alias("bucket"),
-        )
-        b = c.select(
-            F.col("c_custkey").alias("b_key"),
-            F.expr(
-                "CASE WHEN c_custkey % 5 = 0"
-                " THEN replace(c_name, 'Customer', 'Custmer') ELSE c_name END"
-            ).alias("name_b"),
-            F.expr("substring(c_name, length(c_name) - 2, 3)").alias("suffix_b"),
-            cents_b.alias("cents_b"),
-            F.expr(
-                "CASE WHEN c_custkey % 11 = 0 THEN (c_nationkey + 1) % 25"
-                " ELSE c_nationkey END"
-            ).alias("nation_b"),
-            seg_b.alias("blk_seg"),
-            bucket_b.alias("bucket"),
-        )
-        comparators = [
-            ("name", F.expr("levenshtein(name_a, name_b) <= 1"), 320, -160),
-            ("suffix", F.col("suffix_a") == F.col("suffix_b"), 300, -100),
-            ("acctbal", F.expr("abs(cents_a - cents_b) <= 700"), 250, -180),
-            ("nation", F.col("nation_a") == F.col("nation_b"), 120, -220),
-        ]
-        samples: list[float] = []
-        counts = None
-        for _ in range(passes if label == "sf1" else 1):
-            t0 = time.perf_counter()
-            scored = fellegi_sunter_score(
-                a.join(b, ["blk_seg", "bucket"]),
-                comparators,
-                match_threshold_e2=600,
-                possible_threshold_e2=150,
-            )
-            counts = scored.agg(
-                F.count(F.lit(1)).alias("n_pairs"),
-                F.sum((F.col("verdict") == "match").cast("bigint")).alias("n_match"),
-                F.sum((F.col("verdict") == "possible").cast("bigint")).alias(
-                    "n_possible"
-                ),
-            ).collect()[0]
-            samples.append(time.perf_counter() - t0)
-        sec = _median(samples)
-        n_scored = int(counts["n_pairs"])
-        out[label] = {
-            "n_rows_per_side": n_rows,
-            "blocking": per_width,
-            "scored_width": chosen,
-            "scored_pairs": n_scored,
-            "scored_sec": round(sec, 3),
-            "scored_sec_spread": [round(min(samples), 3), round(max(samples), 3)],
-            "pairs_per_sec": int(n_scored / sec) if sec > 0 else None,
-            "n_match": int(counts["n_match"] or 0),
-            "n_possible": int(counts["n_possible"] or 0),
-        }
-    return out
-
-
-def _skipping_bench(spark, sf_dir: str) -> dict:
-    """Measured payoff of log-side data skipping + OPTIMIZE ZORDER: one
-    txlog table of orders keys, version 0 = random 32-file layout,
-    version 1 = the SAME rows Z-ordered by (o_custkey, o_orderkey) — so
-    time travel compares the two layouts on identical data. For a ~5%
-    o_custkey range predicate, report files-scanned-after-prune (decided
-    from the LOG's harvested min/max, zero footer reads) and the filtered
-    count's wall clock for each layout. The random layout prunes nothing
-    (every file spans the key domain); the Z-ordered layout's tight
-    per-file rectangles are what make `read_snapshot(prune=...)` skip —
-    at 100 TB this ratio is the fraction of the corpus a selective query
-    never reads."""
-    from pyspark.sql import functions as F
-
-    from data_ingestion_bra_spark.sinks import txlog
-    from data_ingestion_bra_spark.sources.tables import load_table
-
-    t = str(
-        Path(__file__).resolve().parent
-        / ".data"
-        / "skipping_bench"
-        / Path(sf_dir).name
-    )
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    if txlog.committed_version(t, "skip-v0") is None:
-        txlog.commit_append(
-            orders.repartition(32), t, idempotency_key="skip-v0"
-        )
-    txlog.compact(
-        spark,
-        t,
-        n_files=32,
-        zorder_by=("o_custkey", "o_orderkey"),
-        idempotency_key="skip-v1",
-    )
-    st = txlog.table_stats(t)
-    ck_lo, ck_hi = st["columns"]["o_custkey"]
-    width = max(1, (ck_hi - ck_lo) // 20)
-    lo, hi = ck_lo + 10 * width, ck_lo + 11 * width
-    out: dict = {"predicate": {"col": "o_custkey", "lo": lo, "hi": hi}}
-    latest = txlog.snapshot(t).version
-    counts = {}
-    for label, ver in (("plain", 0), ("zorder", latest)):
-        entries = txlog.snapshot(t, ver).entries
-        pruned = [
-            e for e in entries if txlog._stats_overlap(e, "o_custkey", lo, hi)
-        ]
-        t0 = time.perf_counter()
-        n = (
-            txlog.read_snapshot(
-                spark, t, version=ver, prune=("o_custkey", lo, hi)
-            )
-            .filter((F.col("o_custkey") >= lo) & (F.col("o_custkey") <= hi))
-            .count()
-        )
-        counts[label] = n
-        out[label] = {
-            "files_total": len(entries),
-            "files_scanned": len(pruned),
-            "rows": n,
-            "sec": round(time.perf_counter() - t0, 3),
-        }
-    # identical data in both layouts by construction; state it in the record
-    out["counts_equal"] = counts["plain"] == counts["zorder"]
-    return out
-
-
-def _trainer_bench(spark, sf_dir: str) -> dict:
-    """In-engine trainer evidence (r8): wall clock for retraining each
-    committed model artifact over the headline-SF documents table —
-    distributed BPE (the iterative one: per-merge cost = a vocab-relation
-    pair groupBy + a 1-row argmax), NB langid (one counting groupBy), and
-    the bigram LM (two counting groupBys). Each trainer's output is
-    pytest-pinned bit-identical to its offline twin; this section prices
-    the 'retrain on the cluster' story."""
-    from data_ingestion_bra_spark.operators.bpe import train_bpe_distributed
-    from data_ingestion_bra_spark.operators.langid_nb import (
-        train_langid_nb_distributed,
-    )
-    from data_ingestion_bra_spark.operators.ngram_lm import (
-        train_ngram_lm_distributed,
-    )
-    from data_ingestion_bra_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    out: dict = {"corpus": sf_dir, "n_docs": docs.count()}
-    t0 = time.perf_counter()
-    merges = train_bpe_distributed(docs, n_merges=96)
-    out["bpe_96_merges"] = {
-        "sec": round(time.perf_counter() - t0, 3),
-        "n_merges": len(merges),
-    }
-    t0 = time.perf_counter()
-    nb = train_langid_nb_distributed(docs, lang_col="lang")
-    out["langid_nb"] = {
-        "sec": round(time.perf_counter() - t0, 3),
-        "n_weights": len(nb["weights"]),
-    }
-    t0 = time.perf_counter()
-    lm = train_ngram_lm_distributed(docs)
-    out["ngram_lm"] = {
-        "sec": round(time.perf_counter() - t0, 3),
-        "n_uni": len(lm["uni"]),
-        "n_bi": len(lm["bi"]),
-    }
-    # pruned retrain (r9): min_count/top_k bound the driver collect inside
-    # the aggregation — the row counts below are the PROOF the driver
-    # footprint is capped regardless of corpus vocabulary size (retained
-    # weights stay bit-identical; pruned words fall back to oov_lp)
-    # caps chosen BELOW the fixture's true table sizes so the bound
-    # provably binds in the recorded numbers (kept < full), not just in
-    # the API: the synthetic corpus has ~31 unigrams / ~931 bigrams
-    t0 = time.perf_counter()
-    lmp = train_ngram_lm_distributed(
-        docs, min_count=2, top_k=24, top_k_bigrams=256
-    )
-    out["ngram_lm_pruned"] = {
-        "sec": round(time.perf_counter() - t0, 3),
-        "n_uni": len(lmp["uni"]),
-        "n_bi": len(lmp["bi"]),
-        "full_vocab": lmp["pruning"]["full_vocab"],
-        "caps": {"min_count": 2, "top_k": 24, "top_k_bigrams": 256},
-    }
-    return out
-
-
-def _acid_dml_bench(spark, sf_dir: str, *, passes: int = 3) -> dict:
-    """Row-level DML through the transaction log, timed end to end at the
-    headline SF: APPEND the orders table (multi-file), copy-on-write
-    DELETE of 1/16 of the keys, MERGE/upsert of another 1/16, OPTIMIZE
-    ZORDER over (o_orderkey, o_custkey), and a full change-data-feed
-    replay. Each pass rebuilds the table from scratch (DML mutates state,
-    so warm medians need fresh tables, not repeats); median + [min, max]
-    per op across ``passes``."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from data_ingestion_bra_spark.sinks import txlog
-    from data_ingestion_bra_spark.sources.tables import load_table
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-    )
-    n_rows = orders.count()
-    samples: dict[str, list[float]] = {}
-
-    def timed(op: str, fn) -> None:
-        t0 = time.time()
-        fn()
-        samples.setdefault(op, []).append(time.time() - t0)
-
-    for _ in range(passes):
-        scratch = tempfile.mkdtemp(prefix="acid_dml_bench_")
-        t = os.path.join(scratch, "tbl")
-        try:
-            timed("append", lambda: txlog.commit_append(orders.repartition(8), t))
-            timed(
-                "delete_1_16",
-                lambda: txlog.commit_delete(spark, t, "o_orderkey % 16 = 3"),
-            )
-            src = orders.filter(F.col("o_orderkey") % 16 == 5).withColumn(
-                "o_orderstatus", F.lit("U")
-            )
-            timed(
-                "upsert_1_16",
-                lambda: txlog.commit_upsert(spark, t, src, key="o_orderkey"),
-            )
-            timed(
-                "optimize_zorder",
-                lambda: txlog.compact(
-                    spark, t, zorder_by=("o_orderkey", "o_custkey"), n_files=8
-                ),
-            )
-            timed("cdf_replay", lambda: txlog.read_changes(spark, t, 0).count())
-        finally:
-            shutil.rmtree(scratch, ignore_errors=True)
-    out: dict = {"sf": sf_dir, "orders_rows": n_rows, "passes": passes}
-    for op, xs in samples.items():
-        out[op + "_sec"] = round(_median(xs), 3)
-        out[op + "_spread"] = [round(min(xs), 3), round(max(xs), 3), len(xs)]
-    return out
-
-
-def _sf1_dir() -> str | None:
-    """10x replica of sf0.1 built inside the repo (testdata is read-only).
-
-    Generated on first use via tools/make_sf.py (key-offset replication that
-    preserves join integrity); gives the bench a second scale point so
-    shuffle/AQE behavior shows at real shuffle sizes.  Disable with
-    SPARK_GRAFT_SKIP_SF1=1.
-    """
-    if os.environ.get("SPARK_GRAFT_SKIP_SF1"):
-        return None
-    return _replica_dir("sf1", 10)
-
-
-def build_compact_line(payload: dict, *, limit: int = 1900) -> str:
-    """The FINAL stdout line: compact sf0.1-headline-only JSON guaranteed
-    under the driver's 2000-char tail window (round 4's full-payload line
-    overflowed it and the official artifact recorded `parsed: null`).
-    Degrades in two steps if the headline set ever grows: drop the mode
-    string, then keep only the 15 slowest queries (flagged)."""
-    compact = {
-        "metric": payload.get("metric", "headline_queries_total_runtime_warm"),
-        "value": payload.get("value"),
-        "unit": "sec",
-        "queries": payload.get("queries", {}),
-        "sf": payload.get("sf"),
-        "mode": "median-of-3 warm; spreads + sf1/sf10/skew/streaming in BENCH_FULL.json",
-    }
-    # Emit-on-partial: a section failure must be VISIBLE in the official
-    # artifact, not just in BENCH_FULL.json — keep only the section names so
-    # the compact line stays under the tail window.
-    if payload.get("errors"):
-        compact["errors"] = sorted({e.split(":", 1)[0] for e in payload["errors"]})
-    if payload.get("sections_skipped"):
-        compact["skipped"] = sorted(
-            {s.split(":", 1)[0] for s in payload["sections_skipped"]}
-        )
-    line = json.dumps(compact)
-    if len(line) > limit:
-        compact.pop("mode", None)
-        line = json.dumps(compact)
-    if len(line) > limit:
-        compact["queries"] = {
-            k: v
-            for k, v in sorted(
-                compact["queries"].items(), key=lambda kv: -kv[1]
-            )[:15]
-        }
-        compact["queries_truncated"] = True
-        line = json.dumps(compact)
-    return line
-
-
-#: Process start, for the total wall-clock budget. Module import time is
-#: within a second of exec() for a script, and using it means session
-#: startup counts against the budget (it spends real driver-window time).
-_BUDGET_START = time.monotonic()
-
-
-def total_budget_sec() -> float:
-    """Total wall-clock budget for the WHOLE bench run. The driver runs
-    bench.py under a timeout it never advertises; rounds 4/6/7 each died a
-    different death (stdout overflow, OOM, SIGTERM on timeout) because the
-    default section list assumed unbounded time. The default is deliberately
-    conservative — a full-evidence local run sets
-    SPARK_GRAFT_TOTAL_BUDGET_SEC=7200 explicitly."""
-    return float(os.environ.get("SPARK_GRAFT_TOTAL_BUDGET_SEC", "1500"))
-
-
-def budget_remaining() -> float:
-    return total_budget_sec() - (time.monotonic() - _BUDGET_START)
-
-
-def install_signal_handlers() -> None:
-    """SIGTERM/SIGINT → SystemExit, so ``main``'s ``finally`` emit actually
-    runs when the driver's ``timeout`` kills the run. Stock CPython runs NO
-    cleanup on SIGTERM — round 7's emit-on-partial ``finally`` was dead code
-    against the driver's kill (BENCH_r07: rc 124, parsed: null) until this
-    handler converts the signal into a normal exception unwind."""
-    import signal
-
-    def _die(signum, frame):  # noqa: ARG001 - signal handler signature
-        raise SystemExit(128 + signum)
-
-    for sig in (signal.SIGTERM, signal.SIGINT):
-        try:
-            signal.signal(sig, _die)
-        except ValueError:  # pragma: no cover - not the main thread
-            pass
-
-
-def _run_section(payload: dict, name: str, fn, spark=None) -> None:
-    """Run one bench section; a failure records an error instead of killing
-    the run. Round 6's official artifact died ``parsed: null`` because the
-    sf10 scaling loop and the headline ``_time_queries`` calls were the only
-    sections NOT guarded — one executor OOM zeroed the whole round's bench
-    record. Every section now goes through this guard, and the artifact is
-    re-emitted after EVERY section (not only at exit): the driver parses the
-    LAST stdout line, so even an un-trappable SIGKILL loses at most the
-    in-flight section.
-
-    ``SPARK_GRAFT_FAIL_SECTION=<name>`` injects a deterministic failure at
-    the top of the named section — the pytest fault-injection hook that
-    proves the compact line still emits when a section dies.
-    """
-    if os.environ.get("SPARK_GRAFT_FAIL_SECTION") == name:
-        payload.setdefault("errors", []).append(
-            f"{name}: RuntimeError: injected failure (SPARK_GRAFT_FAIL_SECTION)"
-        )
-        print(f"bench section {name}: injected failure", file=sys.stderr)
-        _emit(payload)
-        return
-    if os.environ.get("SPARK_GRAFT_SLEEP_SECTION") == name:
-        # test hook: park here so the signal-survival pytest can SIGTERM the
-        # process deterministically mid-section (after >=1 emitted line)
-        time.sleep(600)
-    if spark is not None:
-        try:  # label every Spark job with its bench section (the round-7
-            # 20 MB-task-closure hunt had to be done by stage-number
-            # archaeology; this makes the next one a log grep)
-            spark.sparkContext.setJobDescription(f"bench:{name}")
-        except Exception:  # pragma: no cover - labeling must never kill
-            pass
-    # 1-min load average before/after every section: this box shows heavy
-    # noisy-neighbor contention some days (round-10: headline samples
-    # spanned 10.8-45.2 s at load-avg ~3 with no local process), and the
-    # artifact itself must carry the evidence that distinguishes ambient
-    # inflation from a plan regression.
-    try:
-        load_before = round(os.getloadavg()[0], 2)
-    except OSError:  # pragma: no cover - platform without getloadavg
-        load_before = None
-    t0 = time.monotonic()
-    try:
-        fn()
-    except Exception as exc:  # noqa: BLE001 - bench must still emit
-        msg = f"{name}: {type(exc).__name__}: {exc}"
-        payload.setdefault("errors", []).append(msg[:500])
-        print(f"bench section failed ({msg[:2000]})", file=sys.stderr)
-    payload.setdefault("section_seconds", {})[name] = round(time.monotonic() - t0, 1)
-    try:
-        load_after = round(os.getloadavg()[0], 2)
-    except OSError:  # pragma: no cover
-        load_after = None
-    if load_before is not None or load_after is not None:
-        payload.setdefault("ambient", {}).setdefault("loadavg_by_section", {})[
-            name
-        ] = [load_before, load_after]
-    _emit(payload)
-
-
-def _section_hygiene(spark) -> None:
-    """Drop cached relations between sections so one section's persists
-    cannot push a later section over the heap (the round-6 OOM rode an
-    8.2M-row persisted shingle set left over from the crossover section)."""
-    try:
-        spark.catalog.clearCache()
-    except Exception:  # pragma: no cover - hygiene must never kill the run
-        pass
 
 
 #: Newer LLM-pipeline ops, timed but kept OUT of the headline total so the
@@ -1855,6 +268,1681 @@ EXTENDED_QUERIES = [
 ]
 
 
+#: Single-shot plan-sensitive rows at the sf1 and sf10 replicas.
+SF1_PROBES = ("dedup_simhash_full", "dedup_contamination_auto", "text_perplexity_lm")
+SF10_PROBES = ("dedup_minhash_lsh", "text_perplexity_lm", "dedup_contamination_bloom")
+
+
+def _replica_dir(name: str, factor: int) -> str | None:
+    """Resolve (building if needed) a scale replica ATOMICALLY: build into a
+    .tmp sibling and os.rename into place, so a killed build can never
+    leave a truncated parquet at the published path (a half-written sf1
+    lineitem poisoned a round-7 run — existence alone is not integrity).
+    A leftover _COMPLETE-less published dir from the pre-atomic era is
+    rebuilt."""
+    out = Path(__file__).resolve().parent / ".data" / name
+    marker = out / "_COMPLETE"
+    if marker.exists():
+        return str(out)
+    try:
+        import shutil
+
+        from tools.make_sf import make_sf
+
+        if out.exists():
+            shutil.rmtree(out)  # pre-atomic or torn build: rebuild
+        tmp = out.with_name(name + ".tmp")
+        if tmp.exists():
+            shutil.rmtree(tmp)
+        make_sf(factor, "/root/testdata/sf0.1", str(tmp))
+        (tmp / "_COMPLETE").write_text("ok\n")
+        os.rename(tmp, out)
+    except Exception as exc:  # pragma: no cover - bench must still emit
+        print(f"{name} replica unavailable: {exc}", file=sys.stderr)
+        return None
+    return str(out)
+
+
+def _semdedup_scale_bench(spark, points) -> dict:
+    """SemDeDup with corpus-proportional clustering: k = max(8, N/250) keeps
+    E[cell size] ~250 constant, so the within-cell pairwise cosine step is
+    O(N * cell_size) at every scale — the measured version of the paper's
+    own 100-TB argument. Reports end-to-end (train 1 Lloyd iteration on a
+    50% content-hash sample + assign + prune) per scale point, as
+    median-of-3 with the [min, max] spread."""
+    from data_ingestion_bra_spark.operators import similarity
+    from data_ingestion_bra_spark.sources.tables import load_table
+
+    out: dict = {}
+    for label, d in points:
+        emb = load_table(spark, d, "embeddings")
+        n = emb.count()
+        k = max(8, n // 250)
+
+        def prune(emb=emb, k=k) -> int:
+            cents = similarity.kmeans_train(
+                emb, n_centroids=k, n_iter=1, train_sample_rate=0.5
+            )
+            # Materialize the inverted lists once (the production contract:
+            # load_or_build_ivf_index persists them to parquet; the prune
+            # plan reads the index, never re-running assignment per
+            # consumer).
+            lists = (
+                similarity.assign_cells(emb, cents)
+                .select("vid", "cell", "v")
+                .localCheckpoint(eager=True)
+            )
+            return (
+                similarity.semdedup_prune(cents, lists, threshold_e4=4500)
+                .filter("keep = 1")
+                .count()
+            )
+
+        t = _timed(prune, passes=3)
+        out[label] = {
+            "sec": t.median,
+            "sec_spread": t.spread,
+            "n_vectors": n,
+            "n_cells": k,
+            "n_kept": t.result,
+        }
+    return out
+
+
+def _incremental_dedup_bench(spark, sf1: str) -> dict:
+    """The incremental-dedup claim, measured: a 10% daily batch checked
+    against the standing 90% corpus via the persisted signature store
+    (operators/dedup.py:incremental_lsh_candidates) vs re-running the
+    full-corpus LSH self-join (dedup.lsh_pair_estimates). The store is
+    built ONCE outside the timed region (production writes it at ingest);
+    the timed increment is batch shingling + signatures + the (band,
+    bucket) equi-join with its in-row estimate. Candidate counts are
+    reported so the comparison is shape-honest (the full run also finds
+    old-old and new-new pairs the increment deliberately skips)."""
+    from pyspark.sql import functions as F
+
+    from data_ingestion_bra_spark.operators import dedup
+    from data_ingestion_bra_spark.sources.tables import load_table
+
+    d = load_table(spark, sf1, "documents")
+    is_batch = F.col("doc_id") % 10 == 0
+
+    def signatures(docs):
+        return dedup.minhash_signatures(
+            dedup.doc_shingles(docs, "doc_id", "text", n=3, distinct=False),
+            num_hashes=16,
+        )
+
+    build = _timed(lambda: signatures(d.filter(~is_batch)).localCheckpoint(eager=True))
+    store = build.result
+    inc = _timed(
+        lambda: dedup.incremental_lsh_candidates(store, signatures(d.filter(is_batch))).count(),
+        passes=3,
+    )
+    full = _timed(
+        lambda: dedup.lsh_pair_estimates(signatures(d), band_size=4, num_hashes=16).count(),
+        passes=3,
+    )
+    store.unpersist()
+    return {
+        "store_build_sec": build.median,
+        "incremental_sec": inc.median,
+        "incremental_spread": inc.spread,
+        "incremental_candidates": inc.result,
+        "full_selfjoin_sec": full.median,
+        "full_spread": full.spread,
+        "full_candidates": full.result,
+        "batch_fraction": 0.1,
+    }
+
+
+def _skew_fixture(spark) -> tuple:
+    """Deterministic skewed join/agg fixture: 20M-row fact table where 95%
+    of rows hit ONE key (the rest spread over 100k keys) and a 200k-row dim
+    (above the broadcast threshold we force off, small enough that salt
+    replication is cheap — the realistic salting regime). A shuffle join
+    funnels the hot key into one reducer; that task IS the runtime."""
+    out = _DATA / "skew"
+    if not (out / "fact.parquet").exists():
+        import duckdb
+
+        out.mkdir(parents=True, exist_ok=True)
+        con = duckdb.connect()
+        con.execute(
+            f"""COPY (SELECT CASE WHEN i % 20 < 19 THEN 0
+                                  ELSE CAST((i * 2654435761) % 100000 AS BIGINT) END AS k,
+                             CAST(i % 1000 AS BIGINT) AS v,
+                             CAST(i AS BIGINT) AS rid
+                      FROM range(20000000) t(i))
+                TO '{out / "fact.parquet"}' (FORMAT PARQUET)"""
+        )
+        con.execute(
+            f"""COPY (SELECT CAST(i AS BIGINT) AS k,
+                             CAST(i * 7 AS BIGINT) AS dim_payload
+                      FROM range(200000) t(i))
+                TO '{out / "dim.parquet"}' (FORMAT PARQUET)"""
+        )
+    fact = spark.read.parquet(str(out / "fact.parquet"))
+    dim = spark.read.parquet(str(out / "dim.parquet"))
+    return fact, dim
+
+
+def _skew_bench(spark) -> dict:
+    """Skew stress: the salted join/agg twins vs plain under a 90%-hot key.
+
+    Honest methodology: AQE's skew-join splitting is Spark's first-line
+    mitigation and our session enables it, so the table reports (a) plain
+    join with AQE skew handling ON, (b) plain with it OFF (the unmitigated
+    baseline that shows the skew is real), and (c) the salted join with it
+    OFF (our operator as the only mitigation). Salted aggregation is
+    reported against plain; for algebraic aggs Spark's map-side partial
+    aggregation already absorbs key skew, so parity (not speedup) is the
+    expected and documented result there — the salted agg exists for
+    holistic/fallback shapes.
+    """
+    from pyspark.sql import functions as F
+
+    from data_ingestion_bra_spark.operators.skew import salted_agg_sum, salted_join
+
+    fact, dim = _skew_fixture(spark)
+    timings: dict = {}
+
+    def run(name: str, fn, *, skew_join: bool, noop: bool = False) -> None:
+        # Warm run + median of 3: the round-4 AQE number flapped
+        # 9.68<->5.98s on identical plans, so single-sample skew claims
+        # aren't attributable. noop=True for the holistic-agg rows: count()
+        # over an aggregate lets Catalyst PRUNE the aggregate expressions
+        # (the distinct trio measured a flat 0.3s under count() — it was
+        # counting groups, not merging sets); join/sum rows keep count()
+        # for round-over-round comparability.
+        mat = _materialize if noop else (lambda df: df.count())
+        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", str(skew_join).lower())
+        t = _timed(lambda: mat(fn()), passes=3, warm=True)
+        timings[name] = t.median
+        timings[f"{name}_spread"] = t.spread
+
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        join_plain = lambda: fact.join(dim, "k").select(F.sum("v"))  # noqa: E731
+        join_salted = lambda: salted_join(  # noqa: E731
+            fact, dim, "k", salt_col="rid", n_salts=32
+        ).select(F.sum("v"))
+        run("join_plain_aqe_skew", join_plain, skew_join=True)
+        run("join_plain_no_mitigation", join_plain, skew_join=False)
+        run("join_salted", join_salted, skew_join=False)
+        agg_plain = lambda: fact.groupBy("k").agg(  # noqa: E731
+            F.sum("v"), F.count(F.lit(1))
+        )
+        agg_salted = lambda: salted_agg_sum(  # noqa: E731
+            fact, "k", F.col("v"), salt_col="rid", n_salts=32
+        )
+        run("agg_plain", agg_plain, skew_join=True)
+        run("agg_salted", agg_salted, skew_join=True)
+
+        # HOLISTIC skew (round-6 verdict item 7): exact distinct-per-key
+        # where the hot key holds ~2M distinct values. The naive
+        # collect_set plan merges every partial set of the hot key in ONE
+        # task — that task is the runtime; the value-hash-salted operator
+        # splits the distinct classes disjointly so the merge is an
+        # algebraic sum. Spark's builtin count_distinct rewrite (expand
+        # over (k, v)) is reported alongside for honesty.
+        from data_ingestion_bra_spark.operators.skew import salted_count_distinct
+
+        fact_v2 = fact.withColumn("v2", F.pmod(F.col("rid"), F.lit(2_000_000)))
+        distinct_naive = lambda: fact_v2.groupBy("k").agg(  # noqa: E731
+            F.size(F.collect_set("v2")).alias("n_distinct")
+        )
+        distinct_builtin = lambda: fact_v2.groupBy("k").agg(  # noqa: E731
+            F.count_distinct("v2").alias("n_distinct")
+        )
+        distinct_salted = lambda: salted_count_distinct(  # noqa: E731
+            fact_v2, "k", F.col("v2"), n_salts=32
+        )
+        run("distinct_plain_collect_set", distinct_naive, skew_join=True, noop=True)
+        run("distinct_builtin_count_distinct", distinct_builtin, skew_join=True, noop=True)
+        run("distinct_salted", distinct_salted, skew_join=True, noop=True)
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    return timings
+
+
+def _streaming_bench(spark, sf_dir: str) -> dict[str, float]:
+    """Streaming throughput: the ``sf_dir`` events table replayed as an
+    8-file parquet stream through (a) watermarked tumbling counts and (b)
+    applyInPandasWithState sessionization, availableNow to a memory sink.
+    Reports end-to-end wall seconds and rows/sec."""
+    from data_ingestion_bra_spark.sources.tables import load_table
+    from data_ingestion_bra_spark.streaming import jobs, stateful
+
+    src = _DATA / "stream_events"
+    if not src.exists():
+        ev = load_table(spark, sf_dir, "events")
+        ev.select(
+            "event_id", "ts", "user_id", "event_type", "value", "props"
+        ).repartitionByRange(8, "ts").write.mode("overwrite").parquet(str(src))
+    n_rows = spark.read.parquet(str(src)).count()
+    out: dict[str, float] = {}
+    for name, build in (
+        ("tumbling_counts", lambda s: jobs.tumbling_counts(s)),
+        (
+            "stateful_sessionize",
+            lambda s: stateful.sessionize(s.select("user_id", "ts", "value")),
+        ),
+    ):
+        stream = jobs.read_events_stream(spark, str(src), max_files_per_trigger=4)
+        t = _timed(
+            lambda: jobs.run_to_memory_sink(
+                build(stream), name=f"bench_{name}", output_mode="append"
+            )
+        )
+        t.result.stop()
+        out[f"{name}_sec"] = t.median
+        out[f"{name}_rows_per_sec"] = round(n_rows / t.samples[0])
+    return out
+
+
+def _contamination_stress(spark, sf10: str) -> dict:
+    """Contamination at a LARGE benchmark side (50k docs → millions of
+    distinct 8-gram shingle strings): the regime where the exact variant
+    must broadcast a multi-hundred-MB string set while the bloom variant
+    ships a fixed 4 MiB bitmap + codegen probes. The catalog entries use a
+    tiny benchmark split where the two tie (fixture parity); THIS is the
+    measurement that shows what the bloom buys at scale. Outputs are
+    asserted identical (the confirm join strikes false positives)."""
+    from pyspark.sql import functions as F
+
+    from data_ingestion_bra_spark.operators import bloom, dedup
+    from data_ingestion_bra_spark.sources.tables import load_table
+
+    d = load_table(spark, sf10, "documents")
+    split = 50_000
+    # the benchmark shingle set is common input to BOTH variants (exact
+    # broadcasts it; bloom builds the bitmap from it AND confirm-joins it)
+    # — persist it so the timings isolate the variant difference, not how
+    # many times the common relation gets recomputed
+    bset = (
+        dedup.doc_shingles(d.filter(F.col("doc_id") < split), "doc_id", "text", n=8)
+        .select("shingle")
+        .distinct()
+        .persist()
+    )
+    n_shingles = bset.count()
+    cand = dedup.doc_shingles(
+        d.filter(F.col("doc_id") >= split), "doc_id", "text", n=8, distinct=False
+    )
+
+    def finish(surviving):
+        return (
+            surviving.join(F.broadcast(bset), "shingle")
+            .select("doc", "shingle")
+            .distinct()
+            .groupBy("doc")
+            .agg(F.count("*").alias("n_overlap"))
+        )
+
+    exact = _timed(lambda: finish(cand).count())
+    # auto-size: ~10 bits per member, power of two (k=3 → fpp ~1%);
+    # Spark-side build (no driver round-trip, no task-closure bitmap)
+    m_bits = 1 << max(16, (10 * n_shingles).bit_length())
+
+    def bloom_probe():
+        bf = bloom.build_bloom_df(bset, "shingle", m_bits=m_bits).persist()
+        return bf, finish(bloom.bloom_prefilter(cand, "shingle", bf, m_bits=m_bits)).count()
+
+    probe = _timed(bloom_probe)
+    bf, n_bloom = probe.result
+    bf.unpersist()
+    out: dict = {
+        "exact_broadcast_sec": exact.median,
+        "bloom_prefilter_sec": probe.median,
+        "rows_equal": bool(exact.result == n_bloom),
+        "n_flagged_docs": exact.result,
+        # The quantity a single box CANNOT show in wall-clock (its
+        # 'broadcast' is a memcpy): the per-executor broadcast footprint
+        # each variant ships on a real cluster. The exact variant ships
+        # every distinct benchmark shingle string; the bloom ships the
+        # fixed bitmap.
+        "exact_broadcast_payload_bytes": int(
+            bset.agg(F.sum(F.length("shingle"))).collect()[0][0]
+        ),
+        "n_benchmark_shingles": n_shingles,
+        "bloom_broadcast_payload_bytes": m_bits // 8,
+    }
+    bset.unpersist()
+    return out
+
+
+def _contamination_crossover(spark, sf10: str) -> dict:
+    """The regime the bloom pre-filter is BUILT for (round-5 verdict item 3):
+    a benchmark side whose distinct-shingle set is large enough that
+    building/shipping it as a broadcast string hash relation is the binding
+    cost. The fixture corpus's ~30-word vocabulary plateaus at ~244k
+    distinct shingles (a 10.5 MB broadcast — exact ties bloom there, as r5
+    measured), so the benchmark set is inflated with 8M synthetic distinct
+    shingles: the EXACT variant must build the full ~240 MB string hash
+    relation and probe every candidate shingle against it, while the bloom
+    variant ships a fixed 16 MiB bitmap and touches the big set only
+    through scan-side joins against BROADCAST-SMALL survivor sets (the
+    scalable confirm: the raw benchmark set is never the broadcast side).
+    Outputs asserted identical; both timed median-of-3 after a warm pass."""
+    from pyspark.sql import functions as F
+
+    from data_ingestion_bra_spark.operators import bloom, dedup
+    from data_ingestion_bra_spark.sources.tables import load_table
+
+    d = load_table(spark, sf10, "documents")
+    split = 50_000
+    real = dedup.doc_shingles(
+        d.filter(F.col("doc_id") < split), "doc_id", "text", n=8
+    ).select("shingle")
+    synth = spark.range(8_000_000).select(
+        F.concat(F.lit("synthetic benchmark shingle "), F.col("id")).alias("shingle")
+    )
+    bset = real.union(synth).distinct().persist()
+    n_shingles = bset.count()
+    cand = dedup.doc_shingles(
+        d.filter(F.col("doc_id") >= split), "doc_id", "text", n=8, distinct=False
+    )
+
+    def overlap_counts(hits):
+        return (
+            hits.select("doc", "shingle")
+            .distinct()
+            .groupBy("doc")
+            .agg(F.count("*").alias("n_overlap"))
+        )
+
+    def exact():
+        # the exact operator's contract: broadcast the benchmark set
+        return overlap_counts(cand.join(F.broadcast(bset), "shingle")).count()
+
+    def exact_shuffled():
+        # the no-bloom fallback once the benchmark set outgrows broadcast:
+        # the ENTIRE candidate shingle stream shuffles against the set
+        return overlap_counts(cand.join(bset, "shingle")).count()
+
+    m_bits = 1 << max(16, (10 * n_shingles).bit_length())
+
+    # bitmap build is ONE-TIME for a static benchmark set (the production
+    # regime: build once, screen every corpus batch) — timed separately;
+    # the exact variant's broadcast hash relation has no such amortization,
+    # Spark rebuilds it per query. Spark-side build + persist: the former
+    # driver round-trip embedded the ~20 MB word array in a task closure
+    # on EVERY probe query (round-7's TaskSetManager large-task warnings).
+    def build_bloom():
+        bf = bloom.build_bloom_df(bset, "shingle", m_bits=m_bits).persist()
+        bf.count()  # materialize: the build cost, not the first probe's
+        return bf
+
+    build = _timed(build_bloom)
+    bf = build.result
+
+    def bloom_path():
+        # ONE pass over the corpus: codegen bitmap probes drop ~all
+        # non-matching shingles scan-side, then the (small) survivor
+        # stream confirms through a plain SHUFFLED equi-join against the
+        # benchmark scan — the 280 MB relation is never a broadcast build,
+        # and bloom's job is exactly the shuffle-volume cut vs
+        # exact_shuffled. (An earlier two-step broadcast confirm recomputed
+        # the corpus scan + probes twice and lost 2.2x to exact_broadcast;
+        # journal: r6 crossover first sample.)
+        surviving = bloom.bloom_prefilter(cand, "shingle", bf, m_bits=m_bits)
+        return overlap_counts(surviving.join(bset, "shingle")).count()
+
+    out: dict = {
+        "n_benchmark_shingles": n_shingles,
+        "bloom_build_sec": build.median,
+        "bloom_broadcast_payload_bytes": m_bits // 8,
+        "exact_broadcast_payload_bytes": int(
+            bset.agg(F.sum(F.length("shingle"))).collect()[0][0]
+        ),
+    }
+    results: dict[str, int] = {}
+    for name, fn in (
+        ("exact_broadcast", exact),
+        ("exact_shuffled", exact_shuffled),
+        ("bloom_serve", bloom_path),
+    ):
+        t = _timed(fn, passes=3, warm=True)
+        results[name] = t.result
+        out[f"{name}_sec"] = t.median
+        out[f"{name}_spread"] = t.spread
+    out["rows_equal"] = bool(len(set(results.values())) == 1)
+    out["n_flagged_docs"] = results["exact_broadcast"]
+    bset.unpersist()
+    bf.unpersist()
+    return out
+
+
+def _ivf_build_bench(spark, sf_dirs: list[tuple[str, str]]) -> dict:
+    """IVF index BUILD cost vs ``train_sample_rate`` with recall\\@5 of the
+    resulting index — the evidence that sample-based k-means training buys
+    build time roughly linearly in the rate while holding recall >= 0.9
+    (the serve path is benched separately via similarity_topk_ivf). Runs
+    2 Lloyd iterations over 16 centroids per (scale, rate); truth is the
+    exact brute-force top-5 for 10 queries, recomputed per scale."""
+    from pyspark.sql import functions as F
+
+    from data_ingestion_bra_spark.operators import pq, similarity
+    from data_ingestion_bra_spark.sources.tables import load_table
+
+    out: dict = {}
+    for label, d in sf_dirs:
+        emb = load_table(spark, d, "embeddings")
+        truth = _pairs(
+            similarity.brute_force_topk(emb.filter(F.col("vec_id") < 10), emb, k=5)
+        )
+        per_rate: dict = {}
+        for rate in (1.0, 0.5, 0.1):
+            build = _timed(
+                lambda: similarity.kmeans_train(
+                    emb, n_centroids=16, n_iter=2, train_sample_rate=rate
+                )
+            )
+            got = _pairs(
+                similarity.ivf_topk(
+                    emb, n_probe=4, query_ids=list(range(10)), k=5, centroids=build.result
+                )
+            )
+            per_rate[f"rate_{rate}"] = {
+                "build_sec": build.median,
+                "recall_at_5": round(len(got & truth) / len(truth), 3),
+            }
+
+        # PQ index CONSTRUCTION cost (round-12 verdict item 6: the serve
+        # entries read the persisted codebook+codes, so train-once/serve-many
+        # stays honest only while build cost has a measured row). Same
+        # (m, k, n_iter, dim) as the serve entries' load_or_build_pq_index
+        # defaults; the encode is materialized through the noop sink.
+        def train(emb=emb):
+            cb = pq.pq_train(emb, n_iter=1)
+            return cb, cb.count()
+
+        tr = _timed(train)
+        cb, cb_rows = tr.result
+        enc = _timed(lambda: _materialize(pq.pq_encode(emb, cb)))
+        per_rate["pq_index"] = {
+            "codebook_train_sec": tr.median,
+            "corpus_encode_sec": enc.median,
+            "codebook_rows": cb_rows,
+            "n_vectors": emb.count(),
+        }
+        out[label] = per_rate
+    return out
+
+
+def _ivfpq_serve_bench(spark, sf_dirs: list[tuple[str, str]]) -> dict:
+    """Composed IVF-PQ+R serve-path accuracy/cost beyond fixture scale
+    (round-8 verdict item 7): for the same 10 queries, wall clock +
+    recall@10 under three strategies — exact brute force (the floor and
+    the cosine truth), IVF full-vector scoring, and the composed IVFPQ+R
+    (cell prune × compressed-domain ADC × exact shortlist re-rank).
+    Recall is measured against each family's OWN exact ordering (cosine
+    for brute/IVF, integer L2 for IVFPQ's re-rank metric) so the number
+    isolates the approximation, not the metric change. Index build costs
+    are excluded — this section prices the QUERY path, ivf_build_bench
+    prices construction."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    from data_ingestion_bra_spark.operators import pq, similarity
+    from data_ingestion_bra_spark.operators.similarity import quantize_sql
+    from data_ingestion_bra_spark.sources.tables import load_table
+
+    def _pack(t: Timed, truth: set | None = None) -> dict:
+        row = {"sec": t.median, "per_query_ms": round(t.median * 100, 1)}
+        if truth is not None:
+            row["recall_at_10"] = round(len(t.result & truth) / len(truth), 3)
+        return row
+
+    out: dict = {}
+    for label, d in sf_dirs:
+        emb = load_table(spark, d, "embeddings")
+        emb.persist()
+        n_vec = emb.count()
+        q_df = emb.filter(F.col("vec_id") < 10)
+
+        brute = _timed(lambda: _pairs(similarity.brute_force_topk(q_df, emb, k=10)))
+        cos_truth = brute.result
+
+        # exact integer-L2 truth for the IVFPQ re-rank metric
+        qv = q_df.selectExpr("vec_id as query_id", f"{quantize_sql('embedding')} as qv")
+        cv = emb.selectExpr("vec_id as cand_id", f"{quantize_sql('embedding')} as cv")
+        l2 = (
+            F.broadcast(qv)
+            .crossJoin(cv)
+            .filter(F.col("query_id") != F.col("cand_id"))
+            .selectExpr("query_id", "cand_id", f"{pq._isq_dist_sql('qv', 'cv')} as d")
+        )
+        wl = Window.partitionBy("query_id").orderBy(
+            F.col("d").asc(), F.col("cand_id").asc()
+        )
+        l2_truth = _pairs(
+            l2.withColumn("rk", F.row_number().over(wl)).filter(F.col("rk") <= 10)
+        )
+
+        cents, lists = similarity.load_or_build_ivf_index(
+            spark, emb, d, n_centroids=16, n_iter=1, train_sample_rate=0.5
+        )
+        lists.persist().count()
+        ivf = _timed(
+            lambda: _pairs(
+                similarity.ivf_topk(
+                    emb, n_probe=4, query_ids=list(range(10)), k=10,
+                    centroids=cents, assignments=lists,
+                )
+            )
+        )
+
+        # persisted PQ index (train-once discipline, same as the IVF lists
+        # above) — this section prices the QUERY path, not construction
+        cb, codes = pq.load_or_build_pq_index(spark, emb, d)
+        codes.persist().count()
+
+        out[label] = {
+            "n_vectors": n_vec,
+            "bruteforce": _pack(brute),
+            "ivf_nprobe4": _pack(ivf, cos_truth),
+        }
+        # shortlist sweep: the re-rank is exact, so recall is bounded by
+        # ADC shortlist quality — record the accuracy/cost knob, not one
+        # arbitrary point
+        for short in (40, 100):
+            served = _timed(
+                lambda: _pairs(
+                    pq.ivfpq_topk(
+                        q_df, lists, cents, codes, cb, emb,
+                        n_probe=4, shortlist=short, k_top=10,
+                    )
+                )
+            )
+            out[label][f"ivfpq_r_nprobe4_short{short}"] = _pack(served, l2_truth)
+        codes.unpersist()
+        lists.unpersist()
+        emb.unpersist()
+    return out
+
+
+def _bitext_clustered_fixture(
+    spark, *, n_pairs: int = 1500, dim: int = 16, n_langs: int = 8
+) -> tuple:
+    """LANGUAGE-CLUSTERED bitext fixture — the realistic regime the CCMatrix
+    citation promises (round-10 verdict item 4). Real multilingual encoders
+    produce embeddings that cluster by language/topic; the testdata
+    embeddings are deliberately UNclustered (the adversarial case for cell
+    pruning), so serve-path recall needs a second fixture whose geometry
+    matches production.
+
+    Construction is fully deterministic (no RNG — murmur3 ``F.hash`` of the
+    coordinates): language ``id % n_langs`` gets a mixture center in
+    [-2, 2]^dim, each side's vector is center + a per-(id, side, dim)
+    perturbation in [-0.8, 0.8], and every 4th pair is a BOUNDARY case —
+    the midpoint of two adjacent language centers (code-switching /
+    cross-topic text, the vectors that actually straddle IVF cells in a
+    real multilingual corpus) — so the probe curve has something to
+    recover. True pair structure a_i <-> b_i. Returns (side_a, side_b)."""
+    from pyspark.sql import functions as F
+
+    base = spark.range(n_pairs).select(
+        F.col("id").cast("bigint").alias("vec_id"),
+        (F.col("id") % n_langs).cast("int").alias("lang"),
+        ((F.col("id") + 1) % n_langs).cast("int").alias("lang2"),
+        (F.col("id") % 4 == 0).alias("boundary"),
+    )
+
+    def vec(side: int):
+        dims = F.sequence(F.lit(0), F.lit(dim - 1))
+
+        def center(lang_col, d):
+            return (F.hash(lang_col, d) % 1000).cast("double") / 500.0
+
+        return F.transform(
+            dims,
+            lambda d: (
+                F.when(
+                    F.col("boundary"),
+                    (center(F.col("lang"), d) + center(F.col("lang2"), d)) / 2.0,
+                ).otherwise(center(F.col("lang"), d))
+                + (F.hash(F.col("vec_id"), F.lit(side), d) % 100).cast("double")
+                / 125.0
+            ),
+        )
+
+    a = base.select("vec_id", vec(0).alias("embedding"))
+    b = base.select("vec_id", vec(1).alias("embedding"))
+    return a, b
+
+
+def _pair_scores(served: set, exact: set) -> dict:
+    """Served-vs-exact pair recall and precision (mutual-top-1 is relative
+    to the candidate set, so the pruned world trades some precision too;
+    both sides of that trade are recorded)."""
+    out: dict = {}
+    if exact:
+        out["pair_recall"] = round(len(served & exact) / len(exact), 4)
+    if served:
+        out["pair_precision"] = round(len(served & exact) / len(served), 4)
+    return out
+
+
+def _bitext_clustered_bench(spark, *, probes=(1, 2, 4)) -> dict:
+    """Recall-vs-cost curve of the IVF serve path on the CLUSTERED fixture,
+    next to the adversarial-fixture points — both regimes in the payload."""
+    from data_ingestion_bra_spark.operators.similarity import (
+        bitext_mining_margin,
+        bitext_mining_margin_ivf,
+        kmeans_train,
+    )
+
+    a, b = _bitext_clustered_fixture(spark)
+    a = a.localCheckpoint(eager=True)  # fixture gen excluded from timings
+    b = b.localCheckpoint(eager=True)
+    train = _timed(lambda: kmeans_train(b, n_centroids=8, n_iter=3))
+    exact = _timed(lambda: _pairs(bitext_mining_margin(a, b), "a_id", "b_id"))
+    pts = []
+    for p in probes:
+        served = _timed(
+            lambda: _pairs(
+                bitext_mining_margin_ivf(a, b, train.result, n_probe=p), "a_id", "b_id"
+            )
+        )
+        pts.append(
+            {
+                "n_probe": p,
+                "served_sec": served.median,
+                "served_pairs": len(served.result),
+                **_pair_scores(served.result, exact.result),
+            }
+        )
+    return {
+        "fixture": "clustered(n=1500/side, dim=16, langs=8)",
+        "train_sec": train.median,
+        "exact_sec": exact.median,
+        "exact_pairs": len(exact.result),
+        "probe_points": pts,
+    }
+
+
+def _bitext_serve_bench(
+    spark, queries, points: list[tuple[str, str]], prior_points: list[dict]
+) -> dict:
+    """Bitext mining: exact bipartite baseline vs the IVF-composed serve
+    path (similarity_bitext_ivf), with MEASURED pair recall — served ∩
+    exact / exact — so the catalog's scale-path claim carries a number the
+    same way ivfpq_serve_bench's recall@10 does. The exact side is the
+    oracle-twin BNLJ baseline; at corpus scale only the served path runs,
+    which is exactly why its recall must be measured here.
+
+    Two fixtures, both regimes recorded: the testdata embeddings
+    (UNclustered — adversarial for cell pruning, the honest worst case;
+    real multilingual encoders cluster by language/topic and prune far
+    better) per scale point, plus the clustered fixture's recall-vs-probes
+    curve (the realistic regime). A point whose exact + served seconds in
+    ``prior_points`` (the previous run's) exceed the budget left is named
+    in ``points_skipped`` instead of running."""
+    prior = {p["sf"]: p.get("exact_sec", 0.0) + p.get("served_sec", 0.0) for p in prior_points}
+    out: dict = {"points": []}
+    # Clustered curve first: it is the cheap, fixed-size block.
+    try:
+        out["clustered"] = _bitext_clustered_bench(spark)
+    except Exception as exc:  # noqa: BLE001 - keep the section alive
+        out["clustered_error"] = f"{type(exc).__name__}: {exc}"[:300]
+    for label, d in points:
+        if not _fits(prior.get(label)):
+            out.setdefault("points_skipped", []).append(
+                f"{label}: budget ({prior.get(label, 0):.0f}s last run, "
+                f"{budget_remaining():.0f}s left)"
+            )
+            continue
+        exact = _timed(lambda: _pairs(queries["similarity_bitext_mining"](spark, d), "a_id", "b_id"))
+        served = _timed(lambda: _pairs(queries["similarity_bitext_ivf"](spark, d), "a_id", "b_id"))
+        out["points"].append(
+            {
+                "sf": label,
+                "exact_sec": exact.median,
+                "exact_pairs": len(exact.result),
+                "served_sec": served.median,
+                "served_pairs": len(served.result),
+                **_pair_scores(served.result, exact.result),
+            }
+        )
+    return out
+
+
+def _fold_epochs(writer, rows, key_col: str, n_epochs: int) -> tuple[dict, float]:
+    """Fold ``rows`` into a streaming store's ``writer`` as ``n_epochs``
+    deterministic crc32(``key_col``) slices, one timed trigger epoch each.
+    Returns the per-epoch seconds record and the total fold seconds."""
+    from pyspark.sql import functions as F
+
+    t = _timed_each(
+        writer,
+        [
+            (rows.filter(F.crc32(F.col(key_col).cast("string")) % n_epochs == e), e)
+            for e in range(n_epochs)
+        ],
+    )
+    rec = {
+        "sec_per_epoch_median": t.median,
+        "sec_per_epoch": [round(s, 3) for s in t.samples],
+    }
+    return rec, sum(t.samples)
+
+
+def _freq_maintenance_bench(
+    spark, sf_dir: str, *, n_epochs: int = 5, capacity: int = 4096
+) -> dict:
+    """Streaming Misra–Gries store throughput: fold ``n_epochs`` per-epoch
+    token-stream summaries into a txlog-backed standing summary
+    (streaming/freq_maintenance) and measure seconds per trigger epoch —
+    the number behind the 'one bounded job per trigger' claim. The row
+    also records the standing-summary size (bounded at capacity forever)
+    and one serving recount so the end-to-end exact-top-k latency is
+    priced too."""
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from data_ingestion_bra_spark.sources.tables import load_table
+    from data_ingestion_bra_spark.streaming.freq_maintenance import (
+        current_candidates,
+        freq_maintenance_writer,
+    )
+
+    out: dict = {"capacity": capacity, "n_epochs": n_epochs, "sf": sf_dir}
+    with tempfile.TemporaryDirectory(prefix="freq_bench_store_") as store:
+        docs = load_table(spark, sf_dir, "documents")
+        toks = docs.select(
+            "doc_id", F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok")
+        ).filter(F.col("tok") != "")
+        writer = freq_maintenance_writer(
+            store, key_col="tok", capacity=capacity, query_id="bench"
+        )
+        out.update(_fold_epochs(writer, toks, "doc_id", n_epochs)[0])
+        cand = current_candidates(spark, store, "tok")
+        out["standing_summary_rows"] = cand.count()
+        top = _timed(
+            lambda: toks.join(F.broadcast(cand.select("tok")), "tok", "left_semi")
+            .groupBy("tok")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .orderBy(F.col("n").desc(), "tok")
+            .limit(25)
+            .count()
+        )
+        out["serve_recount_sec"] = top.median
+        out["serve_topk_rows"] = top.result
+    return out
+
+
+def _overlap_maintenance_bench(spark, sf_dir: str, *, n_epochs: int = 4) -> dict:
+    """Streaming winnowing-overlap store throughput (round-10 verdict item
+    6): fold the documents corpus into the standing fingerprint store in
+    ``n_epochs`` deterministic slices and price seconds per trigger epoch,
+    docs/s folded, the standing store size, and the flag-read (query-path)
+    latency — the numbers behind the 'ingest-time plagiarism monitor'
+    claim, measured the way freq_maintenance_bench priced the MG store."""
+    import tempfile
+
+    from data_ingestion_bra_spark.sinks import txlog
+    from data_ingestion_bra_spark.sources.tables import load_table
+    from data_ingestion_bra_spark.streaming.overlap_maintenance import (
+        overlap_maintenance_writer,
+    )
+
+    out: dict = {"n_epochs": n_epochs, "sf": sf_dir}
+    with tempfile.TemporaryDirectory(prefix="overlap_bench_") as root:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        n_docs = docs.count()
+        writer = overlap_maintenance_writer(
+            f"{root}/store", f"{root}/flags", query_id="bench-overlap"
+        )
+        rec, fold_sec = _fold_epochs(writer, docs, "doc_id", n_epochs)
+        out.update(rec)
+        out["docs_per_sec_folded"] = round(n_docs / max(fold_sec, 1e-9), 1)
+        out["store_rows"] = txlog.read_snapshot(spark, f"{root}/store").count()
+        flags = _timed(lambda: txlog.read_snapshot(spark, f"{root}/flags").count())
+        out["flag_rows"] = flags.result
+        out["flag_read_sec"] = flags.median
+    return out
+
+
+def _cardinality_maintenance_bench(
+    spark, sf_dir: str, *, n_epochs: int = 5, k: int = 64
+) -> dict:
+    """Streaming KMV cardinality store throughput (round-10 verdict item
+    6): fold per-epoch bottom-k summaries of the events stream into the
+    standing per-event-type store; price seconds per trigger epoch, the
+    standing summary size (k rows per group forever), and the serve-path
+    estimate latency. The sibling Count-Min store (point-query frequency
+    member of the mergeable family) is priced the same way under ``cms``."""
+    import tempfile
+
+    from data_ingestion_bra_spark.sinks import txlog
+    from data_ingestion_bra_spark.sources.tables import load_table
+    from data_ingestion_bra_spark.streaming.cardinality_maintenance import (
+        cardinality_maintenance_writer,
+        current_estimates,
+        current_summary,
+    )
+    from data_ingestion_bra_spark.streaming.cms_maintenance import (
+        cms_maintenance_writer,
+        current_estimates as cms_current_estimates,
+        current_sketch,
+    )
+
+    out: dict = {"n_epochs": n_epochs, "k": k, "sf": sf_dir}
+    events = load_table(spark, sf_dir, "events")
+    with tempfile.TemporaryDirectory(prefix="kmv_bench_store_") as store:
+        kmv_rows = events.select("event_type", "user_id")
+        n_rows = kmv_rows.count()
+        writer = cardinality_maintenance_writer(
+            store, group_cols=["event_type"], key_col="user_id", k=k,
+            query_id="bench-kmv",
+        )
+        rec, fold_sec = _fold_epochs(writer, kmv_rows, "user_id", n_epochs)
+        out.update(rec)
+        out["rows_per_sec_folded"] = round(n_rows / max(fold_sec, 1e-9), 1)
+        out["standing_summary_rows"] = current_summary(
+            spark, store, ["event_type"]
+        ).count()
+        out["store_rows_all_epochs"] = txlog.read_snapshot(spark, store).count()
+        est = _timed(lambda: current_estimates(spark, store, ["event_type"], k).collect())
+        out["serve_estimate_sec"] = est.median
+        out["n_groups"] = len(est.result)
+    with tempfile.TemporaryDirectory(prefix="cms_bench_store_") as store:
+        users = events.select("user_id")
+        writer = cms_maintenance_writer(
+            store, key_col="user_id", depth=3, width=1024, query_id="bench-cms"
+        )
+        cms, _ = _fold_epochs(writer, users, "user_id", n_epochs)
+        cms["standing_sketch_rows"] = current_sketch(spark, store).count()
+        keys = users.distinct().limit(32)
+        probe = _timed(
+            lambda: cms_current_estimates(
+                spark, store, keys, "user_id", depth=3, width=1024
+            ).count()
+        )
+        cms["n_probed"] = probe.result
+        cms["serve_probe_sec"] = probe.median
+        out["cms"] = cms
+    return out
+
+
+def _pagerank_scale_bench(
+    spark, *, n_nodes: int = 1_000_000, n_edges: int = 10_000_000, n_iter: int = 10
+) -> dict:
+    """Domain-scale PageRank evidence (round-7 verdict item 7): the catalog
+    entry runs on a 50-node fixture, so the 'ranks live per registered
+    domain' claim carried no number. This synthesizes a deterministic
+    ~1M-node / 10M-edge hash graph (node ids = xxhash64 of a range — no RNG,
+    reproducible bit-for-bit) and times the exact-integer pagerank at
+    ``n_iter`` rounds, with the per-iteration rate reported. The iteration
+    loop localCheckpoints every 5 rounds, so this also exercises the bounded
+    plan-depth path."""
+    from pyspark.sql import functions as FF
+
+    from data_ingestion_bra_spark.operators.graph import pagerank
+
+    edges = spark.range(n_edges).select(
+        FF.pmod(FF.xxhash64("id", FF.lit(1)), FF.lit(n_nodes)).alias("s"),
+        FF.pmod(FF.xxhash64("id", FF.lit(2)), FF.lit(n_nodes)).alias("t"),
+    )
+    t = _timed(lambda: pagerank(edges, n_iter=n_iter))  # eager: final localCheckpoint
+    stats = t.result.agg(
+        FF.count("*").alias("n"), FF.sum("rank_e9").alias("mass_e9")
+    ).collect()[0]
+    return {
+        "n_nodes": int(stats["n"]),
+        "n_edges_requested": n_edges,
+        "n_iter": n_iter,
+        "total_sec": t.median,
+        "sec_per_iter": round(t.samples[0] / n_iter, 3),
+        # retained probability mass (×1e9): dangling drop + floor division
+        # both shed mass, so this documents how much the default form keeps
+        "mass_e9": int(stats["mass_e9"]),
+    }
+
+
+def _exact_join_bench(spark, sf_dir: str) -> dict:
+    """The exactness premium of the prefix-filter similarity join, measured
+    (round 12): dedup_jaccard_prefix_filter guarantees every J >= 0.5 pair
+    (recall-complete by theorem) while the MinHash-LSH tier is
+    probabilistic — this section prices both at the same threshold and
+    MEASURES the LSH recall against the prefix filter's ground truth, so
+    the "LSH for bulk, prefix filter for the guarantee pass" routing
+    advice in the operator docstring carries numbers: candidate volumes,
+    verified-pair counts, measured LSH recall (e4), and median-of-2
+    seconds per path."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    from data_ingestion_bra_spark.operators import dedup
+    from data_ingestion_bra_spark.sources.tables import load_table
+
+    d = load_table(spark, sf_dir, "documents")
+    sh = dedup.doc_shingles(d, "doc_id", "text", n=3).persist()
+    n_docs = d.count()
+    sh.count()
+
+    def lsh_pairs():
+        sig = dedup.minhash_signatures(
+            dedup.doc_shingles(d, "doc_id", "text", n=3, distinct=False),
+            num_hashes=16,
+        )
+        return dedup.lsh_pair_estimates(sig, band_size=4, num_hashes=16)
+
+    prefix = _timed(
+        lambda: dedup.jaccard_prefix_filter_pairs(sh, tau_e4=5000).count(), passes=2
+    )
+    lsh = _timed(
+        lambda: dedup.jaccard_pairs(
+            sh, min_jaccard=0.5, pair_filter=lsh_pairs().select("doc_a", "doc_b")
+        ).count(),
+        passes=2,
+    )
+    n_exact, n_lsh = prefix.result, lsh.result
+    out: dict = {
+        "n_docs": n_docs,
+        "n_pairs_exact": n_exact,
+        "n_pairs_lsh_verified": n_lsh,
+        "lsh_recall_e4": None if not n_exact else n_lsh * 10000 // n_exact,
+        "prefix_filter_sec": prefix.median,
+        "lsh_sec": lsh.median,
+    }
+    # candidate volumes, once (the cost drivers behind the seconds)
+    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
+    sizes = sh.groupBy("doc").agg(F.count("*").alias("sz"))
+    ordered = (
+        sh.join(dfreq, "shingle")
+        .join(sizes, "doc")
+        .withColumn(
+            "pos",
+            F.row_number().over(
+                Window.partitionBy("doc").orderBy(F.asc("df"), F.asc("shingle"))
+            ),
+        )
+    )
+    prefix_rows = ordered.filter(F.expr("pos <= sz - (sz * 5000 + 9999) div 10000 + 1"))
+    out["n_cand_prefix"] = (
+        prefix_rows.alias("a")
+        .join(prefix_rows.alias("b"), "shingle")
+        .filter(F.col("a.doc") < F.col("b.doc"))
+        .select(F.col("a.doc"), F.col("b.doc"))
+        .distinct()
+        .count()
+    )
+    out["n_cand_lsh"] = lsh_pairs().count()
+    sh.unpersist()
+    return out
+
+
+def _linkage_bench(spark, points: list[tuple[str, str]]) -> dict:
+    """Fellegi-Sunter linkage priced at scale (round-11 verdict item 7):
+    candidate-pair volume under PROGRESSIVELY FINER blocking keys plus
+    end-to-end scoring throughput. The point being proven: blocking on
+    (segment, balance-bucket) has a FIXED number of cells, so the pair
+    relation grows quadratically with corpus size inside each cell — the
+    cure is exactly the module contract ("add keys until the largest cell
+    fits"), here a finer bucket width. Pair counts per blocking scheme are
+    computed from cell-count PRODUCTS (a tiny groupBy join — no pair
+    materialization), and the scoring leg runs on the finest width whose
+    estimated relation stays under the cap, so the measured throughput is
+    the operator, not an exploding join."""
+    from pyspark.sql import functions as F
+
+    from data_ingestion_bra_spark.operators.linkage import fellegi_sunter_score
+    from data_ingestion_bra_spark.sources.tables import load_table
+
+    # Bound the SCORED relation: the sf1 width-10000 blocking yields ~40M
+    # pairs and scores at ~350k pairs/s (113 s measured) — fine evidence,
+    # wrong cost for a per-round section. 8M keeps the scored leg ~15-25 s
+    # at sf1 (width 1000) while the per-width pair COUNTS still document
+    # the quadratic blow-up of the coarse blocking.
+    pair_cap = 8_000_000
+    out: dict = {}
+    for label, d in points:
+        c = load_table(spark, d, "customer")
+        n_rows = c.count()
+        # side b perturbs balance, segment, name and nation so the
+        # comparators see near-matches
+        cents_a = "CAST(ROUND(c_acctbal * 100) AS BIGINT)"
+        cents_b = f"({cents_a} + (c_custkey % 7) * 100)"
+        seg_a = "c_mktsegment"
+        seg_b = "CASE WHEN c_custkey % 13 = 0 THEN reverse(c_mktsegment) ELSE c_mktsegment END"
+
+        def blocking_key(seg: str, cents: str, width: int) -> list:
+            return [F.expr(seg).alias("blk_seg"), F.expr(f"{cents} div {width}").alias("bucket")]
+
+        per_width: dict = {}
+        chosen = None
+        for width in (10_000, 1_000, 100):
+            a_cells, b_cells = (
+                c.select(*blocking_key(seg, cents, width))
+                .groupBy("blk_seg", "bucket")
+                .agg(F.count(F.lit(1)).alias(n))
+                for seg, cents, n in ((seg_a, cents_a, "na"), (seg_b, cents_b, "nb"))
+            )
+            stats = (
+                a_cells.join(b_cells, ["blk_seg", "bucket"])
+                .agg(
+                    F.sum(F.col("na") * F.col("nb")).alias("pairs"),
+                    F.max(F.col("na") * F.col("nb")).alias("max_cell"),
+                    F.count(F.lit(1)).alias("cells"),
+                )
+                .collect()[0]
+            )
+            n_pairs = int(stats["pairs"] or 0)
+            per_width[f"width_{width}"] = {
+                "n_blocking_cells": int(stats["cells"]),
+                "n_candidate_pairs": n_pairs,
+                "max_cell_pairs": int(stats["max_cell"] or 0),
+            }
+            if chosen is None and n_pairs <= pair_cap:
+                chosen = width
+        if chosen is None:
+            chosen = 100
+        # end-to-end scoring leg on the chosen blocking width: blocked
+        # equi-join -> comparators -> verdict counts, one job per pass
+        a = c.select(
+            F.col("c_custkey").alias("a_key"),
+            F.col("c_name").alias("name_a"),
+            F.expr("substring(c_name, length(c_name) - 2, 3)").alias("suffix_a"),
+            F.expr(cents_a).alias("cents_a"),
+            F.col("c_nationkey").alias("nation_a"),
+            *blocking_key(seg_a, cents_a, chosen),
+        )
+        b = c.select(
+            F.col("c_custkey").alias("b_key"),
+            F.expr(
+                "CASE WHEN c_custkey % 5 = 0"
+                " THEN replace(c_name, 'Customer', 'Custmer') ELSE c_name END"
+            ).alias("name_b"),
+            F.expr("substring(c_name, length(c_name) - 2, 3)").alias("suffix_b"),
+            F.expr(cents_b).alias("cents_b"),
+            F.expr(
+                "CASE WHEN c_custkey % 11 = 0 THEN (c_nationkey + 1) % 25"
+                " ELSE c_nationkey END"
+            ).alias("nation_b"),
+            *blocking_key(seg_b, cents_b, chosen),
+        )
+        comparators = [
+            ("name", F.expr("levenshtein(name_a, name_b) <= 1"), 320, -160),
+            ("suffix", F.col("suffix_a") == F.col("suffix_b"), 300, -100),
+            ("acctbal", F.expr("abs(cents_a - cents_b) <= 700"), 250, -180),
+            ("nation", F.col("nation_a") == F.col("nation_b"), 120, -220),
+        ]
+
+        def score(a=a, b=b, comparators=comparators):
+            scored = fellegi_sunter_score(
+                a.join(b, ["blk_seg", "bucket"]),
+                comparators,
+                match_threshold_e2=600,
+                possible_threshold_e2=150,
+            )
+            return scored.agg(
+                F.count(F.lit(1)).alias("n_pairs"),
+                F.sum((F.col("verdict") == "match").cast("bigint")).alias("n_match"),
+                F.sum((F.col("verdict") == "possible").cast("bigint")).alias(
+                    "n_possible"
+                ),
+            ).collect()[0]
+
+        t = _timed(score, passes=3 if label == "sf1" else 1)
+        counts = t.result
+        n_scored = int(counts["n_pairs"])
+        out[label] = {
+            "n_rows_per_side": n_rows,
+            "blocking": per_width,
+            "scored_width": chosen,
+            "scored_pairs": n_scored,
+            "scored_sec": t.median,
+            "scored_sec_spread": t.spread,
+            "pairs_per_sec": int(n_scored / t.median) if t.median > 0 else None,
+            "n_match": int(counts["n_match"] or 0),
+            "n_possible": int(counts["n_possible"] or 0),
+        }
+    return out
+
+
+def _skipping_bench(spark, sf_dir: str) -> dict:
+    """Measured payoff of log-side data skipping + OPTIMIZE ZORDER: one
+    txlog table of orders keys, version 0 = random 32-file layout,
+    version 1 = the SAME rows Z-ordered by (o_custkey, o_orderkey) — so
+    time travel compares the two layouts on identical data. For a ~5%
+    o_custkey range predicate, report files-scanned-after-prune (decided
+    from the LOG's harvested min/max, zero footer reads) and the filtered
+    count's wall clock for each layout. The random layout prunes nothing
+    (every file spans the key domain); the Z-ordered layout's tight
+    per-file rectangles are what make `read_snapshot(prune=...)` skip —
+    at 100 TB this ratio is the fraction of the corpus a selective query
+    never reads."""
+    from pyspark.sql import functions as F
+
+    from data_ingestion_bra_spark.sinks import txlog
+    from data_ingestion_bra_spark.sources.tables import load_table
+
+    t = str(_DATA / "skipping_bench" / Path(sf_dir).name)
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    if txlog.committed_version(t, "skip-v0") is None:
+        txlog.commit_append(
+            orders.repartition(32), t, idempotency_key="skip-v0"
+        )
+    txlog.compact(
+        spark,
+        t,
+        n_files=32,
+        zorder_by=("o_custkey", "o_orderkey"),
+        idempotency_key="skip-v1",
+    )
+    st = txlog.table_stats(t)
+    ck_lo, ck_hi = st["columns"]["o_custkey"]
+    width = max(1, (ck_hi - ck_lo) // 20)
+    lo, hi = ck_lo + 10 * width, ck_lo + 11 * width
+    out: dict = {"predicate": {"col": "o_custkey", "lo": lo, "hi": hi}}
+    latest = txlog.snapshot(t).version
+    counts = {}
+    for label, ver in (("plain", 0), ("zorder", latest)):
+        entries = txlog.snapshot(t, ver).entries
+        pruned = [
+            e for e in entries if txlog._stats_overlap(e, "o_custkey", lo, hi)
+        ]
+        n = _timed(
+            lambda ver=ver: txlog.read_snapshot(
+                spark, t, version=ver, prune=("o_custkey", lo, hi)
+            )
+            .filter((F.col("o_custkey") >= lo) & (F.col("o_custkey") <= hi))
+            .count()
+        )
+        counts[label] = n.result
+        out[label] = {
+            "files_total": len(entries),
+            "files_scanned": len(pruned),
+            "rows": n.result,
+            "sec": n.median,
+        }
+    # identical data in both layouts by construction; state it in the record
+    out["counts_equal"] = counts["plain"] == counts["zorder"]
+    return out
+
+
+def _trainer_bench(spark, sf_dir: str) -> dict:
+    """In-engine trainer evidence (r8): wall clock for retraining each
+    committed model artifact over the headline-SF documents table —
+    distributed BPE (the iterative one: per-merge cost = a vocab-relation
+    pair groupBy + a 1-row argmax), NB langid (one counting groupBy), and
+    the bigram LM (two counting groupBys). Each trainer's output is
+    pytest-pinned bit-identical to its offline twin; this section prices
+    the 'retrain on the cluster' story."""
+    from data_ingestion_bra_spark.operators.bpe import train_bpe_distributed
+    from data_ingestion_bra_spark.operators.langid_nb import (
+        train_langid_nb_distributed,
+    )
+    from data_ingestion_bra_spark.operators.ngram_lm import (
+        train_ngram_lm_distributed,
+    )
+    from data_ingestion_bra_spark.sources.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    bpe = _timed(lambda: train_bpe_distributed(docs, n_merges=96))
+    nb = _timed(lambda: train_langid_nb_distributed(docs, lang_col="lang"))
+    lm = _timed(lambda: train_ngram_lm_distributed(docs))
+    # pruned retrain (r9): min_count/top_k bound the driver collect inside
+    # the aggregation — the row counts below are the PROOF the driver
+    # footprint is capped regardless of corpus vocabulary size (retained
+    # weights stay bit-identical; pruned words fall back to oov_lp)
+    # caps chosen BELOW the fixture's true table sizes so the bound
+    # provably binds in the recorded numbers (kept < full), not just in
+    # the API: the synthetic corpus has ~31 unigrams / ~931 bigrams
+    lmp = _timed(
+        lambda: train_ngram_lm_distributed(docs, min_count=2, top_k=24, top_k_bigrams=256)
+    )
+    return {
+        "corpus": sf_dir,
+        "n_docs": docs.count(),
+        "bpe_96_merges": {"sec": bpe.median, "n_merges": len(bpe.result)},
+        "langid_nb": {"sec": nb.median, "n_weights": len(nb.result["weights"])},
+        "ngram_lm": {"sec": lm.median, "n_uni": len(lm.result["uni"]), "n_bi": len(lm.result["bi"])},
+        "ngram_lm_pruned": {
+            "sec": lmp.median,
+            "n_uni": len(lmp.result["uni"]),
+            "n_bi": len(lmp.result["bi"]),
+            "full_vocab": lmp.result["pruning"]["full_vocab"],
+            "caps": {"min_count": 2, "top_k": 24, "top_k_bigrams": 256},
+        },
+    }
+
+
+def _acid_dml_bench(spark, sf_dir: str, *, passes: int = 3) -> dict:
+    """Row-level DML through the transaction log, timed end to end at the
+    headline SF: APPEND the orders table (multi-file), copy-on-write
+    DELETE of 1/16 of the keys, MERGE/upsert of another 1/16, OPTIMIZE
+    ZORDER over (o_orderkey, o_custkey), and a full change-data-feed
+    replay. DML mutates state, so warm medians need fresh tables, not
+    repeats: each op runs once on each of ``passes`` tables built from
+    scratch; median + [min, max, n] per op."""
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from data_ingestion_bra_spark.sinks import txlog
+    from data_ingestion_bra_spark.sources.tables import load_table
+
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
+    )
+    src = orders.filter(F.col("o_orderkey") % 16 == 5).withColumn(
+        "o_orderstatus", F.lit("U")
+    )
+    out: dict = {"sf": sf_dir, "orders_rows": orders.count(), "passes": passes}
+    with tempfile.TemporaryDirectory(prefix="acid_dml_bench_") as scratch:
+        tables = [(os.path.join(scratch, f"tbl{i}"),) for i in range(passes)]
+        for op, fn in (
+            ("append", lambda t: txlog.commit_append(orders.repartition(8), t)),
+            ("delete_1_16", lambda t: txlog.commit_delete(spark, t, "o_orderkey % 16 = 3")),
+            ("upsert_1_16", lambda t: txlog.commit_upsert(spark, t, src, key="o_orderkey")),
+            (
+                "optimize_zorder",
+                lambda t: txlog.compact(
+                    spark, t, zorder_by=("o_orderkey", "o_custkey"), n_files=8
+                ),
+            ),
+            ("cdf_replay", lambda t: txlog.read_changes(spark, t, 0).count()),
+        ):
+            t = _timed_each(fn, tables)
+            out[op + "_sec"] = t.median
+            out[op + "_spread"] = t.spread + [len(t.samples)]
+    return out
+
+
+def build_compact_line(payload: dict, *, limit: int = 1900) -> str:
+    """The FINAL stdout line: compact sf0.1-headline-only JSON guaranteed
+    under the driver's 2000-char tail window (round 4's full-payload line
+    overflowed it and the official artifact recorded `parsed: null`).
+    Degrades in two steps if the headline set ever grows: drop the mode
+    string, then keep only the 15 slowest queries (flagged)."""
+    compact = {
+        "metric": payload.get("metric", "headline_queries_total_runtime_warm"),
+        "value": payload.get("value"),
+        "unit": "sec",
+        "queries": payload.get("queries", {}),
+        "sf": payload.get("sf"),
+        "mode": "median-of-3 warm; spreads + sf1/sf10/skew/streaming in BENCH_FULL.json",
+    }
+    # Emit-on-partial: a section failure must be VISIBLE in the official
+    # artifact, not just in BENCH_FULL.json — keep only the section names so
+    # the compact line stays under the tail window.
+    if payload.get("errors"):
+        compact["errors"] = sorted({e.split(":", 1)[0] for e in payload["errors"]})
+    if payload.get("sections_skipped"):
+        compact["skipped"] = sorted(
+            {s.split(":", 1)[0] for s in payload["sections_skipped"]}
+        )
+    line = json.dumps(compact)
+    if len(line) > limit:
+        compact.pop("mode", None)
+        line = json.dumps(compact)
+    if len(line) > limit:
+        compact["queries"] = {
+            k: v
+            for k, v in sorted(
+                compact["queries"].items(), key=lambda kv: -kv[1]
+            )[:15]
+        }
+        compact["queries_truncated"] = True
+        line = json.dumps(compact)
+    return line
+
+
+#: Process start, for the total wall-clock budget. Module import time is
+#: within a second of exec() for a script, and using it means session
+#: startup counts against the budget (it spends real driver-window time).
+_BUDGET_START = time.monotonic()
+
+
+def total_budget_sec() -> float:
+    """Total wall-clock budget for the WHOLE bench run. The driver runs
+    bench.py under a timeout it never advertises; rounds 4/6/7 each died a
+    different death (stdout overflow, OOM, SIGTERM on timeout) because the
+    default section list assumed unbounded time. The default is deliberately
+    conservative — a full-evidence local run sets
+    SPARK_GRAFT_TOTAL_BUDGET_SEC=7200 explicitly."""
+    return float(os.environ.get("SPARK_GRAFT_TOTAL_BUDGET_SEC", "1500"))
+
+
+def budget_remaining() -> float:
+    return total_budget_sec() - (time.monotonic() - _BUDGET_START)
+
+
+def install_signal_handlers() -> None:
+    """SIGTERM/SIGINT → SystemExit, so ``main``'s ``finally`` emit actually
+    runs when the driver's ``timeout`` kills the run. Stock CPython runs NO
+    cleanup on SIGTERM — round 7's emit-on-partial ``finally`` was dead code
+    against the driver's kill (BENCH_r07: rc 124, parsed: null) until this
+    handler converts the signal into a normal exception unwind."""
+    import signal
+
+    def _die(signum, frame):  # noqa: ARG001 - signal handler signature
+        raise SystemExit(128 + signum)
+
+    for sig in (signal.SIGTERM, signal.SIGINT):
+        try:
+            signal.signal(sig, _die)
+        except ValueError:  # pragma: no cover - not the main thread
+            pass
+
+
+def _record_error(payload: dict, where: str, exc: Exception) -> None:
+    msg = f"{where}: {type(exc).__name__}: {exc}"
+    payload.setdefault("errors", []).append(msg[:500])
+    print(f"bench section failed ({msg[:2000]})", file=sys.stderr)
+
+
+def _run_section(payload: dict, name: str, fn, spark=None) -> None:
+    """Run one bench section; a failure records an error instead of killing
+    the run. Round 6's official artifact died ``parsed: null`` because the
+    sf10 scaling loop and the headline ``_time_queries`` calls were the only
+    sections NOT guarded — one executor OOM zeroed the whole round's bench
+    record. Every section now goes through this guard, and the artifact is
+    re-emitted after EVERY section (not only at exit): the driver parses the
+    LAST stdout line, so even an un-trappable SIGKILL loses at most the
+    in-flight section.
+
+    ``SPARK_GRAFT_FAIL_SECTION=<name>`` injects a deterministic failure at
+    the top of the named section — the pytest fault-injection hook that
+    proves the compact line still emits when a section dies.
+    """
+    if os.environ.get("SPARK_GRAFT_FAIL_SECTION") == name:
+        payload.setdefault("errors", []).append(
+            f"{name}: RuntimeError: injected failure (SPARK_GRAFT_FAIL_SECTION)"
+        )
+        print(f"bench section {name}: injected failure", file=sys.stderr)
+        _emit(payload)
+        return
+    if os.environ.get("SPARK_GRAFT_SLEEP_SECTION") == name:
+        # test hook: park here so the signal-survival pytest can SIGTERM the
+        # process deterministically mid-section (after >=1 emitted line)
+        time.sleep(600)
+    if spark is not None:
+        try:  # label every Spark job with its bench section (the round-7
+            # 20 MB-task-closure hunt had to be done by stage-number
+            # archaeology; this makes the next one a log grep)
+            spark.sparkContext.setJobDescription(f"bench:{name}")
+        except Exception:  # pragma: no cover - labeling must never kill
+            pass
+    # 1-min load average before/after every section: this box shows heavy
+    # noisy-neighbor contention some days (round-10: headline samples
+    # spanned 10.8-45.2 s at load-avg ~3 with no local process), and the
+    # artifact itself must carry the evidence that distinguishes ambient
+    # inflation from a plan regression.
+    try:
+        load_before = round(os.getloadavg()[0], 2)
+    except OSError:  # pragma: no cover - platform without getloadavg
+        load_before = None
+    t0 = time.monotonic()
+    try:
+        fn()
+    except Exception as exc:  # noqa: BLE001 - bench must still emit
+        _record_error(payload, name, exc)
+    payload.setdefault("section_seconds", {})[name] = round(time.monotonic() - t0, 1)
+    try:
+        load_after = round(os.getloadavg()[0], 2)
+    except OSError:  # pragma: no cover
+        load_after = None
+    if load_before is not None or load_after is not None:
+        payload.setdefault("ambient", {}).setdefault("loadavg_by_section", {})[
+            name
+        ] = [load_before, load_after]
+    _emit(payload)
+
+
+def _section_hygiene(spark) -> None:
+    """Drop cached relations between sections so one section's persists
+    cannot push a later section over the heap (the round-6 OOM rode an
+    8.2M-row persisted shingle set left over from the crossover section)."""
+    try:
+        spark.catalog.clearCache()
+    except Exception:  # pragma: no cover - hygiene must never kill the run
+        pass
+
+
+def _fits(prior_sec: float | None) -> bool:
+    """The measured gate: work that took ``prior_sec`` in the previous run
+    (None = never measured) runs while the budget left covers it."""
+    return (prior_sec or 0.0) <= budget_remaining()
+
+
+class _Run:
+    """What the sections read: the session, the catalog, the headline SF,
+    the payload, the previous run's payload (the measured gate's figures)
+    and the 10x/100x replicas of sf0.1, resolved (built on first use) only
+    when a section that needs one runs."""
+
+    def __init__(self, spark, sf_dir: str, payload: dict, prior: dict):
+        self.spark, self.sf_dir, self.payload, self.prior = spark, sf_dir, payload, prior
+        self.queries = get_queries()
+
+    @functools.cached_property
+    def sf1(self) -> str:
+        # 10x: shuffle/AQE behavior at real shuffle sizes
+        return self._replica("sf1", 10)
+
+    @functools.cached_property
+    def sf10(self) -> str:
+        # 100x (~1.7 GB parquet, 60M-row lineitem, 500k docs in bounded
+        # near-dup families): 'the plan would hold at 100x' as a number
+        return self._replica("sf10", 100)
+
+    @staticmethod
+    def _replica(name: str, factor: int) -> str:
+        d = _replica_dir(name, factor)
+        if d is None:  # the build error is on stderr
+            raise RuntimeError(f"{name} replica unavailable")
+        return d
+
+    def replicas(self) -> list[tuple[str, str]]:
+        return [("sf1", self.sf1), ("sf10", self.sf10)]
+
+    def materialize(self, name: str, sf_dir: str) -> None:
+        _materialize(self.queries[name](self.spark, sf_dir))
+
+
+def _headline(r: _Run) -> dict:
+    # Warm the JVM/codegen and the Parquet reader path once so query
+    # timings measure the plans, not session startup.
+    r.spark.range(1).count()
+    r.spark.read.parquet(os.path.join(r.sf_dir, "region.parquet")).count()
+    timings, spread, pass_totals = _time_queries(r.spark, r.queries, r.sf_dir)
+    r.payload.setdefault("ambient", {})["headline_pass_totals"] = pass_totals
+    return {
+        "queries": timings,
+        "queries_spread": spread,
+        "value": round(sum(timings.values()), 3),
+    }
+
+
+def _extended(r: _Run) -> dict:
+    return {
+        "queries_extended": {
+            name: _timed(lambda: r.materialize(name, r.sf_dir)).median
+            for name in EXTENDED_QUERIES
+        }
+    }
+
+
+def _sf1_queries(r: _Run) -> dict:
+    timings, spread, pass_totals = _time_queries(r.spark, r.queries, r.sf1)
+    r.payload.setdefault("ambient", {})["sf1_pass_totals"] = pass_totals
+    return {
+        "queries_sf1": timings,
+        "queries_sf1_spread": spread,
+        "value_sf1": round(sum(timings.values()), 3),
+        "sf1": r.sf1,
+    }
+
+
+def _scale_probe(r: _Run, key: str, sf_dir: str, names: tuple[str, ...]) -> dict:
+    """Single-shot replica points for plan-sensitive rows. Each point is
+    gated on its figure in the previous run (an in-flight materialization
+    can't be truncated) and guarded, so a failure is a named error, not a
+    lost section."""
+    prior = r.prior.get(key, {})
+    probe: dict[str, float] = {}
+    for name in names:
+        if not _fits(prior.get(name)):
+            r.payload.setdefault("sections_skipped", []).append(f"{key}:{name}: budget")
+            continue
+        try:
+            probe[name] = _timed(lambda: r.materialize(name, sf_dir)).median
+        except Exception as exc:  # noqa: BLE001 - keep the section alive
+            _record_error(r.payload, f"{key}:{name}", exc)
+    return {key: probe}
+
+
+def _contamination_sf10(r: _Run) -> dict:
+    # Stress and crossover are one section: both need the sf10 replica and
+    # price the same operator family.
+    r.payload["contamination_stress"] = _contamination_stress(r.spark, r.sf10)
+    _section_hygiene(r.spark)
+    return {"contamination_crossover": _contamination_crossover(r.spark, r.sf10)}
+
+
+def _bitext_serve(r: _Run) -> dict:
+    points = [(Path(r.sf_dir).name, r.sf_dir), ("sf1", r.sf1)]
+    prior_points = r.prior.get("bitext_serve_bench", {}).get("points", [])
+    return {"bitext_serve_bench": _bitext_serve_bench(r.spark, r.queries, points, prior_points)}
+
+
+def _sf10_scaling(r: _Run) -> dict:
+    """FULL-corpus banded LLM-tier paths (no doc_id caps) at sf0.1 / 10x /
+    100x, so per-query scaling factors are measured, not argued. A query's
+    3 samples run consecutively per scale point, so samples 2-3 are warm
+    and the median is the plan, not the page cache (interleaving 14 other
+    sf10 inputs between samples once manufactured a ~78 s phantom simhash
+    regression). A point whose 3 samples took longer in the previous run
+    than the budget left is named in ``sf10_truncated``; a failed point is
+    a named error."""
+    prior = r.prior.get("queries_scaling_full_corpus", {})
+    scaling: dict = {n: {} for n in SF10_QUERIES}
+    spread: dict = {n: {} for n in SF10_QUERIES}
+    truncated: list[str] = []
+    for name in SF10_QUERIES:
+        for label, d in [("sf0.1", r.sf_dir), *r.replicas()]:
+            key = f"{name}@{label}"
+            if not _fits(3 * prior.get(name, {}).get(label, 0.0)):
+                truncated.append(key)
+                continue
+            try:
+                t = _timed(lambda: r.materialize(name, d), passes=3)
+            except Exception as exc:  # noqa: BLE001 - keep the section alive
+                _record_error(r.payload, f"sf10:{key}", exc)
+                continue
+            scaling[name][label] = t.median
+            spread[name][label] = t.spread + [len(t.samples)]
+    out = {
+        "queries_scaling_full_corpus": scaling,
+        "queries_scaling_spread": spread,
+        "value_sf10": round(sum(v.get("sf10", 0.0) for v in scaling.values()), 3),
+        "sf10": r.sf10,
+        "sf10_meter": "per-query grouped: 3 consecutive samples per (query, scale) "
+        "point — committed medians are warm numbers",
+    }
+    if truncated:
+        out["sf10_truncated"] = truncated
+    return out
+
+
+#: The run, in order: (name, fn). ``fn(run)`` returns the payload keys it
+#: measured. Order = evidence value per second: the headline artifact and
+#: the sf0.1/sf1 trend lines first, the operator benches next, the
+#: sf10-heavy and self-bounding sections last.
+SECTIONS = [
+    ("headline", _headline),
+    ("extended", _extended),
+    ("sf1", _sf1_queries),
+    ("scale_probe", lambda r: _scale_probe(r, "scale_probe_sf1", r.sf1, SF1_PROBES)),
+    ("scale_probe_sf10", lambda r: _scale_probe(r, "scale_probe_sf10", r.sf10, SF10_PROBES)),
+    ("acid_dml", lambda r: {"acid_dml_bench": _acid_dml_bench(r.spark, r.sf_dir)}),
+    ("skipping", lambda r: {"skipping_bench": _skipping_bench(r.spark, r.sf_dir)}),
+    ("streaming", lambda r: {"streaming_bench": _streaming_bench(r.spark, r.sf_dir)}),
+    ("skew", lambda r: {"skew_bench": _skew_bench(r.spark)}),
+    ("ivf_build", lambda r: {"ivf_build_bench": _ivf_build_bench(r.spark, r.replicas())}),
+    (
+        "semdedup_scale",
+        lambda r: {"semdedup_scale_bench": _semdedup_scale_bench(r.spark, r.replicas())},
+    ),
+    ("contamination_sf10", _contamination_sf10),
+    (
+        "freq_maintenance",
+        lambda r: {"freq_maintenance_bench": _freq_maintenance_bench(r.spark, r.sf_dir)},
+    ),
+    (
+        "overlap_maintenance",
+        lambda r: {"overlap_maintenance_bench": _overlap_maintenance_bench(r.spark, r.sf_dir)},
+    ),
+    (
+        "cardinality_maintenance",
+        lambda r: {
+            "cardinality_maintenance_bench": _cardinality_maintenance_bench(r.spark, r.sf_dir)
+        },
+    ),
+    (
+        "incremental_dedup",
+        lambda r: {"incremental_dedup_bench": _incremental_dedup_bench(r.spark, r.sf1)},
+    ),
+    ("linkage_bench", lambda r: {"linkage_bench": _linkage_bench(r.spark, r.replicas())}),
+    ("trainers", lambda r: {"trainer_bench": _trainer_bench(r.spark, r.sf_dir)}),
+    ("pagerank_scale", lambda r: {"pagerank_scale_bench": _pagerank_scale_bench(r.spark)}),
+    ("ivfpq_serve", lambda r: {"ivfpq_serve_bench": _ivfpq_serve_bench(r.spark, r.replicas())}),
+    ("bitext_serve", _bitext_serve),
+    ("exact_join_bench", lambda r: {"exact_join_bench": _exact_join_bench(r.spark, r.sf_dir)}),
+    ("sf10_scaling", _sf10_scaling),
+]
+
+
+def _selected(sections: list) -> list:
+    """The sections named in SPARK_GRAFT_SECTIONS (comma list; unset or
+    empty = all), in table order. An unknown name is an error, not a silent
+    no-op."""
+    want = {s.strip() for s in os.environ.get("SPARK_GRAFT_SECTIONS", "").split(",")}
+    want.discard("")
+    if not want:
+        return sections
+    unknown = want - {name for name, _ in sections}
+    if unknown:
+        raise ValueError(f"SPARK_GRAFT_SECTIONS: unknown section(s) {sorted(unknown)}")
+    return [(name, fn) for name, fn in sections if name in want]
+
+
+def _run_sections(payload: dict, sections: list, prior_seconds: dict, run=None) -> None:
+    """Run ``sections`` in order through the ``_run_section`` guard. A
+    section whose ``prior_seconds`` exceed the budget left is named in
+    ``sections_skipped`` instead; a never-measured one runs while any
+    budget is left. A skipped section has no seconds in this run's payload,
+    so the next run measures it afresh."""
+    spark = run.spark if run is not None else None
+    for name, fn in sections:
+        prior = prior_seconds.get(name)
+        if not _fits(prior):
+            payload.setdefault("sections_skipped", []).append(
+                f"{name}: budget ({prior or 0:.0f}s last run, "
+                f"{budget_remaining():.0f}s of {total_budget_sec():.0f}s left)"
+            )
+            continue
+        _run_section(payload, name, lambda fn=fn: payload.update(fn(run)), spark)
+        if spark is not None:
+            _section_hygiene(spark)
+
+
+def _prior_payload() -> dict:
+    """The previous run's BENCH_FULL.json, which this run overwrites: its
+    ``section_seconds`` (and per-point figures) are the gate's estimates."""
+    try:
+        return json.loads(_FULL_PATH.read_text())
+    except (OSError, ValueError):
+        return {}
+
+
 def main() -> None:
     """Emit-on-partial entry, hardened three ways after rounds 4/6/7 each
     lost the official artifact to a different death:
@@ -1864,9 +1952,9 @@ def main() -> None:
     - per-section emit (``_run_section``): the compact line re-prints after
       EVERY completed section; the driver reads the LAST stdout line, so
       even SIGKILL loses at most one section.
-    - total wall-clock budget (``total_budget_sec``): the default section
-      list now FITS a conservative window; overflow sections degrade to
-      ``sections_skipped`` entries instead of a dead artifact.
+    - total wall-clock budget (``total_budget_sec``): a section that took
+      longer in the previous run than the budget left is named in
+      ``sections_skipped`` instead of overrunning the window.
     """
     install_signal_handlers()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -1880,8 +1968,11 @@ def main() -> None:
         "materialization": "noop-write (all output columns computed)",
         "index_cache": "ivf centroids+lists AND pq codebook+codes persisted across runs (.ivf_cache)",
     }
+    prior = _prior_payload()
     try:
-        _run_all_sections(payload, sf_dir)
+        sections = _selected(SECTIONS)
+        run = _Run(get_spark("bench"), sf_dir, payload, prior)
+        _run_sections(payload, sections, prior.get("section_seconds", {}), run)
     except BaseException as exc:  # noqa: BLE001 - record, emit (finally), re-raise
         payload.setdefault("errors", []).append(
             f"fatal: {type(exc).__name__}: {exc}"[:500]
@@ -1889,537 +1980,6 @@ def main() -> None:
         raise
     finally:
         _emit(payload)
-
-
-def _run_all_sections(payload: dict, sf_dir: str) -> None:
-    spark = get_spark("bench")
-    tune_session(spark)
-    queries = get_queries()
-
-    def headline() -> None:
-        # Warm the JVM/codegen and the Parquet reader path once so query
-        # timings measure the plans, not session startup.
-        spark.range(1).count()
-        spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
-        timings, spread, pass_totals = _time_queries(spark, queries, sf_dir)
-        payload["queries"] = timings
-        payload["queries_spread"] = spread
-        payload["value"] = round(sum(timings.values()), 3)
-        payload.setdefault("ambient", {})["headline_pass_totals"] = pass_totals
-
-    def extended() -> None:
-        ext: dict[str, float] = {}
-        for name in EXTENDED_QUERIES:
-            if name in queries:
-                t0 = time.perf_counter()
-                _materialize(queries[name](spark, sf_dir))
-                ext[name] = round(time.perf_counter() - t0, 3)
-        if ext:
-            payload["queries_extended"] = ext
-
-    # Replica resolution is budget-gated: a cold box would spend minutes
-    # BUILDING sf1/sf10 before any measurement — with a tight window the
-    # right call is to run the sf0.1 evidence and record why the scale
-    # points are absent. (On this box the replicas persist across rounds,
-    # so resolution is an mtime check.)
-    def _gated_replica(resolve, marker: str, build_cost: float) -> str | None:
-        out = Path(__file__).resolve().parent / ".data" / marker / "_COMPLETE"
-        if not out.exists() and budget_remaining() < build_cost:
-            payload.setdefault("sections_skipped", []).append(
-                f"{marker}_replica: not built (needs ~{build_cost:.0f}s, "
-                f"{budget_remaining():.0f}s left)"
-            )
-            return None
-        return resolve()
-
-    sf1 = _gated_replica(_sf1_dir, "sf1", 180.0)
-    sf10 = _gated_replica(_sf10_dir, "sf10", 900.0)
-
-    def sf1_section() -> None:
-        t1, t1_spread, t1_pass_totals = _time_queries(spark, queries, sf1)
-        payload.setdefault("ambient", {})["sf1_pass_totals"] = t1_pass_totals
-        payload["queries_sf1"] = t1
-        payload["queries_sf1_spread"] = t1_spread
-        payload["value_sf1"] = round(sum(t1.values()), 3)
-        payload["sf1"] = sf1
-
-    # Cross-sf evidence that FITS the driver's budget (round-8 verdict
-    # item 8: the official r08 artifact skipped every scale section under
-    # the 1500 s window). One sf1 point each for the three I/O-sensitive
-    # rows — cheap enough to run early, per-point guarded so one failure
-    # degrades to a named error instead of killing the artifact.
-    def scale_probe() -> None:
-        probe: dict[str, float] = {}
-        for name in (
-            "dedup_simhash_full",
-            "dedup_contamination_auto",
-            "text_perplexity_lm",
-        ):
-            if name not in queries:
-                continue
-            t0 = time.perf_counter()
-            try:
-                _materialize(queries[name](spark, sf1))
-            except Exception as exc:  # noqa: BLE001 - keep the section alive
-                payload.setdefault("errors", []).append(
-                    f"scale_probe:{name}: {type(exc).__name__}: {exc}"[:500]
-                )
-                continue
-            probe[name] = round(time.perf_counter() - t0, 3)
-        payload["scale_probe_sf1"] = probe
-
-    # Round-9 verdict item 2: sf10 evidence INSIDE the driver's budget —
-    # mirror scale_probe's shape at the 100x replica. Single-shot points
-    # for plan-sensitive sf10 rows, ordered right after the sf1 probe so
-    # later sections can't starve it; an internal per-section budget caps
-    # the damage on a slow box (skips degrade loudly).
-    #
-    # Round-10 verdict item 1 (budget diet): the 343 s COLD single-shot of
-    # dedup_simhash_full was the whole eviction problem — it bought one
-    # number and cost eight sections. It is swapped for
-    # dedup_contamination_bloom (~13 s at sf10, the bloom build+probe scan
-    # class); simhash's sf10 trend stays covered by the sf10_scaling
-    # medians and the committed SCALE.md history.
-    def scale_probe_sf10() -> None:
-        budget = float(os.environ.get("SPARK_GRAFT_SF10_PROBE_BUDGET_SEC") or 300.0)
-        sec_start = time.perf_counter()
-        probe: dict[str, float] = {}
-        for name in (
-            "dedup_minhash_lsh",
-            "text_perplexity_lm",
-            "dedup_contamination_bloom",
-        ):
-            if name not in queries:
-                continue
-            # reserve room for the point about to START (an in-flight sf10
-            # materialization can't be truncated — round-10 overrun lesson)
-            if time.perf_counter() - sec_start + 100.0 > budget:
-                payload.setdefault("sections_skipped", []).append(
-                    f"scale_probe_sf10:{name}: probe budget ({budget:.0f}s)"
-                )
-                continue
-            t0 = time.perf_counter()
-            try:
-                _materialize(queries[name](spark, sf10))
-            except Exception as exc:  # noqa: BLE001 - keep the section alive
-                payload.setdefault("errors", []).append(
-                    f"scale_probe_sf10:{name}: {type(exc).__name__}: {exc}"[:500]
-                )
-                continue
-            probe[name] = round(time.perf_counter() - t0, 3)
-        payload["scale_probe_sf10"] = probe
-
-    # Third scale point: FULL-corpus banded LLM-tier paths (no doc_id caps)
-    # timed at sf0.1 / 10x / 100x so per-query scaling factors are measured,
-    # not argued. Budgeted + round-robin (all queries get sample 1 before any
-    # gets sample 2) so an overrun degrades SAMPLE COUNT, not coverage; and
-    # per-POINT guarded (round 6: one OOM'd materialization in this loop was
-    # enough to kill the whole official artifact).
-    def sf10_section() -> None:
-        # The internal budget may never exceed what is actually left in the
-        # global window (round-10 nit: the driver run overran its envelope
-        # by 59 s because internal floors outran the outer budget).
-        budget = float(
-            os.environ.get("SPARK_GRAFT_SF10_BUDGET_SEC")
-            or min(2600.0, max(60.0, budget_remaining() - 60.0))
-        )
-        sec_start = time.perf_counter()
-        truncated: list[str] = []
-        failed: set[str] = set()
-        scale_points = [("sf0.1", sf_dir)] + ([("sf1", sf1)] if sf1 else []) + [("sf10", sf10)]
-        raw: dict[str, dict[str, list[float]]] = {
-            n: {} for n in SF10_QUERIES if n in queries
-        }
-        # Conservative first-pass cost guesses per scale point; replaced by
-        # the measured sample once one exists. An IN-FLIGHT materialization
-        # can't be truncated, so the budget check must account for the cost
-        # of the point it is ABOUT to start, not just elapsed time — this
-        # is what keeps the section inside the global envelope (round-10
-        # overran by 59 s on exactly this).
-        cost_guess = {"sf0.1": 3.0, "sf1": 15.0, "sf10": 120.0}
-        # PER-QUERY GROUPING (round-11 verdict item 3): a query's 3 samples
-        # run CONSECUTIVELY per scale point, so samples 2-3 are warm and the
-        # committed median is the plan, not the page cache. The previous
-        # round-robin interleave ran 14 other sf10 inputs between a query's
-        # samples, evicting its input every time — it manufactured a ~78 s
-        # phantom simhash regression per full run that then needed an
-        # isolated re-measure to refute. Degradation mode changes with the
-        # ordering: an overrun now truncates trailing QUERIES (each emitted
-        # query carries a full warm median) instead of trailing samples —
-        # the partial-medians behavior the round-11 review asked for.
-        for name in raw:
-            for label, d in scale_points:
-                key = f"{name}@{label}"
-                for pass_i in range(3):
-                    if key in failed:
-                        break
-                    prior = raw[name].get(label)
-                    est_pt = prior[-1] if prior else cost_guess[label]
-                    if time.perf_counter() - sec_start + est_pt > budget:
-                        if not prior:
-                            truncated.append(key)
-                        break
-                    t0 = time.perf_counter()
-                    try:
-                        _materialize(queries[name](spark, d))
-                    except Exception as exc:  # noqa: BLE001 - keep the section alive
-                        failed.add(key)
-                        payload.setdefault("errors", []).append(
-                            f"sf10:{key}: {type(exc).__name__}: {exc}"[:500]
-                        )
-                        break
-                    raw[name].setdefault(label, []).append(
-                        time.perf_counter() - t0
-                    )
-        scaling = {
-            n: {lbl: round(_median(s), 3) for lbl, s in per.items()}
-            for n, per in raw.items()
-        }
-        payload["queries_scaling_full_corpus"] = scaling
-        payload["queries_scaling_spread"] = {
-            n: {
-                lbl: [round(min(s), 3), round(max(s), 3), len(s)]
-                for lbl, s in per.items()
-            }
-            for n, per in raw.items()
-        }
-        payload["value_sf10"] = round(
-            sum(v.get("sf10", 0.0) for v in scaling.values()), 3
-        )
-        payload["sf10"] = sf10
-        payload["sf10_meter"] = (
-            "per-query grouped: 3 consecutive samples per (query, scale) "
-            "point — committed medians are warm numbers (r11 item 3)"
-        )
-        if truncated:
-            payload["sf10_truncated"] = truncated
-
-    # Driver-window mode: the 1500 s window must fund at least one row for
-    # EVERY section (round-11 verdict item 4: ivf_build / semdedup_scale /
-    # contamination_sf10 had zero driver-run evidence for two rounds), so
-    # the expensive mid-sections drop their sf10 legs (named degradations)
-    # and sf10 query medians defer to the committed full run.
-    tight_window = total_budget_sec() <= 1800
-
-    def _degrade(section: str, what: str) -> None:
-        payload.setdefault("sections_degraded", []).append(f"{section}: {what}")
-
-    def incremental() -> None:
-        # Incremental dedup: a 10% batch vs the standing corpus through the
-        # persisted signature store, against the full-corpus LSH self-join.
-        if sf1:
-            payload["incremental_dedup_bench"] = _incremental_dedup_bench(spark, sf1)
-
-    def _scale_points(min_for_sf10: float) -> list[tuple[str, str]]:
-        # sf1 point always; the sf10 point only when the remaining global
-        # budget affords it — the section then RUNS degraded (named in the
-        # payload) instead of being evicted wholesale (round-10 item 1).
-        pts = [("sf1", sf1)] if sf1 else []
-        if sf10:
-            if budget_remaining() > min_for_sf10:
-                pts.append(("sf10", sf10))
-            else:
-                payload.setdefault("sections_degraded", []).append(
-                    f"sf10 point dropped (needs ~{min_for_sf10:.0f}s, "
-                    f"{budget_remaining():.0f}s left)"
-                )
-        return pts
-
-    def ivf_build() -> None:
-        # r11 full-run measured cost: 90 s for BOTH points — the old 500 s
-        # sf10 reservation (and the 330 s section estimate) were relics of
-        # a pre-index-cache build and kept this section out of every
-        # driver window.
-        points = _scale_points(150.0)
-        if points:
-            payload["ivf_build_bench"] = _ivf_build_bench(spark, points)
-
-    def ivfpq_serve() -> None:
-        if sf10 and tight_window:
-            _degrade("ivfpq_serve", "sf10 point deferred to the full run")
-            points = [("sf1", sf1)] if sf1 else []
-        else:
-            points = _scale_points(400.0)
-        if points:
-            payload["ivfpq_serve_bench"] = _ivfpq_serve_bench(spark, points)
-
-    def linkage() -> None:
-        # Fellegi-Sunter at scale (round-11 verdict item 7): pair counts
-        # per blocking width + scoring throughput at sf1/sf10 in the full
-        # run; sf1-only in the driver window (named degradation).
-        if sf10 and tight_window:
-            _degrade("linkage_bench", "sf10 point deferred to the full run")
-            points = [("sf1", sf1)] if sf1 else []
-        else:
-            points = _scale_points(120.0)
-        if points:
-            payload["linkage_bench"] = _linkage_bench(spark, points)
-
-    def bitext_serve() -> None:
-        # Served-vs-exact bitext pair recall + latency (round-9 verdict
-        # item 3): the IVF-composed serve path's recall is measured, never
-        # assumed, at every point where the exact baseline is affordable.
-        # Round-10 item 4: the clustered-fixture recall curve rides along;
-        # round-10 item 1: an internal budget (the sf1 adversarial point is
-        # the expensive leg and degrades loudly) keeps the section inside
-        # its estimate instead of evicting later sections.
-        points = [(Path(sf_dir).name, sf_dir)] + ([("sf1", sf1)] if sf1 else [])
-        # 100 s inside the driver's tight window (sf1 adversarial point
-        # degrades to a named skip; r11 measured 248 s against the old
-        # 150 s budget — in-flight points can't be truncated, so the
-        # budget must be set below the target, not at it), 600 s in a
-        # full local evidence run.
-        budget = float(
-            os.environ.get("SPARK_GRAFT_BITEXT_BUDGET_SEC")
-            or min(
-                100.0 if tight_window else 600.0,
-                max(60.0, budget_remaining() - 60.0),
-            )
-        )
-        payload["bitext_serve_bench"] = _bitext_serve_bench(
-            spark, points, budget=budget
-        )
-
-    def freq_stream() -> None:
-        # Streaming MG store throughput (round-9 verdict item 7): seconds
-        # per trigger epoch + standing-summary size + serving recount.
-        payload["freq_maintenance_bench"] = _freq_maintenance_bench(
-            spark, sf1 or sf_dir
-        )
-
-    def overlap_stream() -> None:
-        # Winnowing overlap store throughput (round-10 verdict item 6).
-        payload["overlap_maintenance_bench"] = _overlap_maintenance_bench(
-            spark, sf_dir
-        )
-
-    def cardinality_stream() -> None:
-        # KMV cardinality store throughput (round-10 verdict item 6).
-        payload["cardinality_maintenance_bench"] = _cardinality_maintenance_bench(
-            spark, sf_dir
-        )
-
-    def contamination_sf10() -> None:
-        # Stress + crossover merged into ONE budget unit (round-10 item 1:
-        # two separate 350 s/700 s tail sections were two skip lines every
-        # driver run; they always run or skip together anyway — both need
-        # the sf10 replica and measure the same operator family). Driver
-        # window: stress only — the crossover's 8M-synthetic-shingle leg is
-        # the expensive half and its result (bloom wins the big-benchmark
-        # regime) is regime-stable across rounds (r11 item 4).
-        payload["contamination_stress"] = _contamination_stress(spark, sf10)
-        if tight_window:
-            _degrade(
-                "contamination_sf10", "crossover leg deferred to the full run"
-            )
-            return
-        _section_hygiene(spark)
-        payload["contamination_crossover"] = _contamination_crossover(spark, sf10)
-
-    def pagerank_scale() -> None:
-        # Domain-scale PageRank evidence (round-7 verdict item 7): a
-        # synthesized ~1M-node/10M-edge hash graph, per-iteration seconds.
-        payload["pagerank_scale_bench"] = _pagerank_scale_bench(spark)
-
-    def semdedup() -> None:
-        # SemDeDup with corpus-proportional k (the paper's regime) at the
-        # replica scale points. Driver window: a single-pass sf1 point (the
-        # full run keeps sf1+sf10 median-of-3) so the section fits and
-        # still emits a row (r11 item 4).
-        if tight_window:
-            _degrade(
-                "semdedup_scale",
-                "single-pass sf1 point (full run: sf1+sf10, 3 passes)",
-            )
-            points = [("sf1", sf1)] if sf1 else []
-        else:
-            points = _scale_points(600.0)
-        if points:
-            payload["semdedup_scale_bench"] = _semdedup_scale_bench(
-                spark, points, passes=1 if tight_window else 3
-            )
-
-    # The plan: (name, skip_env, estimated_sec, fn), run IN ORDER while the
-    # total budget holds. Estimates are clean-box round-7 measurements with
-    # headroom; a section whose estimate exceeds the remaining budget is
-    # recorded in sections_skipped (with the numbers) instead of running —
-    # so the default run FITS the driver's window and degrades loudly, never
-    # silently. Order = evidence value per second: the headline artifact and
-    # sf0.1/sf1 trend lines first, the cheap operator benches next, the
-    # sf10-heavy stress sections last (a full local evidence run lifts the
-    # budget via SPARK_GRAFT_TOTAL_BUDGET_SEC=7200).
-    # Round-11 rebalance (round-10 verdict item 1): the probe diet (343 s
-    # cold simhash -> ~13 s contamination_bloom) plus internal budgets on
-    # the two round-10 overrunners (bitext 295 s vs est 170, sf10 probe
-    # 439 s vs est 360) buys back the eight evicted sections; ivfpq_serve
-    # and trainers move AHEAD of the long-tail sf10 stress sections; the
-    # two contamination benches merge into one budget unit. A 1500 s
-    # driver-window run now ends with three skips (ivf_build,
-    # semdedup_scale, contamination_sf10) instead of eight, and estimates
-    # gate with a 1.1x margin so a loaded box degrades by SKIPPING, not by
-    # overrunning the envelope.
-    plan: list[tuple[str, str | None, float, object]] = [
-        ("headline", None, 90, headline),
-        ("extended", "SPARK_GRAFT_SKIP_EXTENDED", 190, extended),
-        ("sf1", None if sf1 else "1", 130, sf1_section),
-        ("scale_probe", None if sf1 else "1", 120, scale_probe),
-        ("scale_probe_sf10", None if sf10 else "1", 150, scale_probe_sf10),
-        (
-            "acid_dml",
-            "SPARK_GRAFT_SKIP_ACID_DML",
-            40,
-            lambda: payload.__setitem__("acid_dml_bench", _acid_dml_bench(spark, sf_dir)),
-        ),
-        (
-            "skipping",
-            "SPARK_GRAFT_SKIP_SKIPPING",
-            50,
-            lambda: payload.__setitem__(
-                "skipping_bench", _skipping_bench(spark, sf_dir)
-            ),
-        ),
-        (
-            "streaming",
-            "SPARK_GRAFT_SKIP_STREAMING",
-            30,
-            lambda: payload.__setitem__("streaming_bench", _streaming_bench(spark)),
-        ),
-        (
-            "skew",
-            "SPARK_GRAFT_SKIP_SKEW",
-            110,
-            lambda: payload.__setitem__("skew_bench", _skew_bench(spark)),
-        ),
-        # Round-12b reorder: the three formerly-perennial skips run EARLY
-        # (right after the trend sections), because "order = evidence value
-        # per second" and their evidence debt is the highest in the catalog
-        # — two rounds with zero driver artifacts (r11 verdict item 4). The
-        # round-12 sim on this box still skipped ivf_build + contamination
-        # at the tail (extended/sf1/bitext ran over their estimates and ate
-        # the reserve); placed here they run before the overrun can
-        # accumulate, and the sections that now risk the tail cut
-        # (bitext_serve, ivfpq_serve) both carry r10+r11 driver evidence.
-        ("ivf_build", "SPARK_GRAFT_SKIP_IVF_BUILD", 120, ivf_build),
-        (
-            "semdedup_scale",
-            "SPARK_GRAFT_SKIP_SEMDEDUP",
-            80 if tight_window else 500,
-            semdedup,
-        ),
-        (
-            "contamination_sf10",
-            None
-            if sf10
-            and not os.environ.get("SPARK_GRAFT_SKIP_CONTAM_STRESS")
-            and not os.environ.get("SPARK_GRAFT_SKIP_CONTAM_CROSSOVER")
-            else "1",
-            150 if tight_window else 330,
-            contamination_sf10,
-        ),
-        # estimates re-synced to the round-8 clean full run's measured
-        # section_seconds (idle box, +headroom): skew 95, incremental 97,
-        # ivf_build 291, pagerank 66
-        ("freq_maintenance", "SPARK_GRAFT_SKIP_FREQ_MAINT", 80, freq_stream),
-        ("overlap_maintenance", "SPARK_GRAFT_SKIP_OVERLAP_MAINT", 70, overlap_stream),
-        (
-            "cardinality_maintenance",
-            "SPARK_GRAFT_SKIP_CARDINALITY_MAINT",
-            60,  # prices BOTH the KMV store and the CMS store folds
-            cardinality_stream,
-        ),
-        ("incremental_dedup", "SPARK_GRAFT_SKIP_INCREMENTAL", 120, incremental),
-        # Cheap never-or-newly-evidenced sections run BEFORE the two serve
-        # monsters: linkage_bench is new in r12 (no driver row yet, ~45 s),
-        # trainers/pagerank are ~20-35 s each, while bitext_serve (276 s in
-        # the r12 sim) and ivfpq_serve (180 s est) both carry r10+r11
-        # driver evidence — if the window's tail cuts anything, it should
-        # cut the multiply-evidenced monsters, not three cheap rows.
-        (
-            "linkage_bench",
-            "SPARK_GRAFT_SKIP_LINKAGE_BENCH",
-            70 if tight_window else 280,
-            linkage,
-        ),
-        (
-            "trainers",
-            "SPARK_GRAFT_SKIP_TRAINERS",
-            # r12-opt re-measure: 60.5 s isolated at sf0.1 (the old 150 was
-            # a stale pre-optimization number that gated the section out of
-            # the window while cheaper sections ran)
-            90,
-            lambda: payload.__setitem__(
-                "trainer_bench", _trainer_bench(spark, sf_dir)
-            ),
-        ),
-        ("pagerank_scale", "SPARK_GRAFT_SKIP_PAGERANK_SCALE", 90, pagerank_scale),
-        # tight-window estimates re-synced post-optimization: bitext_serve's
-        # internal budget caps its tight-window cost at ~100 s + one
-        # in-flight point (full run still 227-276 s measured); ivfpq_serve
-        # now reads the PERSISTED PQ index (no inline training) and its
-        # tight-window sf1-only shape measured 38 s isolated.
-        # Round-13 (r12 verdict item 2): ivfpq_serve runs BEFORE
-        # bitext_serve — in r12 its 60 s estimate fit the window but it was
-        # the one skipped section because bitext's accumulated overrun ate
-        # the reserve; the cheap never-yet-driver-timed row must not queue
-        # behind the expensive multiply-evidenced one.
-        (
-            "ivfpq_serve",
-            "SPARK_GRAFT_SKIP_IVFPQ_SERVE",
-            60 if tight_window else 180,
-            ivfpq_serve,
-        ),
-        (
-            "bitext_serve",
-            "SPARK_GRAFT_SKIP_BITEXT_SERVE",
-            150 if tight_window else 276,
-            bitext_serve,
-        ),
-        # Round-12 tail rebalance (r11 verdict item 4): estimates re-synced
-        # to the r11 clean full run's MEASURED section_seconds + headroom
-        # (ivf_build 90 -> est 120, semdedup 434/3-pass -> 180 single-pass,
-        # contamination 266 -> est 330; the old 330/500/1000 were stale and
-        # kept all three out of every 1500 s driver window). sf10_scaling
-        # runs only in full windows: in the driver window it spent 150 s
-        # emitting zero committed numbers (every point truncated) — that
-        # time now funds the three formerly-perennial skips, and sf10 query
-        # medians come from the committed full run's per-query-grouped warm
-        # meter.
-        # full-run-only (driver window stays reserved for the three
-        # formerly-perennial skips): the exactness premium of the
-        # prefix-filter join vs LSH, with measured LSH recall.
-        (
-            "exact_join_bench",
-            None if not tight_window else "1",
-            90,
-            lambda: payload.__setitem__(
-                "exact_join_bench", _exact_join_bench(spark, sf_dir)
-            ),
-        ),
-        # sf10_scaling self-budgets to the remaining window (minimum useful
-        # run ~60 s) and per-point cost guards keep it from overrunning —
-        # the est here is the minimum, not the typical.
-        ("sf10_scaling", None if sf10 and not tight_window else "1", 60, sf10_section),
-    ]
-    if sf10 and tight_window:
-        payload.setdefault("sections_degraded", []).append(
-            "sf10_scaling: deferred to the full run (driver window; its "
-            "150 s yielded zero committed medians in r11 — now funds "
-            "ivf_build/semdedup_scale/contamination_sf10)"
-        )
-    for name, skip_env, est, fn in plan:
-        if skip_env is not None and (skip_env == "1" or os.environ.get(skip_env)):
-            continue
-        remaining = budget_remaining()
-        # 1.1x margin: round-10's driver run overran its envelope because
-        # estimates gated at exactly 1.0x on a loaded box.
-        if remaining < est * 1.1:
-            payload.setdefault("sections_skipped", []).append(
-                f"{name}: budget (est ~{est:.0f}s +10% margin, "
-                f"{remaining:.0f}s of {total_budget_sec():.0f}s left)"
-            )
-            continue
-        _run_section(payload, name, fn, spark)
-        _section_hygiene(spark)
 
 
 def _emit(payload: dict) -> None:
@@ -2432,9 +1992,8 @@ def _emit(payload: dict) -> None:
     # recorded `parsed: null`. The FINAL stdout line is a compact
     # sf0.1-headline-only JSON guaranteed to fit that window.
     try:
-        full_path = Path(__file__).resolve().parent / "BENCH_FULL.json"
-        full_path.write_text(json.dumps(payload, indent=2) + "\n")
-        print(f"full payload written to {full_path}", file=sys.stderr)
+        _FULL_PATH.write_text(json.dumps(payload, indent=2) + "\n")
+        print(f"full payload written to {_FULL_PATH}", file=sys.stderr)
     except Exception as exc:  # pragma: no cover - compact line must still print
         print(f"BENCH_FULL.json write failed: {exc}", file=sys.stderr)
     print(build_compact_line(payload))

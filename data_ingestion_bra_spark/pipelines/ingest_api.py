@@ -117,10 +117,10 @@ def run(
 
 
 def main(argv: list[str]) -> int:
-    from data_ingestion_bra_spark.session import get_spark, tune_session
+    from data_ingestion_bra_spark.session import get_spark
 
     config_path = argv[1] if len(argv) > 1 else "configs/simulacao_api.json"
-    spark = tune_session(get_spark("ingest-api"))
+    spark = get_spark("ingest-api")
     try:
         run(spark, config_path)
         return 0

@@ -105,10 +105,10 @@ def run(
 
 
 def main(argv: list[str]) -> int:
-    from data_ingestion_bra_spark.session import get_spark, tune_session
+    from data_ingestion_bra_spark.session import get_spark
 
     config_path = argv[1] if len(argv) > 1 else "configs/indicadores_municipios.json"
-    spark = tune_session(get_spark("ingest-csv"))
+    spark = get_spark("ingest-csv")
     try:
         run(spark, config_path)
         return 0

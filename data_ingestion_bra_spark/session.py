@@ -27,17 +27,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # dynamic: INSERT OVERWRITE replaces only the partitions present in
-        # the incoming data. Spark's default (static) truncates the WHOLE
-        # table root first — a second daily ingest run would delete every
-        # prior anomesdia partition.
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # local[N] means the driver JVM IS the whole cluster: executor heap,
         # broadcast relations, shuffle buffers, and cached partitions all
         # live here. 8g OOM'd the round-6 official bench (sf10 60M-row
@@ -46,17 +36,10 @@ def get_spark(
         # keeps it overridable for small boxes/CI.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
         .config("spark.ui.enabled", "false")
-        # see tune_session: the rule re-evaluates computed exploded arrays
-        # 2-3x per row (filter + scan DataFilters) — measured 33.1 -> 3.9 s
-        # on winnowing at sf0.1; pure heuristic, no semantic effect
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return tune_session(builder.getOrCreate())
 
 
 def size_shuffle_partitions(
@@ -83,7 +66,7 @@ def size_shuffle_partitions(
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply engine session defaults to an externally-created session.
+    """Apply the engine's SQL session confs; ``get_spark`` ends here too.
 
     The driver hands us its own SparkSession; make sure the confs that affect
     query *semantics* (time zone, ANSI off for null-coercing casts — SURVEY
@@ -96,6 +79,10 @@ def tune_session(spark: SparkSession) -> SparkSession:
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
+        # dynamic: INSERT OVERWRITE replaces only the partitions present in
+        # the incoming data. Spark's default (static) truncates the WHOLE
+        # table root first — a second daily ingest run would delete every
+        # prior anomesdia partition.
         "spark.sql.sources.partitionOverwriteMode": "dynamic",
         # InferFiltersFromGenerate duplicates the EXPLODED expression into a
         # pre-Generate filter (and, via pushdown, into scan DataFilters).

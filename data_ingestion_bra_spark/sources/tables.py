@@ -49,6 +49,21 @@ def _stat_sig(path: str) -> tuple[int, int]:
     return (st.st_mtime_ns, st.st_size)
 
 
+def _memo(spark: SparkSession, path: str, build) -> DataFrame:
+    """The memo lookup: the handle for ``path``'s current stat signature,
+    else ``build(spark.read.parquet(path))``, stored in place of the path's
+    stale entry."""
+    per_session = _PLAN_CACHE.setdefault(spark, {})
+    key = (path, _stat_sig(path))
+    cached = per_session.get(key)
+    if cached is None:
+        cached = build(spark.read.parquet(path))
+        for k in [k for k in per_session if k[0] == path]:
+            del per_session[k]
+        per_session[key] = cached
+    return cached
+
+
 def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     """Plan-handle memo for non-fixture parquet datasets (e.g. the IVF index
     lists): same contract as ``load_table`` — the handle is a lazy plan,
@@ -63,39 +78,24 @@ def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
     and would serve a stale plan handle with a stale file listing; don't
     add such a writer without switching this memo to a member-file
     fingerprint (see ``similarity._dataset_fingerprint``)."""
-    per_session = _PLAN_CACHE.setdefault(spark, {})
-    key = (path, _stat_sig(path))
-    cached = per_session.get(key)
-    if cached is None:
-        cached = spark.read.parquet(path)
-        for k in [k for k in per_session if k[0] == path and k != key]:
-            del per_session[k]
-        per_session[key] = cached
-    return cached
+    return _memo(spark, path, lambda df: df)
+
+
+def _events_ts(df: DataFrame) -> DataFrame:
+    """An events dataset may store ts as INT64 TIMESTAMP(NANOS), which
+    Spark's vectorized Parquet reader rejects; we read nanos as long
+    (spark.sql.legacy.parquet.nanosAsLong, set in session.tune_session)
+    and truncate to microseconds — exactly what DuckDB does natively, so
+    oracle comparisons stay aligned. `div` keeps the arithmetic in int64 (a
+    double round-trip would lose precision at 1e18 ns)."""
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
-    per_session = _PLAN_CACHE.setdefault(spark, {})
-    key = (path, _stat_sig(path))
-    cached = per_session.get(key)
-    if cached is not None:
-        return cached
-    df = spark.read.parquet(path)
-    if name == "events":
-        # The fixture stores ts as INT64 TIMESTAMP(NANOS), which Spark's
-        # vectorized Parquet reader rejects; we read nanos as long
-        # (spark.sql.legacy.parquet.nanosAsLong, set in session.tune_session)
-        # and truncate to microseconds — exactly what DuckDB does natively,
-        # so oracle comparisons stay aligned. `div` keeps the arithmetic in
-        # int64 (a double round-trip would lose precision at 1e18 ns).
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    # drop superseded signatures for the same path (rewritten dataset)
-    for k in [k for k in per_session if k[0] == path and k != key]:
-        del per_session[k]
-    per_session[key] = df
-    return df
+    return _memo(spark, path, _events_ts if name == "events" else lambda df: df)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

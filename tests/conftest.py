@@ -9,7 +9,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from data_ingestion_bra_spark.session import get_spark, tune_session
+from data_ingestion_bra_spark.session import get_spark
 
 
 @pytest.fixture(scope="session")
@@ -21,7 +21,6 @@ def spark():
         shuffle_partitions="8",
         extra_conf={"spark.sql.warehouse.dir": warehouse},
     )
-    tune_session(s)
     yield s
 
 
@@ -61,3 +60,36 @@ def job_ids(spark, group):
 
 
 SF_SMOKE = "/root/testdata/sf0.001"
+
+
+def synthetic_merges(depth: int, base: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """Deterministically extend the committed 96-merge table to ``depth``
+    entries for the chain-depth stress tests. Chains of ≤48 growing symbols
+    seeded from rare letter pairs: every entry is a structurally valid merge
+    (left symbol produced by a prior entry), patterns stay short, and the
+    per-merge literal-replace SCAN cost — the quantity under measurement —
+    is paid whether or not the pattern occurs in prose."""
+    ms = list(base)
+    seen = set(ms)
+    alpha = "abcdefghijklmnopqrstuvwxyz"
+    # seeds walk ALL 676 letter pairs (a 26-cycle walk here once looped
+    # forever past depth ~1274 — every later seed was already seen);
+    # 676 seeds x 49 entries bounds the generator at ~33k merges.
+    if depth > 33_000:
+        raise ValueError(f"synthetic merge generator bounded at ~33k, got {depth}")
+    for si in range(676):
+        if len(ms) >= depth:
+            break
+        seed = (alpha[si % 26], alpha[(si // 26 + si) % 26])
+        if seed in seen:
+            continue
+        seen.add(seed)
+        ms.append(seed)
+        sym = seed[0] + seed[1]
+        for j in range(48):
+            if len(ms) >= depth:
+                break
+            nxt = alpha[(si + j) % 26]
+            ms.append((sym, nxt))
+            sym += nxt
+    return ms[:depth]

@@ -116,15 +116,16 @@ def test_skipping_bench_zorder_prunes_files(spark):
 
 
 def test_bench_query_lists_resolve_in_registry():
-    """EXTENDED_QUERIES and SF10_QUERIES are consumed with a silent
-    `if name in queries` guard (a typo'd entry would just vanish from the
-    artifact and read as 'measured everything'); pin every listed name to
-    an actual registry entry."""
+    """Every query name the bench lists must be a registry entry: a typo'd
+    name fails its bench section (a KeyError, recorded as the section's
+    error) only when the section runs; this catches it without Spark."""
     _load_all()
     missing = [n for n in bench.EXTENDED_QUERIES if n not in QUERIES]
     assert missing == [], f"EXTENDED_QUERIES not in registry: {missing}"
     missing = [n for n in bench.SF10_QUERIES if n not in QUERIES]
     assert missing == [], f"SF10_QUERIES not in registry: {missing}"
+    missing = [n for n in bench.SF1_PROBES + bench.SF10_PROBES if n not in QUERIES]
+    assert missing == [], f"scale probes not in registry: {missing}"
     # and no duplicates that would double-time a row
     assert len(set(bench.EXTENDED_QUERIES)) == len(bench.EXTENDED_QUERIES)
     assert len(set(bench.SF10_QUERIES)) == len(bench.SF10_QUERIES)

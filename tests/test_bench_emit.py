@@ -16,7 +16,10 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
 import bench
+from tests.conftest import synthetic_merges
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -79,14 +82,18 @@ def test_bench_subprocess_emits_compact_line_under_injected_failure(tmp_path):
     env = {
         **os.environ,
         "SPARK_GRAFT_FAIL_SECTION": "headline",
-        "SPARK_GRAFT_SKIP_EXTENDED": "1",
-        "SPARK_GRAFT_SKIP_SF1": "1",
-        "SPARK_GRAFT_SKIP_SF10": "1",
-        "SPARK_GRAFT_SKIP_IVF_BUILD": "1",
-        "SPARK_GRAFT_SKIP_SKEW": "1",
-        "SPARK_GRAFT_SKIP_SEMDEDUP": "1",
-        "SPARK_GRAFT_SKIP_STREAMING": "1",
-        "SPARK_GRAFT_SKIP_PAGERANK_SCALE": "1",
+        # the sections that need no sf1/sf10 replica and no large fixture
+        "SPARK_GRAFT_SECTIONS": ",".join(
+            [
+                "headline",
+                "acid_dml",
+                "skipping",
+                "freq_maintenance",
+                "overlap_maintenance",
+                "cardinality_maintenance",
+                "trainers",
+            ]
+        ),
         "SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.001",
         # the copied script adds ITS OWN dir to sys.path; point it at the repo
         "PYTHONPATH": str(REPO),
@@ -137,8 +144,7 @@ def test_bench_survives_sigterm_mid_section(tmp_path):
         **os.environ,
         "SPARK_GRAFT_FAIL_SECTION": "headline",
         "SPARK_GRAFT_SLEEP_SECTION": "extended",
-        "SPARK_GRAFT_SKIP_SF1": "1",
-        "SPARK_GRAFT_SKIP_SF10": "1",
+        "SPARK_GRAFT_SECTIONS": "headline,extended",
         "SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.001",
         "PYTHONPATH": str(REPO),
         "SPARK_DRIVER_MEMORY": "2g",
@@ -203,7 +209,7 @@ def test_synthetic_merges_are_structurally_valid():
     previous entry produced), and the table reaches the requested depth
     without duplicate pairs."""
     base = [("t", "h"), ("th", "e")]
-    ms = bench._synthetic_merges(500, base)
+    ms = synthetic_merges(500, base)
     assert len(ms) == 500
     assert ms[: len(base)] == base
     assert len(set(ms)) == 500
@@ -224,3 +230,57 @@ def test_run_section_records_ambient_loadavg(tmp_path, monkeypatch):
     amb = payload["ambient"]["loadavg_by_section"]["noop"]
     assert len(amb) == 2
     assert all(isinstance(x, float) for x in amb)
+
+
+def test_timed_makes_warm_call_and_reports_median_and_spread(monkeypatch):
+    """``_timed`` is the bench's one timing primitive: one untimed warm
+    call, then one sample per pass, the median and the [min, max] spread
+    rounded to the millisecond, and the last call's result."""
+    clock = [0.0]
+    monkeypatch.setattr(bench.time, "perf_counter", lambda: clock[0])
+    durations = iter([9.0, 1.0, 3.0004, 2.0])  # warm call first
+    calls = []
+
+    def fn():
+        calls.append(1)
+        clock[0] += next(durations)
+        return len(calls)
+
+    t = bench._timed(fn, passes=3, warm=True)
+    assert len(calls) == 4
+    assert t.samples == pytest.approx([1.0, 3.0004, 2.0])
+    assert t.median == 2.0
+    assert t.spread == [1.0, 3.0]
+    assert t.result == 4
+
+
+def test_measured_gate_skips_section_over_budget_and_runs_unmeasured(monkeypatch):
+    """A section whose seconds in the previous payload exceed the budget
+    left is skipped and named; a section the previous run never measured
+    runs."""
+    monkeypatch.setattr(bench, "_emit", lambda p: None)
+    monkeypatch.setattr(bench, "budget_remaining", lambda: 100.0)
+    ran = []
+    sections = [
+        ("slow", lambda run: ran.append("slow") or {"slow_bench": 1}),
+        ("fits", lambda run: ran.append("fits") or {"fits_bench": 1}),
+        ("new", lambda run: ran.append("new") or {"new_bench": 1}),
+    ]
+    payload: dict = {}
+    bench._run_sections(payload, sections, {"slow": 500.0, "fits": 60.0})
+    assert ran == ["fits", "new"]
+    assert [s.split(":")[0] for s in payload["sections_skipped"]] == ["slow"]
+    assert "500s last run" in payload["sections_skipped"][0]
+    assert set(payload["section_seconds"]) == {"fits", "new"}
+    assert payload["fits_bench"] == payload["new_bench"] == 1
+    assert "slow_bench" not in payload
+
+
+def test_sections_env_selects_in_table_order_and_rejects_unknown(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_SECTIONS", "skew, headline")
+    assert [n for n, _ in bench._selected(bench.SECTIONS)] == ["headline", "skew"]
+    monkeypatch.setenv("SPARK_GRAFT_SECTIONS", "headline,no_such_section")
+    with pytest.raises(ValueError, match="no_such_section"):
+        bench._selected(bench.SECTIONS)
+    monkeypatch.delenv("SPARK_GRAFT_SECTIONS")
+    assert bench._selected(bench.SECTIONS) == bench.SECTIONS

@@ -1309,10 +1309,10 @@ def test_vocab_join_deep_merge_table_batched(spark):
     batched apply — the single-expression chain StackOverflows the driver
     past ~200 merges (measured) — and produce exactly the pure-Python
     greedy-BPE counts."""
-    import bench
     from data_ingestion_bra_spark.operators import bpe
+    from tests.conftest import synthetic_merges
 
-    merges = bench._synthetic_merges(400, bpe.load_merges())
+    merges = synthetic_merges(400, bpe.load_merges())
     assert len(merges) > bpe.MAX_EXPR_MERGES
     rows = [
         (0, "the quick brown fox jumps over the lazy dog"),

@@ -12,7 +12,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from data_ingestion_bra_spark.plans.registry import get_queries
-from data_ingestion_bra_spark.session import get_spark, tune_session
+from data_ingestion_bra_spark.session import get_spark
 
 #: the queries whose plan shape carries the 100 TB argument, with the one
 #: property worth reading for in each.
@@ -104,7 +104,6 @@ def plan_str(spark, df, mode: str = "formatted") -> str:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark("dump-plans")
-    tune_session(spark)
     queries = get_queries()
     out = [
         "# PLANS — physical plans of the scale-critical queries",
