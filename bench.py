@@ -13,14 +13,15 @@ _materialize).
 
 The run is the ordered ``SECTIONS`` table. ``SPARK_GRAFT_SECTIONS`` (comma
 list of section names, default all) runs a subset, and
-``SPARK_GRAFT_TOTAL_BUDGET_SEC`` bounds the whole run: a section whose
-``section_seconds`` in the previous BENCH_FULL.json exceed the budget left
-is skipped and named in ``sections_skipped``.
+``SPARK_GRAFT_TOTAL_BUDGET_SEC`` bounds the whole run through the measured
+gate (``_Gate``): a section, scale point or replica build whose figure in
+the previous BENCH_FULL.json's ``gate_seconds`` exceeds the budget left, or
+half the total budget, is skipped and named in ``sections_skipped``.
 """
 
 from __future__ import annotations
 
-import functools
+import contextlib
 import json
 import os
 import statistics
@@ -280,7 +281,7 @@ def _replica_dir(name: str, factor: int) -> str | None:
     lineitem poisoned a round-7 run — existence alone is not integrity).
     A leftover _COMPLETE-less published dir from the pre-atomic era is
     rebuilt."""
-    out = Path(__file__).resolve().parent / ".data" / name
+    out = _DATA / name
     marker = out / "_COMPLETE"
     if marker.exists():
         return str(out)
@@ -303,7 +304,7 @@ def _replica_dir(name: str, factor: int) -> str | None:
     return str(out)
 
 
-def _semdedup_scale_bench(spark, points) -> dict:
+def _semdedup_scale_bench(spark, sf_dir: str) -> dict:
     """SemDeDup with corpus-proportional clustering: k = max(8, N/250) keeps
     E[cell size] ~250 constant, so the within-cell pairwise cosine step is
     O(N * cell_size) at every scale — the measured version of the paper's
@@ -313,40 +314,37 @@ def _semdedup_scale_bench(spark, points) -> dict:
     from data_ingestion_bra_spark.operators import similarity
     from data_ingestion_bra_spark.sources.tables import load_table
 
-    out: dict = {}
-    for label, d in points:
-        emb = load_table(spark, d, "embeddings")
-        n = emb.count()
-        k = max(8, n // 250)
+    emb = load_table(spark, sf_dir, "embeddings")
+    n = emb.count()
+    k = max(8, n // 250)
 
-        def prune(emb=emb, k=k) -> int:
-            cents = similarity.kmeans_train(
-                emb, n_centroids=k, n_iter=1, train_sample_rate=0.5
-            )
-            # Materialize the inverted lists once (the production contract:
-            # load_or_build_ivf_index persists them to parquet; the prune
-            # plan reads the index, never re-running assignment per
-            # consumer).
-            lists = (
-                similarity.assign_cells(emb, cents)
-                .select("vid", "cell", "v")
-                .localCheckpoint(eager=True)
-            )
-            return (
-                similarity.semdedup_prune(cents, lists, threshold_e4=4500)
-                .filter("keep = 1")
-                .count()
-            )
+    def prune() -> int:
+        cents = similarity.kmeans_train(
+            emb, n_centroids=k, n_iter=1, train_sample_rate=0.5
+        )
+        # Materialize the inverted lists once (the production contract:
+        # load_or_build_ivf_index persists them to parquet; the prune
+        # plan reads the index, never re-running assignment per
+        # consumer).
+        lists = (
+            similarity.assign_cells(emb, cents)
+            .select("vid", "cell", "v")
+            .localCheckpoint(eager=True)
+        )
+        return (
+            similarity.semdedup_prune(cents, lists, threshold_e4=4500)
+            .filter("keep = 1")
+            .count()
+        )
 
-        t = _timed(prune, passes=3)
-        out[label] = {
-            "sec": t.median,
-            "sec_spread": t.spread,
-            "n_vectors": n,
-            "n_cells": k,
-            "n_kept": t.result,
-        }
-    return out
+    t = _timed(prune, passes=3)
+    return {
+        "sec": t.median,
+        "sec_spread": t.spread,
+        "n_vectors": n,
+        "n_cells": k,
+        "n_kept": t.result,
+    }
 
 
 def _incremental_dedup_bench(spark, sf1: str) -> dict:
@@ -542,6 +540,47 @@ def _streaming_bench(spark, sf_dir: str) -> dict[str, float]:
     return out
 
 
+def _contamination_inputs(spark, sf10: str, n_synthetic: int = 0) -> tuple:
+    """The contamination benches' shared inputs from the ``sf10`` documents:
+    the persisted distinct 8-gram benchmark set (docs below 50k, plus
+    ``n_synthetic`` synthetic shingles) and its size, the candidate shingle
+    stream (the other docs), the bloom size (~10 bits per member, a power
+    of two: k=3 → fpp ~1%) and the bytes the exact variant broadcasts —
+    the per-executor footprint a single box cannot show in wall clock."""
+    from pyspark.sql import functions as F
+
+    from data_ingestion_bra_spark.operators import dedup
+    from data_ingestion_bra_spark.sources.tables import load_table
+
+    d = load_table(spark, sf10, "documents")
+    split = 50_000
+    bset = dedup.doc_shingles(d.filter(F.col("doc_id") < split), "doc_id", "text", n=8)
+    bset = bset.select("shingle")
+    if n_synthetic:
+        synth = F.concat(F.lit("synthetic benchmark shingle "), F.col("id"))
+        bset = bset.union(spark.range(n_synthetic).select(synth.alias("shingle")))
+    # common input to both variants (exact broadcasts it; bloom builds the
+    # bitmap from it AND confirm-joins it): persisted so the timings isolate
+    # the variant difference
+    bset = bset.distinct().persist()
+    n_shingles = bset.count()
+    cand = dedup.doc_shingles(
+        d.filter(F.col("doc_id") >= split), "doc_id", "text", n=8, distinct=False
+    )
+    m_bits = 1 << max(16, (10 * n_shingles).bit_length())
+    exact_bytes = int(bset.agg(F.sum(F.length("shingle"))).collect()[0][0])
+    return bset, n_shingles, cand, m_bits, exact_bytes
+
+
+def _overlap_counts(hits):
+    """Per-document count of distinct benchmark shingles among ``hits``."""
+    from pyspark.sql import functions as F
+
+    return hits.select("doc", "shingle").distinct().groupBy("doc").agg(
+        F.count("*").alias("n_overlap")
+    )
+
+
 def _contamination_stress(spark, sf10: str) -> dict:
     """Contamination at a LARGE benchmark side (50k docs → millions of
     distinct 8-gram shingle strings): the regime where the exact variant
@@ -552,65 +591,33 @@ def _contamination_stress(spark, sf10: str) -> dict:
     asserted identical (the confirm join strikes false positives)."""
     from pyspark.sql import functions as F
 
-    from data_ingestion_bra_spark.operators import bloom, dedup
-    from data_ingestion_bra_spark.sources.tables import load_table
+    from data_ingestion_bra_spark.operators import bloom
 
-    d = load_table(spark, sf10, "documents")
-    split = 50_000
-    # the benchmark shingle set is common input to BOTH variants (exact
-    # broadcasts it; bloom builds the bitmap from it AND confirm-joins it)
-    # — persist it so the timings isolate the variant difference, not how
-    # many times the common relation gets recomputed
-    bset = (
-        dedup.doc_shingles(d.filter(F.col("doc_id") < split), "doc_id", "text", n=8)
-        .select("shingle")
-        .distinct()
-        .persist()
-    )
-    n_shingles = bset.count()
-    cand = dedup.doc_shingles(
-        d.filter(F.col("doc_id") >= split), "doc_id", "text", n=8, distinct=False
-    )
+    bset, n_shingles, cand, m_bits, exact_bytes = _contamination_inputs(spark, sf10)
 
     def finish(surviving):
-        return (
-            surviving.join(F.broadcast(bset), "shingle")
-            .select("doc", "shingle")
-            .distinct()
-            .groupBy("doc")
-            .agg(F.count("*").alias("n_overlap"))
-        )
+        return _overlap_counts(surviving.join(F.broadcast(bset), "shingle"))
 
     exact = _timed(lambda: finish(cand).count())
-    # auto-size: ~10 bits per member, power of two (k=3 → fpp ~1%);
-    # Spark-side build (no driver round-trip, no task-closure bitmap)
-    m_bits = 1 << max(16, (10 * n_shingles).bit_length())
 
     def bloom_probe():
+        # Spark-side build (no driver round-trip, no task-closure bitmap)
         bf = bloom.build_bloom_df(bset, "shingle", m_bits=m_bits).persist()
         return bf, finish(bloom.bloom_prefilter(cand, "shingle", bf, m_bits=m_bits)).count()
 
     probe = _timed(bloom_probe)
     bf, n_bloom = probe.result
     bf.unpersist()
-    out: dict = {
+    bset.unpersist()
+    return {
         "exact_broadcast_sec": exact.median,
         "bloom_prefilter_sec": probe.median,
         "rows_equal": bool(exact.result == n_bloom),
         "n_flagged_docs": exact.result,
-        # The quantity a single box CANNOT show in wall-clock (its
-        # 'broadcast' is a memcpy): the per-executor broadcast footprint
-        # each variant ships on a real cluster. The exact variant ships
-        # every distinct benchmark shingle string; the bloom ships the
-        # fixed bitmap.
-        "exact_broadcast_payload_bytes": int(
-            bset.agg(F.sum(F.length("shingle"))).collect()[0][0]
-        ),
+        "exact_broadcast_payload_bytes": exact_bytes,
         "n_benchmark_shingles": n_shingles,
         "bloom_broadcast_payload_bytes": m_bits // 8,
     }
-    bset.unpersist()
-    return out
 
 
 def _contamination_crossover(spark, sf10: str) -> dict:
@@ -628,41 +635,20 @@ def _contamination_crossover(spark, sf10: str) -> dict:
     Outputs asserted identical; both timed median-of-3 after a warm pass."""
     from pyspark.sql import functions as F
 
-    from data_ingestion_bra_spark.operators import bloom, dedup
-    from data_ingestion_bra_spark.sources.tables import load_table
+    from data_ingestion_bra_spark.operators import bloom
 
-    d = load_table(spark, sf10, "documents")
-    split = 50_000
-    real = dedup.doc_shingles(
-        d.filter(F.col("doc_id") < split), "doc_id", "text", n=8
-    ).select("shingle")
-    synth = spark.range(8_000_000).select(
-        F.concat(F.lit("synthetic benchmark shingle "), F.col("id")).alias("shingle")
+    bset, n_shingles, cand, m_bits, exact_bytes = _contamination_inputs(
+        spark, sf10, n_synthetic=8_000_000
     )
-    bset = real.union(synth).distinct().persist()
-    n_shingles = bset.count()
-    cand = dedup.doc_shingles(
-        d.filter(F.col("doc_id") >= split), "doc_id", "text", n=8, distinct=False
-    )
-
-    def overlap_counts(hits):
-        return (
-            hits.select("doc", "shingle")
-            .distinct()
-            .groupBy("doc")
-            .agg(F.count("*").alias("n_overlap"))
-        )
 
     def exact():
         # the exact operator's contract: broadcast the benchmark set
-        return overlap_counts(cand.join(F.broadcast(bset), "shingle")).count()
+        return _overlap_counts(cand.join(F.broadcast(bset), "shingle")).count()
 
     def exact_shuffled():
         # the no-bloom fallback once the benchmark set outgrows broadcast:
         # the ENTIRE candidate shingle stream shuffles against the set
-        return overlap_counts(cand.join(bset, "shingle")).count()
-
-    m_bits = 1 << max(16, (10 * n_shingles).bit_length())
+        return _overlap_counts(cand.join(bset, "shingle")).count()
 
     # bitmap build is ONE-TIME for a static benchmark set (the production
     # regime: build once, screen every corpus batch) — timed separately;
@@ -688,15 +674,13 @@ def _contamination_crossover(spark, sf10: str) -> dict:
         # the corpus scan + probes twice and lost 2.2x to exact_broadcast;
         # journal: r6 crossover first sample.)
         surviving = bloom.bloom_prefilter(cand, "shingle", bf, m_bits=m_bits)
-        return overlap_counts(surviving.join(bset, "shingle")).count()
+        return _overlap_counts(surviving.join(bset, "shingle")).count()
 
     out: dict = {
         "n_benchmark_shingles": n_shingles,
         "bloom_build_sec": build.median,
         "bloom_broadcast_payload_bytes": m_bits // 8,
-        "exact_broadcast_payload_bytes": int(
-            bset.agg(F.sum(F.length("shingle"))).collect()[0][0]
-        ),
+        "exact_broadcast_payload_bytes": exact_bytes,
     }
     results: dict[str, int] = {}
     for name, fn in (
@@ -715,7 +699,7 @@ def _contamination_crossover(spark, sf10: str) -> dict:
     return out
 
 
-def _ivf_build_bench(spark, sf_dirs: list[tuple[str, str]]) -> dict:
+def _ivf_build_bench(spark, sf_dir: str) -> dict:
     """IVF index BUILD cost vs ``train_sample_rate`` with recall\\@5 of the
     resulting index — the evidence that sample-based k-means training buys
     build time roughly linearly in the rate while holding recall >= 0.9
@@ -727,52 +711,49 @@ def _ivf_build_bench(spark, sf_dirs: list[tuple[str, str]]) -> dict:
     from data_ingestion_bra_spark.operators import pq, similarity
     from data_ingestion_bra_spark.sources.tables import load_table
 
-    out: dict = {}
-    for label, d in sf_dirs:
-        emb = load_table(spark, d, "embeddings")
-        truth = _pairs(
-            similarity.brute_force_topk(emb.filter(F.col("vec_id") < 10), emb, k=5)
+    emb = load_table(spark, sf_dir, "embeddings")
+    truth = _pairs(
+        similarity.brute_force_topk(emb.filter(F.col("vec_id") < 10), emb, k=5)
+    )
+    per_rate: dict = {}
+    for rate in (1.0, 0.5, 0.1):
+        build = _timed(
+            lambda: similarity.kmeans_train(
+                emb, n_centroids=16, n_iter=2, train_sample_rate=rate
+            )
         )
-        per_rate: dict = {}
-        for rate in (1.0, 0.5, 0.1):
-            build = _timed(
-                lambda: similarity.kmeans_train(
-                    emb, n_centroids=16, n_iter=2, train_sample_rate=rate
-                )
+        got = _pairs(
+            similarity.ivf_topk(
+                emb, n_probe=4, query_ids=list(range(10)), k=5, centroids=build.result
             )
-            got = _pairs(
-                similarity.ivf_topk(
-                    emb, n_probe=4, query_ids=list(range(10)), k=5, centroids=build.result
-                )
-            )
-            per_rate[f"rate_{rate}"] = {
-                "build_sec": build.median,
-                "recall_at_5": round(len(got & truth) / len(truth), 3),
-            }
-
-        # PQ index CONSTRUCTION cost (round-12 verdict item 6: the serve
-        # entries read the persisted codebook+codes, so train-once/serve-many
-        # stays honest only while build cost has a measured row). Same
-        # (m, k, n_iter, dim) as the serve entries' load_or_build_pq_index
-        # defaults; the encode is materialized through the noop sink.
-        def train(emb=emb):
-            cb = pq.pq_train(emb, n_iter=1)
-            return cb, cb.count()
-
-        tr = _timed(train)
-        cb, cb_rows = tr.result
-        enc = _timed(lambda: _materialize(pq.pq_encode(emb, cb)))
-        per_rate["pq_index"] = {
-            "codebook_train_sec": tr.median,
-            "corpus_encode_sec": enc.median,
-            "codebook_rows": cb_rows,
-            "n_vectors": emb.count(),
+        )
+        per_rate[f"rate_{rate}"] = {
+            "build_sec": build.median,
+            "recall_at_5": round(len(got & truth) / len(truth), 3),
         }
-        out[label] = per_rate
-    return out
+
+    # PQ index CONSTRUCTION cost (round-12 verdict item 6: the serve
+    # entries read the persisted codebook+codes, so train-once/serve-many
+    # stays honest only while build cost has a measured row). Same
+    # (m, k, n_iter, dim) as the serve entries' load_or_build_pq_index
+    # defaults; the encode is materialized through the noop sink.
+    def train():
+        cb = pq.pq_train(emb, n_iter=1)
+        return cb, cb.count()
+
+    tr = _timed(train)
+    cb, cb_rows = tr.result
+    enc = _timed(lambda: _materialize(pq.pq_encode(emb, cb)))
+    per_rate["pq_index"] = {
+        "codebook_train_sec": tr.median,
+        "corpus_encode_sec": enc.median,
+        "codebook_rows": cb_rows,
+        "n_vectors": emb.count(),
+    }
+    return per_rate
 
 
-def _ivfpq_serve_bench(spark, sf_dirs: list[tuple[str, str]]) -> dict:
+def _ivfpq_serve_bench(spark, sf_dir: str) -> dict:
     """Composed IVF-PQ+R serve-path accuracy/cost beyond fixture scale
     (round-8 verdict item 7): for the same 10 queries, wall clock +
     recall@10 under three strategies — exact brute force (the floor and
@@ -796,71 +777,69 @@ def _ivfpq_serve_bench(spark, sf_dirs: list[tuple[str, str]]) -> dict:
             row["recall_at_10"] = round(len(t.result & truth) / len(truth), 3)
         return row
 
-    out: dict = {}
-    for label, d in sf_dirs:
-        emb = load_table(spark, d, "embeddings")
-        emb.persist()
-        n_vec = emb.count()
-        q_df = emb.filter(F.col("vec_id") < 10)
+    emb = load_table(spark, sf_dir, "embeddings")
+    emb.persist()
+    n_vec = emb.count()
+    q_df = emb.filter(F.col("vec_id") < 10)
 
-        brute = _timed(lambda: _pairs(similarity.brute_force_topk(q_df, emb, k=10)))
-        cos_truth = brute.result
+    brute = _timed(lambda: _pairs(similarity.brute_force_topk(q_df, emb, k=10)))
+    cos_truth = brute.result
 
-        # exact integer-L2 truth for the IVFPQ re-rank metric
-        qv = q_df.selectExpr("vec_id as query_id", f"{quantize_sql('embedding')} as qv")
-        cv = emb.selectExpr("vec_id as cand_id", f"{quantize_sql('embedding')} as cv")
-        l2 = (
-            F.broadcast(qv)
-            .crossJoin(cv)
-            .filter(F.col("query_id") != F.col("cand_id"))
-            .selectExpr("query_id", "cand_id", f"{pq._isq_dist_sql('qv', 'cv')} as d")
-        )
-        wl = Window.partitionBy("query_id").orderBy(
-            F.col("d").asc(), F.col("cand_id").asc()
-        )
-        l2_truth = _pairs(
-            l2.withColumn("rk", F.row_number().over(wl)).filter(F.col("rk") <= 10)
-        )
+    # exact integer-L2 truth for the IVFPQ re-rank metric
+    qv = q_df.selectExpr("vec_id as query_id", f"{quantize_sql('embedding')} as qv")
+    cv = emb.selectExpr("vec_id as cand_id", f"{quantize_sql('embedding')} as cv")
+    l2 = (
+        F.broadcast(qv)
+        .crossJoin(cv)
+        .filter(F.col("query_id") != F.col("cand_id"))
+        .selectExpr("query_id", "cand_id", f"{pq._isq_dist_sql('qv', 'cv')} as d")
+    )
+    wl = Window.partitionBy("query_id").orderBy(
+        F.col("d").asc(), F.col("cand_id").asc()
+    )
+    l2_truth = _pairs(
+        l2.withColumn("rk", F.row_number().over(wl)).filter(F.col("rk") <= 10)
+    )
 
-        cents, lists = similarity.load_or_build_ivf_index(
-            spark, emb, d, n_centroids=16, n_iter=1, train_sample_rate=0.5
+    cents, lists = similarity.load_or_build_ivf_index(
+        spark, emb, sf_dir, n_centroids=16, n_iter=1, train_sample_rate=0.5
+    )
+    lists.persist().count()
+    ivf = _timed(
+        lambda: _pairs(
+            similarity.ivf_topk(
+                emb, n_probe=4, query_ids=list(range(10)), k=10,
+                centroids=cents, assignments=lists,
+            )
         )
-        lists.persist().count()
-        ivf = _timed(
+    )
+
+    # persisted PQ index (train-once discipline, same as the IVF lists
+    # above) — this section prices the QUERY path, not construction
+    cb, codes = pq.load_or_build_pq_index(spark, emb, sf_dir)
+    codes.persist().count()
+
+    out = {
+        "n_vectors": n_vec,
+        "bruteforce": _pack(brute),
+        "ivf_nprobe4": _pack(ivf, cos_truth),
+    }
+    # shortlist sweep: the re-rank is exact, so recall is bounded by
+    # ADC shortlist quality — record the accuracy/cost knob, not one
+    # arbitrary point
+    for short in (40, 100):
+        served = _timed(
             lambda: _pairs(
-                similarity.ivf_topk(
-                    emb, n_probe=4, query_ids=list(range(10)), k=10,
-                    centroids=cents, assignments=lists,
+                pq.ivfpq_topk(
+                    q_df, lists, cents, codes, cb, emb,
+                    n_probe=4, shortlist=short, k_top=10,
                 )
             )
         )
-
-        # persisted PQ index (train-once discipline, same as the IVF lists
-        # above) — this section prices the QUERY path, not construction
-        cb, codes = pq.load_or_build_pq_index(spark, emb, d)
-        codes.persist().count()
-
-        out[label] = {
-            "n_vectors": n_vec,
-            "bruteforce": _pack(brute),
-            "ivf_nprobe4": _pack(ivf, cos_truth),
-        }
-        # shortlist sweep: the re-rank is exact, so recall is bounded by
-        # ADC shortlist quality — record the accuracy/cost knob, not one
-        # arbitrary point
-        for short in (40, 100):
-            served = _timed(
-                lambda: _pairs(
-                    pq.ivfpq_topk(
-                        q_df, lists, cents, codes, cb, emb,
-                        n_probe=4, shortlist=short, k_top=10,
-                    )
-                )
-            )
-            out[label][f"ivfpq_r_nprobe4_short{short}"] = _pack(served, l2_truth)
-        codes.unpersist()
-        lists.unpersist()
-        emb.unpersist()
+        out[f"ivfpq_r_nprobe4_short{short}"] = _pack(served, l2_truth)
+    codes.unpersist()
+    lists.unpersist()
+    emb.unpersist()
     return out
 
 
@@ -964,9 +943,7 @@ def _bitext_clustered_bench(spark, *, probes=(1, 2, 4)) -> dict:
     }
 
 
-def _bitext_serve_bench(
-    spark, queries, points: list[tuple[str, str]], prior_points: list[dict]
-) -> dict:
+def _bitext_serve_bench(spark, queries, points: list[tuple], gate: _Gate) -> dict:
     """Bitext mining: exact bipartite baseline vs the IVF-composed serve
     path (similarity_bitext_ivf), with MEASURED pair recall — served ∩
     exact / exact — so the catalog's scale-path claim carries a number the
@@ -978,35 +955,33 @@ def _bitext_serve_bench(
     (UNclustered — adversarial for cell pruning, the honest worst case;
     real multilingual encoders cluster by language/topic and prune far
     better) per scale point, plus the clustered fixture's recall-vs-probes
-    curve (the realistic regime). A point whose exact + served seconds in
-    ``prior_points`` (the previous run's) exceed the budget left is named
-    in ``points_skipped`` instead of running."""
-    prior = {p["sf"]: p.get("exact_sec", 0.0) + p.get("served_sec", 0.0) for p in prior_points}
+    curve (the realistic regime). Each point is a ``_per_point`` unit; a
+    point the gate skips is named in ``points_skipped``."""
     out: dict = {"points": []}
     # Clustered curve first: it is the cheap, fixed-size block.
     try:
         out["clustered"] = _bitext_clustered_bench(spark)
     except Exception as exc:  # noqa: BLE001 - keep the section alive
         out["clustered_error"] = f"{type(exc).__name__}: {exc}"[:300]
-    for label, d in points:
-        if not _fits(prior.get(label)):
-            out.setdefault("points_skipped", []).append(
-                f"{label}: budget ({prior.get(label, 0):.0f}s last run, "
-                f"{budget_remaining():.0f}s left)"
-            )
-            continue
-        exact = _timed(lambda: _pairs(queries["similarity_bitext_mining"](spark, d), "a_id", "b_id"))
-        served = _timed(lambda: _pairs(queries["similarity_bitext_ivf"](spark, d), "a_id", "b_id"))
-        out["points"].append(
-            {
-                "sf": label,
-                "exact_sec": exact.median,
-                "exact_pairs": len(exact.result),
-                "served_sec": served.median,
-                "served_pairs": len(served.result),
-                **_pair_scores(served.result, exact.result),
-            }
-        )
+
+    def point(label: str, d: str) -> dict:
+        exact, served = [
+            _timed(lambda q=q: _pairs(queries[q](spark, d), "a_id", "b_id"))
+            for q in ("similarity_bitext_mining", "similarity_bitext_ivf")
+        ]
+        return {
+            "sf": label,
+            "exact_sec": exact.median,
+            "exact_pairs": len(exact.result),
+            "served_sec": served.median,
+            "served_pairs": len(served.result),
+            **_pair_scores(served.result, exact.result),
+        }
+
+    done, skipped = _per_point(gate, "bitext_serve", points, point)
+    out["points"] = list(done.values())
+    if skipped:
+        out["points_skipped"] = [f"{label}: budget" for label in skipped]
     return out
 
 
@@ -1214,9 +1189,6 @@ def _exact_join_bench(spark, sf_dir: str) -> dict:
     advice in the operator docstring carries numbers: candidate volumes,
     verified-pair counts, measured LSH recall (e4), and median-of-2
     seconds per path."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
     from data_ingestion_bra_spark.operators import dedup
     from data_ingestion_bra_spark.sources.tables import load_table
 
@@ -1251,33 +1223,13 @@ def _exact_join_bench(spark, sf_dir: str) -> dict:
         "lsh_sec": lsh.median,
     }
     # candidate volumes, once (the cost drivers behind the seconds)
-    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    sizes = sh.groupBy("doc").agg(F.count("*").alias("sz"))
-    ordered = (
-        sh.join(dfreq, "shingle")
-        .join(sizes, "doc")
-        .withColumn(
-            "pos",
-            F.row_number().over(
-                Window.partitionBy("doc").orderBy(F.asc("df"), F.asc("shingle"))
-            ),
-        )
-    )
-    prefix_rows = ordered.filter(F.expr("pos <= sz - (sz * 5000 + 9999) div 10000 + 1"))
-    out["n_cand_prefix"] = (
-        prefix_rows.alias("a")
-        .join(prefix_rows.alias("b"), "shingle")
-        .filter(F.col("a.doc") < F.col("b.doc"))
-        .select(F.col("a.doc"), F.col("b.doc"))
-        .distinct()
-        .count()
-    )
+    out["n_cand_prefix"] = dedup.prefix_filter_candidates(sh, tau_e4=5000).count()
     out["n_cand_lsh"] = lsh_pairs().count()
     sh.unpersist()
     return out
 
 
-def _linkage_bench(spark, points: list[tuple[str, str]]) -> dict:
+def _linkage_bench(spark, sf_dir: str, *, passes: int) -> dict:
     """Fellegi-Sunter linkage priced at scale (round-11 verdict item 7):
     candidate-pair volume under PROGRESSIVELY FINER blocking keys plus
     end-to-end scoring throughput. The point being proven: blocking on
@@ -1300,109 +1252,105 @@ def _linkage_bench(spark, points: list[tuple[str, str]]) -> dict:
     # at sf1 (width 1000) while the per-width pair COUNTS still document
     # the quadratic blow-up of the coarse blocking.
     pair_cap = 8_000_000
-    out: dict = {}
-    for label, d in points:
-        c = load_table(spark, d, "customer")
-        n_rows = c.count()
-        # side b perturbs balance, segment, name and nation so the
-        # comparators see near-matches
-        cents_a = "CAST(ROUND(c_acctbal * 100) AS BIGINT)"
-        cents_b = f"({cents_a} + (c_custkey % 7) * 100)"
-        seg_a = "c_mktsegment"
-        seg_b = "CASE WHEN c_custkey % 13 = 0 THEN reverse(c_mktsegment) ELSE c_mktsegment END"
+    c = load_table(spark, sf_dir, "customer")
+    n_rows = c.count()
+    # side b perturbs balance, segment, name and nation so the
+    # comparators see near-matches
+    cents_a = "CAST(ROUND(c_acctbal * 100) AS BIGINT)"
+    cents_b = f"({cents_a} + (c_custkey % 7) * 100)"
+    seg_a = "c_mktsegment"
+    seg_b = "CASE WHEN c_custkey % 13 = 0 THEN reverse(c_mktsegment) ELSE c_mktsegment END"
 
-        def blocking_key(seg: str, cents: str, width: int) -> list:
-            return [F.expr(seg).alias("blk_seg"), F.expr(f"{cents} div {width}").alias("bucket")]
+    def blocking_key(seg: str, cents: str, width: int) -> list:
+        return [F.expr(seg).alias("blk_seg"), F.expr(f"{cents} div {width}").alias("bucket")]
 
-        per_width: dict = {}
-        chosen = None
-        for width in (10_000, 1_000, 100):
-            a_cells, b_cells = (
-                c.select(*blocking_key(seg, cents, width))
-                .groupBy("blk_seg", "bucket")
-                .agg(F.count(F.lit(1)).alias(n))
-                for seg, cents, n in ((seg_a, cents_a, "na"), (seg_b, cents_b, "nb"))
-            )
-            stats = (
-                a_cells.join(b_cells, ["blk_seg", "bucket"])
-                .agg(
-                    F.sum(F.col("na") * F.col("nb")).alias("pairs"),
-                    F.max(F.col("na") * F.col("nb")).alias("max_cell"),
-                    F.count(F.lit(1)).alias("cells"),
-                )
-                .collect()[0]
-            )
-            n_pairs = int(stats["pairs"] or 0)
-            per_width[f"width_{width}"] = {
-                "n_blocking_cells": int(stats["cells"]),
-                "n_candidate_pairs": n_pairs,
-                "max_cell_pairs": int(stats["max_cell"] or 0),
-            }
-            if chosen is None and n_pairs <= pair_cap:
-                chosen = width
-        if chosen is None:
-            chosen = 100
-        # end-to-end scoring leg on the chosen blocking width: blocked
-        # equi-join -> comparators -> verdict counts, one job per pass
-        a = c.select(
-            F.col("c_custkey").alias("a_key"),
-            F.col("c_name").alias("name_a"),
-            F.expr("substring(c_name, length(c_name) - 2, 3)").alias("suffix_a"),
-            F.expr(cents_a).alias("cents_a"),
-            F.col("c_nationkey").alias("nation_a"),
-            *blocking_key(seg_a, cents_a, chosen),
+    per_width: dict = {}
+    chosen = None
+    for width in (10_000, 1_000, 100):
+        a_cells, b_cells = (
+            c.select(*blocking_key(seg, cents, width))
+            .groupBy("blk_seg", "bucket")
+            .agg(F.count(F.lit(1)).alias(n))
+            for seg, cents, n in ((seg_a, cents_a, "na"), (seg_b, cents_b, "nb"))
         )
-        b = c.select(
-            F.col("c_custkey").alias("b_key"),
-            F.expr(
-                "CASE WHEN c_custkey % 5 = 0"
-                " THEN replace(c_name, 'Customer', 'Custmer') ELSE c_name END"
-            ).alias("name_b"),
-            F.expr("substring(c_name, length(c_name) - 2, 3)").alias("suffix_b"),
-            F.expr(cents_b).alias("cents_b"),
-            F.expr(
-                "CASE WHEN c_custkey % 11 = 0 THEN (c_nationkey + 1) % 25"
-                " ELSE c_nationkey END"
-            ).alias("nation_b"),
-            *blocking_key(seg_b, cents_b, chosen),
-        )
-        comparators = [
-            ("name", F.expr("levenshtein(name_a, name_b) <= 1"), 320, -160),
-            ("suffix", F.col("suffix_a") == F.col("suffix_b"), 300, -100),
-            ("acctbal", F.expr("abs(cents_a - cents_b) <= 700"), 250, -180),
-            ("nation", F.col("nation_a") == F.col("nation_b"), 120, -220),
-        ]
-
-        def score(a=a, b=b, comparators=comparators):
-            scored = fellegi_sunter_score(
-                a.join(b, ["blk_seg", "bucket"]),
-                comparators,
-                match_threshold_e2=600,
-                possible_threshold_e2=150,
+        stats = (
+            a_cells.join(b_cells, ["blk_seg", "bucket"])
+            .agg(
+                F.sum(F.col("na") * F.col("nb")).alias("pairs"),
+                F.max(F.col("na") * F.col("nb")).alias("max_cell"),
+                F.count(F.lit(1)).alias("cells"),
             )
-            return scored.agg(
-                F.count(F.lit(1)).alias("n_pairs"),
-                F.sum((F.col("verdict") == "match").cast("bigint")).alias("n_match"),
-                F.sum((F.col("verdict") == "possible").cast("bigint")).alias(
-                    "n_possible"
-                ),
-            ).collect()[0]
-
-        t = _timed(score, passes=3 if label == "sf1" else 1)
-        counts = t.result
-        n_scored = int(counts["n_pairs"])
-        out[label] = {
-            "n_rows_per_side": n_rows,
-            "blocking": per_width,
-            "scored_width": chosen,
-            "scored_pairs": n_scored,
-            "scored_sec": t.median,
-            "scored_sec_spread": t.spread,
-            "pairs_per_sec": int(n_scored / t.median) if t.median > 0 else None,
-            "n_match": int(counts["n_match"] or 0),
-            "n_possible": int(counts["n_possible"] or 0),
+            .collect()[0]
+        )
+        n_pairs = int(stats["pairs"] or 0)
+        per_width[f"width_{width}"] = {
+            "n_blocking_cells": int(stats["cells"]),
+            "n_candidate_pairs": n_pairs,
+            "max_cell_pairs": int(stats["max_cell"] or 0),
         }
-    return out
+        if chosen is None and n_pairs <= pair_cap:
+            chosen = width
+    chosen = chosen or 100
+    # end-to-end scoring leg on the chosen blocking width: blocked
+    # equi-join -> comparators -> verdict counts, one job per pass
+    a = c.select(
+        F.col("c_custkey").alias("a_key"),
+        F.col("c_name").alias("name_a"),
+        F.expr("substring(c_name, length(c_name) - 2, 3)").alias("suffix_a"),
+        F.expr(cents_a).alias("cents_a"),
+        F.col("c_nationkey").alias("nation_a"),
+        *blocking_key(seg_a, cents_a, chosen),
+    )
+    b = c.select(
+        F.col("c_custkey").alias("b_key"),
+        F.expr(
+            "CASE WHEN c_custkey % 5 = 0"
+            " THEN replace(c_name, 'Customer', 'Custmer') ELSE c_name END"
+        ).alias("name_b"),
+        F.expr("substring(c_name, length(c_name) - 2, 3)").alias("suffix_b"),
+        F.expr(cents_b).alias("cents_b"),
+        F.expr(
+            "CASE WHEN c_custkey % 11 = 0 THEN (c_nationkey + 1) % 25"
+            " ELSE c_nationkey END"
+        ).alias("nation_b"),
+        *blocking_key(seg_b, cents_b, chosen),
+    )
+    comparators = [
+        ("name", F.expr("levenshtein(name_a, name_b) <= 1"), 320, -160),
+        ("suffix", F.col("suffix_a") == F.col("suffix_b"), 300, -100),
+        ("acctbal", F.expr("abs(cents_a - cents_b) <= 700"), 250, -180),
+        ("nation", F.col("nation_a") == F.col("nation_b"), 120, -220),
+    ]
+
+    def score():
+        scored = fellegi_sunter_score(
+            a.join(b, ["blk_seg", "bucket"]),
+            comparators,
+            match_threshold_e2=600,
+            possible_threshold_e2=150,
+        )
+        return scored.agg(
+            F.count(F.lit(1)).alias("n_pairs"),
+            F.sum((F.col("verdict") == "match").cast("bigint")).alias("n_match"),
+            F.sum((F.col("verdict") == "possible").cast("bigint")).alias(
+                "n_possible"
+            ),
+        ).collect()[0]
+
+    t = _timed(score, passes=passes)
+    counts = t.result
+    n_scored = int(counts["n_pairs"])
+    return {
+        "n_rows_per_side": n_rows,
+        "blocking": per_width,
+        "scored_width": chosen,
+        "scored_pairs": n_scored,
+        "scored_sec": t.median,
+        "scored_sec_spread": t.spread,
+        "pairs_per_sec": int(n_scored / t.median) if t.median > 0 else None,
+        "n_match": int(counts["n_match"] or 0),
+        "n_possible": int(counts["n_possible"] or 0),
+    }
 
 
 def _skipping_bench(spark, sf_dir: str) -> dict:
@@ -1583,12 +1531,7 @@ def build_compact_line(payload: dict, *, limit: int = 1900) -> str:
         compact.pop("mode", None)
         line = json.dumps(compact)
     if len(line) > limit:
-        compact["queries"] = {
-            k: v
-            for k, v in sorted(
-                compact["queries"].items(), key=lambda kv: -kv[1]
-            )[:15]
-        }
+        compact["queries"] = dict(sorted(compact["queries"].items(), key=lambda kv: -kv[1])[:15])
         compact["queries_truncated"] = True
         line = json.dumps(compact)
     return line
@@ -1601,10 +1544,8 @@ _BUDGET_START = time.monotonic()
 
 
 def total_budget_sec() -> float:
-    """Total wall-clock budget for the WHOLE bench run. The driver runs
-    bench.py under a timeout it never advertises; rounds 4/6/7 each died a
-    different death (stdout overflow, OOM, SIGTERM on timeout) because the
-    default section list assumed unbounded time. The default is deliberately
+    """Total wall-clock budget for the WHOLE bench run: a caller may run
+    bench.py under a timeout it never advertises, so the default is
     conservative — a full-evidence local run sets
     SPARK_GRAFT_TOTAL_BUDGET_SEC=7200 explicitly."""
     return float(os.environ.get("SPARK_GRAFT_TOTAL_BUDGET_SEC", "1500"))
@@ -1640,12 +1581,9 @@ def _record_error(payload: dict, where: str, exc: Exception) -> None:
 
 def _run_section(payload: dict, name: str, fn, spark=None) -> None:
     """Run one bench section; a failure records an error instead of killing
-    the run. Round 6's official artifact died ``parsed: null`` because the
-    sf10 scaling loop and the headline ``_time_queries`` calls were the only
-    sections NOT guarded — one executor OOM zeroed the whole round's bench
-    record. Every section now goes through this guard, and the artifact is
-    re-emitted after EVERY section (not only at exit): the driver parses the
-    LAST stdout line, so even an un-trappable SIGKILL loses at most the
+    the run (round 6 lost its whole artifact to one unguarded executor
+    OOM). The artifact is re-emitted after EVERY section: a caller parses
+    the LAST stdout line, so even an un-trappable SIGKILL loses at most the
     in-flight section.
 
     ``SPARK_GRAFT_FAIL_SECTION=<name>`` injects a deterministic failure at
@@ -1706,45 +1644,121 @@ def _section_hygiene(spark) -> None:
         pass
 
 
-def _fits(prior_sec: float | None) -> bool:
-    """The measured gate: work that took ``prior_sec`` in the previous run
-    (None = never measured) runs while the budget left covers it."""
-    return (prior_sec or 0.0) <= budget_remaining()
+class _Skip(BaseException):
+    """A gated unit the budget left cannot cover: a BaseException, like
+    SIGTERM's SystemExit, so ``except Exception`` guards let it through."""
+
+
+class _Gate:
+    """The measured gate. A gated unit — a section, a point
+    ``<section>:<point>``, a replica build ``replica:<name>`` — runs while
+    its figure in the previous run's ``gate_seconds`` (none: ``unmeasured``,
+    default 0) fits the budget left and half the total budget, and is
+    named in ``sections_skipped`` otherwise. This run's ``gate_seconds`` start as the previous run's, so
+    a unit skipped or not selected keeps its figure. A unit that runs
+    records its seconds less those of the units run inside it, so each
+    second is charged once; a unit cut short (an error, the SIGTERM
+    unwind) records its seconds so far, a lower bound."""
+
+    def __init__(self, payload: dict, prior: dict):
+        self.payload, self.prior = payload, prior
+        self.seconds = payload.setdefault("gate_seconds", dict(prior))
+        self.open: list[list] = []  # [name, start, inner units' seconds], outermost first
+
+    def rest(self) -> float:
+        """Seconds the units in flight still need by their figures."""
+        now = time.monotonic()
+        return sum(max(0.0, self.prior.get(n, 0.0) - (now - t0)) for n, t0, _ in self.open)
+
+    @contextlib.contextmanager
+    def unit(self, name: str, *, unmeasured: float = 0.0, extra: float = 0.0):
+        """Run the ``with`` body as unit ``name`` needing its figure plus
+        ``extra`` seconds; raise ``_Skip`` when the budget left is short."""
+        figure = self.prior.get(name, unmeasured)
+        need = figure + extra
+        # one unit may take at most half the run, so a single costly point
+        # cannot starve every later section of the window
+        if need > budget_remaining() or figure > total_budget_sec() / 2:
+            self.payload.setdefault("sections_skipped", []).append(
+                f"{name}: budget (needs {need:.0f}s, {budget_remaining():.0f}s of "
+                f"{total_budget_sec():.0f}s left, at most half per unit)"
+            )
+            raise _Skip(name)
+        t0 = time.monotonic()
+        self.open.append([name, t0, 0.0])
+        skipped = False
+        try:
+            yield
+        except _Skip:  # a replica build the unit starts with did not fit
+            skipped = True
+            raise
+        finally:
+            inner = self.open.pop()[2]
+            if not skipped:  # done, failed or cut short (then a lower bound)
+                took = time.monotonic() - t0
+                if self.open:
+                    self.open[-1][2] += took
+                self.seconds[name] = round(took - inner, 1)
 
 
 class _Run:
     """What the sections read: the session, the catalog, the headline SF,
-    the payload, the previous run's payload (the measured gate's figures)
-    and the 10x/100x replicas of sf0.1, resolved (built on first use) only
-    when a section that needs one runs."""
+    the payload, the measured gate and the 10x/100x replicas of sf0.1,
+    resolved (built on first use, as a gated unit) only when a section that
+    needs one runs."""
 
-    def __init__(self, spark, sf_dir: str, payload: dict, prior: dict):
-        self.spark, self.sf_dir, self.payload, self.prior = spark, sf_dir, payload, prior
+    def __init__(self, spark, sf_dir: str, payload: dict, gate: _Gate):
+        self.spark, self.sf_dir, self.payload, self.gate = spark, sf_dir, payload, gate
         self.queries = get_queries()
 
-    @functools.cached_property
+    @property
     def sf1(self) -> str:
         # 10x: shuffle/AQE behavior at real shuffle sizes
         return self._replica("sf1", 10)
 
-    @functools.cached_property
+    @property
     def sf10(self) -> str:
         # 100x (~1.7 GB parquet, 60M-row lineitem, 500k docs in bounded
         # near-dup families): 'the plan would hold at 100x' as a number
         return self._replica("sf10", 100)
 
-    @staticmethod
-    def _replica(name: str, factor: int) -> str:
-        d = _replica_dir(name, factor)
+    def _replica(self, name: str, factor: int) -> str:
+        """An absent replica is built as unit ``replica:<name>``, which
+        must fit on top of what the running section still needs. A build
+        never measured starts only while half the total budget is left."""
+        d: str | None = str(_DATA / name)
+        if not (_DATA / name / "_COMPLETE").exists():
+            with self.gate.unit(
+                f"replica:{name}", unmeasured=total_budget_sec() / 2, extra=self.gate.rest()
+            ):
+                d = _replica_dir(name, factor)
         if d is None:  # the build error is on stderr
             raise RuntimeError(f"{name} replica unavailable")
         return d
 
-    def replicas(self) -> list[tuple[str, str]]:
-        return [("sf1", self.sf1), ("sf10", self.sf10)]
+    def replicas(self) -> list[tuple]:  # for _per_point
+        return [("sf1", lambda: self.sf1), ("sf10", lambda: self.sf10)]
+
+    def per_replica(self, section: str, bench) -> dict:
+        """``{label: bench(spark, sf_dir)}`` over the replica points."""
+        return _per_point(self.gate, section, self.replicas(), lambda _, d: bench(self.spark, d))[0]
 
     def materialize(self, name: str, sf_dir: str) -> None:
         _materialize(self.queries[name](self.spark, sf_dir))
+
+
+def _per_point(gate: _Gate, section: str, points: list[tuple], fn) -> tuple[dict, list[str]]:
+    """``fn(label, sf_dir)`` per (label, resolver) point, each a gated unit
+    ``<section>:<label>`` that resolves its directory first, so a skipped
+    point leaves the others running. Returns results by label, skipped labels."""
+    done, skipped = {}, []
+    for label, resolve in points:
+        try:
+            with gate.unit(f"{section}:{label}"):
+                done[label] = fn(label, resolve())
+        except _Skip:
+            skipped.append(label)
+    return done, skipped
 
 
 def _headline(r: _Run) -> dict:
@@ -1782,18 +1796,17 @@ def _sf1_queries(r: _Run) -> dict:
 
 
 def _scale_probe(r: _Run, key: str, sf_dir: str, names: tuple[str, ...]) -> dict:
-    """Single-shot replica points for plan-sensitive rows. Each point is
-    gated on its figure in the previous run (an in-flight materialization
-    can't be truncated) and guarded, so a failure is a named error, not a
-    lost section."""
-    prior = r.prior.get(key, {})
+    """Single-shot replica points for plan-sensitive rows. Each point is a
+    gated unit ``<key>:<name>`` (an in-flight materialization can't be
+    truncated) and guarded, so a failure is a named error, not a lost
+    section."""
     probe: dict[str, float] = {}
     for name in names:
-        if not _fits(prior.get(name)):
-            r.payload.setdefault("sections_skipped", []).append(f"{key}:{name}: budget")
-            continue
         try:
-            probe[name] = _timed(lambda: r.materialize(name, sf_dir)).median
+            with r.gate.unit(f"{key}:{name}"):
+                probe[name] = _timed(lambda: r.materialize(name, sf_dir)).median
+        except _Skip:
+            continue
         except Exception as exc:  # noqa: BLE001 - keep the section alive
             _record_error(r.payload, f"{key}:{name}", exc)
     return {key: probe}
@@ -1807,10 +1820,16 @@ def _contamination_sf10(r: _Run) -> dict:
     return {"contamination_crossover": _contamination_crossover(r.spark, r.sf10)}
 
 
+def _linkage(r: _Run) -> dict:
+    def bench(label: str, sf_dir: str) -> dict:  # one pass at the costly sf10
+        return _linkage_bench(r.spark, sf_dir, passes=3 if label == "sf1" else 1)
+
+    return {"linkage_bench": _per_point(r.gate, "linkage_bench", r.replicas(), bench)[0]}
+
+
 def _bitext_serve(r: _Run) -> dict:
-    points = [(Path(r.sf_dir).name, r.sf_dir), ("sf1", r.sf1)]
-    prior_points = r.prior.get("bitext_serve_bench", {}).get("points", [])
-    return {"bitext_serve_bench": _bitext_serve_bench(r.spark, r.queries, points, prior_points)}
+    points = [(Path(r.sf_dir).name, lambda: r.sf_dir), ("sf1", lambda: r.sf1)]
+    return {"bitext_serve_bench": _bitext_serve_bench(r.spark, r.queries, points, r.gate)}
 
 
 def _sf10_scaling(r: _Run) -> dict:
@@ -1819,21 +1838,24 @@ def _sf10_scaling(r: _Run) -> dict:
     3 samples run consecutively per scale point, so samples 2-3 are warm
     and the median is the plan, not the page cache (interleaving 14 other
     sf10 inputs between samples once manufactured a ~78 s phantom simhash
-    regression). A point whose 3 samples took longer in the previous run
-    than the budget left is named in ``sf10_truncated``; a failed point is
-    a named error."""
-    prior = r.prior.get("queries_scaling_full_corpus", {})
+    regression). Each point is a gated unit ``sf10_scaling:<query>@<sf>``
+    that resolves its replica; a point the gate skips is named in
+    ``sf10_truncated``, a failed point is a named error."""
     scaling: dict = {n: {} for n in SF10_QUERIES}
     spread: dict = {n: {} for n in SF10_QUERIES}
     truncated: list[str] = []
+    dirs: dict[str, str] = {}
+    resolve = {"sf0.1": lambda: r.sf_dir, "sf1": lambda: r.sf1, "sf10": lambda: r.sf10}
     for name in SF10_QUERIES:
-        for label, d in [("sf0.1", r.sf_dir), *r.replicas()]:
+        for label, sf_dir in resolve.items():
             key = f"{name}@{label}"
-            if not _fits(3 * prior.get(name, {}).get(label, 0.0)):
+            try:
+                with r.gate.unit(f"sf10_scaling:{key}"):
+                    d = dirs[label] = sf_dir()
+                    t = _timed(lambda: r.materialize(name, d), passes=3)
+            except _Skip:
                 truncated.append(key)
                 continue
-            try:
-                t = _timed(lambda: r.materialize(name, d), passes=3)
             except Exception as exc:  # noqa: BLE001 - keep the section alive
                 _record_error(r.payload, f"sf10:{key}", exc)
                 continue
@@ -1843,7 +1865,7 @@ def _sf10_scaling(r: _Run) -> dict:
         "queries_scaling_full_corpus": scaling,
         "queries_scaling_spread": spread,
         "value_sf10": round(sum(v.get("sf10", 0.0) for v in scaling.values()), 3),
-        "sf10": r.sf10,
+        "sf10": dirs.get("sf10"),
         "sf10_meter": "per-query grouped: 3 consecutive samples per (query, scale) "
         "point — committed medians are warm numbers",
     }
@@ -1866,10 +1888,10 @@ SECTIONS = [
     ("skipping", lambda r: {"skipping_bench": _skipping_bench(r.spark, r.sf_dir)}),
     ("streaming", lambda r: {"streaming_bench": _streaming_bench(r.spark, r.sf_dir)}),
     ("skew", lambda r: {"skew_bench": _skew_bench(r.spark)}),
-    ("ivf_build", lambda r: {"ivf_build_bench": _ivf_build_bench(r.spark, r.replicas())}),
+    ("ivf_build", lambda r: {"ivf_build_bench": r.per_replica("ivf_build", _ivf_build_bench)}),
     (
         "semdedup_scale",
-        lambda r: {"semdedup_scale_bench": _semdedup_scale_bench(r.spark, r.replicas())},
+        lambda r: {"semdedup_scale_bench": r.per_replica("semdedup_scale", _semdedup_scale_bench)},
     ),
     ("contamination_sf10", _contamination_sf10),
     (
@@ -1890,10 +1912,13 @@ SECTIONS = [
         "incremental_dedup",
         lambda r: {"incremental_dedup_bench": _incremental_dedup_bench(r.spark, r.sf1)},
     ),
-    ("linkage_bench", lambda r: {"linkage_bench": _linkage_bench(r.spark, r.replicas())}),
+    ("linkage_bench", _linkage),
     ("trainers", lambda r: {"trainer_bench": _trainer_bench(r.spark, r.sf_dir)}),
     ("pagerank_scale", lambda r: {"pagerank_scale_bench": _pagerank_scale_bench(r.spark)}),
-    ("ivfpq_serve", lambda r: {"ivfpq_serve_bench": _ivfpq_serve_bench(r.spark, r.replicas())}),
+    (
+        "ivfpq_serve",
+        lambda r: {"ivfpq_serve_bench": r.per_replica("ivfpq_serve", _ivfpq_serve_bench)},
+    ),
     ("bitext_serve", _bitext_serve),
     ("exact_join_bench", lambda r: {"exact_join_bench": _exact_join_bench(r.spark, r.sf_dir)}),
     ("sf10_scaling", _sf10_scaling),
@@ -1914,29 +1939,26 @@ def _selected(sections: list) -> list:
     return [(name, fn) for name, fn in sections if name in want]
 
 
-def _run_sections(payload: dict, sections: list, prior_seconds: dict, run=None) -> None:
-    """Run ``sections`` in order through the ``_run_section`` guard. A
-    section whose ``prior_seconds`` exceed the budget left is named in
-    ``sections_skipped`` instead; a never-measured one runs while any
-    budget is left. A skipped section has no seconds in this run's payload,
-    so the next run measures it afresh."""
+def _run_sections(payload: dict, sections: list, gate: _Gate, run=None) -> None:
+    """Run ``sections`` in order, each a gated unit of ``gate`` (a skipped
+    one is named in ``sections_skipped``) and guarded by ``_run_section``."""
     spark = run.spark if run is not None else None
     for name, fn in sections:
-        prior = prior_seconds.get(name)
-        if not _fits(prior):
-            payload.setdefault("sections_skipped", []).append(
-                f"{name}: budget ({prior or 0:.0f}s last run, "
-                f"{budget_remaining():.0f}s of {total_budget_sec():.0f}s left)"
-            )
+        try:
+            with gate.unit(name):
+                _run_section(payload, name, lambda fn=fn: payload.update(fn(run)), spark)
+        except _Skip as skip:
+            if skip.args[0] != name:  # the replica it starts with did not fit
+                payload["sections_skipped"].append(f"{name}: {skip.args[0]} not built")
             continue
-        _run_section(payload, name, lambda fn=fn: payload.update(fn(run)), spark)
         if spark is not None:
             _section_hygiene(spark)
 
 
 def _prior_payload() -> dict:
     """The previous run's BENCH_FULL.json, which this run overwrites: its
-    ``section_seconds`` (and per-point figures) are the gate's estimates."""
+    ``gate_seconds`` are the gate's figures (a payload from before the gate
+    kept only ``section_seconds``)."""
     try:
         return json.loads(_FULL_PATH.read_text())
     except (OSError, ValueError):
@@ -1944,18 +1966,10 @@ def _prior_payload() -> dict:
 
 
 def main() -> None:
-    """Emit-on-partial entry, hardened three ways after rounds 4/6/7 each
-    lost the official artifact to a different death:
-
-    - ``install_signal_handlers``: the driver's timeout SIGTERM becomes
-      SystemExit, so the ``finally`` emit runs (round 7: rc 124, no emit).
-    - per-section emit (``_run_section``): the compact line re-prints after
-      EVERY completed section; the driver reads the LAST stdout line, so
-      even SIGKILL loses at most one section.
-    - total wall-clock budget (``total_budget_sec``): a section that took
-      longer in the previous run than the budget left is named in
-      ``sections_skipped`` instead of overrunning the window.
-    """
+    """Emit-on-partial entry: the SIGTERM handler turns a caller's
+    timeout into a ``finally`` emit, ``_run_section`` re-emits after every
+    section, and the measured gate (``_Gate``) skips, by name, what the
+    budget left cannot cover instead of overrunning the window."""
     install_signal_handlers()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     payload: dict = {
@@ -1969,10 +1983,11 @@ def main() -> None:
         "index_cache": "ivf centroids+lists AND pq codebook+codes persisted across runs (.ivf_cache)",
     }
     prior = _prior_payload()
+    gate = _Gate(payload, prior.get("gate_seconds", prior.get("section_seconds", {})))
     try:
         sections = _selected(SECTIONS)
-        run = _Run(get_spark("bench"), sf_dir, payload, prior)
-        _run_sections(payload, sections, prior.get("section_seconds", {}), run)
+        run = _Run(get_spark("bench"), sf_dir, payload, gate)
+        _run_sections(payload, sections, gate, run)
     except BaseException as exc:  # noqa: BLE001 - record, emit (finally), re-raise
         payload.setdefault("errors", []).append(
             f"fatal: {type(exc).__name__}: {exc}"[:500]

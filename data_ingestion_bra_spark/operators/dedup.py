@@ -571,6 +571,14 @@ def jaccard_prefix_filter_pairs(sh: DataFrame, *, tau_e4: int) -> DataFrame:
 
     Returns (doc_a, doc_b, jaccard_e4) with jaccard_e4 >= tau_e4, rounded
     per the catalog's fixed-point convention."""
+    return jaccard_pairs(
+        sh, min_jaccard=tau_e4 / 10000.0, pair_filter=prefix_filter_candidates(sh, tau_e4=tau_e4)
+    )
+
+
+def prefix_filter_candidates(sh: DataFrame, *, tau_e4: int) -> DataFrame:
+    """The candidate pairs (doc_a < doc_b) of ``jaccard_prefix_filter_pairs``:
+    every pair sharing a prefix shingle, before the exact verify."""
     dfreq = sh.groupBy("shingle").agg(F.count("*").cast("bigint").alias("df"))
     sizes = sh.groupBy("doc").agg(F.count("*").cast("bigint").alias("sz"))
     ordered = (
@@ -591,11 +599,10 @@ def jaccard_prefix_filter_pairs(sh: DataFrame, *, tau_e4: int) -> DataFrame:
         .select("doc", "shingle")
         .localCheckpoint(eager=True)
     )
-    cand = (
+    return (
         prefix.alias("a")
         .join(prefix.alias("b"), "shingle")
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .filter(F.col("doc_a") < F.col("doc_b"))
         .distinct()
     )
-    return jaccard_pairs(sh, min_jaccard=tau_e4 / 10000.0, pair_filter=cand)

@@ -82,7 +82,8 @@ def test_bench_subprocess_emits_compact_line_under_injected_failure(tmp_path):
     env = {
         **os.environ,
         "SPARK_GRAFT_FAIL_SECTION": "headline",
-        # the sections that need no sf1/sf10 replica and no large fixture
+        # the sections that need no large fixture; bitext_serve's sf1 point
+        # is gated out by the prior payload below, so no replica is built
         "SPARK_GRAFT_SECTIONS": ",".join(
             [
                 "headline",
@@ -92,6 +93,7 @@ def test_bench_subprocess_emits_compact_line_under_injected_failure(tmp_path):
                 "overlap_maintenance",
                 "cardinality_maintenance",
                 "trainers",
+                "bitext_serve",
             ]
         ),
         "SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.001",
@@ -104,6 +106,9 @@ def test_bench_subprocess_emits_compact_line_under_injected_failure(tmp_path):
     }
     bench_copy = tmp_path / "bench.py"
     bench_copy.write_text((REPO / "bench.py").read_text())
+    (tmp_path / "BENCH_FULL.json").write_text(
+        json.dumps({"gate_seconds": {"bitext_serve:sf1": 1e6}})
+    )
     proc = subprocess.run(
         [sys.executable, str(bench_copy)],
         env=env,
@@ -121,6 +126,11 @@ def test_bench_subprocess_emits_compact_line_under_injected_failure(tmp_path):
     # committed artifact
     full = json.loads((tmp_path / "BENCH_FULL.json").read_text())
     assert full["errors"][0].startswith("headline:")
+    # bitext_serve ran its headline-SF point; the gate skipped the sf1 one
+    bitext = full["bitext_serve_bench"]
+    assert [p["sf"] for p in bitext["points"]] == ["sf0.001"]
+    assert bitext["points_skipped"] == ["sf1: budget"]
+    assert not (tmp_path / ".data" / "sf1").exists()
 
 
 def test_bench_survives_sigterm_mid_section(tmp_path):
@@ -255,9 +265,9 @@ def test_timed_makes_warm_call_and_reports_median_and_spread(monkeypatch):
 
 
 def test_measured_gate_skips_section_over_budget_and_runs_unmeasured(monkeypatch):
-    """A section whose seconds in the previous payload exceed the budget
+    """A section whose figure in the previous payload exceeds the budget
     left is skipped and named; a section the previous run never measured
-    runs."""
+    runs. Figures of units that did not run are kept for the next run."""
     monkeypatch.setattr(bench, "_emit", lambda p: None)
     monkeypatch.setattr(bench, "budget_remaining", lambda: 100.0)
     ran = []
@@ -267,13 +277,133 @@ def test_measured_gate_skips_section_over_budget_and_runs_unmeasured(monkeypatch
         ("new", lambda run: ran.append("new") or {"new_bench": 1}),
     ]
     payload: dict = {}
-    bench._run_sections(payload, sections, {"slow": 500.0, "fits": 60.0})
+    gate = bench._Gate(payload, {"slow": 500.0, "fits": 60.0, "unselected:sf10": 7.0})
+    bench._run_sections(payload, sections, gate)
     assert ran == ["fits", "new"]
     assert [s.split(":")[0] for s in payload["sections_skipped"]] == ["slow"]
-    assert "500s last run" in payload["sections_skipped"][0]
+    assert "needs 500s" in payload["sections_skipped"][0]
     assert set(payload["section_seconds"]) == {"fits", "new"}
     assert payload["fits_bench"] == payload["new_bench"] == 1
     assert "slow_bench" not in payload
+    # the skipped section keeps its figure for the next run's gate
+    assert payload["gate_seconds"]["slow"] == 500.0
+    assert payload["gate_seconds"]["unselected:sf10"] == 7.0
+    assert set(payload["gate_seconds"]) == {"slow", "fits", "new", "unselected:sf10"}
+
+
+def test_gate_caps_one_unit_at_half_the_total_budget(monkeypatch):
+    """A unit whose figure fits the budget left but exceeds half the total
+    budget is skipped, so one costly point cannot take the whole window."""
+    monkeypatch.setattr(bench, "total_budget_sec", lambda: 1500.0)
+    monkeypatch.setattr(bench, "budget_remaining", lambda: 1000.0)
+    payload: dict = {}
+    gate = bench._Gate(payload, {"semdedup_scale:sf10": 930.0, "bitext_serve:sf1": 450.0})
+    done, skipped = bench._per_point(
+        gate, "semdedup_scale", [("sf10", lambda: "/d")], lambda label, d: d
+    )
+    assert (done, skipped) == ({}, ["sf10"])
+    assert "at most half per unit" in payload["sections_skipped"][0]
+    done, _ = bench._per_point(gate, "bitext_serve", [("sf1", lambda: "/d")], lambda l, d: d)
+    assert done == {"sf1": "/d"}
+
+
+def test_gate_records_seconds_so_far_for_a_unit_cut_short(monkeypatch):
+    """The SIGTERM unwind (SystemExit) through a running section leaves its
+    seconds so far in ``gate_seconds`` as a lower bound, so the next run
+    does not start it blind."""
+    clock = [1000.0]
+    monkeypatch.setattr(bench.time, "monotonic", lambda: clock[0])
+    monkeypatch.setattr(bench, "_emit", lambda p: None)
+    monkeypatch.setattr(bench, "budget_remaining", lambda: 1000.0)
+
+    def killed(run):
+        clock[0] += 42.0
+        raise SystemExit(143)
+
+    payload: dict = {}
+    gate = bench._Gate(payload, {})
+    with pytest.raises(SystemExit):
+        bench._run_sections(payload, [("killed", killed)], gate)
+    assert payload["gate_seconds"] == {"killed": 42.0}
+    assert "section_seconds" not in payload
+    assert gate.open == []
+
+
+def test_replica_build_is_a_gated_unit(tmp_path, monkeypatch):
+    """An absent replica is built only when its build figure plus what the
+    running section still needs fits the budget left; a build never
+    measured starts only while half the total budget is left. A section
+    whose replica does not fit is skipped, not failed."""
+    monkeypatch.setattr(bench, "_DATA", tmp_path)
+    monkeypatch.setattr(bench, "_emit", lambda p: None)
+    monkeypatch.setattr(bench, "total_budget_sec", lambda: 1500.0)
+    monkeypatch.setattr(bench, "budget_remaining", lambda: 400.0)
+    built = []
+
+    def fake_replica_dir(name, factor):
+        built.append(name)
+        (tmp_path / name).mkdir()
+        (tmp_path / name / "_COMPLETE").write_text("ok\n")
+        return str(tmp_path / name)
+
+    monkeypatch.setattr(bench, "_replica_dir", fake_replica_dir)
+    sections = [("needs_sf10", lambda run: {"sf10_dir": run.sf10})]
+
+    # never measured: needs 750 s plus the section's 100 s; 400 s are left
+    payload: dict = {}
+    gate = bench._Gate(payload, {"needs_sf10": 100.0})
+    bench._run_sections(payload, sections, gate, bench._Run(None, "x", payload, gate))
+    assert built == [] and "errors" not in payload
+    assert payload["sections_skipped"][0].startswith("replica:sf10: budget (needs 850s")
+    assert payload["sections_skipped"][1] == "needs_sf10: replica:sf10 not built"
+    assert payload["gate_seconds"] == {"needs_sf10": 100.0}
+
+    # measured at 20 s, but the section still needs 390 s: 410 > 400
+    payload = {}
+    gate = bench._Gate(payload, {"needs_sf10": 390.0, "replica:sf10": 20.0})
+    bench._run_sections(payload, sections, gate, bench._Run(None, "x", payload, gate))
+    assert built == [] and "sf10_dir" not in payload
+    assert payload["gate_seconds"] == {"needs_sf10": 390.0, "replica:sf10": 20.0}
+
+    # 20 + 300 fits: built once, timed, then reused
+    payload = {}
+    gate = bench._Gate(payload, {"needs_sf10": 300.0, "replica:sf10": 20.0})
+    run = bench._Run(None, "x", payload, gate)
+    bench._run_sections(payload, sections, gate, run)
+    assert built == ["sf10"]
+    assert payload["sf10_dir"] == run.sf10 == str(tmp_path / "sf10")
+    assert built == ["sf10"]
+    assert set(payload["gate_seconds"]) == {"needs_sf10", "replica:sf10"}
+    assert "sections_skipped" not in payload
+
+
+def test_per_point_gates_each_point_and_charges_each_second_once(monkeypatch):
+    """A scale point whose figure exceeds the budget left is skipped (its
+    directory never resolved) while the other points run, and a unit's
+    figure leaves out the seconds of the units run inside it."""
+    clock = [0.0]
+    monkeypatch.setattr(bench.time, "monotonic", lambda: clock[0])
+    monkeypatch.setattr(bench, "budget_remaining", lambda: 100.0)
+    resolved = []
+
+    def resolver(label):
+        return lambda: resolved.append(label) or f"/data/{label}"
+
+    def point(label, sf_dir):
+        clock[0] += 30.0
+        return sf_dir
+
+    payload: dict = {}
+    gate = bench._Gate(payload, {"sec:sf10": 500.0})
+    with gate.unit("sec"):
+        clock[0] += 10.0
+        done, skipped = bench._per_point(
+            gate, "sec", [("sf1", resolver("sf1")), ("sf10", resolver("sf10"))], point
+        )
+    assert done == {"sf1": "/data/sf1"} and skipped == ["sf10"]
+    assert resolved == ["sf1"]
+    assert payload["gate_seconds"] == {"sec:sf1": 30.0, "sec:sf10": 500.0, "sec": 10.0}
+    assert payload["sections_skipped"][0].startswith("sec:sf10: budget (needs 500s")
 
 
 def test_sections_env_selects_in_table_order_and_rejects_unknown(monkeypatch):

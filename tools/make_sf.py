@@ -61,6 +61,12 @@ def make_sf(copies: int, src: str, out: str) -> None:
     out_p = Path(out)
     out_p.mkdir(parents=True, exist_ok=True)
     con = duckdb.connect()
+    # Stream each COPY: keeping the input row order made DuckDB buffer the
+    # whole 100x lineitem (~10 GB resident in the bench process that builds
+    # the replica, next to its Spark JVM). Row order within a table is not
+    # part of the replica's contract; the rows are.
+    con.execute("SET preserve_insertion_order = false")
+    con.execute("SET memory_limit = '4GB'")
     for t in PLAIN:
         con.execute(
             f"COPY (SELECT * FROM '{src}/{t}.parquet') TO '{out}/{t}.parquet' (FORMAT PARQUET)"
