@@ -1833,7 +1833,8 @@ def _bitext_serve(r: _Run) -> dict:
 
 
 def _sf10_scaling(r: _Run) -> dict:
-    """FULL-corpus banded LLM-tier paths (no doc_id caps) at sf0.1 / 10x /
+    """FULL-corpus banded LLM-tier paths (no doc_id caps) at the headline
+    SF (labelled by its directory name, ``sf0.1`` by default) / 10x /
     100x, so per-query scaling factors are measured, not argued. A query's
     3 samples run consecutively per scale point, so samples 2-3 are warm
     and the median is the plan, not the page cache (interleaving 14 other
@@ -1845,7 +1846,7 @@ def _sf10_scaling(r: _Run) -> dict:
     spread: dict = {n: {} for n in SF10_QUERIES}
     truncated: list[str] = []
     dirs: dict[str, str] = {}
-    resolve = {"sf0.1": lambda: r.sf_dir, "sf1": lambda: r.sf1, "sf10": lambda: r.sf10}
+    resolve = {Path(r.sf_dir).name: lambda: r.sf_dir, "sf1": lambda: r.sf1, "sf10": lambda: r.sf10}
     for name in SF10_QUERIES:
         for label, sf_dir in resolve.items():
             key = f"{name}@{label}"

@@ -243,31 +243,30 @@ def gopher_quality(
     )
 
 
-def fingerprint_expr(text: Column | str) -> Column:
-    """Document fingerprint: md5 over the normalized text (lowercase,
-    whitespace collapsed) — the exact-dedup key for noisy duplicates."""
+def normalize_text_expr(text: Column | str) -> Column:
+    """Normalized text: lowercase, trimmed, whitespace runs collapsed to one
+    space. Fingerprints hash this, so noisy duplicates share a key."""
     c = F.col(text) if isinstance(text, str) else text
-    return F.md5(F.regexp_replace(F.lower(F.trim(c)), r"\s+", " "))
+    return F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
 
 
 ROLLING_HASH_P = 2147483647  # 2^31 - 1
 ROLLING_HASH_B = 131
 
 
-def rolling_hash_expr(text: Column | str) -> Column:
-    """Polynomial rolling hash over the characters of the normalized text:
-    h = fold(h * B + ascii(c)) mod p. A left-to-right fold of integer ops —
-    bit-identical in any engine (the md5-free fingerprint family used for
-    streaming/windowed fingerprints; per-window substring hashes derive from
-    the same recurrence)."""
-    c = F.col(text) if isinstance(text, str) else text
-    norm = F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
-    # split-between-every-char leaves a trailing "" in Spark — drop it
-    chars = F.filter(F.split(norm, "(?!^)"), lambda ch: ch != "")
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("bigint"),
-        lambda acc, ch: (acc * ROLLING_HASH_B + F.ascii(ch)) % ROLLING_HASH_P,
+def rolling_hash_expr(norm: str) -> Column:
+    """Polynomial rolling hash over the code points of the (already
+    normalized) text column ``norm``: h = fold(h * B + codepoint(c)) mod p.
+    A left-to-right fold of integer ops — bit-identical in any engine (the
+    md5-free fingerprint family used for streaming/windowed fingerprints;
+    per-window substring hashes derive from the same recurrence).
+
+    ``split(norm, '')`` is Spark's code-point split (no regex; a character
+    outside the BMP stays one element). The empty string splits to
+    ``['']``, whose ``ascii`` is 0, so it folds to 0 like an empty fold."""
+    return F.expr(
+        f"aggregate(split({norm}, ''), 0L,"
+        f" (acc, ch) -> (acc * {ROLLING_HASH_B} + ascii(ch)) % {ROLLING_HASH_P})"
     )
 
 
@@ -421,7 +420,7 @@ def winnowing_fingerprints(
     density), so the distinct shuffle carries a sparse relation."""
     if not (1 <= window and 1 <= k):
         raise ValueError("k and window must be >= 1")
-    norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
+    norm = normalize_text_expr(text_col)
     # The whole selection is ROW-LOCAL: no per-position regex split (the
     # first formulation re-split the k-gram with a lookahead regex once per
     # position — 45.6 s at sf0.1), no window shuffle, nothing leaves the
@@ -448,8 +447,7 @@ def winnowing_fingerprints(
     codes = base.selectExpr(
         "doc",
         f"length(norm) - {k} + 1 as np",
-        "transform(filter(split(norm, '(?!^)'), ch -> ch != ''),"
-        " ch -> cast(ascii(ch) as bigint)) as codes",
+        "transform(split(norm, ''), ch -> cast(ascii(ch) as bigint)) as codes",
     )
     # gram hashes: k shifted slices zipped → per-gram struct → unrolled
     # left-fold polynomial (mod at every step, matching rolling_hash_expr)

@@ -36,6 +36,18 @@ def get_spark(
         # keeps it overridable for small boxes/CI.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
         .config("spark.ui.enabled", "false")
+        # Static, and JVM-wide: the CodeGenerator cache reads it once, on
+        # first use. Spark's default (100 entries) is smaller than one
+        # headline pass, so every pass recompiled the classes evicted by
+        # the pass before it with Janino (on the driver and in tasks) and
+        # the JIT then recompiled those fresh classes. Measured at sf0.1:
+        # bench.py's 20-query headline compiles 247 distinct classes and
+        # the 9 llm_curation queries 143; with the cache unbounded a second
+        # pass compiles none. 512 keeps the headline with headroom (the
+        # Guava cache evicts per segment, before the total reaches the cap)
+        # and bounds the classes it pins: the whole catalog compiles ~2,400
+        # at ~55 KB of Metaspace each, so 512 holds at most ~28 MB.
+        .config("spark.sql.codegen.cache.maxEntries", "512")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -79,6 +91,12 @@ def tune_session(spark: SparkSession) -> SparkSession:
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
+        # A persisted relation keeps the output partitioning of its cached
+        # plan: off (Spark's default), a 5k-row signature set persisted
+        # under hashpartitioning(doc, 32) was read back in 32 tasks on every
+        # use. On, AQE coalesces the cached plan's final shuffle like any
+        # other (dedup_minhash_lsh at sf0.01: 64 -> 2 tasks per run).
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
         # dynamic: INSERT OVERWRITE replaces only the partitions present in
         # the incoming data. Spark's default (static) truncates the WHOLE
         # table root first — a second daily ingest run would delete every

@@ -414,3 +414,20 @@ def test_sections_env_selects_in_table_order_and_rejects_unknown(monkeypatch):
         bench._selected(bench.SECTIONS)
     monkeypatch.delenv("SPARK_GRAFT_SECTIONS")
     assert bench._selected(bench.SECTIONS) == bench.SECTIONS
+
+
+def test_sf10_scaling_labels_the_headline_point_by_its_directory(monkeypatch):
+    """The headline-SF point of ``sf10_scaling`` is keyed by the headline
+    directory's name, as in ``bitext_serve``: ``sf0.1`` by default, and
+    ``sf0.001`` when that directory stands in for it."""
+    monkeypatch.setattr(bench, "budget_remaining", lambda: 100.0)
+    for sf in ("sf0.001", "sf0.1"):
+        labels = (sf, "sf1", "sf10")
+        payload: dict = {}
+        # every point's figure is over the budget: each is skipped by name
+        gate = bench._Gate(
+            payload, {f"sf10_scaling:{n}@{l}": 1e6 for n in bench.SF10_QUERIES for l in labels}
+        )
+        out = bench._sf10_scaling(bench._Run(None, f"/data/{sf}", payload, gate))
+        assert out["sf10_truncated"] == [f"{n}@{l}" for n in bench.SF10_QUERIES for l in labels]
+        assert "errors" not in payload

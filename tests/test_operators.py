@@ -3,6 +3,8 @@ from __future__ import annotations
 from datetime import datetime
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
@@ -229,7 +231,7 @@ def test_fingerprint_normalizes(spark):
         [(0, "Hello  World"), (1, "hello world"), (2, "other")],
         "doc_id bigint, text string",
     )
-    fps = [r[0] for r in df.select(text.fingerprint_expr("text")).collect()]
+    fps = [r[0] for r in df.select(F.md5(text.normalize_text_expr("text"))).collect()]
     assert fps[0] == fps[1] != fps[2]
 
 
@@ -1511,6 +1513,36 @@ def test_winnowing_short_doc_yields_nothing(spark):
 
     df = spark.createDataFrame([(1, "tiny")], "doc_id bigint, text string")
     assert winnowing_fingerprints(df, "doc_id", "text", k=8, window=4).count() == 0
+
+
+# code points the rolling-hash fold must treat as one element each: astral
+# emoji (two UTF-16 units), combining marks, the \t\n\r whitespace class
+_FOLD_CHARS = st.one_of(
+    st.characters(codec="utf-8"),
+    st.sampled_from(["\U0001F600", "\U0001D518", "\u0301", "\u0308", "\t", "\n", "\r", " "]),
+)
+
+
+@settings(
+    max_examples=15, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture]
+)
+@given(st.lists(st.text(_FOLD_CHARS, max_size=24), min_size=1, max_size=12))
+@example(["", "   ", "\t\n\r", "a\U0001F600b", "e\u0301", "\U0001F600"])
+def test_rolling_hash_equals_python_code_point_fold(spark, values):
+    """``rolling_hash_expr`` is the fold h = (h * B + ord(c)) mod p over the
+    code points of the normalized text, for any string: the DuckDB twin
+    folds ``ord(substr(norm, i, 1))`` the same way."""
+    from data_ingestion_bra_spark.operators.text import ROLLING_HASH_B, ROLLING_HASH_P
+
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], "i int, t string")
+    n = df.select("i", text.normalize_text_expr("t").alias("norm"))
+    got = n.select("norm", text.rolling_hash_expr("norm").alias("h")).collect()
+    assert len(got) == len(values)
+    for r in got:
+        want = 0
+        for ch in r["norm"]:
+            want = (want * ROLLING_HASH_B + ord(ch)) % ROLLING_HASH_P
+        assert r["h"] == want, (r["norm"], r["h"], want)
 
 
 def test_phrase_search_counts_and_overlaps(spark):

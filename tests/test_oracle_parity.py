@@ -1,8 +1,8 @@
 """Spark vs DuckDB oracle parity, in tier-1, for the near-dup and vector
 entries whose plans share the single MinHash-LSH path and the SQL-string
-vector expressions, and for the ingest cast layer: row count, column names
-and the order-insensitive value hash, through the same check
-``tools/check_oracle.py`` runs over the whole catalog."""
+vector expressions, for the ingest cast layer and for the text folds: row
+count, column names and the order-insensitive value hash, through the same
+check ``tools/check_oracle.py`` runs over the whole catalog."""
 
 from __future__ import annotations
 
@@ -33,6 +33,10 @@ ENTRIES = [
     "similarity_topk_ivfpq",
     # cast layer (functions.cleaning: to_float_pt / to_str / to_int)
     "scalar_cast_suite",
+    # code-point folds over the normalized text (text.rolling_hash_expr,
+    # the winnowing gram codes)
+    "text_fingerprints",
+    "text_winnowing_overlap",
 ]
 
 

@@ -2,8 +2,10 @@
 
 ``get_spark`` must apply the same SQL confs as ``tune_session`` (a session
 built by ``get_spark`` alone once ran with Spark 4's ANSI default on), and
-``sources.tables`` keeps one memo of lazy plan handles keyed by the dataset
-path's stat, so an atomically replaced dataset directory gets a new handle.
+two of them must remove the per-task and per-class fixed costs they were
+set for. ``sources.tables`` keeps one memo of lazy plan handles keyed by
+the dataset path's stat, so an atomically replaced dataset directory gets
+a new handle.
 """
 
 from __future__ import annotations
@@ -11,24 +13,92 @@ from __future__ import annotations
 import os
 import shutil
 
+from data_ingestion_bra_spark.plans.registry import get_queries
 from data_ingestion_bra_spark.session import get_spark
 from data_ingestion_bra_spark.sources.tables import _PLAN_CACHE, load_table
-from tests.conftest import SF_SMOKE, sql_conf
+from tests.conftest import SF_SMOKE, job_ids, sql_conf
 
 INFER_FILTERS = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+CHANGE_CACHED_PARTITIONING = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+#: the LLM-data headline queries (bench.py HEADLINE, perfbench llm_curation)
+LLM_CURATION = (
+    "dedup_exact_groups",
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "similarity_topk_bruteforce",
+    "similarity_topk_ivf",
+    "text_quality_scores",
+    "text_fingerprints",
+    "curation_pipeline",
+    "text_chunks_sliding",
+)
 
 
 def test_get_spark_applies_the_session_conf_table(spark):
-    # Start from Spark's own defaults for the two confs, then ask get_spark
-    # for the (existing) session: it must come back with the engine's values.
+    # Start from Spark's own defaults for the runtime confs, then ask
+    # get_spark for the (existing) session: it must come back with the
+    # engine's values.
     with sql_conf(
         spark,
-        {"spark.sql.ansi.enabled": "true", "spark.sql.optimizer.excludedRules": ""},
+        {
+            "spark.sql.ansi.enabled": "true",
+            "spark.sql.optimizer.excludedRules": "",
+            CHANGE_CACHED_PARTITIONING: "false",
+        },
     ):
         s = get_spark("tests", cpus="8", shuffle_partitions="8")
         assert s.conf.get("spark.sql.ansi.enabled") == "false"
         assert INFER_FILTERS in s.conf.get("spark.sql.optimizer.excludedRules")
+        assert s.conf.get(CHANGE_CACHED_PARTITIONING) == "true"
         assert s.sql("SELECT CAST('x' AS INT) AS v").first()["v"] is None
+    # static: set on the builder that created the shared session
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "512"
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _tasks(spark, jobs: list[int]) -> int:
+    """Tasks the stages of ``jobs`` ran; a stage whose shuffle output was
+    reused is skipped and ran none."""
+    tracker = spark.sparkContext.statusTracker()
+    store = spark.sparkContext._jsc.sc().statusStore()
+    n = 0
+    for sid in {s for j in jobs for s in tracker.getJobInfo(j).stageIds}:
+        try:
+            sd = store.lastStageAttempt(sid)
+        except Exception:  # noqa: BLE001 - a skipped stage was never submitted
+            continue
+        if sd.status().toString() == "COMPLETE":
+            n += sd.numCompleteTasks()
+    return n
+
+
+def test_persisted_signatures_are_read_back_coalesced(spark):
+    """``dedup_minhash_lsh`` persists its signature set and reads it on both
+    sides of the banded self-join. With the cached plan's output
+    partitioning frozen, each read ran one task per shuffle partition; AQE
+    now coalesces it like any shuffle, so a run over the cached set is a
+    few tasks."""
+    build = get_queries()["dedup_minhash_lsh"]
+    _noop(build(spark, SF_SMOKE))
+    with job_ids(spark, "test-minhash-cached-sig") as jobs:
+        _noop(build(spark, SF_SMOKE))
+    assert _tasks(spark, jobs) <= 4
+
+
+def test_second_llm_curation_pass_compiles_no_class(spark):
+    """The codegen cache holds the 9 llm_curation queries' classes: a second
+    pass over them compiles nothing with Janino."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    queries = get_queries()
+    for name in LLM_CURATION:
+        _noop(queries[name](spark, SF_SMOKE))
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    for name in LLM_CURATION:
+        _noop(queries[name](spark, SF_SMOKE))
+    assert codegen.METRIC_COMPILATION_TIME().getCount() == before
 
 
 def _write_documents(spark, path: str, n: int) -> None:
