@@ -13,6 +13,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
+#: ``spark.sql.codegen.cache.maxEntries`` that ``get_spark`` sets (see there)
+CODEGEN_CACHE_ENTRIES = 512
 
 
 def get_spark(
@@ -47,7 +49,7 @@ def get_spark(
         # Guava cache evicts per segment, before the total reaches the cap)
         # and bounds the classes it pins: the whole catalog compiles ~2,400
         # at ~55 KB of Metaspace each, so 512 holds at most ~28 MB.
-        .config("spark.sql.codegen.cache.maxEntries", "512")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -431,3 +431,13 @@ def test_sf10_scaling_labels_the_headline_point_by_its_directory(monkeypatch):
         out = bench._sf10_scaling(bench._Run(None, f"/data/{sf}", payload, gate))
         assert out["sf10_truncated"] == [f"{n}@{l}" for n in bench.SF10_QUERIES for l in labels]
         assert "errors" not in payload
+
+
+def test_skew_fixture_rows_follow_the_headline_sf():
+    """The skew fact table scales with the headline SF: 20M rows at the
+    default sf0.1, 2M at sf0.01; an unnamed directory counts as sf0.1."""
+    assert bench._skew_rows("/data/sf0.1") == 20_000_000
+    assert bench._skew_rows("/data/sf0.01") == 2_000_000
+    assert bench._skew_rows("/data/sf0.001/") == 200_000
+    assert bench._skew_rows("/data/sf1") == 200_000_000
+    assert bench._skew_rows("/data/fixtures") == 20_000_000
