@@ -278,16 +278,22 @@ SF1_PROBES = ("dedup_simhash_full", "dedup_contamination_auto", "text_perplexity
 SF10_PROBES = ("dedup_minhash_lsh", "text_perplexity_lm", "dedup_contamination_bloom")
 
 
-def _replica_dir(name: str, factor: int) -> str | None:
-    """Resolve (building if needed) a scale replica ATOMICALLY: build into a
-    .tmp sibling and os.rename into place, so a killed build can never
-    leave a truncated parquet at the published path (a half-written sf1
-    lineitem poisoned a round-7 run — existence alone is not integrity).
-    A leftover _COMPLETE-less published dir from the pre-atomic era is
-    rebuilt."""
+def _replica_built(name: str, src: str) -> bool:
+    """Whether ``.data/<name>`` is a complete replica of ``src``: its
+    ``_COMPLETE`` marker names the source directory it was built from."""
+    marker = _DATA / name / "_COMPLETE"
+    return marker.exists() and marker.read_text() == f"{os.path.realpath(src)}\n"
+
+
+def _replica_dir(name: str, factor: int, src: str) -> str | None:
+    """Resolve (building if needed) a ``factor``x scale replica of ``src``
+    ATOMICALLY: build into a .tmp sibling and os.rename into place, so a
+    killed build can never leave a truncated parquet at the published path
+    (a half-written sf1 lineitem poisoned a round-7 run — existence alone
+    is not integrity). A published dir whose marker is missing or names
+    another source is rebuilt."""
     out = _DATA / name
-    marker = out / "_COMPLETE"
-    if marker.exists():
+    if _replica_built(name, src):
         return str(out)
     try:
         import shutil
@@ -295,12 +301,12 @@ def _replica_dir(name: str, factor: int) -> str | None:
         from tools.make_sf import make_sf
 
         if out.exists():
-            shutil.rmtree(out)  # pre-atomic or torn build: rebuild
+            shutil.rmtree(out)  # torn build or another source: rebuild
         tmp = out.with_name(name + ".tmp")
         if tmp.exists():
             shutil.rmtree(tmp)
-        make_sf(factor, "/root/testdata/sf0.1", str(tmp))
-        (tmp / "_COMPLETE").write_text("ok\n")
+        make_sf(factor, src, str(tmp))
+        (tmp / "_COMPLETE").write_text(f"{os.path.realpath(src)}\n")
         os.rename(tmp, out)
     except Exception as exc:  # pragma: no cover - bench must still emit
         print(f"{name} replica unavailable: {exc}", file=sys.stderr)
@@ -1724,7 +1730,8 @@ class _Gate:
 
 class _Run:
     """What the sections read: the session, the catalog, the headline SF,
-    the payload, the measured gate and the 10x/100x replicas of sf0.1,
+    the payload, the measured gate and the 10x/100x replicas of the
+    headline SF (labelled sf1/sf10, their names at the default sf0.1),
     resolved (built on first use, as a gated unit) only when a section that
     needs one runs."""
 
@@ -1748,11 +1755,11 @@ class _Run:
         must fit on top of what the running section still needs. A build
         never measured starts only while half the total budget is left."""
         d: str | None = str(_DATA / name)
-        if not (_DATA / name / "_COMPLETE").exists():
+        if not _replica_built(name, self.sf_dir):
             with self.gate.unit(
                 f"replica:{name}", unmeasured=total_budget_sec() / 2, extra=self.gate.rest()
             ):
-                d = _replica_dir(name, factor)
+                d = _replica_dir(name, factor, self.sf_dir)
         if d is None:  # the build error is on stderr
             raise RuntimeError(f"{name} replica unavailable")
         return d

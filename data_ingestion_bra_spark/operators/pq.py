@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_ingestion_bra_spark.operators.similarity import quantize_sql
+from data_ingestion_bra_spark.operators.similarity import load_or_build_index, quantize_sql
 
 #: subspaces x codes: 64-dim fixture vectors -> 8 subvectors of 8 dims,
 #: 16 codewords each (4-bit codes).
@@ -403,88 +403,43 @@ def load_or_build_pq_index(
     k: int = K_CODES,
     n_iter: int = 1,
 ) -> tuple[DataFrame, DataFrame]:
-    """Train-once / serve-many PQ index: ``(codebook, codes)``, persisted
-    exactly like the IVF tier's centroids + inverted lists
-    (``similarity.load_or_build_ivf_index``) and keyed by the same dataset
-    content fingerprint — a regenerated dataset retrains instead of
-    serving stale codes. Before this loader, BOTH PQ serve entries re-ran
-    codebook training and corpus encoding on every invocation (~25 Spark
-    jobs each); at 100 TB the index artifacts are the only per-corpus
-    state a query should read (Jégou et al. §VII — the codebook is
-    trained once, queries pay only the LUT + ADC scan).
+    """Train-once / serve-many PQ index: ``(codebook, codes)``, the
+    codebook a tiny JSON artifact, the codes one parquet of (id, s, code).
+    Before this loader, BOTH PQ serve entries re-ran codebook training and
+    corpus encoding on every invocation (~25 Spark jobs each); at 100 TB
+    the index artifacts are the only per-corpus state a query should read
+    (Jégou et al. §VII — the codebook is trained once, queries pay only the
+    LUT + ADC scan).
 
     Training and encoding are deterministic BIGINT, so the persisted
     artifacts are bit-identical to an inline run and the unrolled SQL
     oracle (which replays training + encoding from the raw table) stays
-    valid. Writes are atomic (tmp + rename); the codebook is a tiny JSON
-    control-plane artifact, the codes one parquet of (id, s, code).
+    valid.
 
-    CONTRACT (round-12 advice item 2): ``vectors`` must be the FULL
-    ``sf_dir/embeddings.parquet`` relation (unfiltered, unprojected) —
-    the cache key is that dataset's content fingerprint plus every
-    training parameter INCLUDING ``id_col``/``vec_col``, so a caller that
-    renames columns gets its own artifacts, but a caller that pre-filters
-    rows would still train a different index under the full-table key.
-    Filter AFTER the index is loaded (the serve entries all do), or don't
-    use the shared cache.
+    Published and loaded by ``similarity.load_or_build_index``, as the IVF
+    tier's centroids and lists: keyed by the ``embeddings.parquet``
+    fingerprint and every training parameter, ``id_col``/``vec_col``
+    included; both handles come from the one session store. ``vectors``
+    must be the full ``sf_dir/embeddings.parquet`` relation: codes holding
+    other than ``m`` rows per dataset row raise before anything is
+    published. Filter after the index is loaded (the serve entries all do).
     """
-    import json
-    import os
-    from pathlib import Path
 
-    from data_ingestion_bra_spark.operators.similarity import (
-        _dataset_fingerprint,
-        _ivf_cache_root,
-    )
-    from data_ingestion_bra_spark.sources.tables import (
-        _PLAN_CACHE,
-        _stat_sig,
-        read_parquet_cached,
-    )
+    def train() -> list[tuple]:
+        cb = pq_train(vectors, id_col=id_col, vec_col=vec_col, dim=dim, m=m, k=k, n_iter=n_iter)
+        return sorted(
+            (int(r["s"]), int(r["code"]), [int(x) for x in r["cvec"]]) for r in cb.collect()
+        )
 
-    cache_dir = _ivf_cache_root()
-    src = Path(sf_dir) / "embeddings.parquet"
-    cols = "" if (id_col, vec_col) == ("vec_id", "embedding") else f"-{id_col}-{vec_col}"
-    stem = (
-        f"{Path(sf_dir).name}-pq-m{m}-k{k}-i{n_iter}-d{dim}{cols}"
-        f"-{_dataset_fingerprint(src)}"
+    return load_or_build_index(
+        spark,
+        sf_dir,
+        f"pq-m{m}-k{k}-i{n_iter}-d{dim}",
+        id_col=id_col,
+        vec_col=vec_col,
+        names=("codebook", "codes"),
+        schema="s int, code int, cvec array<bigint>",
+        train=train,
+        encode=lambda cb: pq_encode(vectors, cb, id_col=id_col, vec_col=vec_col, dim=dim, m=m),
+        rows_per_vector=m,
     )
-    cb_path = cache_dir / f"{stem}-codebook.json"
-    codes_dir = cache_dir / f"{stem}-codes.parquet"
-    schema = "s int, code int, cvec array<bigint>"
-    if cb_path.exists():
-        per_session = _PLAN_CACHE.setdefault(spark, {})
-        ckey = (f"pq-codebook:{cb_path}", _stat_sig(str(cb_path)))
-        cb = per_session.get(ckey)
-        if cb is None:
-            rows = json.loads(cb_path.read_text())
-            cb = spark.createDataFrame(
-                [(r["s"], r["code"], r["cvec"]) for r in rows], schema
-            )
-            per_session[ckey] = cb
-    else:
-        trained = pq_train(
-            vectors, id_col=id_col, vec_col=vec_col, dim=dim, m=m, k=k, n_iter=n_iter
-        )
-        local = sorted(
-            (int(r["s"]), int(r["code"]), [int(x) for x in r["cvec"]])
-            for r in trained.collect()
-        )
-        cache_dir.mkdir(parents=True, exist_ok=True)
-        tmp = cb_path.with_suffix(f".tmp{os.getpid()}")
-        tmp.write_text(
-            json.dumps([{"s": s, "code": c, "cvec": v} for s, c, v in local])
-        )
-        os.replace(tmp, cb_path)
-        cb = spark.createDataFrame(local, schema)
-    if not codes_dir.exists():
-        codes = pq_encode(vectors, cb, id_col=id_col, vec_col=vec_col, dim=dim, m=m)
-        tmp_dir = codes_dir.with_name(codes_dir.name + f".tmp{os.getpid()}")
-        codes.write.mode("overwrite").parquet(str(tmp_dir))
-        try:
-            os.replace(tmp_dir, codes_dir)
-        except OSError:  # a concurrent builder won the rename; use theirs
-            import shutil
-
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-    return cb, read_parquet_cached(spark, str(codes_dir))

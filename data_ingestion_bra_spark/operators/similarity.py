@@ -20,9 +20,19 @@ IEEE-754 correctly-rounded and engine-independent.
 
 from __future__ import annotations
 
+import hashlib
+import json
+import os
+import shutil
+import tempfile
+from collections.abc import Callable
+from pathlib import Path
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from data_ingestion_bra_spark.sources.tables import cached, publish
 
 #: fixed-point quantization scale: 6 decimal digits of embedding precision.
 #: |x| <= ~1.0 and dim <= ~1e3 keeps dots within 1e3 * (1e6)^2 = 1e15 << 2^63.
@@ -213,7 +223,7 @@ def inline_probe_cells(
     per (vector, probed cell).
 
     When the centroid VALUES are locally available (the persisted-index
-    serve path rides them along as ``_centroid_rows``) and small enough to
+    serve path rides them along as ``_local_rows``) and small enough to
     inline as a literal, each vector scores the centroid array
     in-expression and explodes its n_probe winners — same
     (sim DESC, cell ASC) total order as ``assign_cells``' window, so the
@@ -224,7 +234,7 @@ def inline_probe_cells(
     cached per (index, n_probe): the multi-KB literal costs tens of ms to
     analyze, once, not per invocation.
     """
-    cent_rows = getattr(centroids, "_centroid_rows", None)
+    cent_rows = getattr(centroids, "_local_rows", None)
     if cent_rows is None or sum(len(v) for _, v in cent_rows) > 100_000:
         return None
     probe_cache = getattr(centroids, "_probe_expr_cache", None)
@@ -333,7 +343,7 @@ def kmeans_train(
     return cents
 
 
-def _ivf_cache_root() -> "Path":
+def _ivf_cache_root() -> Path:
     """Resolve the IVF index cache directory.
 
     ``SPARK_GRAFT_IVF_CACHE`` overrides; otherwise the repo checkout root
@@ -342,10 +352,6 @@ def _ivf_cache_root() -> "Path":
     fall back to a per-user temp dir. At 100 TB the 'cache' is object-store
     parquet addressed by config, which the env var models.
     """
-    import os
-    import tempfile
-    from pathlib import Path
-
     env = os.environ.get("SPARK_GRAFT_IVF_CACHE")
     if env:
         return Path(env)
@@ -355,14 +361,13 @@ def _ivf_cache_root() -> "Path":
     return root / ".ivf_cache"
 
 
-def _dataset_fingerprint(src: "Path") -> str:
+def _dataset_fingerprint(src: Path) -> str:
     """Identity of a parquet dataset for cache keying: size + st_mtime_ns +
     an md5 over head/tail content bytes (the parquet footer carries row
     counts and column stats, so a same-size same-second regeneration still
     flips the hash). Directory-style datasets fingerprint each member file,
     so a rewritten part flips the key even if the dir's own stat doesn't.
     """
-    import hashlib
 
     def one(f) -> str:
         st = f.stat()
@@ -386,80 +391,98 @@ def _dataset_fingerprint(src: "Path") -> str:
         return "nosrc"
 
 
-def load_or_train_centroids(
+def _parquet_rows(path: Path) -> int:
+    """Rows of the parquet file or dataset directory at ``path``, summed
+    from its footers (pyarrow; no Spark job)."""
+    import pyarrow.parquet as pq
+
+    files = [path] if path.is_file() else [
+        f for f in sorted(path.rglob("*.parquet")) if not f.name.startswith(("_", "."))
+    ]
+    return sum(pq.read_metadata(f).num_rows for f in files)
+
+
+def load_or_build_index(
     spark,
-    vectors: DataFrame,
     sf_dir: str,
+    params: str,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 8,
-    n_iter: int = 1,
-    train_sample_rate: float | None = None,
-) -> DataFrame:
-    """Train-once / serve-many IVF index: trained centroids are persisted to
-    a tiny JSON artifact keyed by (dataset, n_centroids, n_iter) and reloaded
-    on every subsequent query — the serve path never re-runs Lloyd
-    iterations (at 100 TB you train the index once and answer many queries
-    against it; re-training per query was round 2's 2.78× bench regression).
+    id_col: str,
+    vec_col: str,
+    names: tuple[str, str],
+    schema: str,
+    train: Callable[[], list[tuple]],
+    encode: Callable[[DataFrame], DataFrame],
+    rows_per_vector: int = 1,
+) -> tuple[DataFrame, DataFrame]:
+    """Train-once / serve-many index artifacts over
+    ``sf_dir/embeddings.parquet``: ``(model, data)``, a small JSON model
+    (centroids, a codebook) and a parquet relation derived from it (inverted
+    lists, codes). The one publish-and-load path of every vector index.
 
-    Training is fully deterministic (fixed seeds, integer fixed-point), so
-    the cached artifact is bit-identical to an inline run and the unrolled
-    SQL oracle stays valid. The write is atomic (tmp + rename), making
-    concurrent first-callers safe. Centroids are k rows × dim ints — a
-    control-plane artifact, not data-plane state.
+    - **Key:** the dataset directory's name and content fingerprint
+      (``_dataset_fingerprint``) plus every parameter that changes an
+      artifact: ``params`` and, when not the defaults, ``id_col``/``vec_col``.
+      A regenerated dataset builds new artifacts.
+    - **Build** (when an artifact is missing): ``train()`` returns the
+      model's rows (``schema``), or they are read from a published model;
+      ``encode(model)`` the data relation, written to a temporary sibling.
+      Its rows must be ``rows_per_vector`` per row of the dataset's parquet
+      footers, else the build raises and publishes nothing: the vectors
+      passed in were not the full table. Then the model, then the data, is
+      renamed into place (``sources.tables.publish``).
+    - **Load:** both handles come from the one session store
+      (``sources.tables.cached``), slot ``("index", key)``, versioned by the
+      artifacts' stat, a freshly built pair included. The model handle
+      carries its rows as ``_local_rows`` (``inline_probe_cells``).
     """
-    import json
-    import os
-    from pathlib import Path
-
-    cache_dir = _ivf_cache_root()
-    # Key includes the source dataset's content fingerprint (size, mtime_ns,
-    # head/tail md5): if the dataset is ever regenerated — even same-size
-    # within the same second — the stale index retrains instead of silently
-    # serving centroids that no longer match what the oracle derives.
     src = Path(sf_dir) / "embeddings.parquet"
-    sr = "" if train_sample_rate is None else f"-s{train_sample_rate}"
-    key = (
-        f"{Path(sf_dir).name}-c{n_centroids}-i{n_iter}{sr}"
-        f"-{_dataset_fingerprint(src)}.json"
-    )
-    path = cache_dir / key
-    schema = "cell int, cvec array<bigint>"
-    if path.exists():
-        # plan-handle memo (see sources.tables): createDataFrame of even a
-        # k-row local relation costs a py4j/Arrow round trip per call on the
-        # serve path; the handle is a literal plan, invalidated on rewrite
-        from data_ingestion_bra_spark.sources.tables import _PLAN_CACHE, _stat_sig
+    cols = "" if (id_col, vec_col) == ("vec_id", "embedding") else f"-{id_col}-{vec_col}"
+    key = _ivf_cache_root() / f"{Path(sf_dir).name}-{params}{cols}"
+    fp = _dataset_fingerprint(src)
+    model_path = Path(f"{key}-{fp}-{names[0]}.json")
+    data_path = Path(f"{key}-{fp}-{names[1]}.parquet")
+    fields = [f.split()[0] for f in schema.split(",")]
 
-        per_session = _PLAN_CACHE.setdefault(spark, {})
-        ckey = (f"centroids:{path}", _stat_sig(str(path)))
-        df = per_session.get(ckey)
-        if df is None:
-            rows = json.loads(path.read_text())
-            df = spark.createDataFrame([(r["cell"], r["cvec"]) for r in rows], schema)
-            # local values ride along for the row-local probe path (ivf_topk)
-            df._centroid_rows = [
-                (int(r["cell"]), [int(x) for x in r["cvec"]]) for r in rows
-            ]
-            per_session[ckey] = df
+    def model_df(rows: list[tuple]) -> DataFrame:
+        df = spark.createDataFrame(rows, schema)
+        df._local_rows = rows
         return df
-    cents = kmeans_train(
-        vectors,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_centroids=n_centroids,
-        n_iter=n_iter,
-        train_sample_rate=train_sample_rate,
+
+    def model_rows() -> list[tuple]:
+        return [tuple(r[f] for f in fields) for r in json.loads(model_path.read_text())]
+
+    def version() -> tuple:
+        stats = (os.stat(model_path), os.stat(data_path))
+        return (fp, *((st.st_mtime_ns, st.st_size) for st in stats))
+
+    try:
+        v = version()
+    except OSError:
+        trained = not model_path.exists()
+        rows = train() if trained else model_rows()
+        model_path.parent.mkdir(parents=True, exist_ok=True)
+        tmp = data_path.with_name(f"{data_path.name}.tmp{os.getpid()}")
+        encode(model_df(rows)).write.mode("overwrite").parquet(str(tmp))
+        written, want = _parquet_rows(tmp), _parquet_rows(src) * rows_per_vector
+        if written != want:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise ValueError(
+                f"{data_path.name}: {written} rows written, {want} expected from the "
+                f"footers of {src}; build the index from the full table"
+            )
+        if trained:
+            mtmp = model_path.with_name(f"{model_path.name}.tmp{os.getpid()}")
+            mtmp.write_text(json.dumps([dict(zip(fields, r)) for r in rows]))
+            publish(mtmp, model_path)
+        publish(tmp, data_path)
+        v = version()
+    return cached(
+        spark,
+        ("index", str(key)),
+        v,
+        lambda: (model_df(model_rows()), spark.read.parquet(str(data_path))),
     )
-    local = [(r["cell"], list(r["cvec"])) for r in cents.collect()]
-    cache_dir.mkdir(parents=True, exist_ok=True)
-    tmp = path.with_suffix(f".tmp{os.getpid()}")
-    tmp.write_text(json.dumps([{"cell": c, "cvec": v} for c, v in sorted(local)]))
-    os.replace(tmp, path)
-    out = spark.createDataFrame(local, schema)
-    out._centroid_rows = [(int(c), [int(x) for x in v]) for c, v in local]
-    return out
 
 
 def load_or_build_ivf_index(
@@ -478,46 +501,47 @@ def load_or_build_ivf_index(
     the quantized corpus pre-assigned to its nearest cell and persisted as
     parquet, so the serve path is: scan the index file, assign only the
     (few) query vectors against the broadcast centroids, equi-join on cell.
-    Re-assigning the whole corpus per query — what the centroid-only cache
-    still did — is the part that actually scales with data volume.
+    Trained centroids are a tiny JSON artifact reloaded by every later
+    query: the serve path never re-runs Lloyd iterations (re-training per
+    query was round 2's 2.78x bench regression) nor re-assigns the corpus.
 
-    Assignment is deterministic given the centroids, so the cached lists are
-    bit-identical to a recomputation and the unrolled SQL oracle stays
-    valid. Build is atomic (write to a tmp dir, rename into place).
+    Training and assignment are deterministic (fixed seeds, integer
+    fixed-point), so the cached artifacts are bit-identical to an inline
+    run and the unrolled SQL oracle stays valid.
+
+    Published and loaded by ``load_or_build_index``: keyed by the
+    ``embeddings.parquet`` fingerprint and every training parameter,
+    ``id_col``/``vec_col`` included; both handles come from the one session
+    store. ``vectors`` must be the full ``sf_dir/embeddings.parquet``
+    relation (a pre-filtered one raises before anything is published);
+    filter after the index is loaded.
     """
-    import os
-    from pathlib import Path
 
-    cents = load_or_train_centroids(
+    def train() -> list[tuple]:
+        cents = kmeans_train(
+            vectors,
+            id_col=id_col,
+            vec_col=vec_col,
+            n_centroids=n_centroids,
+            n_iter=n_iter,
+            train_sample_rate=train_sample_rate,
+        )
+        return sorted((int(r["cell"]), [int(x) for x in r["cvec"]]) for r in cents.collect())
+
+    sr = "" if train_sample_rate is None else f"-s{train_sample_rate}"
+    return load_or_build_index(
         spark,
-        vectors,
         sf_dir,
+        f"c{n_centroids}-i{n_iter}{sr}",
         id_col=id_col,
         vec_col=vec_col,
-        n_centroids=n_centroids,
-        n_iter=n_iter,
-        train_sample_rate=train_sample_rate,
+        names=("centroids", "lists"),
+        schema="cell int, cvec array<bigint>",
+        train=train,
+        encode=lambda cents: assign_cells(
+            vectors, cents, id_col=id_col, vec_col=vec_col, n_probe=1
+        ).select("vid", "cell", "v"),
     )
-    cache_dir = _ivf_cache_root()
-    src = Path(sf_dir) / "embeddings.parquet"
-    sr = "" if train_sample_rate is None else f"-s{train_sample_rate}"
-    lists_dir = cache_dir / (
-        f"{Path(sf_dir).name}-c{n_centroids}-i{n_iter}{sr}"
-        f"-{_dataset_fingerprint(src)}-lists.parquet"
-    )
-    if not lists_dir.exists():
-        assigned = assign_cells(vectors, cents, id_col=id_col, vec_col=vec_col, n_probe=1)
-        tmp = lists_dir.with_name(lists_dir.name + f".tmp{os.getpid()}")
-        assigned.select("vid", "cell", "v").write.mode("overwrite").parquet(str(tmp))
-        try:
-            os.replace(tmp, lists_dir)
-        except OSError:  # a concurrent builder won the rename; use theirs
-            import shutil
-
-            shutil.rmtree(tmp, ignore_errors=True)
-    from data_ingestion_bra_spark.sources.tables import read_parquet_cached
-
-    return cents, read_parquet_cached(spark, str(lists_dir))
 
 
 def ivf_topk(
@@ -536,7 +560,7 @@ def ivf_topk(
     """IVF top-k. ``n_iter`` k-means refinement rounds (0 = raw seeds),
     ``n_probe`` nearest cells searched per query. Candidate generation is an
     equi-join on cell id — the LSH-style shape that replaces the n^2 pair
-    scan at scale. Pass ``centroids`` (from ``load_or_train_centroids``) to
+    scan at scale. Pass ``centroids`` (from ``load_or_build_ivf_index``) to
     skip training, and ``assignments`` (the persisted inverted lists from
     ``load_or_build_ivf_index``) to also skip re-assigning the corpus — the
     full serve path then touches only the index file plus the query

@@ -26,11 +26,12 @@ from __future__ import annotations
 
 import functools
 import os
-import weakref
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from data_ingestion_bra_spark.sources.tables import cached
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
@@ -664,15 +665,6 @@ def _ordered() -> dict[str, QuerySpec]:
     return out
 
 
-#: Per-session prepared builds, ``{name: (key, DataFrame)}``: one entry per
-#: catalog query, replaced on a miss. Weak on the session, as
-#: ``sources.tables._PLAN_CACHE``, so a stopped session's plans go with it.
-_PREPARED: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
-#: ``sf_dir`` -> its entries when a build last read it. Process-wide, as
-#: Spark's CacheManager is shared by every session of a SparkContext.
-_DIR_ENTRIES: dict[str, tuple] = {}
-
-
 def _inputs_key(spark: SparkSession, sf_dir: str) -> tuple:
     """Everything a built plan depends on besides the code: the input
     directory, its entries' ``(name, st_mtime_ns, st_size)`` from one
@@ -689,38 +681,14 @@ def _inputs_key(spark: SparkSession, sf_dir: str) -> tuple:
     return (sf_dir, entries, confs, os.environ.get("SPARK_GRAFT_IVF_CACHE"))
 
 
-def _refresh_replaced(spark: SparkSession, sf_dir: str, entries: tuple | None) -> None:
-    """Refresh the cached data over every entry of ``sf_dir`` replaced
-    since a build last read it. Spark's CacheManager matches a persisted
-    plan by its shape and dataset path, not by the files' version, so a
-    build persisting the same plan over a replaced dataset would otherwise
-    read the rows cached from the old files."""
-    if entries is None:
-        return
-    before = _DIR_ENTRIES.get(sf_dir)
-    _DIR_ENTRIES[sf_dir] = entries
-    if before is not None and before != entries:
-        for name in {e[0] for e in set(before) ^ set(entries)}:
-            spark.catalog.refreshByPath(os.path.join(sf_dir, name))
-
-
 def _prepared(name: str, build: Builder) -> Builder:
-    """``build`` behind the per-session cache: the DataFrame built for the
-    current ``_inputs_key``, else a fresh build stored in place of the
-    query's stale entry."""
+    """``build`` behind the one session store (``sources.tables.cached``):
+    slot ``("query", name)``, version ``_inputs_key``."""
 
     @functools.wraps(build)
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        per_session = _PREPARED.setdefault(spark, {})
         key = _inputs_key(spark, sf_dir)
-        hit = per_session.get(name)
-        if hit is not None and hit[0] == key:
-            return hit[1]
-        per_session.pop(name, None)
-        _refresh_replaced(spark, sf_dir, key[1])
-        df = build(spark, sf_dir)
-        per_session[name] = (key, df)
-        return df
+        return cached(spark, ("query", name), key, lambda: build(spark, sf_dir))
 
     return run
 
@@ -731,23 +699,25 @@ def get_queries() -> dict[str, Builder]:
     skip the Python builder, parsing and analysis (and any eager checkpoint
     a builder makes). Every execution of the returned DataFrame through a
     new action plan (a write, ``count()``) still optimizes, plans and scans
-    afresh: the cache holds plans, not results. What a builder computes
+    afresh: the store holds plans, not results. What a builder computes
     while building (an eager checkpoint) belongs to the plan and is reused
     with it.
 
-    - **Key:** ``(sf_dir, (name, st_mtime_ns, st_size) of sf_dir's entries,
-      hash of the session's SQL confs, SPARK_GRAFT_IVF_CACHE)``. Any change
-      rebuilds.
-    - **Bound:** one entry per query name and session; a miss replaces it.
-      A builder that raises caches nothing, and ``spark.newSession()``
-      starts empty.
-    - A rebuild after a dataset under ``sf_dir`` was replaced first
-      refreshes the data Spark cached over it (``_refresh_replaced``).
-    - **Directory-replace contract** (as ``sources.tables.read_parquet_cached``):
-      a dataset under ``sf_dir`` is rewritten by replacing its entry
-      atomically (write a sibling, then ``os.replace``). Rewriting files
-      inside an existing dataset directory leaves the entry's stat unchanged
-      and serves the stale plan.
+    - **Store:** the one per-session store of ``sources.tables``, slot
+      ``("query", name)``: one entry per query name and session, replaced
+      on a miss. A builder that raises stores nothing, and
+      ``spark.newSession()`` starts empty.
+    - **Version:** ``(sf_dir, (name, st_mtime_ns, st_size) of sf_dir's
+      entries, hash of the session's SQL confs, SPARK_GRAFT_IVF_CACHE)``.
+      Any change rebuilds.
+    - **Refresh:** a rebuild over a replaced dataset reads it through
+      ``load_table``, whose first read of the new version refreshes the
+      data Spark cached over the old one.
+    - **Directory-replace contract** (as ``load_table``): a dataset under
+      ``sf_dir`` is rewritten by replacing its entry atomically (write a
+      sibling, then ``os.replace``). Rewriting files inside an existing
+      dataset directory leaves the entry's stat unchanged and serves the
+      stale plan.
     """
     return {name: _prepared(name, spec.builder) for name, spec in _ordered().items()}
 

@@ -1,4 +1,5 @@
-"""Parquet table loaders for the driver's star-schema fixtures.
+"""Parquet table loaders for the driver's star-schema fixtures, and the one
+per-session store of version-keyed cached state.
 
 Parquet is the engine's canonical storage format (columnar, splittable,
 predicate-pushdown- and column-pruning-friendly) — the reference's own README
@@ -6,12 +7,13 @@ concedes Parquet is what production would use (reference README.md:41,63).
 
 At 100 TB these reads are partition-pruned and filter-pushed automatically by
 Catalyst as long as callers express filters declaratively on the returned
-DataFrames — so loaders do nothing clever: no collect, no caching policy here.
+DataFrames — so loaders do nothing clever: no collect, no data caching.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,55 +32,42 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-#: Per-session memo of lazy PLAN handles (never data): repeated
-#: ``spark.read.parquet`` of the same fixture re-lists the directory and
-#: re-reads footers for schema inference on the DRIVER — measured 230-250 ms
-#: per call on this box — once per load_table call, i.e. once per query per
-#: bench pass (optimization guide §6: repeated listing is driver-side,
-#: single-process work). A DataFrame is a lazy logical plan; memoizing the
-#: handle changes nothing about execution — every action still scans the
-#: parquet files — it only stops re-deriving identical metadata. Keyed by
-#: (dataset path, stat signature) so any rewrite/append of the dataset
-#: invalidates the entry; keyed weakly by session so a stopped session's
-#: plans can never leak into a new one.
-_PLAN_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+#: The one per-session store, ``{slot: (version, value)}``: lazy table
+#: handles (``("table", path)``), index artifact handles (``("index", key)``)
+#: and prepared catalog builds (``("query", name)``). One entry per slot; a
+#: lookup whose version misses replaces it, so a replaced input leaves no
+#: old value reachable from here. Weak on the session, so a stopped
+#: session's state goes with it and ``spark.newSession()`` starts empty.
+#: Values are plans, never data: every action still scans the files.
+_STORE: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+#: Dataset path -> the ``(st_mtime_ns, st_size)`` this process last read.
+#: Process-wide, as Spark's CacheManager is shared by every session.
+_SEEN: dict[str, tuple[int, int]] = {}
 
 
-def _stat_sig(path: str) -> tuple[int, int]:
-    st = os.stat(path)
-    return (st.st_mtime_ns, st.st_size)
+def cached(spark: SparkSession, slot, version, build):
+    """The value in ``spark``'s ``slot`` stored for ``version``, else
+    ``build()``, stored in place of the slot's stale entry. The stale entry
+    is dropped before the build, and a build that raises stores nothing."""
+    per_session = _STORE.setdefault(spark, {})
+    hit = per_session.get(slot)
+    if hit is not None and hit[0] == version:
+        return hit[1]
+    per_session.pop(slot, None)
+    value = build()
+    per_session[slot] = (version, value)
+    return value
 
 
-def _memo(spark: SparkSession, path: str, build) -> DataFrame:
-    """The memo lookup: the handle for ``path``'s current stat signature,
-    else ``build(spark.read.parquet(path))``, stored in place of the path's
-    stale entry."""
-    per_session = _PLAN_CACHE.setdefault(spark, {})
-    key = (path, _stat_sig(path))
-    cached = per_session.get(key)
-    if cached is None:
-        cached = build(spark.read.parquet(path))
-        for k in [k for k in per_session if k[0] == path]:
-            del per_session[k]
-        per_session[key] = cached
-    return cached
-
-
-def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
-    """Plan-handle memo for non-fixture parquet datasets (e.g. the IVF index
-    lists): same contract as ``load_table`` — the handle is a lazy plan,
-    every action re-scans the files, and any rewrite of the dataset (new
-    mtime/size, incl. atomic dir replace) misses the cache.
-
-    HARD CONTRACT (round-12 advice item 3): invalidation keys on the
-    dataset PATH's own stat, so writers must replace the whole directory
-    atomically (write to a tmp sibling, then ``os.replace``/``os.rename``
-    over the published path) — every writer in this repo does. Rewriting
-    part files INSIDE an existing directory leaves the dir stat unchanged
-    and would serve a stale plan handle with a stale file listing; don't
-    add such a writer without switching this memo to a member-file
-    fingerprint (see ``similarity._dataset_fingerprint``)."""
-    return _memo(spark, path, lambda df: df)
+def publish(tmp, dest) -> None:
+    """Rename the finished ``tmp`` over ``dest``: the one atomic publish of
+    a file or dataset directory (the directory-replace contract of
+    ``load_table``). A directory rename fails when a concurrent builder
+    published first; builds are deterministic, so its copy is kept."""
+    try:
+        os.replace(tmp, dest)
+    except OSError:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _events_ts(df: DataFrame) -> DataFrame:
@@ -94,8 +83,32 @@ def _events_ts(df: DataFrame) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The store's lazy handle for ``sf_dir/<name>.parquet``, keyed by the
+    dataset path's own stat: repeated reads skip the driver-side listing and
+    footer reads (230-250 ms per ``spark.read.parquet`` on the bench box).
+
+    The first read in this process of a new version of the path calls
+    ``spark.catalog.refreshByPath`` once: Spark's CacheManager matches a
+    persisted plan by its shape and dataset path, not by the files'
+    version, so a persist over a replaced dataset would otherwise read the
+    rows cached from the old files.
+
+    Directory-replace contract: a dataset is rewritten by replacing its
+    entry atomically (write a sibling, then ``os.replace``). Rewriting part
+    files inside an existing directory leaves the path's stat unchanged and
+    serves the stale handle and file listing."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    return _memo(spark, path, _events_ts if name == "events" else lambda df: df)
+    st = os.stat(path)
+    version = (st.st_mtime_ns, st.st_size)
+
+    def build() -> DataFrame:
+        if _SEEN.setdefault(path, version) != version:
+            spark.catalog.refreshByPath(path)
+            _SEEN[path] = version
+        df = spark.read.parquet(path)
+        return _events_ts(df) if name == "events" else df
+
+    return cached(spark, ("table", path), version, build)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -118,12 +131,14 @@ SPREAD_BYTES_PER_TASK = 64 * 1024
 
 
 def _input_bytes(df: DataFrame) -> int | None:
-    """Total on-disk bytes of the files feeding ``df``'s scan (best effort,
-    memoized on the handle). None when the input is not file-backed or the
-    probe fails (foreign session, Spark Connect)."""
-    cached = getattr(df, "_scan_bytes", None)
-    if cached is not None:
-        return cached if cached >= 0 else None
+    """Total on-disk bytes of the files feeding ``df``'s scan (memoized on
+    the handle). None when an input file is not on the local file system
+    (a non-``file`` scheme such as ``s3://`` or ``hdfs://``) or the probe
+    fails (foreign session, Spark Connect); ``spread_scan`` then spreads to
+    all slots."""
+    known = getattr(df, "_scan_bytes", None)
+    if known is not None:
+        return known if known >= 0 else None
     total: int | None
     try:
         from urllib.parse import unquote, urlparse
@@ -131,7 +146,10 @@ def _input_bytes(df: DataFrame) -> int | None:
         total = 0
         for f in df.inputFiles():
             p = urlparse(f)
-            total += os.stat(unquote(p.path) if p.scheme in ("", "file") else f).st_size
+            if p.scheme not in ("", "file"):
+                total = None
+                break
+            total += os.stat(unquote(p.path)).st_size
     except Exception:
         total = None
     try:

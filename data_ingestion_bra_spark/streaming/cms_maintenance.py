@@ -87,11 +87,13 @@ def cms_maintenance_writer(
 
 def current_sketch(spark: SparkSession, store_dir: str) -> DataFrame:
     """The standing sketch at the latest committed epoch (explicit empty
-    relation for a never-written store)."""
+    relation for a never-written or fully retired store)."""
     if txlog.snapshot(store_dir).version < 0:
         return spark.createDataFrame([], "j int, col bigint, cell bigint")
     rows = txlog.read_snapshot(spark, store_dir)
     latest = rows.agg(F.max("epoch").alias("e")).collect()[0]["e"]
+    if latest is None:
+        return rows.select("j", "col", "cell").limit(0)
     return rows.filter(F.col("epoch") == F.lit(int(latest))).select("j", "col", "cell")
 
 

@@ -80,7 +80,7 @@ def ivf_maintenance_writer(
     query_id: str = "ivf-maintenance",
 ):
     """Returns the ``foreachBatch`` handler. ``centroids`` must be the
-    PERSISTED index centroids (``load_or_train_centroids``) — maintenance
+    PERSISTED index centroids (``load_or_build_ivf_index``) — maintenance
     never retrains, it only measures how badly a retrain is needed.
 
     Exactly-once: the lists append is a txlog commit keyed

@@ -93,13 +93,13 @@ def test_replica_dir_atomic_rebuild(monkeypatch):
         # torn pre-atomic dir: file exists, no marker → must rebuild
         out.mkdir(parents=True, exist_ok=True)
         (out / "lineitem.parquet").write_bytes(b"truncated")
-        got = bench._replica_dir(name, 7)
+        got = bench._replica_dir(name, 7, "sf_src")
         assert got == str(out)
         assert (out / "_COMPLETE").exists()
         assert (out / "lineitem.parquet").read_bytes() == b"PAR1fakePAR1"
         assert calls == [7]
         # marked dir: reused, make_sf NOT called again
-        assert bench._replica_dir(name, 7) == str(out)
+        assert bench._replica_dir(name, 7, "sf_src") == str(out)
         assert calls == [7]
     finally:
         shutil.rmtree(out, ignore_errors=True)

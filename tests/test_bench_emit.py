@@ -340,10 +340,10 @@ def test_replica_build_is_a_gated_unit(tmp_path, monkeypatch):
     monkeypatch.setattr(bench, "budget_remaining", lambda: 400.0)
     built = []
 
-    def fake_replica_dir(name, factor):
+    def fake_replica_dir(name, factor, src):
         built.append(name)
         (tmp_path / name).mkdir()
-        (tmp_path / name / "_COMPLETE").write_text("ok\n")
+        (tmp_path / name / "_COMPLETE").write_text(f"{os.path.realpath(src)}\n")
         return str(tmp_path / name)
 
     monkeypatch.setattr(bench, "_replica_dir", fake_replica_dir)
@@ -441,3 +441,30 @@ def test_skew_fixture_rows_follow_the_headline_sf():
     assert bench._skew_rows("/data/sf0.001/") == 200_000
     assert bench._skew_rows("/data/sf1") == 200_000_000
     assert bench._skew_rows("/data/fixtures") == 20_000_000
+
+
+def test_replica_is_built_from_the_headline_sf_and_rebuilt_for_another(tmp_path, monkeypatch):
+    """A replica is built from the headline SF directory, which its
+    ``_COMPLETE`` marker records; a replica of another source is rebuilt,
+    a replica of the same one reused."""
+    import tools.make_sf
+
+    monkeypatch.setattr(bench, "_DATA", tmp_path / "data")
+    built = []
+
+    def fake_make_sf(copies, src, out):
+        built.append((copies, src))
+        Path(out).mkdir(parents=True)
+        (Path(out) / "documents.parquet").write_text(src)
+
+    monkeypatch.setattr(tools.make_sf, "make_sf", fake_make_sf)
+    sf001, sf01 = str(tmp_path / "sf0.01"), str(tmp_path / "sf0.1")
+
+    out = bench._replica_dir("sf1", 10, sf001)
+    assert out == str(tmp_path / "data" / "sf1") and built == [(10, sf001)]
+    assert (Path(out) / "_COMPLETE").read_text() == f"{os.path.realpath(sf001)}\n"
+    assert bench._replica_built("sf1", sf001) and not bench._replica_built("sf1", sf01)
+
+    assert bench._replica_dir("sf1", 10, sf001) == out and len(built) == 1
+    assert bench._replica_dir("sf1", 10, sf01) == out and built[-1] == (10, sf01)
+    assert (Path(out) / "documents.parquet").read_text() == sf01

@@ -96,3 +96,5 @@ def test_retire_epochs(spark, tmp_path):
         (r["j"], r["col"], r["cell"]) for r in current_sketch(spark, store).collect()
     )
     assert after == latest  # retirement never touches the standing sketch
+    retire_epochs_before(spark, store, 3)  # past the last epoch: nothing left
+    assert current_sketch(spark, store).collect() == []

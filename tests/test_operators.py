@@ -548,6 +548,33 @@ def test_ivf_index_cache_invalidates_on_data_change(spark, tmp_path):
     assert l2.count() == emb2.count() < n_full  # rebuilt from the new data
 
 
+def test_ivf_index_refuses_prefiltered_vectors(spark, tmp_path, monkeypatch):
+    """The index is keyed by the full ``embeddings.parquet``: lists built
+    from pre-filtered vectors raise before any artifact is published. A
+    full build then comes back from the session store, the first call
+    included."""
+    import shutil
+    from pathlib import Path
+
+    from data_ingestion_bra_spark.sources.tables import load_table
+    from tests.conftest import SF_SMOKE
+
+    monkeypatch.setenv("SPARK_GRAFT_IVF_CACHE", str(tmp_path / "ivf"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(Path(SF_SMOKE) / "embeddings.parquet", sf / "embeddings.parquet")
+    emb = load_table(spark, str(sf), "embeddings")
+    with pytest.raises(ValueError, match="full table"):
+        similarity.load_or_build_ivf_index(
+            spark, emb.filter(F.col("vec_id") % 2 == 0), str(sf), n_centroids=4
+        )
+    assert not any(p.suffix in (".json", ".parquet") for p in (tmp_path / "ivf").iterdir())
+    first = similarity.load_or_build_ivf_index(spark, emb, str(sf), n_centroids=4)
+    again = similarity.load_or_build_ivf_index(spark, emb, str(sf), n_centroids=4)
+    assert again[0] is first[0] and again[1] is first[1]
+    assert first[1].count() == emb.count()
+
+
 def test_bloom_prefilter_no_false_negatives_and_filters(spark):
     """Every member value survives the bloom (zero false negatives — the
     exactness contract), and a disjoint probe set is mostly rejected (the

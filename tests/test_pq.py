@@ -182,3 +182,22 @@ def test_ivfpq_composed_pipeline_quality_and_exactness(spark, fitted):
         # returned pair IS in the admitted exact top-20 (sanity bound)
         expect_pairs |= {(q, c) for _, c in scored[:20]}
     assert got_pairs <= expect_pairs
+
+
+def test_pq_index_refuses_prefiltered_vectors(spark, tmp_path, monkeypatch):
+    """Codes encoded from pre-filtered vectors hold fewer than ``m`` rows
+    per row of ``embeddings.parquet``: the build raises and publishes
+    neither the codebook nor the codes."""
+    import shutil
+    from pathlib import Path
+
+    from tests.conftest import SF_SMOKE
+
+    monkeypatch.setenv("SPARK_GRAFT_IVF_CACHE", str(tmp_path / "ivf"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(Path(SF_SMOKE) / "embeddings.parquet", sf / "embeddings.parquet")
+    vecs = load_table(spark, str(sf), "embeddings").filter(F.col("vec_id") < 40)
+    with pytest.raises(ValueError, match="full table"):
+        pq.load_or_build_pq_index(spark, vecs, str(sf))
+    assert not any(p.suffix in (".json", ".parquet") for p in (tmp_path / "ivf").iterdir())

@@ -2,8 +2,8 @@
 
 ``get_queries()`` builders return the DataFrame they built before while the
 key ``(sf_dir, sf_dir's entries, SQL confs, SPARK_GRAFT_IVF_CACHE)`` holds,
-keep one entry per query and session, and refresh what Spark cached over a
-dataset replaced under ``sf_dir``.
+keep one entry per query and session in the one session store, and see
+the new rows of a dataset replaced under ``sf_dir``.
 """
 
 from __future__ import annotations
@@ -18,7 +18,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 import __spark_entry__
-from data_ingestion_bra_spark.plans.registry import _PREPARED, get_queries
+from data_ingestion_bra_spark.plans.registry import get_queries
+from data_ingestion_bra_spark.sources.tables import _STORE
 from tests.conftest import SF_SMOKE, job_ids, sql_conf
 from tests.test_session_tables import LLM_CURATION, _noop
 
@@ -96,7 +97,7 @@ def test_new_session_has_its_own_cache(spark):
     build = get_queries()["dedup_exact_groups"]
     first = build(spark, SF_SMOKE)
     other = spark.newSession()
-    assert other not in _PREPARED
+    assert other not in _STORE
     assert build(other, SF_SMOKE) is not first
     assert build(spark, SF_SMOKE) is first
 
@@ -110,7 +111,7 @@ def test_a_miss_replaces_the_entry(spark, tmp_path):
     build(spark, sf_dir)
     gc.collect()
     assert first() is None
-    assert _PREPARED[spark]["dedup_exact_groups"][0][0] == sf_dir
+    assert _STORE[spark][("query", "dedup_exact_groups")][0][0] == sf_dir
 
 
 def _held_blocks(spark) -> dict[int, int]:

@@ -3,19 +3,21 @@
 ``get_spark`` must apply the same SQL confs as ``tune_session`` (a session
 built by ``get_spark`` alone once ran with Spark 4's ANSI default on), and
 two of them must remove the per-task and per-class fixed costs they were
-set for. ``sources.tables`` keeps one memo of lazy plan handles keyed by
+set for. ``sources.tables`` keeps one store of lazy plan handles keyed by
 the dataset path's stat, so an atomically replaced dataset directory gets
-a new handle.
+a new handle, and refreshes what Spark cached over the old one.
 """
 
 from __future__ import annotations
 
+import gc
 import os
 import shutil
+import weakref
 
 from data_ingestion_bra_spark.plans.registry import get_queries
 from data_ingestion_bra_spark.session import get_spark
-from data_ingestion_bra_spark.sources.tables import _PLAN_CACHE, load_table
+from data_ingestion_bra_spark.sources.tables import _STORE, load_table
 from tests.conftest import SF_SMOKE, job_ids, sql_conf
 
 INFER_FILTERS = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
@@ -115,15 +117,40 @@ def test_load_table_memo_follows_dataset_replace(spark, tmp_path):
     _write_documents(spark, path, 3)
     first = load_table(spark, sf_dir, "documents")
     assert load_table(spark, sf_dir, "documents") is first
+    first = weakref.ref(first)
 
     _write_documents(spark, path, 5)
     second = load_table(spark, sf_dir, "documents")
-    assert second is not first
+    gc.collect()
+    assert first() is None
     assert second.count() == 5
-    assert [k for k in _PLAN_CACHE[spark] if k[0] == path] == [
-        (path, (os.stat(path).st_mtime_ns, os.stat(path).st_size))
+    st = os.stat(path)
+    assert [(slot, hit[0]) for slot, hit in _STORE[spark].items() if path in slot] == [
+        (("table", path), (st.st_mtime_ns, st.st_size))
     ]
     assert load_table(spark, sf_dir, "documents") is second
+    assert spark.newSession() not in _STORE
+
+
+def test_persist_over_a_replaced_dataset_reads_the_new_rows(spark, tmp_path):
+    """Spark's CacheManager matches a persisted plan by its shape and
+    dataset path, not by the files' version: a persist made over a replaced
+    dataset reads the new rows only because the first read of the new
+    version refreshed the data cached over the old one."""
+    sf_dir = str(tmp_path)
+    path = os.path.join(sf_dir, "documents.parquet")
+    _write_documents(spark, path, 3)
+    before = load_table(spark, sf_dir, "documents").filter("doc_id >= 0").persist()
+    after = None
+    try:
+        assert before.count() == 3
+        _write_documents(spark, path, 5)
+        after = load_table(spark, sf_dir, "documents").filter("doc_id >= 0").persist()
+        assert after.count() == 5
+    finally:
+        for df in (before, after):
+            if df is not None:
+                df.unpersist()
 
 
 def test_load_table_events_ts_is_a_timestamp(spark, tmp_path):

@@ -37,6 +37,22 @@ def test_input_bytes_matches_file_size(spark):
     assert _input_bytes(d) == expected
 
 
+def test_input_bytes_is_none_for_a_non_file_scheme(monkeypatch):
+    """An object-store input is not sized: no ``os.stat`` is attempted on
+    it, and spread_scan then falls back to all slots."""
+
+    class Remote:
+        def inputFiles(self):
+            return ["s3://bucket/documents.parquet/part-0.parquet"]
+
+    stats = []
+    real_stat = os.stat
+    monkeypatch.setattr(os, "stat", lambda p, *a, **k: stats.append(p) or real_stat(p, *a, **k))
+    remote = Remote()
+    assert _input_bytes(remote) is None
+    assert stats == [] and remote._scan_bytes == -1
+
+
 def test_tiny_input_is_not_fanned_to_all_slots(spark):
     """A smoke-scale fixture is far below one bytes_per_task unit per slot:
     the spread must stay narrow (or be skipped) instead of paying a

@@ -168,11 +168,16 @@ def main() -> int:
     if json_out:
         import json
 
+        # what the session still holds after the run: cached and
+        # checkpointed RDD blocks, memory plus disk
+        held = spark.sparkContext._jsc.sc().getRDDStorageInfo()
         payload = {
             "sf_dir": sf_dir,
             "n_queries": n_run,
             "n_green": n_run - n_failed,
             "checker": "tools/check_oracle.py (type-strict pandas fetch path)",
+            "retained_storage_mb": round(sum(i.memSize() + i.diskSize() for i in held) / 2**20, 3),
+            "rdds_held": len(held),
             "queries": report,
         }
         Path(json_out).write_text(json.dumps(payload, indent=1) + "\n")
