@@ -20,8 +20,9 @@ baseline roundtrip, which is the pytest pin.
 
 Scope still excludes: arithmetic coding, 12-bit, hierarchical (SOF3+),
 ICC, and restart intervals inside progressive scans. That covers every
-fixture this repo synthesizes; libjpeg-turbo/Pillow slot into the same
-per-payload callable signature (``operators/multimodal.py:pick_decoder``).
+fixture this repo synthesizes; libjpeg-turbo/Pillow would replace
+``decode_jpeg`` inside the same per-row functions that
+``operators/multimodal.py:map_rows`` runs.
 
 Determinism contract (what the DuckDB oracle leans on): all roundings are
 ``floor(x + 0.5)`` — color conversion both ways, quantization, and the

@@ -23,12 +23,13 @@ is exactly the scope of a header-metadata tier.
 
 from __future__ import annotations
 
+import functools
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from data_ingestion_bra_spark.operators.multimodal import PAYLOAD_SCHEMA, map_rows, payload_row
 
 _CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl"}
 _UNITY_MATRIX = struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
@@ -211,13 +212,6 @@ def parse_mp4_meta(buf: bytes) -> dict:
 
 
 # ------------------------------------------------------------ Spark plumbing
-MP4_PAYLOAD_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
 MP4_META_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -254,49 +248,39 @@ def mp4_params(doc_id: int) -> dict:
     }
 
 
-def synth_mp4_batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "payload": [
-                    build_mp4(**mp4_params(int(i))) for i in pdf["doc_id"]
-                ],
-            }
-        )
+def _synth_mp4_bytes(doc_id: int) -> bytes:
+    return build_mp4(**mp4_params(doc_id))
 
 
 def synthesize_mp4(df: DataFrame) -> DataFrame:
-    """Attach a minimal two-track ISO-BMFF payload per doc."""
-    return df.select("doc_id").mapInPandas(synth_mp4_batch_fn, schema=MP4_PAYLOAD_SCHEMA)
+    """Attach a minimal two-track ISO-BMFF payload per doc. Reads the scan's
+    own partitions, not the spread doc-id source: building a few dozen boxes
+    costs less than the round-robin exchange the spread adds."""
+    return map_rows(
+        df.select("doc_id"), functools.partial(payload_row, _synth_mp4_bytes), PAYLOAD_SCHEMA
+    )
 
 
-def mp4_meta_batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            m = parse_mp4_meta(bytes(payload))
-            rows.append(
-                (
-                    int(doc_id),
-                    m["major_brand"],
-                    int(m["timescale"]),
-                    # movie timescale is ms-exact only when it's 1000; keep
-                    # the conversion explicit so real-world files stay right
-                    int(m["duration"] * 1000 // m["timescale"]),
-                    int(m["n_tracks"]),
-                    m["video_codec"],
-                    m["width"],
-                    m["height"],
-                    m["audio_codec"],
-                    m["n_channels"],
-                    m["sample_rate"],
-                )
-            )
-        yield pd.DataFrame(rows, columns=[f.name for f in MP4_META_SCHEMA.fields])
+def _mp4_meta_row(doc_id: int, payload: bytes):
+    m = parse_mp4_meta(payload)
+    yield (
+        doc_id,
+        m["major_brand"],
+        int(m["timescale"]),
+        # movie timescale is ms-exact only when it's 1000; keep the
+        # conversion explicit so real-world files stay right
+        int(m["duration"] * 1000 // m["timescale"]),
+        int(m["n_tracks"]),
+        m["video_codec"],
+        m["width"],
+        m["height"],
+        m["audio_codec"],
+        m["n_channels"],
+        m["sample_rate"],
+    )
 
 
 def mp4_header_meta(df: DataFrame) -> DataFrame:
     """ISO-BMFF metadata-without-decode via Arrow-batched mapInPandas —
     route/filter on container facts at 100 TB, decode only what survives."""
-    return df.mapInPandas(mp4_meta_batch_fn, schema=MP4_META_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), _mp4_meta_row, MP4_META_SCHEMA)

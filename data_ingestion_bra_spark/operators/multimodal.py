@@ -7,25 +7,34 @@ without touching bytes), and decode/feature steps run in Arrow-batched
 ``mapInPandas`` so payload bytes cross the JVM↔Python boundary in columnar
 batches, never row-at-a-time.
 
-The decode step is pluggable: ``decoder='pil'`` runs a real Pillow decode
-when the library is importable (``auto`` falls back gracefully), while the
-default ``stub`` is a deterministic fake with an exact SQL oracle — the
-container ships without image libs, and the fixture payloads are text
-bytes, so the stub is what the catalog query pins. The Spark-side plumbing
-— schema, batch shape, partitioning — is identical for both and tested.
+Every codec stage is a per-row function handed to ``map_rows``, the one
+batch protocol: 1:1 decoders and 1:N frame samplers alike yield output
+tuples, and parameters bind with ``functools.partial``. The image, audio
+and video stages decode real containers with the vendored stdlib-only
+codecs (``png.py``, ``gif.py``, ``jpeg.py``), stdlib ``wave`` and G.711
+mu-law. ``decode_images`` and ``audio_features`` are deterministic stubs
+over the fixture's text-byte payloads, each with an exact SQL oracle.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+import io
+import sys
+import wave
+from array import array
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from data_ingestion_bra_spark.sources.tables import spread_scan
 from pyspark.sql import types as T
+
+from data_ingestion_bra_spark.operators import gif as _gif
+from data_ingestion_bra_spark.operators import jpeg as _jpeg
+from data_ingestion_bra_spark.operators import png as _png
+from data_ingestion_bra_spark.sources.tables import spread_scan
 
 #: spread sizing for the Python codec tier: these pipelines hand every row to
 #: an Arrow-batched pure-Python encoder/decoder whose per-byte cost is ~3-4
@@ -35,10 +44,48 @@ from pyspark.sql import types as T
 #: 4 KiB of scan input already funds >100 ms of codec work per task.
 _CODEC_SPREAD_BYTES = 4 * 1024
 
-try:  # optional dependency — the container ships without image libs
-    from PIL import Image as _PILImage
-except ImportError:  # pragma: no cover - exercised via decoder selection tests
-    _PILImage = None
+
+def map_rows(
+    df: DataFrame, row_fn: Callable[..., Iterable[tuple]], schema: T.StructType
+) -> DataFrame:
+    """Run ``row_fn`` over every row of ``df`` inside Arrow-batched
+    ``mapInPandas``: it takes the row's columns positionally and yields zero
+    or more output tuples laid out as ``schema``. Per-batch loop, not
+    per-row UDF calls — the pattern that holds at 100 TB where each batch is
+    thousands of payloads."""
+    cols = schema.fieldNames()
+
+    def batches_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = pdf.itertuples(index=False, name=None)
+            yield pd.DataFrame([out for row in rows for out in row_fn(*row)], columns=cols)
+
+    return df.mapInPandas(batches_fn, schema=schema)
+
+
+def _doc_ids(df: DataFrame) -> DataFrame:
+    """The ``doc_id`` column of ``df``, spread so each task funds a codec
+    worth of Python work (``_CODEC_SPREAD_BYTES``): the one source of the
+    image/audio synthesizers and the doc-id-driven audits."""
+    return spread_scan(df.select("doc_id"), bytes_per_task=_CODEC_SPREAD_BYTES)
+
+
+PAYLOAD_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("payload", T.BinaryType()),
+    ]
+)
+
+
+def payload_row(synth: Callable[[int], bytes], doc_id: int):
+    yield doc_id, synth(doc_id)
+
+
+def synthesize_payloads(df: DataFrame, synth: Callable[[int], bytes]) -> DataFrame:
+    """(doc_id, payload) with ``synth(doc_id)``'s container bytes per doc."""
+    return map_rows(_doc_ids(df), functools.partial(payload_row, synth), PAYLOAD_SCHEMA)
+
 
 DECODED_META_SCHEMA = T.StructType(
     [
@@ -68,12 +115,10 @@ def attach_binary_payload(df: DataFrame, id_col: str, text_col: str) -> DataFram
 
 
 def _fake_decode(payload: bytes) -> tuple[int, int, int, int]:
-    """Deterministic stand-in for an image decoder.
-
-    A real deployment plugs PIL/ffmpeg here (same signature); this derives
-    stable pseudo-dimensions and a mean-intensity proxy from the bytes so
-    tests have exact expectations. Raises on empty payloads the way a real
-    decoder raises on corrupt files.
+    """Deterministic stand-in for an image decoder: derives stable
+    pseudo-dimensions and a mean-intensity proxy from the bytes so tests
+    and the SQL oracle have exact expectations. Raises on empty payloads
+    the way a real decoder raises on corrupt files.
     """
     if not payload:
         raise ValueError("empty payload: cannot decode")
@@ -86,183 +131,17 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int, int]:
     return width, height, channels, mean_intensity_e6
 
 
-def _pil_decode(payload: bytes) -> tuple[int, int, int, int]:
-    """Real image decode via PIL, same signature/semantics as ``_fake_decode``:
-    returns (width, height, channels, mean_intensity_e6) with the intensity
-    computed in exact integer arithmetic (sum of all band bytes, scaled 1e6,
-    floor-divided by n_values*255) so outputs stay oracle-hashable."""
-    import io
-
-    if not payload:
-        raise ValueError("empty payload: cannot decode")
-    with _PILImage.open(io.BytesIO(payload)) as img:
-        img.load()
-        width, height = img.size
-        bands = img.getbands()
-        data = img.tobytes()
-    channels = len(bands)
-    denom = len(data) * 255
-    mean_intensity_e6 = (sum(data) * 1_000_000) // denom if denom else 0
-    return width, height, channels, mean_intensity_e6
+def _fake_decode_row(doc_id: int, payload: bytes):
+    yield (doc_id, len(payload), *_fake_decode(payload))
 
 
-def _png_decode(payload: bytes) -> tuple[int, int, int, int]:
-    """REAL image decode via the vendored pure-Python PNG codec
-    (``operators/png.py`` — stdlib zlib inflate, CRC checks, all five
-    scanline filters). Same signature/semantics as ``_pil_decode``; needs
-    no third-party library, so the real-container path executes even in
-    this dependency-locked environment."""
-    from data_ingestion_bra_spark.operators import png as _png
-
-    if not payload:
-        raise ValueError("empty payload: cannot decode")
-    width, height, channels, data = _png.decode_png(payload)
-    denom = len(data) * 255
-    mean_intensity_e6 = (sum(data) * 1_000_000) // denom if denom else 0
-    return width, height, channels, mean_intensity_e6
-
-
-def pick_decoder(decoder: str = "stub"):
-    """Resolve a decoder name to a per-payload callable.
-
-    - ``stub``: the deterministic fake (default — the fixture corpus is
-      UTF-8 text bytes, not real image files, and the oracle pins its math)
-    - ``png``: real PNG decode via the vendored stdlib-only codec
-      (``operators/png.py``) — always available
-    - ``pil``: real PIL decode; raises ImportError with guidance if the
-      library is absent
-    - ``auto``: PIL when importable, stub otherwise (fixture payloads are
-      text bytes, so auto's fallback must accept arbitrary binary)
-    """
-    if decoder == "stub":
-        return _fake_decode
-    if decoder == "png":
-        return _png_decode
-    if decoder == "pil":
-        if _PILImage is None:
-            raise ImportError(
-                "decoder='pil' requires Pillow; install it, use decoder='png' "
-                "for the vendored real decoder, or decoder='auto' to fall "
-                "back to the deterministic stub"
-            )
-        return _pil_decode
-    if decoder == "auto":
-        return _pil_decode if _PILImage is not None else _fake_decode
-    raise ValueError(f"unknown decoder {decoder!r}; expected stub|png|pil|auto")
-
-
-def make_decode_batch_fn(decoder: str = "stub"):
-    """mapInPandas worker factory: Arrow batches in, decoded-metadata out.
-
-    Batch shape contract: input columns (doc_id, payload[, n_bytes]);
-    output matches DECODED_META_SCHEMA. Per-batch vectorized loop (not
-    per-row UDF calls) — the pattern that holds at 100 TB where each batch
-    is thousands of payloads. The decoder resolves INSIDE the worker so the
-    closure serializes by name, and executors that do have Pillow use it
-    under ``auto`` even if the driver environment differs.
-    """
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decode = pick_decoder(decoder)
-        for pdf in batches:
-            dims = [decode(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                    "width": [d[0] for d in dims],
-                    "height": [d[1] for d in dims],
-                    "channels": [d[2] for d in dims],
-                    "mean_intensity_e6": [d[3] for d in dims],
-                }
-            )
-
-    return fn
-
-
-# Back-compat name: the stub-decoder worker used by the catalog query.
-decode_image_batch = make_decode_batch_fn("stub")
-
-
-def decode_images(df: DataFrame, *, decoder: str = "stub") -> DataFrame:
-    """Decode/feature-extract an opaque payload column via mapInPandas.
-
-    ``decoder='auto'`` upgrades to a real PIL decode when Pillow is
-    importable; the catalog query stays on the stub because its fixture
-    payloads are text bytes with an exact SQL oracle."""
-    pick_decoder(decoder)  # fail fast on the driver for bad/unavailable names
-    return df.mapInPandas(make_decode_batch_fn(decoder), schema=DECODED_META_SCHEMA)
-
-
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("scale_e6", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
-
-def resize_batch_fn(target_w: int, target_h: int):
-    """mapInPandas worker factory for the resize step.
-
-    The real implementation calls PIL's resize per batch; the stub keeps the
-    contract observable: output dims are the target, the scale factor is
-    recorded (fixed-point), and the 'resized payload' is a deterministic
-    truncation/padding of the input bytes to target_w*target_h (so tests can
-    assert exact output sizes — the property that matters for batch shape).
-    """
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n_out = target_w * target_h
-        for pdf in batches:
-            payloads = [bytes(p) for p in pdf["payload"]]
-            for p in payloads:
-                if not p:
-                    raise ValueError("empty payload: cannot resize")
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": target_w,
-                    "height": target_h,
-                    "scale_e6": [(n_out * 1_000_000) // len(p) for p in payloads],
-                    "payload": [
-                        (p * (n_out // len(p) + 1))[:n_out] for p in payloads
-                    ],
-                }
-            )
-
-    return fn
-
-
-def resize_images(df: DataFrame, *, width: int, height: int) -> DataFrame:
-    """Resize an opaque payload column via mapInPandas (stubbed resampler;
-    real deployments swap in PIL — identical batch contract)."""
-    return df.mapInPandas(resize_batch_fn(width, height), schema=RESIZED_SCHEMA)
-
-
-def frame_sample_plan(df: DataFrame, *, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: one output row per sampled frame
-    index, derived WITHOUT decoding (index arithmetic on metadata), so the
-    expensive decode only runs on sampled frames downstream.
-
-    Stub semantics: n_frames := n_bytes // 256 (kept as the cheap oracle
-    twin over text-byte fixtures); the REAL implementation is
-    ``gif_video_meta`` + ``gif_frame_features`` below, which parse
-    n_frames from genuine GIF container metadata and decode only the
-    sampled frames. Emits (doc_id, frame_idx) for every ``every_n``-th
-    frame.
-    """
-    return df.select(
-        "doc_id",
-        F.explode(
-            F.sequence(
-                F.lit(0), F.greatest((F.col("n_bytes") / F.lit(256)).cast("bigint") - 1, F.lit(0)), F.lit(every_n)
-            )
-        ).alias("frame_idx"),
-    )
+def decode_images(df: DataFrame) -> DataFrame:
+    """Stub image decode over the (doc_id, payload) columns of ``df``
+    (``attach_binary_payload``'s text bytes): ``_fake_decode``'s
+    pseudo-dimensions and intensity, which the catalog's SQL oracle
+    recomputes exactly. Real image decode is ``png_decode_features`` and
+    ``jpeg_roundtrip_features``."""
+    return map_rows(df.select("doc_id", "payload"), _fake_decode_row, DECODED_META_SCHEMA)
 
 
 AUDIO_META_SCHEMA = T.StructType(
@@ -304,21 +183,8 @@ def _fake_audio_features(payload: bytes) -> tuple[int, int, int, int]:
     return duration_ms, peak, mean_abs_e6, zero_crossings
 
 
-def audio_features_batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: Arrow batches of (doc_id, payload) in, audio
-    feature rows out — same batch-shape contract as the image decoder."""
-    for pdf in batches:
-        feats = [_fake_audio_features(bytes(p)) for p in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "n_bytes": pdf["payload"].map(len).astype("int64"),
-                "duration_ms": [f[0] for f in feats],
-                "peak": [f[1] for f in feats],
-                "mean_abs_e6": [f[2] for f in feats],
-                "zero_crossings": [f[3] for f in feats],
-            }
-        )
+def _fake_audio_row(doc_id: int, payload: bytes):
+    yield (doc_id, len(payload), *_fake_audio_features(payload))
 
 
 def audio_features(df: DataFrame) -> DataFrame:
@@ -326,7 +192,7 @@ def audio_features(df: DataFrame) -> DataFrame:
     mapInPandas — completes the image/audio/video modality trio on the same
     Arrow-batched plumbing (schema, partitioning, batch shape all real;
     only the sample interpretation is stubbed in-container)."""
-    return df.mapInPandas(audio_features_batch_fn, schema=AUDIO_META_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), _fake_audio_row, AUDIO_META_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -337,25 +203,18 @@ def audio_features(df: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 WAV_RATE_HZ = 8000  # synthesized fixture rate (mono, 16-bit)
-WAV_HEADER_BYTES = 44  # canonical PCM header the stdlib writer emits
 
 
 def _synth_samples(doc_id: int) -> "array":
     """Deterministic integer PCM for a doc: n = 64 + doc_id % 64 frames of
     s(i) = ((doc_id*7919 + i*131) % 4096) - 2048 — pure integer modular
     arithmetic, so a SQL oracle regenerates the identical waveform."""
-    from array import array
-
     n = 64 + doc_id % 64
     return array("h", [((doc_id * 7919 + i * 131) % 4096) - 2048 for i in range(n)])
 
 
 def _synth_wav_bytes(doc_id: int) -> bytes:
     """Real RIFF/WAVE bytes for a doc's synthetic PCM via stdlib ``wave``."""
-    import io
-    import sys
-    import wave
-
     samples = _synth_samples(doc_id)
     if sys.byteorder == "big":  # pragma: no cover - x86/arm LE everywhere here
         samples = samples[:]
@@ -369,46 +228,15 @@ def _synth_wav_bytes(doc_id: int) -> bytes:
     return buf.getvalue()
 
 
-WAV_PAYLOAD_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
-
-def synth_wav_batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: (doc_id) in, (doc_id, real WAV payload) out."""
-    for pdf in batches:
-        ids = pdf["doc_id"].astype("int64")
-        yield pd.DataFrame(
-            {"doc_id": ids, "payload": [_synth_wav_bytes(int(d)) for d in ids]}
-        )
-
-
 def synthesize_wav(df: DataFrame) -> DataFrame:
     """Attach a real WAV payload per doc_id (deterministic synthetic PCM)."""
-    return spread_scan(df.select("doc_id"), bytes_per_task=_CODEC_SPREAD_BYTES).mapInPandas(synth_wav_batch_fn, schema=WAV_PAYLOAD_SCHEMA)
+    return synthesize_payloads(df, _synth_wav_bytes)
 
 
-def _wav_decode_features(payload: bytes) -> tuple[int, int, int, int, int]:
-    """REAL WAV decode via stdlib ``wave`` + ``array``: parses the RIFF
-    header, reads all frames, and computes integer-exact features over the
-    16-bit signed samples:
-
-      (n_frames, duration_ms, peak, mean_abs_e6, zero_crossings)
-
-    peak = max |s|; mean_abs_e6 = sum|s| * 1e6 // (n * 32768); a zero
-    crossing is a sign-bit change between consecutive samples (s < 0).
-    Raises ``wave.Error`` on a corrupt container, like any real decoder.
-    """
-    import io
-    import sys
-    import wave
-    from array import array
-
-    if not payload:
-        raise ValueError("empty payload: cannot decode")
+def _wav_pcm(payload: bytes) -> tuple[int, int, "array"]:
+    """(frame rate, header frame count, samples) of a mono 16-bit PCM WAV:
+    stdlib ``wave`` parses the RIFF header and reads every frame. Raises
+    ``wave.Error`` on a corrupt container, like any real decoder."""
     with wave.open(io.BytesIO(payload), "rb") as r:
         if r.getsampwidth() != 2 or r.getnchannels() != 1:
             raise ValueError("expected mono 16-bit PCM")
@@ -419,6 +247,21 @@ def _wav_decode_features(payload: bytes) -> tuple[int, int, int, int, int]:
     samples.frombytes(raw)
     if sys.byteorder == "big":  # pragma: no cover
         samples.byteswap()
+    return rate, n, samples
+
+
+def _wav_decode_features(payload: bytes) -> tuple[int, int, int, int, int]:
+    """REAL WAV decode (``_wav_pcm``) with integer-exact features over the
+    16-bit signed samples:
+
+      (n_frames, duration_ms, peak, mean_abs_e6, zero_crossings)
+
+    peak = max |s|; mean_abs_e6 = sum|s| * 1e6 // (n * 32768); a zero
+    crossing is a sign-bit change between consecutive samples (s < 0).
+    """
+    if not payload:
+        raise ValueError("empty payload: cannot decode")
+    rate, n, samples = _wav_pcm(payload)
     if n == 0:
         # structurally valid but empty container: fail the documented
         # decoder contract, not with max()-of-empty/ZeroDivisionError
@@ -445,30 +288,16 @@ WAV_META_SCHEMA = T.StructType(
 )
 
 
-def wav_features_batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: Arrow batches of (doc_id, payload=WAV bytes) in,
-    decoded audio feature rows out — the REAL-decoder twin of
-    ``audio_features_batch_fn``."""
-    for pdf in batches:
-        feats = [_wav_decode_features(bytes(p)) for p in pdf["payload"]]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "n_bytes": pdf["payload"].map(len).astype("int64"),
-                "n_frames": [f[0] for f in feats],
-                "duration_ms": [f[1] for f in feats],
-                "peak": [f[2] for f in feats],
-                "mean_abs_e6": [f[3] for f in feats],
-                "zero_crossings": [f[4] for f in feats],
-            }
-        )
+def _wav_features_row(doc_id: int, payload: bytes):
+    yield (doc_id, len(payload), *_wav_decode_features(payload))
 
 
 def wav_audio_features(df: DataFrame) -> DataFrame:
     """REAL audio decode over a WAV payload column via mapInPandas: stdlib
     ``wave`` parses the RIFF container and features are computed from the
-    decoded 16-bit samples in exact integer arithmetic (SQL-oracle-safe)."""
-    return df.mapInPandas(wav_features_batch_fn, schema=WAV_META_SCHEMA)
+    decoded 16-bit samples in exact integer arithmetic (SQL-oracle-safe) —
+    the real-decoder twin of ``audio_features``."""
+    return map_rows(df.select("doc_id", "payload"), _wav_features_row, WAV_META_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -491,24 +320,13 @@ def _synth_png_bytes(doc_id: int) -> bytes:
     """Real PNG bytes for a doc's synthetic RGB image. The scanline filter
     cycles through all five predictors (doc_id % 5) so a corpus-wide decode
     exercises every de-filter path, not just filter 0."""
-    from data_ingestion_bra_spark.operators import png as _png
-
     w, h, pix = _synth_pixels(doc_id)
     return _png.encode_png(w, h, pix, channels=3, filter_type=doc_id % 5)
 
 
-def synth_png_batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: (doc_id) in, (doc_id, real PNG payload) out."""
-    for pdf in batches:
-        ids = pdf["doc_id"].astype("int64")
-        yield pd.DataFrame(
-            {"doc_id": ids, "payload": [_synth_png_bytes(int(d)) for d in ids]}
-        )
-
-
 def synthesize_png(df: DataFrame) -> DataFrame:
     """Attach a real PNG payload per doc_id (deterministic synthetic RGB)."""
-    return spread_scan(df.select("doc_id"), bytes_per_task=_CODEC_SPREAD_BYTES).mapInPandas(synth_png_batch_fn, schema=WAV_PAYLOAD_SCHEMA)
+    return synthesize_payloads(df, _synth_png_bytes)
 
 
 PNG_META_SCHEMA = T.StructType(
@@ -525,35 +343,24 @@ PNG_META_SCHEMA = T.StructType(
 )
 
 
-def png_decode_batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: (doc_id, payload=PNG bytes) in, decoded image
-    features out — full container parse (CRC, inflate, de-filter) per row."""
-    from data_ingestion_bra_spark.operators import png as _png
+def _png_features(payload: bytes) -> tuple[int, int, int, int, int]:
+    """(n_pixel_bytes, width, height, channels, mean_intensity_e6) of a PNG:
+    full container parse (CRC, inflate, de-filter), intensity integer-exact
+    over the decoded pixel bytes."""
+    w, h, ch, data = _png.decode_png(payload)
+    denom = len(data) * 255
+    mean = (sum(data) * 1_000_000) // denom if denom else 0
+    return len(data), w, h, ch, mean
 
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, ch, data = _png.decode_png(bytes(payload))
-            denom = len(data) * 255
-            mean = (sum(data) * 1_000_000) // denom if denom else 0
-            out.append((int(doc_id), len(data), w, h, ch, mean))
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id",
-                "n_pixel_bytes",
-                "width",
-                "height",
-                "channels",
-                "mean_intensity_e6",
-            ],
-        )
+
+def _png_decode_row(doc_id: int, payload: bytes):
+    yield (doc_id, *_png_features(payload))
 
 
 def png_decode_features(df: DataFrame) -> DataFrame:
     """REAL image decode over a PNG payload column via mapInPandas using the
     vendored codec; features integer-exact over the decoded pixel bytes."""
-    return df.mapInPandas(png_decode_batch_fn, schema=PNG_META_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), _png_decode_row, PNG_META_SCHEMA)
 
 
 def _png_resize(payload: bytes, target_w: int, target_h: int) -> bytes:
@@ -561,8 +368,6 @@ def _png_resize(payload: bytes, target_w: int, target_h: int) -> bytes:
     index = floor(i * src/target) — pure integer arithmetic, so an oracle
     can recompute any resized pixel), re-encode. Pillow's ``Image.resize``
     slots into the same signature for richer resamplers."""
-    from data_ingestion_bra_spark.operators import png as _png
-
     w, h, ch, data = _png.decode_png(payload)
     rows = bytearray()
     for ty in range(target_h):
@@ -574,34 +379,9 @@ def _png_resize(payload: bytes, target_w: int, target_h: int) -> bytes:
     return _png.encode_png(target_w, target_h, bytes(rows), channels=ch)
 
 
-def png_resize_batch_fn(target_w: int, target_h: int):
-    """mapInPandas worker factory: (doc_id, payload=PNG) in, genuinely
-    resized PNG payloads + decoded-feature columns out (the features are
-    recomputed from the RESIZED pixels, proving the resample ran)."""
-    from data_ingestion_bra_spark.operators import png as _png
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                resized = _png_resize(bytes(payload), target_w, target_h)
-                w, h, ch, data = _png.decode_png(resized)
-                denom = len(data) * 255
-                mean = (sum(data) * 1_000_000) // denom if denom else 0
-                out.append((int(doc_id), len(data), w, h, ch, mean))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id",
-                    "n_pixel_bytes",
-                    "width",
-                    "height",
-                    "channels",
-                    "mean_intensity_e6",
-                ],
-            )
-
-    return fn
+def _png_resize_row(target_w: int, target_h: int, doc_id: int, payload: bytes):
+    # features of the RESIZED image, proving the resample ran
+    yield (doc_id, *_png_features(_png_resize(payload, target_w, target_h)))
 
 
 def resize_png_images(df: DataFrame, *, width: int, height: int) -> DataFrame:
@@ -609,14 +389,15 @@ def resize_png_images(df: DataFrame, *, width: int, height: int) -> DataFrame:
     nearest-neighbor resample → re-encode → re-decode, all inside one
     Arrow-batched mapInPandas stage; outputs integer-exact features of the
     resized image (SQL-oracle-checkable)."""
-    return df.mapInPandas(png_resize_batch_fn(width, height), schema=PNG_META_SCHEMA)
+    row = functools.partial(_png_resize_row, width, height)
+    return map_rows(df.select("doc_id", "payload"), row, PNG_META_SCHEMA)
 
 
 # --------------------------------------------------------------------------
 # REAL video: animated GIF89a containers encoded AND decoded with the
 # vendored stdlib-only codec (operators/gif.py) — the video verse of the
-# PNG/WAV playbook. Replaces the `n_frames := n_bytes // 256` stub with a
-# genuine container-metadata parse, and decodes ONLY sampled frames.
+# PNG/WAV playbook: frame counts come from a genuine container-metadata
+# parse, and only sampled frames are decoded.
 # --------------------------------------------------------------------------
 
 #: 16-entry grayscale palette: index k -> (k*17, k*17, k*17); spans 0..255
@@ -639,8 +420,6 @@ def _synth_gif_bytes(doc_id: int) -> bytes:
     """Real animated GIF89a bytes for a doc's deterministic synthetic
     frames: frame f pixel j has palette index (doc_id*31 + f*17 + j*7) % 16
     — pure integer modular arithmetic, SQL-regenerable."""
-    from data_ingestion_bra_spark.operators import gif as _gif
-
     w, h, nf, delay_cs = _synth_gif_params(doc_id)
     frames = [
         bytes((doc_id * 31 + f * 17 + j * 7) % 16 for j in range(w * h))
@@ -649,19 +428,10 @@ def _synth_gif_bytes(doc_id: int) -> bytes:
     return _gif.encode_gif(w, h, frames, GIF_PALETTE, delays_cs=[delay_cs] * nf)
 
 
-def synth_gif_batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: (doc_id) in, (doc_id, real GIF payload) out."""
-    for pdf in batches:
-        ids = pdf["doc_id"].astype("int64")
-        yield pd.DataFrame(
-            {"doc_id": ids, "payload": [_synth_gif_bytes(int(d)) for d in ids]}
-        )
-
-
 def synthesize_gif(df: DataFrame) -> DataFrame:
     """Attach a real animated-GIF payload per doc_id (deterministic
     synthetic frames through the vendored encoder)."""
-    return spread_scan(df.select("doc_id"), bytes_per_task=_CODEC_SPREAD_BYTES).mapInPandas(synth_gif_batch_fn, schema=WAV_PAYLOAD_SCHEMA)
+    return synthesize_payloads(df, _synth_gif_bytes)
 
 
 GIF_META_SCHEMA = T.StructType(
@@ -676,31 +446,18 @@ GIF_META_SCHEMA = T.StructType(
 )
 
 
-def gif_meta_batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: (doc_id, payload=GIF bytes) in, container
-    metadata out — structural walk ONLY (every LZW data sub-block skipped
-    by its length prefix, zero pixel decode). This is the real-container
-    metadata path that replaces the byte-length frame-count stub."""
-    from data_ingestion_bra_spark.operators import gif as _gif
-
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            m = _gif.parse_gif_meta(bytes(payload))
-            out.append(
-                (int(doc_id), m.n_frames, m.width, m.height, m.total_delay_cs * 10)
-            )
-        yield pd.DataFrame(
-            out, columns=["doc_id", "n_frames", "width", "height", "duration_ms"]
-        )
+def _gif_meta_row(doc_id: int, payload: bytes):
+    m = _gif.parse_gif_meta(payload)
+    yield doc_id, m.n_frames, m.width, m.height, m.total_delay_cs * 10
 
 
 def gif_video_meta(df: DataFrame) -> DataFrame:
     """REAL video-container metadata over a GIF payload column via
     mapInPandas: frame count, geometry, and duration parsed from the
-    container's block structure without decompressing a single frame —
-    at 100 TB the metadata pass costs a container walk, not a decode."""
-    return df.mapInPandas(gif_meta_batch_fn, schema=GIF_META_SCHEMA)
+    container's block structure — every LZW data sub-block skipped by its
+    length prefix, zero pixel decode — so at 100 TB the metadata pass costs
+    a container walk, not a decode."""
+    return map_rows(df.select("doc_id", "payload"), _gif_meta_row, GIF_META_SCHEMA)
 
 
 GIF_FRAME_SCHEMA = T.StructType(
@@ -715,54 +472,26 @@ GIF_FRAME_SCHEMA = T.StructType(
 )
 
 
-def gif_frame_features_batch_fn(every_n: int):
-    """mapInPandas worker factory: (doc_id, payload=GIF) in, one row per
-    SAMPLED frame out. Per payload: parse container metadata (no decode),
-    choose indices 0, every_n, 2*every_n, ...; LZW-decompress ONLY those
-    frames (others skipped structurally); map palette indices through the
-    decoded color table and compute integer-exact mean intensity. The
-    sampling decision is row-local, so the whole sample-then-decode
-    pipeline is one shuffle-free mapInPandas stage — no join needed to
-    bring payloads back to sampled indices."""
-    from data_ingestion_bra_spark.operators import gif as _gif
+def _sampled_frames(payload: bytes, every_n: int):
+    """(meta, palette, frames) of a GIF: the container walk (no decode)
+    chooses frames 0, every_n, 2*every_n, ...; only those are
+    LZW-decompressed, the others are skipped structurally."""
+    meta = _gif.parse_gif_meta(payload)
+    _, palette, frames = _gif.decode_gif_frames(payload, set(range(0, meta.n_frames, every_n)))
+    return meta, palette, frames
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                meta = _gif.parse_gif_meta(p)
-                want = set(range(0, meta.n_frames, every_n))
-                _, palette, frames = _gif.decode_gif_frames(p, want)
-                npx = meta.width * meta.height
-                for fr in frames:
-                    total = sum(
-                        palette[3 * idx] + palette[3 * idx + 1] + palette[3 * idx + 2]
-                        for idx in fr.pixels
-                    )
-                    out.append(
-                        (
-                            int(doc_id),
-                            fr.index,
-                            meta.width,
-                            meta.height,
-                            npx,
-                            total * 1_000_000 // (npx * 3 * 255),
-                        )
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id",
-                    "frame_idx",
-                    "width",
-                    "height",
-                    "n_pixels",
-                    "mean_intensity_e6",
-                ],
-            )
 
-    return fn
+def _frame_mean_e6(palette, pixels, npx: int) -> int:
+    """Integer-exact mean intensity of a palette-index frame."""
+    total = sum(palette[3 * i] + palette[3 * i + 1] + palette[3 * i + 2] for i in pixels)
+    return total * 1_000_000 // (npx * 3 * 255)
+
+
+def _gif_frame_row(every_n: int, doc_id: int, payload: bytes):
+    meta, palette, frames = _sampled_frames(payload, every_n)
+    npx = meta.width * meta.height
+    for fr in frames:
+        yield doc_id, fr.index, meta.width, meta.height, npx, _frame_mean_e6(palette, fr.pixels, npx)
 
 
 def gif_frame_features(df: DataFrame, *, every_n: int = 2) -> DataFrame:
@@ -770,8 +499,11 @@ def gif_frame_features(df: DataFrame, *, every_n: int = 2) -> DataFrame:
     container metadata gives n_frames (parsed, not inferred from byte
     length), every ``every_n``-th frame is LZW-decoded — unsampled frames
     are never decompressed — and features are integer-exact over the
-    palette-mapped pixels (SQL-oracle-checkable)."""
-    return df.mapInPandas(gif_frame_features_batch_fn(every_n), schema=GIF_FRAME_SCHEMA)
+    palette-mapped pixels (SQL-oracle-checkable). The sampling decision is
+    row-local, so sample-then-decode is one shuffle-free stage — no join
+    needed to bring payloads back to sampled indices."""
+    row = functools.partial(_gif_frame_row, every_n)
+    return map_rows(df.select("doc_id", "payload"), row, GIF_FRAME_SCHEMA)
 
 
 def _gif_resize_frame(pixels: bytes, w: int, h: int, tw: int, th: int) -> bytes:
@@ -785,76 +517,34 @@ def _gif_resize_frame(pixels: bytes, w: int, h: int, tw: int, th: int) -> bytes:
     return bytes(out)
 
 
-def gif_thumbs_batch_fn(target_w: int, target_h: int, every_n: int):
-    """mapInPandas worker factory: (doc_id, payload=GIF) in, one row per
-    sampled THUMBNAIL frame out. Per payload: metadata parse (no decode) →
-    sample every ``every_n``-th frame → LZW-decode only those → NN-resample
-    each to (target_w, target_h) → re-encode the thumbnails as a NEW
-    animated GIF through the vendored encoder → re-decode it → features
-    from the RE-DECODED pixels (proving the full round trip ran). The
-    video twin of the PNG resize path."""
-    from data_ingestion_bra_spark.operators import gif as _gif
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                meta = _gif.parse_gif_meta(p)
-                want = set(range(0, meta.n_frames, every_n))
-                _, palette, frames = _gif.decode_gif_frames(p, want)
-                thumbs = [
-                    _gif_resize_frame(
-                        fr.pixels, meta.width, meta.height, target_w, target_h
-                    )
-                    for fr in frames
-                ]
-                pal = [
-                    (palette[3 * k], palette[3 * k + 1], palette[3 * k + 2])
-                    for k in range(meta.n_colors)
-                ]
-                reencoded = _gif.encode_gif(target_w, target_h, thumbs, pal)
-                _, pal2, decoded = _gif.decode_gif(reencoded)
-                npx = target_w * target_h
-                for fr, orig in zip(decoded, frames):
-                    total = sum(
-                        pal2[3 * i] + pal2[3 * i + 1] + pal2[3 * i + 2]
-                        for i in fr.pixels
-                    )
-                    out.append(
-                        (
-                            int(doc_id),
-                            orig.index,
-                            target_w,
-                            target_h,
-                            npx,
-                            total * 1_000_000 // (npx * 3 * 255),
-                        )
-                    )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id",
-                    "frame_idx",
-                    "width",
-                    "height",
-                    "n_pixels",
-                    "mean_intensity_e6",
-                ],
-            )
-
-    return fn
+def _gif_thumb_row(target_w: int, target_h: int, every_n: int, doc_id: int, payload: bytes):
+    meta, palette, frames = _sampled_frames(payload, every_n)
+    thumbs = [
+        _gif_resize_frame(fr.pixels, meta.width, meta.height, target_w, target_h)
+        for fr in frames
+    ]
+    pal = [
+        (palette[3 * k], palette[3 * k + 1], palette[3 * k + 2])
+        for k in range(meta.n_colors)
+    ]
+    _, pal2, decoded = _gif.decode_gif(_gif.encode_gif(target_w, target_h, thumbs, pal))
+    npx = target_w * target_h
+    for fr, orig in zip(decoded, frames):
+        yield doc_id, orig.index, target_w, target_h, npx, _frame_mean_e6(pal2, fr.pixels, npx)
 
 
 def gif_frame_thumbnails(
     df: DataFrame, *, width: int, height: int, every_n: int = 2
 ) -> DataFrame:
-    """REAL video thumbnailing: sampled-frame decode → integer NN resample
-    → re-encode as a new animated GIF → re-decode, one Arrow-batched
-    mapInPandas stage; features integer-exact over the re-decoded pixels."""
-    return df.mapInPandas(
-        gif_thumbs_batch_fn(width, height, every_n), schema=GIF_FRAME_SCHEMA
-    )
+    """REAL video thumbnailing, one row per sampled THUMBNAIL frame:
+    metadata parse (no decode) → sample every ``every_n``-th frame →
+    LZW-decode only those → NN-resample each to (width, height) →
+    re-encode the thumbnails as a NEW animated GIF → re-decode it, in one
+    Arrow-batched mapInPandas stage; features integer-exact over the
+    RE-DECODED pixels (proving the full round trip ran). The video twin of
+    the PNG resize path."""
+    row = functools.partial(_gif_thumb_row, width, height, every_n)
+    return map_rows(df.select("doc_id", "payload"), row, GIF_FRAME_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -884,24 +574,13 @@ def _synth_jpeg_bytes(doc_id: int) -> bytes:
     """Real baseline-JPEG bytes (flat quant tables, 4:4:4) for a doc's
     constant-color image — the configuration where lossy roundtrip is
     bit-exact and therefore oracle-checkable pixel-for-pixel."""
-    from data_ingestion_bra_spark.operators import jpeg as _jpeg
-
     w, h, r, g, b = _synth_const_rgb(doc_id)
     return _jpeg.encode_jpeg(w, h, bytes([r, g, b]) * (w * h), quant="flat")
 
 
-def synth_jpeg_batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: (doc_id) in, (doc_id, real JPEG payload) out."""
-    for pdf in batches:
-        ids = pdf["doc_id"].astype("int64")
-        yield pd.DataFrame(
-            {"doc_id": ids, "payload": [_synth_jpeg_bytes(int(d)) for d in ids]}
-        )
-
-
 def synthesize_jpeg(df: DataFrame) -> DataFrame:
     """Attach a real baseline-JPEG payload per doc_id."""
-    return spread_scan(df.select("doc_id"), bytes_per_task=_CODEC_SPREAD_BYTES).mapInPandas(synth_jpeg_batch_fn, schema=WAV_PAYLOAD_SCHEMA)
+    return synthesize_payloads(df, _synth_jpeg_bytes)
 
 
 JPEG_ROUNDTRIP_SCHEMA = T.StructType(
@@ -921,55 +600,21 @@ JPEG_ROUNDTRIP_SCHEMA = T.StructType(
 )
 
 
-def jpeg_roundtrip_batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: (doc_id, payload=JPEG bytes) in, decoded-image
-    features out — full container parse (marker walk, Huffman entropy
-    decode, dequantize, IDCT, YCbCr→RGB) per row."""
-    import numpy as np
-
-    from data_ingestion_bra_spark.operators import jpeg as _jpeg
-
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, ch, data = _jpeg.decode_jpeg(bytes(payload))
-            arr = np.frombuffer(data, dtype=np.uint8).reshape(h * w, ch)
-            distinct = len(np.unique(arr, axis=0))
-            px = arr[0]
-            out.append(
-                (
-                    int(doc_id),
-                    len(data),
-                    w,
-                    h,
-                    ch,
-                    distinct,
-                    int(px[0]),
-                    int(px[1]),
-                    int(px[2]),
-                )
-            )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id",
-                "n_pixel_bytes",
-                "width",
-                "height",
-                "channels",
-                "distinct_rgb",
-                "r_decoded",
-                "g_decoded",
-                "b_decoded",
-            ],
-        )
+def _jpeg_roundtrip_row(doc_id: int, payload: bytes):
+    w, h, ch, data = _jpeg.decode_jpeg(payload)
+    arr = np.frombuffer(data, dtype=np.uint8).reshape(h * w, ch)
+    distinct = len(np.unique(arr, axis=0))
+    px = arr[0]
+    yield doc_id, len(data), w, h, ch, distinct, int(px[0]), int(px[1]), int(px[2])
 
 
 def jpeg_roundtrip_features(df: DataFrame) -> DataFrame:
     """REAL lossy-image decode over a JPEG payload column via mapInPandas
-    using the vendored codec; constancy + decoded channel values are
-    integer-exact and oracle-replayed through the scalar color chain."""
-    return df.mapInPandas(jpeg_roundtrip_batch_fn, schema=JPEG_ROUNDTRIP_SCHEMA)
+    using the vendored codec — full container parse (marker walk, Huffman
+    entropy decode, dequantize, IDCT, YCbCr→RGB) per row; constancy +
+    decoded channel values are integer-exact and oracle-replayed through
+    the scalar color chain."""
+    return map_rows(df.select("doc_id", "payload"), _jpeg_roundtrip_row, JPEG_ROUNDTRIP_SCHEMA)
 
 
 def _synth_ramp_pixels(doc_id: int) -> tuple[int, int, bytes]:
@@ -1013,17 +658,15 @@ JPEG_ERROR_AUDIT_SCHEMA = T.StructType(
 JPEG_SMOOTH_ERR_PIN = 24
 
 
+@functools.cache
 def _derived_quant_bound_int() -> int:
     """Worst-case per-pixel spatial error implied by the COMMITTED Annex K
     tables: each DCT coefficient errs by at most q/2, so |e(x,y)| <=
     sum_uv (q_uv/2)|D[u,x]D[v,y]|, maximized over (x,y); +1 covers the
     color-transform/clamp rounding on either side. Derived, not
     hand-pinned — if the tables change, the Spark side moves and the
-    oracle's literal breaks LOUDLY instead of silently re-verifying."""
-    import numpy as np
-
-    from data_ingestion_bra_spark.operators import jpeg as _jpeg
-
+    oracle's literal breaks LOUDLY instead of silently re-verifying.
+    Cached: computed once per Python worker, not per row."""
     D = _jpeg._dct_matrix()
 
     def worst(qt) -> float:
@@ -1037,55 +680,32 @@ def _derived_quant_bound_int() -> int:
     return int(max(worst(_jpeg.QUANT_LUMA_K1), worst(_jpeg.QUANT_CHROMA_K2))) + 1
 
 
-def jpeg_error_audit_batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: synthesize the smooth-ramp source, push it
-    through the REAL lossy chain (Annex K quantization, Huffman, DCT —
-    encode AND decode), and emit per-doc geometry, exact source statistics,
-    and bounded-error verdicts. Pixels never leave the batch — the shuffle
-    carries 8 scalar columns per image."""
-    import numpy as np
-
-    from data_ingestion_bra_spark.operators import jpeg as _jpeg
-
-    hard = _derived_quant_bound_int()
-    for pdf in batches:
-        out = []
-        for raw in pdf["doc_id"].astype("int64"):
-            doc_id = int(raw)
-            w, h, pix = _synth_ramp_pixels(doc_id)
-            ww, hh, ch, data = _jpeg.decode_jpeg(
-                _jpeg.encode_jpeg(w, h, pix, quant="annexk")
-            )
-            a = np.frombuffer(pix, dtype=np.uint8).astype(int)
-            d = np.frombuffer(data, dtype=np.uint8).astype(int)
-            max_err = int(np.abs(a - d).max()) if a.shape == d.shape else 1 << 30
-            n = w * h * 3
-            ok_geom = (ww, hh, ch) == (w, h, 3)
-            out.append(
-                (
-                    doc_id,
-                    w,
-                    h,
-                    n,
-                    int(a.sum()) * 1_000_000 // (n * 255),
-                    hard,
-                    int(ok_geom and max_err <= hard),
-                    int(ok_geom and max_err <= JPEG_SMOOTH_ERR_PIN),
-                )
-            )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id",
-                "width",
-                "height",
-                "n_pixel_bytes",
-                "src_mean_e6",
-                "err_bound",
-                "within_derived_bound",
-                "within_smooth_pin",
-            ],
-        )
+def _jpeg_error_audit_row(subsampling: str, bound: Callable[[], int], pin: int, doc_id: int):
+    """Synthesize the smooth-ramp source, push it through the REAL lossy
+    chain (Annex K quantization, Huffman, DCT — encode AND decode), and
+    emit geometry, exact source statistics, and bounded-error verdicts
+    against ``bound()`` and ``pin``. Pixels never leave the batch — the
+    shuffle carries 8 scalar columns per image."""
+    hard = bound()
+    w, h, pix = _synth_ramp_pixels(doc_id)
+    ww, hh, ch, data = _jpeg.decode_jpeg(
+        _jpeg.encode_jpeg(w, h, pix, quant="annexk", subsampling=subsampling)
+    )
+    a = np.frombuffer(pix, dtype=np.uint8).astype(int)
+    d = np.frombuffer(data, dtype=np.uint8).astype(int)
+    max_err = int(np.abs(a - d).max()) if a.shape == d.shape else 1 << 30
+    n = w * h * 3
+    ok_geom = (ww, hh, ch) == (w, h, 3)
+    yield (
+        doc_id,
+        w,
+        h,
+        n,
+        int(a.sum()) * 1_000_000 // (n * 255),
+        hard,
+        int(ok_geom and max_err <= hard),
+        int(ok_geom and max_err <= pin),
+    )
 
 
 def jpeg_error_audit(df: DataFrame) -> DataFrame:
@@ -1094,9 +714,10 @@ def jpeg_error_audit(df: DataFrame) -> DataFrame:
     inside (a) the table-DERIVED hard bound and (b) the measured smooth
     pin — the catalog's generalization of the constant-image bit-exact
     oracle to genuinely lossy content."""
-    return spread_scan(df.select("doc_id"), bytes_per_task=_CODEC_SPREAD_BYTES).mapInPandas(
-        jpeg_error_audit_batch_fn, schema=JPEG_ERROR_AUDIT_SCHEMA
+    row = functools.partial(
+        _jpeg_error_audit_row, "444", _derived_quant_bound_int, JPEG_SMOOTH_ERR_PIN
     )
+    return map_rows(_doc_ids(df), row, JPEG_ERROR_AUDIT_SCHEMA)
 
 
 #: measured max |decoded - source| over the ramp family at 4:2:0 is 18
@@ -1131,6 +752,7 @@ _COS16_Q = (
 )
 
 
+@functools.cache
 def _derived_quant_bound_420_int() -> int:
     """Worst-case per-pixel spatial error of the 4:2:0 chain over the ramp
     family, derived (not measured) from the committed tables + the fixture
@@ -1145,10 +767,9 @@ def _derived_quant_bound_420_int() -> int:
     or fixture change breaks the oracle's literal LOUDLY — and computed in
     EXACT Fraction arithmetic over literal rational constants, so the
     recomputation can never flip the literal via a platform rounding
-    difference at the int() boundary (ADVICE r11)."""
+    difference at the int() boundary (ADVICE r11). Cached like the 4:4:4
+    bound."""
     from fractions import Fraction
-
-    from data_ingestion_bra_spark.operators import jpeg as _jpeg
 
     cos_q = [Fraction(c) for c in _COS16_Q]
 
@@ -1192,56 +813,16 @@ def _derived_quant_bound_420_int() -> int:
     return int(e_y + per_channel) + 2
 
 
-def jpeg_error_audit_420_batch_fn(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker for the 4:2:0 audit: same ramp source, but the
-    encode downsamples chroma 2x2 (box mean) and the decode upsamples by
-    replication — the subsampling real corpora overwhelmingly use. Verdicts
-    run against the 4:2:0-specific derived bound and measured pin."""
-    import numpy as np
-
-    from data_ingestion_bra_spark.operators import jpeg as _jpeg
-
-    hard = _derived_quant_bound_420_int()
-    for pdf in batches:
-        out = []
-        for raw in pdf["doc_id"].astype("int64"):
-            doc_id = int(raw)
-            w, h, pix = _synth_ramp_pixels(doc_id)
-            ww, hh, ch, data = _jpeg.decode_jpeg(
-                _jpeg.encode_jpeg(w, h, pix, quant="annexk", subsampling="420")
-            )
-            a = np.frombuffer(pix, dtype=np.uint8).astype(int)
-            d = np.frombuffer(data, dtype=np.uint8).astype(int)
-            max_err = int(np.abs(a - d).max()) if a.shape == d.shape else 1 << 30
-            n = w * h * 3
-            ok_geom = (ww, hh, ch) == (w, h, 3)
-            out.append(
-                (
-                    doc_id,
-                    w,
-                    h,
-                    n,
-                    int(a.sum()) * 1_000_000 // (n * 255),
-                    hard,
-                    int(ok_geom and max_err <= hard),
-                    int(ok_geom and max_err <= JPEG_SMOOTH_ERR_PIN_420),
-                )
-            )
-        yield pd.DataFrame(
-            out,
-            columns=[f.name for f in JPEG_ERROR_AUDIT_SCHEMA.fields],
-        )
-
-
 def jpeg_error_audit_420(df: DataFrame) -> DataFrame:
     """4:2:0 chroma-subsampled lossy roundtrip audit — the decode path for
-    the subsampling real corpora actually contain, with the same
-    bounded-error verdict discipline as the 4:4:4 audit."""
-    return spread_scan(df.select("doc_id"), bytes_per_task=_CODEC_SPREAD_BYTES).mapInPandas(
-        jpeg_error_audit_420_batch_fn, schema=JPEG_ERROR_AUDIT_SCHEMA
+    the subsampling real corpora actually contain: the encode downsamples
+    chroma 2x2 (box mean), the decode upsamples by replication, and the
+    verdicts run against the 4:2:0-specific derived bound and measured
+    pin, with the same bounded-error discipline as the 4:4:4 audit."""
+    row = functools.partial(
+        _jpeg_error_audit_row, "420", _derived_quant_bound_420_int, JPEG_SMOOTH_ERR_PIN_420
     )
+    return map_rows(_doc_ids(df), row, JPEG_ERROR_AUDIT_SCHEMA)
 
 
 JPEG_PROGRESSIVE_AUDIT_SCHEMA = T.StructType(
@@ -1257,61 +838,46 @@ JPEG_PROGRESSIVE_AUDIT_SCHEMA = T.StructType(
 )
 
 
-def jpeg_progressive_audit_batch_fn(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: per doc, encode the ramp pixels BOTH ways at
-    4:2:0/Annex-K (baseline SOF0 and progressive SOF2 with the 10-scan
-    libjpeg-style script), decode both through the real entropy decoders,
-    and certify (a) the progressive decode is BIT-IDENTICAL to baseline —
-    progressive only reorders the transmission of the same quantized
-    coefficients, so any inequality is a codec bug — and (b) the shared
-    decode error stays inside the 4:2:0 derived hard bound. n_scans is
-    counted from the actual SOS markers of the emitted stream (stuffing
-    makes a raw 0xFFDA scan unambiguous)."""
-    import numpy as np
-
-    from data_ingestion_bra_spark.operators import jpeg as _jpeg
-
+def _jpeg_progressive_audit_row(doc_id: int):
+    """Per doc, encode the ramp pixels BOTH ways at 4:2:0/Annex-K (baseline
+    SOF0 and progressive SOF2 with the 10-scan libjpeg-style script),
+    decode both through the real entropy decoders, and certify (a) the
+    progressive decode is BIT-IDENTICAL to baseline — progressive only
+    reorders the transmission of the same quantized coefficients, so any
+    inequality is a codec bug — and (b) the shared decode error stays
+    inside the 4:2:0 derived hard bound. n_scans is counted from the actual
+    SOS markers of the emitted stream (stuffing makes a raw 0xFFDA scan
+    unambiguous)."""
     hard = _derived_quant_bound_420_int()
-    for pdf in batches:
-        out = []
-        for raw in pdf["doc_id"].astype("int64"):
-            doc_id = int(raw)
-            w, h, pix = _synth_ramp_pixels(doc_id)
-            base = _jpeg.decode_jpeg(
-                _jpeg.encode_jpeg(w, h, pix, quant="annexk", subsampling="420")
-            )
-            stream = _jpeg.encode_jpeg(
-                w, h, pix, quant="annexk", subsampling="420", progressive=True
-            )
-            prog = _jpeg.decode_jpeg(stream)
-            assert _jpeg.parse_header(stream)["progressive"]
-            a = np.frombuffer(pix, dtype=np.uint8).astype(int)
-            d = np.frombuffer(prog[3], dtype=np.uint8).astype(int)
-            max_err = int(np.abs(a - d).max()) if a.shape == d.shape else 1 << 30
-            ok_geom = prog[:3] == (w, h, 3)
-            out.append(
-                (
-                    doc_id,
-                    w,
-                    h,
-                    stream.count(b"\xff\xda"),
-                    int(a.sum()) * 1_000_000 // (w * h * 3 * 255),
-                    int(base == prog),
-                    int(ok_geom and max_err <= hard),
-                )
-            )
-        yield pd.DataFrame(
-            out, columns=[f.name for f in JPEG_PROGRESSIVE_AUDIT_SCHEMA.fields]
-        )
+    w, h, pix = _synth_ramp_pixels(doc_id)
+    base = _jpeg.decode_jpeg(
+        _jpeg.encode_jpeg(w, h, pix, quant="annexk", subsampling="420")
+    )
+    stream = _jpeg.encode_jpeg(
+        w, h, pix, quant="annexk", subsampling="420", progressive=True
+    )
+    prog = _jpeg.decode_jpeg(stream)
+    assert _jpeg.parse_header(stream)["progressive"]
+    a = np.frombuffer(pix, dtype=np.uint8).astype(int)
+    d = np.frombuffer(prog[3], dtype=np.uint8).astype(int)
+    max_err = int(np.abs(a - d).max()) if a.shape == d.shape else 1 << 30
+    ok_geom = prog[:3] == (w, h, 3)
+    yield (
+        doc_id,
+        w,
+        h,
+        stream.count(b"\xff\xda"),
+        int(a.sum()) * 1_000_000 // (w * h * 3 * 255),
+        int(base == prog),
+        int(ok_geom and max_err <= hard),
+    )
 
 
 def jpeg_progressive_audit(df: DataFrame) -> DataFrame:
     """Progressive (SOF2) decode audit: spectral-selection + successive-
     approximation scans reassemble the exact baseline coefficients."""
-    return spread_scan(df.select("doc_id"), bytes_per_task=_CODEC_SPREAD_BYTES).mapInPandas(
-        jpeg_progressive_audit_batch_fn, schema=JPEG_PROGRESSIVE_AUDIT_SCHEMA
+    return map_rows(
+        _doc_ids(df), _jpeg_progressive_audit_row, JPEG_PROGRESSIVE_AUDIT_SCHEMA
     )
 
 
@@ -1320,25 +886,13 @@ def _synth_jpeg420_bytes(doc_id: int) -> bytes:
     subsampling over the modular gradient pixels — the header-metadata
     fixture (decode of this stream is lossy, pytest-bounded, not
     oracle-matched)."""
-    from data_ingestion_bra_spark.operators import jpeg as _jpeg
-
     w, h, pix = _synth_pixels(doc_id)
     return _jpeg.encode_jpeg(w, h, pix, quant="annexk", subsampling="420")
 
 
-def synth_jpeg420_batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        ids = pdf["doc_id"].astype("int64")
-        yield pd.DataFrame(
-            {"doc_id": ids, "payload": [_synth_jpeg420_bytes(int(d)) for d in ids]}
-        )
-
-
 def synthesize_jpeg420(df: DataFrame) -> DataFrame:
     """Attach a production-shaped (Annex K, 4:2:0) JPEG payload per doc."""
-    return spread_scan(df.select("doc_id"), bytes_per_task=_CODEC_SPREAD_BYTES).mapInPandas(
-        synth_jpeg420_batch_fn, schema=WAV_PAYLOAD_SCHEMA
-    )
+    return synthesize_payloads(df, _synth_jpeg420_bytes)
 
 
 JPEG_META_SCHEMA = T.StructType(
@@ -1355,48 +909,27 @@ JPEG_META_SCHEMA = T.StructType(
 )
 
 
-def jpeg_meta_batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: marker-level header parse ONLY — no entropy
-    decode, no IDCT. The metadata fast path over a lossy container."""
-    from data_ingestion_bra_spark.operators import jpeg as _jpeg
-
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            m = _jpeg.parse_header(bytes(payload))
-            lh, lv = m["sampling"][0]
-            out.append(
-                (
-                    int(doc_id),
-                    m["width"],
-                    m["height"],
-                    m["channels"],
-                    lh,
-                    lv,
-                    m["n_quant_tables"],
-                    m["n_huffman_tables"],
-                )
-            )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "doc_id",
-                "width",
-                "height",
-                "channels",
-                "luma_h",
-                "luma_v",
-                "n_quant_tables",
-                "n_huffman_tables",
-            ],
-        )
+def _jpeg_meta_row(doc_id: int, payload: bytes):
+    m = _jpeg.parse_header(payload)
+    lh, lv = m["sampling"][0]
+    yield (
+        doc_id,
+        m["width"],
+        m["height"],
+        m["channels"],
+        lh,
+        lv,
+        m["n_quant_tables"],
+        m["n_huffman_tables"],
+    )
 
 
 def jpeg_header_meta(df: DataFrame) -> DataFrame:
-    """JPEG metadata-without-decode via mapInPandas (SOF geometry, sampling
-    factors, table counts) — route/filter on header facts at 100 TB and
-    decode only the sampled subset."""
-    return df.mapInPandas(jpeg_meta_batch_fn, schema=JPEG_META_SCHEMA)
+    """JPEG metadata-without-decode via mapInPandas: a marker-level header
+    parse ONLY — no entropy decode, no IDCT — giving SOF geometry, sampling
+    factors and table counts, so 100 TB routes/filters on header facts and
+    decodes only the sampled subset."""
+    return map_rows(df.select("doc_id", "payload"), _jpeg_meta_row, JPEG_META_SCHEMA)
 
 
 IMAGE_DHASH_SCHEMA = T.StructType(
@@ -1437,26 +970,19 @@ def _dhash_from_pixels(w: int, h: int, ch: int, data: bytes) -> int:
     return bits - (1 << 64) if bits >= (1 << 63) else bits
 
 
-def image_dhash_batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: (doc_id, payload=PNG) in, 64-bit dHash out —
-    full real decode (CRC, inflate, de-filter) then the integer hash."""
-    from data_ingestion_bra_spark.operators import png as _png
-
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            w, h, ch, data = _png.decode_png(bytes(payload))
-            out.append((int(doc_id), w, h, _dhash_from_pixels(w, h, ch, data)))
-        yield pd.DataFrame(out, columns=["doc_id", "width", "height", "dhash"])
+def _png_dhash_row(doc_id: int, payload: bytes):
+    w, h, ch, data = _png.decode_png(payload)
+    yield doc_id, w, h, _dhash_from_pixels(w, h, ch, data)
 
 
 def image_dhash(df: DataFrame) -> DataFrame:
-    """Perceptual image fingerprints over a PNG payload column. Near-dup
+    """Perceptual image fingerprints over a PNG payload column: full real
+    decode (CRC, inflate, de-filter), then the integer hash. Near-dup
     IMAGE dedup then rides the existing Hamming machinery: band the 64
     bits 4x16 (pigeonhole: hamming < 4 => at least one exact band match)
     and equi-join buckets — identical shape to ``dedup.simhash_near_pairs``,
     never an all-pairs comparison."""
-    return df.mapInPandas(image_dhash_batch_fn, schema=IMAGE_DHASH_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), _png_dhash_row, IMAGE_DHASH_SCHEMA)
 
 
 VIDEO_DHASH_SCHEMA = T.StructType(
@@ -1468,52 +994,27 @@ VIDEO_DHASH_SCHEMA = T.StructType(
 )
 
 
-def gif_frame_dhash_batch_fn(every_n: int):
-    """mapInPandas worker factory: (doc_id, payload=GIF) in, one 64-bit
-    dHash per SAMPLED frame out — container walk picks the frame set,
-    only those frames LZW-decode, palette maps indices to integer gray,
-    and ``_dhash_from_pixels`` runs with ch=1 over the gray buffer (the
-    identical grid/compare arithmetic as the still-image hash)."""
-    from data_ingestion_bra_spark.operators import gif as _gif
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                p = bytes(payload)
-                meta = _gif.parse_gif_meta(p)
-                want = set(range(0, meta.n_frames, every_n))
-                _, palette, frames = _gif.decode_gif_frames(p, want)
-                for fr in frames:
-                    # integer gray per pixel: mean of the palette triple
-                    gray = bytes(
-                        (
-                            palette[3 * idx]
-                            + palette[3 * idx + 1]
-                            + palette[3 * idx + 2]
-                        )
-                        // 3
-                        for idx in fr.pixels
-                    )
-                    out.append(
-                        (
-                            int(doc_id),
-                            fr.index,
-                            _dhash_from_pixels(meta.width, meta.height, 1, gray),
-                        )
-                    )
-            yield pd.DataFrame(out, columns=["doc_id", "frame_idx", "dhash"])
-
-    return fn
+def _gif_dhash_row(every_n: int, doc_id: int, payload: bytes):
+    meta, palette, frames = _sampled_frames(payload, every_n)
+    for fr in frames:
+        # integer gray per pixel: mean of the palette triple
+        gray = bytes(
+            (palette[3 * idx] + palette[3 * idx + 1] + palette[3 * idx + 2]) // 3
+            for idx in fr.pixels
+        )
+        yield doc_id, fr.index, _dhash_from_pixels(meta.width, meta.height, 1, gray)
 
 
 def gif_frame_dhash(df: DataFrame, *, every_n: int = 2) -> DataFrame:
     """Per-frame perceptual fingerprints over a GIF payload column — the
-    VIDEO leg of multimodal dedup: near-dup videos share most sampled
-    frame hashes, so pairing is a (dhash) equi-join + per-pair shared-
-    frame count, never pixels and never all-pairs. Unsampled frames are
-    never decompressed."""
-    return df.mapInPandas(gif_frame_dhash_batch_fn(every_n), schema=VIDEO_DHASH_SCHEMA)
+    VIDEO leg of multimodal dedup. The container walk picks the sampled
+    frames, only those LZW-decode, the palette maps indices to integer
+    gray, and ``_dhash_from_pixels`` runs with ch=1 (the still-image
+    arithmetic). Near-dup videos share most sampled frame hashes, so
+    pairing is a (dhash) equi-join + per-pair shared-frame count, never
+    pixels and never all-pairs."""
+    row = functools.partial(_gif_dhash_row, every_n)
+    return map_rows(df.select("doc_id", "payload"), row, VIDEO_DHASH_SCHEMA)
 
 
 AUDIO_FP_SCHEMA = T.StructType(
@@ -1555,38 +1056,18 @@ def _audio_fingerprint(samples) -> int:
     return bits
 
 
-def wav_fingerprint_batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: (doc_id, payload=WAV bytes) in, contour
-    fingerprint out — full RIFF decode per row, then the integer hash."""
-    import io
-    import sys
-    import wave
-    from array import array
-
-    def decode(payload: bytes):
-        with wave.open(io.BytesIO(payload), "rb") as r:
-            raw = r.readframes(r.getnframes())
-        samples = array("h")
-        samples.frombytes(raw)
-        if sys.byteorder == "big":  # pragma: no cover
-            samples.byteswap()
-        return samples
-
-    for pdf in batches:
-        out = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            samples = decode(bytes(payload))
-            out.append((int(doc_id), len(samples), _audio_fingerprint(samples)))
-        yield pd.DataFrame(out, columns=["doc_id", "n_frames", "afp"])
+def _wav_fingerprint_row(doc_id: int, payload: bytes):
+    _, _, samples = _wav_pcm(payload)
+    yield doc_id, len(samples), _audio_fingerprint(samples)
 
 
 def wav_audio_fingerprint(df: DataFrame) -> DataFrame:
     """Audio near-dup fingerprints over a WAV payload column — the AUDIO
-    leg of multimodal dedup: 4 bytes of contour hash per clip is all that
-    shuffles; pairing is an equi-join on the fingerprint (or banded
-    Hamming, the simhash machinery) — samples never leave the decode
-    stage."""
-    return df.mapInPandas(wav_fingerprint_batch_fn, schema=AUDIO_FP_SCHEMA)
+    leg of multimodal dedup: full RIFF decode per row, then the integer
+    contour hash. 4 bytes of hash per clip is all that shuffles; pairing
+    is an equi-join on the fingerprint (or banded Hamming, the simhash
+    machinery) — samples never leave the decode stage."""
+    return map_rows(df.select("doc_id", "payload"), _wav_fingerprint_row, AUDIO_FP_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -1608,12 +1089,10 @@ _MULAW_BIAS = 132
 _MULAW_CLIP = 32635
 
 
-def mulaw_encode(x: "np.ndarray") -> "np.ndarray":
+def mulaw_encode(x: np.ndarray) -> np.ndarray:
     """Vectorized G.711 mu-law encode: int PCM (14-bit range) -> uint8
     companded bytes (sign | segment<<4 | mantissa; spec bit-inversion is a
     transport cosmetic and does not change the mapping)."""
-    import numpy as np
-
     x = x.astype(np.int64)
     sign = (x < 0).astype(np.int64)
     a = np.minimum(np.abs(x), _MULAW_CLIP) + _MULAW_BIAS
@@ -1622,11 +1101,9 @@ def mulaw_encode(x: "np.ndarray") -> "np.ndarray":
     return ((sign << 7) | (e << 4) | m).astype(np.uint8)
 
 
-def mulaw_decode(b: "np.ndarray") -> "np.ndarray":
+def mulaw_decode(b: np.ndarray) -> np.ndarray:
     """Vectorized G.711 mu-law decode: uint8 byte -> reconstructed int
     sample (segment-cell midpoint, bias removed, sign applied)."""
-    import numpy as np
-
     b = b.astype(np.int64)
     sign = (b >> 7) & 1
     e = (b >> 4) & 7
@@ -1635,12 +1112,10 @@ def mulaw_decode(b: "np.ndarray") -> "np.ndarray":
     return np.where(sign == 1, -d, d)
 
 
-def _synth_pcm14(doc_id: int) -> "np.ndarray":
+def _synth_pcm14(doc_id: int) -> np.ndarray:
     """Deterministic 14-bit PCM fixture: a modular chirp covering the full
     [-8192, 8191] range (every mu-law segment 0..6 is exercised). Pure
     integer formula a SQL oracle replays sample-for-sample."""
-    import numpy as np
-
     n = 240 + doc_id % 60
     i = np.arange(n, dtype=np.int64)
     return ((doc_id * 31 + 7 * i * i) % 16384) - 8192
@@ -1658,44 +1133,22 @@ MULAW_AUDIT_SCHEMA = T.StructType(
 )
 
 
-def mulaw_roundtrip_batch_fn(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: synthesize PCM, compand through the REAL G.711
-    chain (encode to 8-bit bytes, decode back), and emit per-doc exact
-    roundtrip statistics + the per-sample derived half-step-bound verdict.
-    Samples never leave the batch — 6 scalar columns per clip shuffle."""
-    import numpy as np
-
-    for pdf in batches:
-        out = []
-        for raw in pdf["doc_id"].astype("int64"):
-            doc_id = int(raw)
-            x = _synth_pcm14(doc_id)
-            enc = mulaw_encode(x)
-            dec = mulaw_decode(enc)
-            err = np.abs(dec - x)
-            e = (enc.astype(np.int64) >> 4) & 7
-            ok = bool((err <= (1 << (e + 2))).all())
-            out.append(
-                (
-                    doc_id,
-                    int(x.size),
-                    int(enc.nbytes),
-                    int(dec.sum()),
-                    int(err.max()),
-                    int(ok),
-                )
-            )
-        yield pd.DataFrame(
-            out, columns=[f.name for f in MULAW_AUDIT_SCHEMA.fields]
-        )
+def _mulaw_audit_row(doc_id: int):
+    """Synthesize PCM, compand through the REAL G.711 chain (encode to
+    8-bit bytes, decode back), and emit exact roundtrip statistics + the
+    per-sample derived half-step-bound verdict. Samples never leave the
+    batch — 6 scalar columns per clip shuffle."""
+    x = _synth_pcm14(doc_id)
+    enc = mulaw_encode(x)
+    dec = mulaw_decode(enc)
+    err = np.abs(dec - x)
+    e = (enc.astype(np.int64) >> 4) & 7
+    ok = bool((err <= (1 << (e + 2))).all())
+    yield doc_id, int(x.size), int(enc.nbytes), int(dec.sum()), int(err.max()), int(ok)
 
 
 def mulaw_roundtrip_audit(df: DataFrame) -> DataFrame:
     """G.711 mu-law companding roundtrip audit: real encode+decode per clip,
     bit-exact oracle replay of every statistic (integer codec — no float
     anywhere in the chain)."""
-    return spread_scan(df.select("doc_id"), bytes_per_task=_CODEC_SPREAD_BYTES).mapInPandas(
-        mulaw_roundtrip_batch_fn, schema=MULAW_AUDIT_SCHEMA
-    )
+    return map_rows(_doc_ids(df), _mulaw_audit_row, MULAW_AUDIT_SCHEMA)

@@ -11,8 +11,8 @@ round-trip against Pillow when available).
 Scope is deliberately tight: 8-bit depth, color types 0 (gray), 2 (RGB),
 4 (gray+alpha), 6 (RGBA), no interlace, no ancillary-chunk interpretation.
 That covers every fixture this repo synthesizes; a production deployment
-swaps Pillow/libvips into the same per-payload callable signature
-(``operators/multimodal.py:pick_decoder``).
+would call Pillow/libvips instead of ``decode_png`` inside the same
+per-row functions that ``operators/multimodal.py:map_rows`` runs.
 
 Pure-Python per-pixel work is the slow path — acceptable here because it
 runs inside Arrow-batched ``mapInPandas`` exactly where a C decoder would,

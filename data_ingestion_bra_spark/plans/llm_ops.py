@@ -2333,8 +2333,8 @@ def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Multimodal columns: binary payload plumbing (SQL-checkable part).
-# The decode/resize/frame-sample pipeline lives in operators/multimodal.py
-# (mapInPandas; deterministic fake decode) — not SQL-expressible.
+# The decode/resize/frame-sample stages live in operators/multimodal.py
+# (mapInPandas via map_rows) — not SQL-expressible.
 # --------------------------------------------------------------------------
 @register(
     "multimodal_decode_features",
@@ -3758,8 +3758,9 @@ def multimodal_image_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the stub path. The pixel buffer is a pure modular-arithmetic
     function of (doc_id, j), so the SQL oracle regenerates the identical
     image and verifies what the real decoder extracted from real PNG bytes.
-    A production deployment swaps Pillow/libvips into the same callable
-    (``pick_decoder('pil')``) with zero plumbing changes."""
+    A production deployment would call Pillow/libvips in the per-row
+    function (``operators/multimodal.py:_png_features``) with zero
+    plumbing changes."""
     from data_ingestion_bra_spark.operators import multimodal
 
     d = load_table(spark, sf_dir, "documents").select("doc_id")

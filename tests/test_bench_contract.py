@@ -70,17 +70,17 @@ def test_every_registered_query_has_oracle_or_documented_exception():
     assert no_oracle == [], no_oracle
 
 
-def test_replica_dir_atomic_rebuild(monkeypatch):
+def test_replica_dir_atomic_rebuild(monkeypatch, tmp_path):
     """A torn (marker-less) replica dir is rebuilt; a marked one is reused
     without calling make_sf; the publish is rename-atomic."""
-    import shutil
     from pathlib import Path
 
     import bench
     import tools.make_sf as make_sf_mod
 
+    monkeypatch.setattr(bench, "_DATA", tmp_path)
     name = "sf_test_atomic"
-    out = Path(bench.__file__).resolve().parent / ".data" / name
+    out = tmp_path / name
     calls = []
 
     def fake_make_sf(factor, src, dst):
@@ -89,20 +89,17 @@ def test_replica_dir_atomic_rebuild(monkeypatch):
         (Path(dst) / "lineitem.parquet").write_bytes(b"PAR1fakePAR1")
 
     monkeypatch.setattr(make_sf_mod, "make_sf", fake_make_sf)
-    try:
-        # torn pre-atomic dir: file exists, no marker → must rebuild
-        out.mkdir(parents=True, exist_ok=True)
-        (out / "lineitem.parquet").write_bytes(b"truncated")
-        got = bench._replica_dir(name, 7, "sf_src")
-        assert got == str(out)
-        assert (out / "_COMPLETE").exists()
-        assert (out / "lineitem.parquet").read_bytes() == b"PAR1fakePAR1"
-        assert calls == [7]
-        # marked dir: reused, make_sf NOT called again
-        assert bench._replica_dir(name, 7, "sf_src") == str(out)
-        assert calls == [7]
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    # torn pre-atomic dir: file exists, no marker → must rebuild
+    out.mkdir(parents=True, exist_ok=True)
+    (out / "lineitem.parquet").write_bytes(b"truncated")
+    got = bench._replica_dir(name, 7, "sf_src")
+    assert got == str(out)
+    assert (out / "_COMPLETE").exists()
+    assert (out / "lineitem.parquet").read_bytes() == b"PAR1fakePAR1"
+    assert calls == [7]
+    # marked dir: reused, make_sf NOT called again
+    assert bench._replica_dir(name, 7, "sf_src") == str(out)
+    assert calls == [7]
 
 
 def test_skipping_bench_zorder_prunes_files(spark):

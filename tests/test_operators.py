@@ -255,79 +255,6 @@ def test_multimodal_empty_payload_raises(spark):
         multimodal.decode_images(payloads).collect()
 
 
-def _pil_available() -> bool:
-    try:
-        import PIL  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def test_multimodal_decoder_selection():
-    """decoder='auto' upgrades to PIL when importable, stub otherwise;
-    'pil' fails fast with guidance when the library is absent."""
-    assert multimodal.pick_decoder("stub") is multimodal._fake_decode
-    if _pil_available():
-        assert multimodal.pick_decoder("auto") is multimodal._pil_decode
-        assert multimodal.pick_decoder("pil") is multimodal._pil_decode
-    else:
-        assert multimodal.pick_decoder("auto") is multimodal._fake_decode
-        with pytest.raises(ImportError, match="Pillow"):
-            multimodal.pick_decoder("pil")
-    with pytest.raises(ValueError, match="unknown decoder"):
-        multimodal.pick_decoder("imagemagick")
-
-
-@pytest.mark.skipif(not _pil_available(), reason="Pillow not installed")
-def test_multimodal_pil_real_decode(spark):
-    """Real path: a genuine PNG decodes to its true dimensions through the
-    SAME mapInPandas batch contract as the stub."""
-    import io
-
-    from PIL import Image
-
-    buf = io.BytesIO()
-    Image.new("RGB", (12, 7), color=(10, 20, 30)).save(buf, format="PNG")
-    png = buf.getvalue()
-    df = spark.createDataFrame([(1, bytearray(png))], "doc_id bigint, payload binary")
-    (r,) = multimodal.decode_images(df, decoder="pil").collect()
-    assert (r["width"], r["height"], r["channels"]) == (12, 7, 3)
-    assert r["n_bytes"] == len(png)
-    want = ((10 + 20 + 30) * 12 * 7 * 1_000_000) // (12 * 7 * 3 * 255)
-    assert r["mean_intensity_e6"] == want
-
-
-@pytest.mark.skipif(_pil_available(), reason="covers the no-Pillow container")
-def test_multimodal_auto_falls_back_to_stub(spark):
-    docs = _docs(spark)
-    payloads = multimodal.attach_binary_payload(docs, "doc_id", "text")
-    via_auto = multimodal.decode_images(payloads, decoder="auto").orderBy("doc_id").collect()
-    via_stub = multimodal.decode_images(payloads).orderBy("doc_id").collect()
-    assert via_auto == via_stub
-    with pytest.raises(ImportError, match="Pillow"):
-        multimodal.decode_images(payloads, decoder="pil")
-
-
-def test_frame_sample_plan(spark):
-    df = spark.createDataFrame([(0, 2560)], "doc_id bigint, n_bytes bigint")
-    frames = [r["frame_idx"] for r in multimodal.frame_sample_plan(df, every_n=3).collect()]
-    assert frames == [0, 3, 6, 9]  # 10 frames (2560//256), every 3rd
-
-
-def test_resize_images_batch_contract(spark):
-    from data_ingestion_bra_spark.operators import multimodal
-
-    docs = _docs(spark)
-    payloads = multimodal.attach_binary_payload(docs, "doc_id", "text")
-    out = multimodal.resize_images(payloads, width=8, height=4).orderBy("doc_id").collect()
-    assert len(out) == 4
-    for r in out:
-        assert (r["width"], r["height"]) == (8, 4)
-        assert len(r["payload"]) == 32  # exact target byte shape
-        assert r["scale_e6"] > 0
-
-
 def test_salted_join_matches_plain_join(spark):
     from data_ingestion_bra_spark.operators.skew import salted_join
 
@@ -520,17 +447,20 @@ def test_wav_decode_rejects_zero_frame_container():
         multimodal._wav_decode_features(buf.getvalue())
 
 
-def test_ivf_index_cache_invalidates_on_data_change(spark, tmp_path):
+def test_ivf_index_cache_invalidates_on_data_change(spark, tmp_path, monkeypatch):
     """The persisted IVF index is keyed by the dataset's file identity: a
     regenerated embeddings table must retrain/reassign, never serve stale
-    centroids or lists."""
+    centroids or lists. Both builds publish into the test's own cache dir."""
     import os
     import shutil
     import time as _time
 
     from data_ingestion_bra_spark.sources.tables import load_table
 
-    sf = str(tmp_path)
+    cache = tmp_path / "ivf"
+    monkeypatch.setenv("SPARK_GRAFT_IVF_CACHE", str(cache))
+    sf = str(tmp_path / "sf")
+    os.mkdir(sf)
     shutil.copy("/root/testdata/sf0.001/embeddings.parquet", f"{sf}/embeddings.parquet")
     emb = load_table(spark, sf, "embeddings")
     c1, l1 = similarity.load_or_build_ivf_index(spark, emb, sf, n_centroids=4, n_iter=1)
@@ -546,6 +476,8 @@ def test_ivf_index_cache_invalidates_on_data_change(spark, tmp_path):
     emb2 = load_table(spark, sf, "embeddings")
     c2, l2 = similarity.load_or_build_ivf_index(spark, emb2, sf, n_centroids=4, n_iter=1)
     assert l2.count() == emb2.count() < n_full  # rebuilt from the new data
+    # two fingerprints, each with its centroids file, all in the test's dir
+    assert len(list(cache.glob("*-centroids.json"))) == 2
 
 
 def test_ivf_index_refuses_prefiltered_vectors(spark, tmp_path, monkeypatch):

@@ -125,6 +125,33 @@ def test_csv_pipeline_scans_source_once(spark, tmp_path, capsys):
     assert shown == [["2023", c, f"Cidade {i}"] for i, c in enumerate(codes[:10])]
 
 
+def test_csv_pipeline_matches_generated_truth(spark, tmp_path):
+    """One reference-sized block (22,280 rows) of the benchmark's seeded
+    IBC-shaped CSV through the shipped config, re-pointed at the file as the
+    benchmark does: the manifest reports the generator's row and null counts,
+    and the frame carries the config's casts."""
+    from perfbench import gen
+
+    csv_path = tmp_path / "indicadores.csv"
+    truth = gen.make_ingest_csv(str(csv_path), seed=1, blocks=1)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "configs", "indicadores_municipios.json"), encoding="utf-8") as f:
+        cfg = json.load(f)
+    cfg["csv"]["path"] = str(csv_path)
+    cfg["output"]["base_dir"] = str(tmp_path / "bronze")
+    cfg_path = tmp_path / "config.json"
+    cfg_path.write_text(json.dumps(cfg, ensure_ascii=False), encoding="utf-8")
+
+    res = ingest_csv.run(spark, str(cfg_path), run_date=date(2025, 10, 20))
+    stats = json.load(open(res["manifest"]))["schema_stats"]
+    assert truth["linhas"] == 22_280
+    assert stats["linhas"] == truth["linhas"]
+    assert stats["nulos"] == truth["nulos"]
+    casts = {"integer_fields": "bigint", "string_fields": "string", "float_fields": "double"}
+    want = {c: t for key, t in casts.items() for c in cfg["schema"][key]}
+    assert dict(res["df"].dtypes) == want
+
+
 class _FakeResponse:
     def __init__(self, payload, status=200, headers=None):
         self._payload = payload

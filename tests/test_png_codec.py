@@ -76,14 +76,14 @@ def test_decode_rejects_out_of_scope():
 
 
 def test_decode_images_with_vendored_decoder(spark):
-    """The real-container path through the SAME mapInPandas batch contract
-    as the stub — this is the in-container stand-in for the PIL test."""
+    """A real PNG container decodes through the SAME mapInPandas batch
+    contract as the stub: ``png_decode_features`` over a hand-built frame."""
     w, h, pix = multimodal._synth_pixels(5)
     payload = multimodal._synth_png_bytes(5)
     df = spark.createDataFrame([(5, bytearray(payload))], "doc_id bigint, payload binary")
-    (r,) = multimodal.decode_images(df, decoder="png").collect()
+    (r,) = multimodal.png_decode_features(df).collect()
     assert (r["width"], r["height"], r["channels"]) == (w, h, 3)
-    assert r["n_bytes"] == len(payload)
+    assert r["n_pixel_bytes"] == len(pix)
     assert r["mean_intensity_e6"] == (sum(pix) * 1_000_000) // (len(pix) * 255)
 
 

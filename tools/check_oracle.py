@@ -89,7 +89,9 @@ def check_query(spark, con, fn, oracle: str | None, sf_dir: str) -> dict:
     """Run one catalog entry on Spark and its oracle twin on DuckDB; return
     its report record. ``ok`` is True only when row count, column names and
     the order-insensitive value hash all match (or, with no oracle, when the
-    Spark side runs); ``err`` names the first problem otherwise."""
+    Spark side runs); ``err`` names the first problem otherwise. Once the
+    Spark side has run, ``hash`` is its ``table_hash``, so two reports
+    show whether an entry's values changed."""
     t0 = time.time()
     try:
         sdf = fn(spark, sf_dir)
@@ -97,20 +99,21 @@ def check_query(spark, con, fn, oracle: str | None, sf_dir: str) -> dict:
         srows = _pdf_rows(sdf.toPandas())
     except Exception as ex:
         return {"ok": False, "err": f"spark: {str(ex)[:300]}"}
+    shash = table_hash(srows, scols)
     if oracle is None:
-        return {"ok": True, "rows": len(srows), "mode": "rows-only"}
+        return {"ok": True, "rows": len(srows), "mode": "rows-only", "hash": shash}
     try:
         dpdf = con.sql(oracle).df()
         dcols = list(dpdf.columns)
         drows = _pdf_rows(dpdf)
     except Exception as ex:
-        return {"ok": False, "err": f"duckdb: {str(ex)[:300]}"}
+        return {"ok": False, "err": f"duckdb: {str(ex)[:300]}", "hash": shash}
     problems = []
     if len(srows) != len(drows):
         problems.append(f"rowcount spark={len(srows)} duck={len(drows)}")
     if sorted(scols) != sorted(dcols):
         problems.append(f"cols spark={sorted(scols)} duck={sorted(dcols)}")
-    if not problems and table_hash(srows, scols) != table_hash(drows, dcols):
+    if not problems and shash != table_hash(drows, dcols):
         problems.append("value-hash mismatch")
         sn = sorted("\x1f".join(norm_cell(c) for c in r) for r in srows)
         dn = sorted("\x1f".join(norm_cell(c) for c in r) for r in drows)
@@ -119,12 +122,13 @@ def check_query(spark, con, fn, oracle: str | None, sf_dir: str) -> dict:
                 problems.append(f"  first diff: spark={a!r} duck={b!r}")
                 break
     if problems:
-        return {"ok": False, "rows": len(srows), "err": "; ".join(problems)}
+        return {"ok": False, "rows": len(srows), "err": "; ".join(problems), "hash": shash}
     return {
         "ok": True,
         "rows": len(srows),
         "mode": "rows+schema+hash",
         "sec": round(time.time() - t0, 2),
+        "hash": shash,
     }
 
 
